@@ -32,31 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from osm_addr_tools_spark.cache import pin
 from osm_addr_tools_spark.functions.text import _WORD_RE
-
-# Fingerprint tables persisted by simhash_pairs / winnow_partial_dups
-# (cache_fp=True). A persisted |docs|-sized table otherwise pins storage
-# memory for the rest of the session (ADVICE r4 — a slow leak for
-# long-lived sessions / repeated invocations): callers should invoke
-# release_persisted_fp() once the returned pair DataFrame has been
-# materialized (bench.py does, after every query run).
-_PERSISTED_FP: list[DataFrame] = []
-
-
-def release_persisted_fp() -> int:
-    """Unpersist every fingerprint table persisted by the pair operators
-    in this module; returns how many were released. Safe to call at any
-    time — an in-flight plan that still references a released table just
-    recomputes it."""
-    n = 0
-    while _PERSISTED_FP:
-        df = _PERSISTED_FP.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # noqa: BLE001 — session already stopped
-            pass
-    return n
 
 # ---------------------------------------------------------------------------
 # deterministic hashing helpers
@@ -257,8 +234,8 @@ def minhash_lsh_pairs(
     the band table and the two verify rejoins race to recompute the
     Arrow UDF (3 plan branches). Off by default for API stability;
     measured better at r8 bench scale (best 4.33 s vs 4.70 s through the
-    CC composition) — the registered queries pass True. Released via
-    release_persisted_fp(), the standard fingerprint-cache contract.
+    CC composition) — the registered queries pass True. The table is
+    pinned (osm_addr_tools_spark.cache): release it with release_pinned().
     """
     # recall proof obligation: a ragged final band would carry fewer rows
     # and a different collision probability than the analysis assumes.
@@ -273,8 +250,7 @@ def minhash_lsh_pairs(
         minhash_udf(k, num_perm, seed)(F.col(text_col)).alias("_sig"),
     )
     if cache_sigs:
-        sig = sig.persist()
-        _PERSISTED_FP.append(sig)  # released via release_persisted_fp()
+        sig = pin(sig)
     band_cols = F.array(
         *[
             F.struct(
@@ -410,8 +386,8 @@ def incremental_minhash_dedup(
     the batch band table and the corpus-side scan never shuffles AT ALL.
     Within-batch stages shuffle only batch-sized tables. The batch
     signature subtree feeds ~6 plan branches (band tables, both verify
-    joins, the survivor anti-join) — ``cache_sigs=True`` persists it once
-    (released via release_persisted_fp(), the winnow cache_fp contract).
+    joins, the survivor anti-join) — ``cache_sigs=True`` pins it once
+    (osm_addr_tools_spark.cache; release it with release_pinned()).
     Default stays off for API stability, but the r8 measurement flipped
     the small-scale trade: with the leaner CC driver loop the single
     materialization beats the ~6-branch racing recompute (best 6.1 s vs
@@ -431,8 +407,7 @@ def incremental_minhash_dedup(
         minhash_udf(k, num_perm, seed)(F.col(text_col)).alias("_sig"),
     )
     if cache_sigs:
-        bsig = bsig.persist()
-        _PERSISTED_FP.append(bsig)  # released via release_persisted_fp()
+        bsig = pin(bsig)
     isig = index_df.select(
         F.col("doc_id").alias("_id"), F.col("sig").alias("_sig")
     )
@@ -700,10 +675,9 @@ def simhash_pairs(
     # the fingerprint subtree feeds FOUR plan branches (two join sides +
     # two rejoin sides); persist the |docs|-sized table once so the
     # Arrow UDF runs once, not four times (it dominates otherwise).
-    # Lifetime: the cache lives until release_persisted_fp() — call it
-    # after materializing the returned pairs (ADVICE r4 leak note).
-    fp = _simhash_fp(df, id_col, text_col, fp_col).persist()
-    _PERSISTED_FP.append(fp)
+    # Lifetime: the cache lives until release_pinned() — call it after
+    # materializing the returned pairs.
+    fp = pin(_simhash_fp(df, id_col, text_col, fp_col))
     cand = simhash_candidates(fp, max_hamming, blocks=blocks, salt=salt, **salt_kw)
     cand = cand.join(
         fp.select(F.col("_id").alias("a"), F.col("_fp").alias("fp_a")), "a"
@@ -729,7 +703,6 @@ def winnow_partial_dups(
     stop_fp_df: int | None = None,
     broadcast_hot: bool | None = None,
     salt: bool = False,
-    cache_fp: bool = False,
     **salt_kw,
 ) -> DataFrame:
     """Partial-duplicate pairs over winnowing fingerprints (a < b):
@@ -749,20 +722,8 @@ def winnow_partial_dups(
     the fp join through the J3 salted join for residual hot values under
     the cap.
     """
-    # The distinct (id, fp) table feeds FOUR plan branches (hot-fp
-    # histogram, per-doc counts, both join sides), so any UDF upstream of
-    # ``fp`` executes once per branch. ``cache_fp=True`` persists it once
-    # instead. MEASURED trade (sf0.1, local[32], warm): recompute 3.7 s vs
-    # persist 7.1 s — at this scale the pipelined recompute across cores
-    # beats the materialization barrier + cache round-trip, so the default
-    # is off; at web scale, where the fingerprint UDF pass over the corpus
-    # dwarfs one |docs·fps| materialization, flip it on (or better:
-    # checkpoint the fingerprint table to parquet as its own stage and
-    # pass that in).
+    # not persisted: recompute measured 3.7 s vs persist 7.1 s (sf0.1)
     u = fp.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("fp")).distinct()
-    if cache_fp:
-        u = u.persist()
-        _PERSISTED_FP.append(u)  # released via release_persisted_fp()
     if stop_fp_df is not None:
         hot = (
             u.groupBy("fp")
@@ -813,7 +774,6 @@ def connected_components(
     checkpoint_dir: str | None = None,
     checkpoint_buckets: int = 16,
     job_id: str | None = None,
-    unroll: int = 1,
 ) -> DataFrame:
     """Connected components over an undirected pair set — the group-forming
     step every dedup pipeline needs after candidate pairs (MinHash, SimHash,
@@ -839,13 +799,10 @@ def connected_components(
     localCheckpoint of the new label table (truncating BOTH lineage and
     the logical plan — iterative plans otherwise grow ~3× per round and
     long-chain graphs OOM the driver during analysis; see the loop
-    comment). The in-memory path batches ``unroll`` rounds per
-    localCheckpoint job and reads the convergence flag off the cached
-    blocks, cutting the driver's per-round job count — the dominant cost
-    of the loop at small-to-medium graph sizes (rounds are scheduling-
-    latency-bound, not data-bound); results are identical because extra
-    rounds past the fixpoint are no-ops (labels monotone non-increasing,
-    every fixpoint of the closed-neighborhood min = component min).
+    comment). The in-memory path runs one round per localCheckpoint job
+    and reads the convergence flag off the cached blocks, so each round
+    costs one job — the dominant cost of the loop at small-to-medium
+    graph sizes (rounds are scheduling-latency-bound, not data-bound).
 
     ``checkpoint_dir`` (VERDICT r3 #6 — the production shape): write each
     round's label table through the S5 manifest sink (plans/manifest.py,
@@ -971,7 +928,8 @@ def connected_components(
     # fresh budget on top of the checkpointed progress). try/finally: the
     # non-convergence raise (or any mid-round failure) must not pin the
     # persisted |edges| table for the rest of the session (ADVICE r5 —
-    # same slow-leak class as the r5 release_persisted_fp fix).
+    # the slow-leak class that cache.release_pinned covers for frames
+    # that outlive their function).
     try:
         if checkpoint_dir is not None:
             # durable path: one round per manifest write (resume stays
@@ -993,50 +951,32 @@ def connected_components(
                     f"connected_components did not converge in {max_iter} rounds"
                 )
         else:
-            # in-memory path, tuned for driver-loop latency: per
-            # materialization it (a) folds the identity-label init into a
-            # special-cased first round (lbl = min(u, min neighbor) is one
-            # groupBy — no init job, no joins — and, since it references
-            # ``e`` exactly once, it is also what materializes the persist
-            # cache without concurrent duplicate evaluation), (b) carries
-            # the convergence flag INSIDE the checkpointed frame, so the
-            # per-chunk convergence count scans cached blocks instead of
-            # running a separate join job, and (c) optionally unrolls
-            # ``unroll`` rounds per localCheckpoint job. unroll stays 1 by
-            # default: Spark has no common-subtree elimination, so round
-            # k+1's plan re-computes round k's 2-3× (measured 4× wall at
-            # unroll=3 — the un-materialized inner rounds recompute, and
-            # their copies race); with unroll=1 every chunk references
-            # only cached leaves. Extra rounds past the fixpoint are
-            # idempotent (labels monotone non-increasing; any fixpoint of
-            # the closed-neighborhood min IS the component min), so
-            # chunked convergence detection returns identical labels.
-            rounds_left = max_iter
+            # in-memory path, tuned for driver-loop latency: (a) the
+            # identity-label init is folded into a special-cased first
+            # round (lbl = min(u, min neighbor) is one groupBy — no init
+            # job, no joins — and, since it references ``e`` exactly once,
+            # it is also what materializes the persist cache without
+            # concurrent duplicate evaluation), and (b) the convergence
+            # flag rides INSIDE the checkpointed frame, so the per-round
+            # convergence count scans cached blocks instead of running a
+            # separate join job. One round per localCheckpoint: Spark has
+            # no common-subtree elimination, so batching rounds into one
+            # job recomputes the inner rounds (measured 4× wall at 3
+            # rounds per job); one round references only cached leaves.
             labels = None  # None = implicit identity labels (lbl(u) = u)
-            while True:
-                if rounds_left <= 0:
-                    raise RuntimeError(
-                        f"connected_components did not converge in {max_iter} rounds"
-                    )
-                k = min(max(1, unroll), rounds_left)
-                cur = labels
-                for _ in range(k):
-                    if cur is None:
-                        # round 1 from identity labels: nbr-min is min(v)
-                        # and the pointer jump through identity is a no-op
-                        cur = e.groupBy("u").agg(
-                            F.least(F.col("u"), F.min("v")).alias("lbl")
-                        )
-                    else:
-                        cur = _round(cur)
-                rounds_left -= k
+            for _ in range(max_iter):
                 if labels is None:
-                    cmp = cur.select(
+                    # round 1 from identity labels: nbr-min is min(v) and
+                    # the pointer jump through identity is a no-op
+                    cmp = e.groupBy("u").agg(
+                        F.least(F.col("u"), F.min("v")).alias("lbl")
+                    ).select(
                         "u", "lbl", (F.col("lbl") != F.col("u")).alias("_chg")
                     )
                 else:
                     cmp = (
-                        cur.join(labels.withColumnRenamed("lbl", "_old"), "u")
+                        _round(labels)
+                        .join(labels.withColumnRenamed("lbl", "_old"), "u")
                         .select(
                             "u", "lbl",
                             (F.col("lbl") != F.col("_old")).alias("_chg"),
@@ -1046,6 +986,10 @@ def connected_components(
                 labels = ck.select("u", "lbl")
                 if ck.where(F.col("_chg")).count() == 0:
                     break
+            else:
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iter} rounds"
+                )
     finally:
         e.unpersist()
     # the final label table is already materialized (localCheckpoint /

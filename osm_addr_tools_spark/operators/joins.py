@@ -119,9 +119,7 @@ def cover_polygon_udf(level: int):
             pos += len(row)
         return pd.Series(out)
 
-    # see cell_encode_udf: optimizer fence against duplicate evaluation
-    # (the tile explode otherwise pushes size(cover) > 0 below this)
-    return cov.asNondeterministic()
+    return cov
 
 
 def rings_to_edges_udf():

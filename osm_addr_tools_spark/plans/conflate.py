@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from osm_addr_tools_spark.cache import pin
 from osm_addr_tools_spark.functions import geo as G
 from osm_addr_tools_spark.functions import normalize as N
 from osm_addr_tools_spark.operators.joins import knn_join, pip_join
@@ -187,35 +188,24 @@ def run_conflate(
     columnar storage per evidence join is cheaper than a cache pass, keeps
     the whole conflation ONE job, and removes the per-job serial floor that
     capped N→4N scaling efficiency in round 1 (VERDICT r1 #2).
+
+    Every persisted frame is registered with ``cache.pin``: call
+    ``cache.release_pinned()`` once the returned frame has been written.
     """
-    from pyspark import StorageLevel
-
-    def pin(df: DataFrame) -> DataFrame:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()  # eager: prevents concurrent duplicate-evaluation races
-        return df
-
     a = addrs.where(F.col("geocoded")).drop("geocoded")
     if pin_inputs:
         a = pin(a)
+        a.count()  # eager: prevents concurrent duplicate-evaluation races
 
     # --- existing side: normalized key columns (JVM map access + one
     # vectorized normalize UDF) ----------------------------------------------
-    # ex is pinned on BOTH paths (r8): unlike `a`, whose pin_inputs=False
+    # ex is pinned on BOTH paths: unlike `a`, whose pin_inputs=False
     # re-scan is a bare parquet read, ex is a UDF subtree feeding three
     # plan branches (key join, fuzzy vocab/candidates, nearest) — without
     # the pin the 100k-row normalization runs once per branch and the
-    # branches race. The eager count is one bounded job; the cache is
-    # released through the operators.dedup release registry, which
-    # bench.py already drains after every timed run.
-    ex = keyed_existing(existing)
-    if pin_inputs:
-        ex = pin(ex)
-    else:
-        from osm_addr_tools_spark.operators.dedup import _PERSISTED_FP
-
-        ex = pin(ex)
-        _PERSISTED_FP.append(ex)
+    # branches race. The eager count is one bounded job.
+    ex = pin(keyed_existing(existing))
+    ex.count()
     # min-node-per-key is an argmin, not a rank (r8): one partial-
     # aggregating min/min_by replaces the row_number window — map-side
     # combine shrinks the shuffle and the per-key sort disappears.

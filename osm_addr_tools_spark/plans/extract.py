@@ -39,11 +39,7 @@ def extract_text_udf():
     def x1(html: pd.Series) -> pd.Series:
         return T.extract_text(html)
 
-    # asNondeterministic: optimizer fence only (X1 is a pure function of
-    # the bytes — that determinism is the pinned spec). Chained below X2,
-    # whose explode-inferred predicate otherwise duplicates the whole
-    # X1+X2 Python stage (guide §4.4).
-    return x1.asNondeterministic()
+    return x1
 
 
 def parse_and_normalize_udf():
@@ -72,8 +68,7 @@ def parse_and_normalize_udf():
             pos += len(row)
         return pd.Series(out)
 
-    # see extract_text_udf: fence against explode-predicate duplication
-    return x2.asNondeterministic()
+    return x2
 
 
 def run_extract(

@@ -1,15 +1,15 @@
 import pytest
 from pyspark.sql import SparkSession
 
+from bench import SPARK_CONF
+
 
 @pytest.fixture(scope="session")
 def spark():
     s = (
         SparkSession.builder.master("local[4]")
+        .config(map=SPARK_CONF)
         .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.python.daemon.module", "osm_addr_tools_spark.daemon_prewarm")
-        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
         .appName("osm-addr-tools-spark-tests")
         .getOrCreate()

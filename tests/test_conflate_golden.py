@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from osm_addr_tools_spark.cache import release_pinned
 from osm_addr_tools_spark.plans.conflate import run_conflate
 from osm_addr_tools_spark.plans.extract import run_extract
 from osm_addr_tools_spark.sources import synth as S
@@ -93,3 +94,31 @@ def test_update_tags_merge(spark, golden):
     for r in dup:
         # duplicate = existing already complete; tags are the existing node's
         assert "source:addr" not in r.tags
+
+
+@pytest.mark.parametrize("pin_inputs", [True, False])
+def test_conflate_releases_pinned_frames(spark, tmp_path, pin_inputs):
+    """Every frame run_conflate persists is pinned: once the output is
+    written, release_pinned() returns the session's cached blocks to where
+    they were before the run, on both pin_inputs paths."""
+
+    def cached_blocks():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return sum(i.numCachedPartitions() for i in infos)
+
+    release_pinned()  # frames earlier tests left pinned
+    before = cached_blocks()
+    addrs = run_extract(
+        spark, S.synth_pages(spark, N_PAGES), S.synth_gazetteer(spark, N_PAGES)
+    )
+    m = run_conflate(
+        spark,
+        addrs,
+        S.synth_buildings(spark, N_PAGES),
+        S.synth_existing(spark, N_PAGES),
+        pin_inputs=pin_inputs,
+    )
+    m.write.parquet(str(tmp_path / "matches"))
+    assert cached_blocks() > before
+    assert release_pinned() == (2 if pin_inputs else 1)
+    assert cached_blocks() == before

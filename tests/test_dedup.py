@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from osm_addr_tools_spark.cache import release_pinned
 from osm_addr_tools_spark.operators import dedup as D
 from osm_addr_tools_spark.operators import similarity as SIM
 
@@ -425,30 +426,16 @@ def test_connected_components_chain_and_islands(spark):
 
 def test_connected_components_random_vs_union_find(spark):
     rng = np.random.default_rng(11)
-    edges = [
+    random_graph = [
         (int(a), int(b))
         for a, b in rng.integers(0, 80, size=(150, 2))
         if a != b
     ]
-    df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
-    got = {r.v: r.component for r in D.connected_components(df).collect()}
-    assert got == _uf_components(edges)
-
-
-def test_connected_components_unroll_invariant(spark):
-    """The per-checkpoint round batching (r8 driver-latency optimization)
-    must not change labels: unroll ∈ {1, 2, 3} all equal the union-find
-    reference on a chain + islands graph where chunked convergence
-    detection overshoots the true fixpoint by up to unroll-1 rounds."""
-    edges = [(i, i + 1) for i in range(30, 45)] + [(1, 2), (7, 8)]
-    df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
-    ref = _uf_components(edges)
-    for unroll in (1, 2, 3):
-        got = {
-            r.v: r.component
-            for r in D.connected_components(df, unroll=unroll).collect()
-        }
-        assert got == ref, f"unroll={unroll}"
+    chain_and_islands = [(i, i + 1) for i in range(30, 45)] + [(1, 2), (7, 8)]
+    for edges in (random_graph, chain_and_islands):
+        df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
+        got = {r.v: r.component for r in D.connected_components(df).collect()}
+        assert got == _uf_components(edges)
 
 
 def test_minhash_band_divisibility_raises_not_asserts():
@@ -616,13 +603,13 @@ def test_connected_components_caller_job_id_keys_resume(spark, tmp_path):
     assert got == _uf_components(g)
 
 
-def test_simhash_release_persisted_fp(spark, docs_with_planted):
-    """ADVICE r4 leak note: simhash_pairs persists its fingerprint table;
-    release_persisted_fp() must unpersist it (and be idempotent)."""
+def test_simhash_release_pinned(spark, docs_with_planted):
+    """ADVICE r4 leak note: simhash_pairs pins its fingerprint table;
+    release_pinned() must unpersist it (and be idempotent)."""
     pairs = D.simhash_pairs(docs_with_planted, max_hamming=3)
     pairs.count()
-    assert D.release_persisted_fp() >= 1
-    assert D.release_persisted_fp() == 0
+    assert release_pinned() >= 1
+    assert release_pinned() == 0
 
 
 def test_simhash_batch_equals_scalar():
@@ -829,7 +816,7 @@ def test_incremental_dedup_plan_no_cartesian(spark):
 
 def test_incremental_dedup_cache_sigs_identical_and_released(spark):
     """cache_sigs=True must not change the ledger and must be released by
-    release_persisted_fp (the winnow cache_fp contract)."""
+    release_pinned."""
     c, b = _inc_dfs(spark)
     idx = D.build_minhash_index(c)
     plain = {
@@ -843,7 +830,7 @@ def test_incremental_dedup_cache_sigs_identical_and_released(spark):
         ).collect()
     }
     assert cached == plain
-    assert D.release_persisted_fp() >= 1
+    assert release_pinned() >= 1
 
 
 def test_incremental_dedup_consistent_with_batch_family(spark):

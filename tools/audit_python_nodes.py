@@ -17,6 +17,7 @@ root = sys.argv[1] if len(sys.argv) > 1 else os.path.dirname(
 sys.path.insert(0, root)
 
 from bench import bench_queries, build_spark  # noqa: E402
+from osm_addr_tools_spark.cache import release_pinned  # noqa: E402
 
 
 def main():
@@ -50,9 +51,7 @@ def main():
             f"{name:32s} arrow={arrow:2d} batch={batch} exch={exch:2d} "
             f"dups={dups if dups else '-'}"
         )
-        from osm_addr_tools_spark.operators.dedup import release_persisted_fp
-
-        release_persisted_fp()
+        release_pinned()
     spark.stop()
 
 

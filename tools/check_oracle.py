@@ -51,12 +51,12 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from bench import SPARK_CONF
+
     spark = (
         SparkSession.builder.master("local[8]")
+        .config(map=SPARK_CONF)
         .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.python.daemon.module", "osm_addr_tools_spark.daemon_prewarm")
-        .config("spark.ui.enabled", "false")
         .appName("oracle-check")
         .getOrCreate()
     )

@@ -1,17 +1,17 @@
 """Dump formatted physical plans of the headline queries to BENCH/PLANS.md."""
-import sys, re
-sys.path.insert(0, '/root/repo')
-from pyspark.sql import SparkSession, functions as F
+import os, sys, re
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pyspark.sql import SparkSession
+
+from bench import SPARK_CONF, bench_queries
 
 spark = (SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions","16")
-    .config("spark.sql.adaptive.enabled","true")
-    .config("spark.ui.enabled","false").getOrCreate())
+    .config(map=SPARK_CONF)
+    .config("spark.sql.shuffle.partitions", "16")
+    .appName("gen-plans").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 
 from osm_addr_tools_spark import queries as Q
-from osm_addr_tools_spark.plans.conflate import run_conflate
-from bench import bench_queries
 
 base = "/tmp/spark_graft_bench_0.1_100000"
 qs = bench_queries(spark, "/root/testdata/sf0.1", 100000, base)
