@@ -122,3 +122,43 @@ def test_conflate_releases_pinned_frames(spark, tmp_path, pin_inputs):
     assert cached_blocks() > before
     assert release_pinned() == (2 if pin_inputs else 1)
     assert cached_blocks() == before
+
+
+def test_exact_key_min_node_with_null_tags(spark):
+    """ex_best takes every field from the one existing node with the
+    smallest node_id, nulls included: min_by skips only null orderings, so
+    a null ``e_tags``/``has_postcode`` on that node is not filled in from a
+    larger node sharing the key."""
+    from osm_addr_tools_spark.functions.geo import haversine_np
+    from osm_addr_tools_spark.plans.conflate import keyed_existing
+
+    existing = spark.createDataFrame(
+        [(1, 21.0, 52.0, None), (2, 21.001, 52.0, {"building": "yes"})],
+        "node_id long, lon double, lat double, tags map<string,string>",
+    )
+    key = {r.node_id: r for r in keyed_existing(existing).collect()}
+    assert key[1].addr_key == key[2].addr_key
+    assert key[1].e_tags is None and key[1].has_postcode is None
+    lon, lat = 21.0, 52.0001
+    addrs = spark.createDataFrame(
+        [(f"u{i}", key[1].addr_key, "c", "s", "1", pc, key[1].city_norm,
+          key[1].street_norm, key[1].hn_norm, lon, lat, True)
+         for i, pc in ((0, None), (1, "00-001"))],
+        "url string, addr_key string, city string, street string, housenumber string, "
+        "postcode string, city_norm string, street_norm string, hn_norm string, "
+        "lon double, lat double, geocoded boolean",
+    )
+    no_buildings = S.synth_buildings(spark, 1).where(F.lit(False))
+    got = {r.url: r for r in run_conflate(spark, addrs, no_buildings, existing).collect()}
+    release_pinned()
+
+    # postcode null: complete regardless of has_postcode → duplicate of
+    # node 1, carrying node 1's null tags and measured to node 1's point
+    dup = got["u0"]
+    assert (dup.match_kind, dup.matched_ref, dup.tags) == ("duplicate", 1, None)
+    assert abs(dup.dist_m - float(haversine_np(lon, lat, 21.0, 52.0))) < 1e-6
+    # postcode set: has_postcode null makes both the duplicate and the
+    # update rule null, so the row falls through to create (node 2's
+    # has_postcode=false would have made it an update)
+    assert got["u1"].match_kind == "create"
+    assert got["u1"].matched_ref is None
