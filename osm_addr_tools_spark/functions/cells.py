@@ -152,11 +152,6 @@ def st_to_ij(s: np.ndarray) -> np.ndarray:
     ).astype(np.int64)
 
 
-def ij_to_st_center(ij: np.ndarray) -> np.ndarray:
-    """(s,t) of the center of leaf cell column/row ``ij``."""
-    return (np.asarray(ij, dtype=np.float64) + 0.5) / MAX_SIZE
-
-
 # ---------------------------------------------------------------------------
 # Hilbert encode/decode
 # ---------------------------------------------------------------------------
@@ -557,14 +552,50 @@ def cover_polygon_ij(rings, level: int) -> list[tuple[int, int, int]]:
     return sorted(out)
 
 
-def cover_ij_to_cells(triples, level: int) -> np.ndarray:
-    """Batch-encode (face, i, j) cover triples (possibly from MANY polygons)
-    to sorted unique int64 cell ids at ``level`` in one vectorized pass."""
-    if not triples:
-        return np.empty(0, dtype=np.int64)
-    arr = np.asarray(triples, dtype=np.int64)
-    leaf = cell_from_face_ij(arr[:, 0], arr[:, 1], arr[:, 2])
-    return np.unique(cell_parent(leaf, level).astype(np.int64))
+def ring_arrays(poly) -> list[np.ndarray]:
+    """One polygon as Arrow hands it to a pandas UDF
+    (``array<array<struct<lon,lat>>>``) → list of (n, 2) float64 vertex
+    arrays, outer ring first; None or empty → []. The one place the
+    nested struct is unpacked."""
+    if poly is None:
+        return []
+    return [
+        np.array([(p["lon"], p["lat"]) for p in ring], dtype=np.float64).reshape(-1, 2)
+        for ring in poly
+    ]
+
+
+def ring_edges(rings) -> np.ndarray:
+    """Flat edge array [xa,ya,xb,yb]×n over ALL rings (outer + holes), each
+    ring closed back to its first vertex. Even-odd parity over every edge
+    IS outer-minus-holes containment (the J4 refine kernel's input)."""
+    if not rings:
+        return np.empty(0, dtype=np.float64)
+    return np.concatenate(
+        [np.concatenate([v, np.roll(v, -1, axis=0)], axis=1).ravel() for v in rings]
+    )
+
+
+def cover_batch(polys, level: int) -> list[np.ndarray]:
+    """C4 over a batch of polygons: ``cover_polygon_ij`` per polygon, ONE
+    vectorized Hilbert encode for every polygon's cells (the encode
+    dominated cost when done per polygon: 0.9 ms → ~0.1 ms per building),
+    then one sort that leaves each row's ids sorted and unique. ``polys``:
+    list of polygons, each a list of rings as in ``cover_polygon`` (an
+    empty list covers nothing). Returns one int64 array per polygon."""
+    triples = [cover_polygon_ij(rings, level) for rings in polys]
+    counts = np.array([len(t) for t in triples], dtype=np.int64)
+    if not counts.sum():
+        return [np.empty(0, dtype=np.int64) for _ in polys]
+    arr = np.asarray([t for row in triples for t in row], dtype=np.int64)
+    ids = cell_parent(cell_from_face_ij(arr[:, 0], arr[:, 1], arr[:, 2]), level).astype(np.int64)
+    row = np.repeat(np.arange(len(polys)), counts)
+    order = np.lexsort((ids, row))
+    ids, row = ids[order], row[order]
+    keep = np.ones(len(ids), dtype=bool)
+    keep[1:] = (ids[1:] != ids[:-1]) | (row[1:] != row[:-1])
+    ids, row = ids[keep], row[keep]
+    return np.split(ids, np.cumsum(np.bincount(row, minlength=len(polys)))[:-1])
 
 
 def cover_polygon(rings, level: int) -> np.ndarray:
@@ -575,7 +606,7 @@ def cover_polygon(rings, level: int) -> np.ndarray:
     building-footprint-sized polygons (projected straight-edge
     approximation — exact at that scale for candidate-superset purposes;
     SURVEY §2.3 C4)."""
-    return cover_ij_to_cells(cover_polygon_ij(rings, level), level)
+    return cover_batch([rings], level)[0]
 
 
 def cells_to_boxes(cells: np.ndarray):

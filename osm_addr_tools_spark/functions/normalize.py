@@ -6,9 +6,9 @@ The reference implementation was unavailable (SURVEY.md §0), so the exact
 rules are pinned HERE (and in FIXTURES.md §3) as the normative spec, gated
 by golden fixtures in tests/test_normalize.py.
 
-All kernels are batch ``pd.Series -> pd.Series`` functions (Arrow-vectorized
-via pandas string methods — no per-row Python in the hot path, per
-BASELINE.json input_hint). Each is idempotent: f(f(x)) == f(x).
+All kernels are batch functions over ``pd.Series`` (Arrow-vectorized via
+pandas string methods — no per-row Python in the hot path, per
+BASELINE.json input_hint). F1/F2 are idempotent: f(f(x)) == f(x).
 """
 
 from __future__ import annotations
@@ -143,12 +143,28 @@ def street_similarity(a: pd.Series, b: pd.Series, tau: float | None = None) -> p
     return pd.Series(out, index=a.index, dtype="float64")
 
 
-def addr_key(
-    city: pd.Series, street: pd.Series, place: pd.Series, housenumber: pd.Series
-) -> pd.Series:
-    """F4 — canonical duplicate-detection key:
-    ``lower(city) | norm_street(street or place) | norm_housenumber(hn)``.
+def norm_address(
+    city: pd.Series,
+    street: pd.Series,
+    housenumber: pd.Series,
+    place: pd.Series | None = None,
+) -> pd.DataFrame:
+    """F4 — canonical duplicate-detection key and its parts:
+    ``addr_key = city_norm | street_norm | hn_norm`` with
+    ``city_norm = lower(trim(city))``, ``street_norm = norm_street(street)``
+    and ``hn_norm = norm_housenumber(housenumber)``. When ``place`` is
+    given it replaces an empty street (OSM ``addr:place`` usage).
     """
     city_n = city.fillna("").astype(str).str.strip().str.lower()
-    street_or_place = street.where(street.fillna("") != "", place)
-    return city_n + "|" + norm_street(street_or_place) + "|" + norm_housenumber(housenumber)
+    if place is not None:
+        street = street.where(street.fillna("") != "", place)
+    street_n = norm_street(street)
+    hn_n = norm_housenumber(housenumber)
+    return pd.DataFrame(
+        {
+            "addr_key": city_n + "|" + street_n + "|" + hn_n,
+            "city_norm": city_n,
+            "street_norm": street_n,
+            "hn_norm": hn_n,
+        }
+    )

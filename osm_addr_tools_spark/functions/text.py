@@ -179,11 +179,6 @@ def quality_components(text: pd.Series) -> pd.DataFrame:
     )
 
 
-def quality_score(text: pd.Series) -> pd.Series:
-    """Composite [0,1] quality heuristic (see quality_components)."""
-    return quality_components(text)["quality"]
-
-
 def token_count(text: pd.Series) -> pd.Series:
     """BPE-ish regex token count (word pieces + numbers + symbols)."""
     return text.fillna("").map(lambda t: len(_TOKEN_RE.findall(t))).astype("int64")

@@ -110,7 +110,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     k: int = 5,
     stop_shingle_df: int = 1000,
-    broadcast_hot: bool | None = None,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs (a < b, jaccard ≥ threshold).
 
@@ -125,14 +124,12 @@ def ngram_jaccard_pairs(
     512 smallest hashes — above the cap the measure is bottom-k-sketch
     Jaccard, not exact (documented trade-off for bounded row width).
 
-    ``broadcast_hot`` (VERDICT r3 #5): the hot-shingle set grows with the
-    corpus (every shingle with df > cap), so force-broadcasting it is
-    unbounded at 10^12 docs. Default ``None`` leaves the anti-join
-    strategy to Catalyst/AQE, which converts to broadcast from the REAL
-    post-shuffle size when it fits ``autoBroadcastJoinThreshold`` and
-    keeps a shuffled hash join when it doesn't — the scale-safe default
-    with no extra driver-side sizing job. ``True``/``False`` force
-    broadcast / shuffle for callers who know their corpus.
+    The stop-shingle anti-join carries no strategy hint (VERDICT r3 #5):
+    the hot-shingle set grows with the corpus (every shingle with df >
+    cap), so force-broadcasting it is unbounded at 10^12 docs. Catalyst/AQE
+    converts to broadcast from the REAL post-shuffle size when it fits
+    ``autoBroadcastJoinThreshold`` and keeps a shuffled hash join when it
+    doesn't — scale-safe, with no extra driver-side sizing job.
     """
     sh = df.select(
         F.col(id_col).alias("_id"), shingle_udf(k)(F.col(text_col)).alias("_sh")
@@ -143,10 +140,6 @@ def ngram_jaccard_pairs(
         .where(F.col("_df") > stop_shingle_df)
         .select("_g")
     )
-    if broadcast_hot is True:
-        hot = F.broadcast(hot)
-    elif broadcast_hot is False:
-        hot = hot.hint("shuffle_hash")
     ex = ex.join(hot, "_g", "left_anti")
     # per-doc sizes of the post-filter sets (one partial-agg shuffle on id)
     cnt = ex.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
@@ -212,6 +205,38 @@ def minhash_udf(k: int = 5, num_perm: int = 64, seed: int = 42):
     return mh
 
 
+def _band_buckets(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """(_id, band, bucket) band table from an (_id, _sig) signature table:
+    xxhash64 of each signature band slice. minhash_lsh_pairs and the
+    incremental path both bucket through it, so batch and corpus
+    signatures band identically."""
+    band_cols = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band"),
+                F.xxhash64(
+                    F.slice("_sig", i * rows_per_band + 1, rows_per_band).cast("string")
+                ).alias("bucket"),
+            )
+            for i in range(bands)
+        ]
+    )
+    return sig.withColumn("_b", F.explode(band_cols)).select(
+        "_id", F.col("_b.band").alias("band"), F.col("_b.bucket").alias("bucket")
+    )
+
+
+def _sig_agree(a_col: str, b_col: str):
+    """Agreeing-position count between two aligned signature arrays — one
+    zip_with/aggregate Column expression, no Python (the verify step of
+    minhash_lsh_pairs and the incremental path)."""
+    return F.aggregate(
+        F.zip_with(a_col, b_col, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.7,
@@ -251,26 +276,13 @@ def minhash_lsh_pairs(
     )
     if cache_sigs:
         sig = pin(sig)
-    band_cols = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.xxhash64(
-                    F.slice("_sig", i * rows_per_band + 1, rows_per_band).cast("string")
-                ).alias("bucket"),
-            )
-            for i in range(bands)
-        ]
-    )
     # candidate generation travels light (VERDICT r2 #8): only (id, band,
     # bucket) flows through the band join and the (a,b) dedup shuffle — a
     # pair surfacing in many bands would otherwise drag TWO 64-long
     # signature arrays (~1 KB) through every duplicate. Signatures re-join
     # by id afterwards: two |docs|-sized shuffles instead of
     # |band-duplicated pairs|-sized payloads.
-    buckets = sig.withColumn("_b", F.explode(band_cols)).select(
-        "_id", F.col("_b.band").alias("band"), F.col("_b.bucket").alias("bucket")
-    )
+    buckets = _band_buckets(sig, bands, rows_per_band)
     lhs = buckets.select(F.col("_id").alias("a"), "band", "bucket")
     rhs = buckets.select(F.col("_id").alias("b"), "band", "bucket")
     cand = (
@@ -281,12 +293,7 @@ def minhash_lsh_pairs(
         .join(sig.select(F.col("_id").alias("a"), F.col("_sig").alias("sig_a")), "a")
         .join(sig.select(F.col("_id").alias("b"), F.col("_sig").alias("sig_b")), "b")
     )
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    est = agree / F.lit(num_perm)
+    est = _sig_agree("sig_a", "sig_b") / F.lit(num_perm)
     return (
         cand.withColumn("est_jaccard", est)
         .where(F.col("est_jaccard") >= threshold)
@@ -297,38 +304,6 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 # Incremental MinHash dedup (new crawl vs persisted corpus index)
 # ---------------------------------------------------------------------------
-
-
-def _band_buckets(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(_id, band, bucket) band table from an (_id, _sig) signature table —
-    the SAME banding construction minhash_lsh_pairs inlines (xxhash64 of
-    each signature band slice), factored so the incremental path buckets
-    batch and corpus signatures identically."""
-    band_cols = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.xxhash64(
-                    F.slice("_sig", i * rows_per_band + 1, rows_per_band).cast("string")
-                ).alias("bucket"),
-            )
-            for i in range(bands)
-        ]
-    )
-    return sig.withColumn("_b", F.explode(band_cols)).select(
-        "_id", F.col("_b.band").alias("band"), F.col("_b.bucket").alias("bucket")
-    )
-
-
-def _sig_agree(a_col: str, b_col: str):
-    """Agreeing-position count between two aligned signature arrays — one
-    zip_with/aggregate Column expression, no Python (same verify as
-    minhash_lsh_pairs)."""
-    return F.aggregate(
-        F.zip_with(a_col, b_col, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
 
 
 def build_minhash_index(
@@ -362,7 +337,6 @@ def incremental_minhash_dedup(
     num_perm: int = 64,
     bands: int = 16,
     seed: int = 42,
-    broadcast_batch: bool = False,
     cache_sigs: bool = False,
 ) -> DataFrame:
     """Ingest-time near-dup gate for a NEW batch against an EXISTING corpus
@@ -381,9 +355,8 @@ def incremental_minhash_dedup(
 
     Scale shape: the corpus index never re-shuffles per crawl if stored
     bucketed on (band, bucket) (sources.io.write_bucketed) — the candidate
-    join is then Exchange-free on the index side; alternatively, a typical
-    daily increment is ≪ corpus, so ``broadcast_batch=True`` broadcasts
-    the batch band table and the corpus-side scan never shuffles AT ALL.
+    join is then Exchange-free on the index side; a daily increment is ≪
+    corpus, so AQE can broadcast the batch band table from its real size.
     Within-batch stages shuffle only batch-sized tables. The batch
     signature subtree feeds ~6 plan branches (band tables, both verify
     joins, the survivor anti-join) — ``cache_sigs=True`` pins it once
@@ -415,8 +388,6 @@ def incremental_minhash_dedup(
     ib = _band_buckets(isig, bands, rpb)
 
     lhs = bb.select(F.col("_id").alias("a"), "band", "bucket")
-    if broadcast_batch:
-        lhs = F.broadcast(lhs)
     # candidates travel light (ids only); signatures re-join by id for the
     # verify step — the same payload discipline as minhash_lsh_pairs
     corpus_hits = (
@@ -701,7 +672,6 @@ def winnow_partial_dups(
     id_col: str = "doc_id",
     fp_col: str = "fp",
     stop_fp_df: int | None = None,
-    broadcast_hot: bool | None = None,
     salt: bool = False,
     **salt_kw,
 ) -> DataFrame:
@@ -717,8 +687,8 @@ def winnow_partial_dups(
     creates k² candidate pairs, the first thing a boilerplate-heavy real
     corpus hits. Dropping them BEFORE the per-doc counts keeps containment
     exact over the post-filter fp sets (removed fps leave both the
-    intersection and the min() denominator consistently). ``broadcast_hot``
-    as in ngram_jaccard_pairs (None = AQE decides). ``salt=True`` routes
+    intersection and the min() denominator consistently); the anti-join's
+    strategy is left to AQE as in ngram_jaccard_pairs. ``salt=True`` routes
     the fp join through the J3 salted join for residual hot values under
     the cap.
     """
@@ -731,10 +701,6 @@ def winnow_partial_dups(
             .where(F.col("_df") > stop_fp_df)
             .select("fp")
         )
-        if broadcast_hot is True:
-            hot = F.broadcast(hot)
-        elif broadcast_hot is False:
-            hot = hot.hint("shuffle_hash")
         u = u.join(hot, "fp", "left_anti")
     cnt = u.groupBy("_id").agg(F.count(F.lit(1)).alias("nf"))
     lhs = u.select(F.col("_id").alias("a"), "fp")

@@ -47,17 +47,6 @@ def cell_encode_udf(level: int):
     return enc.asNondeterministic()
 
 
-def cell_neighbors_udf():
-    """cell → array of the 8 same-level neighbors (face-wrap correct)."""
-
-    @pandas_udf("array<long>")
-    def nbr(cell: pd.Series) -> pd.Series:
-        arr = C.cell_neighbors(cell.to_numpy(np.int64))
-        return pd.Series(list(arr))
-
-    return nbr
-
-
 def cell_parent_udf(level: int):
     """cell → ancestor id at ``level`` (C2; pure id arithmetic kernel)."""
 
@@ -97,51 +86,19 @@ def cover_polygon_udf(level: int):
 
     @pandas_udf("array<long>")
     def cov(rings: pd.Series) -> pd.Series:
-        # per-polygon geometry tests in Python, but ONE vectorized Hilbert
-        # encode for the whole Arrow batch (encode dominated cost when done
-        # cell-at-a-time: 0.9 ms → ~0.1 ms per building)
-        triples_per_row: list[list[tuple[int, int, int]]] = []
-        for poly in rings:
-            if poly is None or len(poly) == 0:
-                triples_per_row.append([])
-                continue
-            py_rings = [[(p["lon"], p["lat"]) for p in ring] for ring in poly]
-            triples_per_row.append(C.cover_polygon_ij(py_rings, level))
-        flat = [t for row in triples_per_row for t in row]
-        ids = np.empty(0, dtype=np.int64)  # all-empty batch: no covers at all
-        if flat:
-            arr = np.asarray(flat, dtype=np.int64)
-            leaf = C.cell_from_face_ij(arr[:, 0], arr[:, 1], arr[:, 2])
-            ids = C.cell_parent(leaf, level).astype(np.int64)
-        out, pos = [], 0
-        for row in triples_per_row:
-            out.append(sorted(set(ids[pos : pos + len(row)].tolist())))
-            pos += len(row)
-        return pd.Series(out)
+        return pd.Series(C.cover_batch([C.ring_arrays(p) for p in rings], level))
 
     return cov
 
 
 def rings_to_edges_udf():
-    """rings → flat edge array [xa,ya,xb,yb]×n over ALL rings (outer +
-    holes). Downstream containment uses even-odd parity over every edge,
-    which IS outer-minus-holes semantics; and array<double> crosses
-    Arrow→pandas as plain numpy (no per-vertex dict unpacking)."""
+    """rings → flat edge array [xa,ya,xb,yb]×n over ALL rings (C.ring_edges);
+    array<double> crosses Arrow→pandas as plain numpy (no per-vertex dict
+    unpacking in the refine kernel)."""
 
     @pandas_udf("array<double>")
     def to_edges(rings: pd.Series) -> pd.Series:
-        out = []
-        for poly in rings:
-            if poly is None or len(poly) == 0:
-                out.append([])
-                continue
-            segs = []
-            for ring in poly:
-                v = np.array([(p["lon"], p["lat"]) for p in ring], dtype=np.float64)
-                nxt = np.roll(v, -1, axis=0)
-                segs.append(np.concatenate([v, nxt], axis=1).ravel())
-            out.append(np.concatenate(segs))
-        return pd.Series(out)
+        return pd.Series([C.ring_edges(C.ring_arrays(p)) for p in rings])
 
     return to_edges
 
@@ -152,34 +109,11 @@ def cover_and_edges_udf(level: int):
     generator (cover cells) and the exact refine kernel (flat edges)."""
 
     @pandas_udf("struct<cover:array<long>,edges:array<double>>")
-    def both(rings: pd.Series) -> pd.Series:
-        covers: list[list[tuple[int, int, int]]] = []
-        edges_out = []
-        for poly in rings:
-            if poly is None or len(poly) == 0:
-                covers.append([])
-                edges_out.append([])
-                continue
-            py_rings = []
-            segs = []
-            for ring in poly:
-                v = np.array([(p["lon"], p["lat"]) for p in ring], dtype=np.float64)
-                py_rings.append(v)
-                nxt = np.roll(v, -1, axis=0)
-                segs.append(np.concatenate([v, nxt], axis=1).ravel())
-            covers.append(C.cover_polygon_ij(py_rings, level))
-            edges_out.append(np.concatenate(segs))
-        flat = [t for row in covers for t in row]
-        ids = np.empty(0, dtype=np.int64)  # all-empty batch: no covers at all
-        if flat:
-            arr = np.asarray(flat, dtype=np.int64)
-            leaf = C.cell_from_face_ij(arr[:, 0], arr[:, 1], arr[:, 2])
-            ids = C.cell_parent(leaf, level).astype(np.int64)
-        cov_ids, pos = [], 0
-        for row in covers:
-            cov_ids.append(sorted(set(ids[pos : pos + len(row)].tolist())))
-            pos += len(row)
-        return pd.DataFrame({"cover": cov_ids, "edges": edges_out})
+    def both(rings: pd.Series) -> pd.DataFrame:
+        polys = [C.ring_arrays(p) for p in rings]
+        return pd.DataFrame(
+            {"cover": C.cover_batch(polys, level), "edges": [C.ring_edges(r) for r in polys]}
+        )
 
     # see cell_encode_udf: without the fence, the explode's inferred
     # size(cover) > 0 predicate is pushed below the projection and THE
@@ -245,7 +179,6 @@ def salted_join(
     build: DataFrame,
     key: str,
     probe_salt_col: Column,
-    how: str = "inner",
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
     rows_per_task: int = DEFAULT_ROWS_PER_TASK,
     max_salt: int = MAX_SALT,
@@ -263,15 +196,10 @@ def salted_join(
     (only hot keys) and broadcast. This complements AQE's skew split, which
     only applies to sort-merge joins post-shuffle.
 
-    Only inner/left are supported: right/full would emit each UNMATCHED
-    replicated build row once per salt value after ``_salt`` is dropped.
+    Inner join only: under right/full semantics each UNMATCHED replicated
+    build row would be emitted once per salt value after ``_salt`` is
+    dropped.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how in ('inner','left'); got {how!r} — "
-            "replicated build rows would duplicate unmatched output under "
-            "right/full semantics"
-        )
     hot = (
         probe.groupBy(key)
         .agg(F.count(F.lit(1)).alias("_cnt"))
@@ -310,7 +238,7 @@ def salted_join(
     # serializes hundreds of MB through the driver (measured 58 s at 600k
     # rows). Forcing shuffle keeps it distributed; AQE still downgrades to
     # broadcast at runtime when the ACTUAL size is small.
-    return p.join(b.hint("shuffle_hash"), [key, "_salt"], how).drop("_salt")
+    return p.join(b.hint("shuffle_hash"), [key, "_salt"]).drop("_salt")
 
 
 # ---------------------------------------------------------------------------
@@ -326,7 +254,6 @@ def pip_join(
     lat: str = "lat",
     rings: str = "rings",
     salt: bool = False,
-    broadcast_polygons: bool | None = None,
     **salt_kw,
 ) -> DataFrame:
     """Pair each point with every polygon containing it (J4).
@@ -344,9 +271,7 @@ def pip_join(
     polys = polys.select("*", F.col("_ce.cover").alias("_cover"),
                          F.col("_ce.edges").alias("_edges")).drop("_ce")
     polys = polys.withColumn("_cell", F.explode("_cover")).drop("_cover")
-    if broadcast_polygons:
-        polys = F.broadcast(polys)
-    elif not salt:
+    if not salt:
         # see salted_join: never let a static misestimate broadcast the
         # cover-exploded polygon side through the driver
         polys = polys.hint("shuffle_hash")

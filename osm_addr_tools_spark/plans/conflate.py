@@ -65,8 +65,8 @@ def norm_tags_udf():
     strings → (addr_key, city_norm, street_norm, hn_norm). The map access
     that used to happen per-row inside the UDF is now JVM-side
     ``element_at`` Columns (see keyed_existing); this UDF only runs the
-    batch pandas string kernels (F1/F2/F4). Lazy factory: pandas_udf needs
-    an active SparkContext."""
+    batch pandas string kernels (F1/F2/F4, ``N.norm_address``). Lazy
+    factory: pandas_udf needs an active SparkContext."""
 
     @pandas_udf(
         "struct<addr_key:string,city_norm:string,street_norm:string,hn_norm:string>"
@@ -74,18 +74,7 @@ def norm_tags_udf():
     def norm(
         city: pd.Series, street: pd.Series, place: pd.Series, hn: pd.Series
     ) -> pd.DataFrame:
-        city_n = city.fillna("").astype(str).str.strip().str.lower()
-        street_or_place = street.where(street.fillna("") != "", place)
-        street_n = N.norm_street(street_or_place)
-        hn_n = N.norm_housenumber(hn)
-        return pd.DataFrame(
-            {
-                "addr_key": city_n + "|" + street_n + "|" + hn_n,
-                "city_norm": city_n,
-                "street_norm": street_n,
-                "hn_norm": hn_n,
-            }
-        )
+        return N.norm_address(city, street, hn, place)
 
     # asNondeterministic: optimizer fence only (the kernel is pure) — the
     # key join otherwise pushes inferred isnotnull(addr_key) below the
@@ -159,8 +148,6 @@ def run_conflate(
     buildings: DataFrame,
     existing: DataFrame,
     d_max_m: float = D_MAX_M,
-    containment_level: int = CONTAINMENT_LEVEL,
-    fuzzy_tau: float | None = FUZZY_TAU,
     salt: bool = False,
     pin_inputs: bool = True,
     **salt_kw,
@@ -230,54 +217,52 @@ def run_conflate(
     # candidate join executed that join twice). The surviving
     # above-threshold pair table is tiny; AQE broadcasts it from its real
     # size.
-    fuzzy_best = None
-    if fuzzy_tau is not None:
-        va = a.select("city_norm", F.col("street_norm").alias("_a_street")).distinct()
-        ve = ex.select("city_norm", F.col("street_norm").alias("_e_street")).distinct()
-        # JVM-side length-band block (VERDICT r2 #2): matched chars ≤
-        # min(la,lb), so ratio ≥ τ requires 2·min(la,lb) ≥ τ·(la+lb) — a
-        # pure codegen predicate that discards most of a vocabulary
-        # cross-product before any Python runs. The UDF adds a second
-        # provable block (char-multiset ∩ bound) before the O(n²) matcher.
-        la, lb = F.length("_a_street"), F.length("_e_street")
-        pair_ratio = (
-            va.join(ve, "city_norm")
-            .where(F.col("_e_street") != F.col("_a_street"))
-            .select("_a_street", "_e_street")
-            .distinct()
-            .where(2.0 * F.least(la, lb) >= F.lit(float(fuzzy_tau)) * (la + lb))
-            .withColumn(
-                "_ratio",
-                street_similarity_udf(float(fuzzy_tau))(
-                    F.col("_a_street"), F.col("_e_street")
-                ),
-            )
-            .where(F.col("_ratio") >= F.lit(float(fuzzy_tau)))
+    va = a.select("city_norm", F.col("street_norm").alias("_a_street")).distinct()
+    ve = ex.select("city_norm", F.col("street_norm").alias("_e_street")).distinct()
+    # JVM-side length-band block (VERDICT r2 #2): matched chars ≤
+    # min(la,lb), so ratio ≥ τ requires 2·min(la,lb) ≥ τ·(la+lb) — a
+    # pure codegen predicate that discards most of a vocabulary
+    # cross-product before any Python runs. The UDF adds a second
+    # provable block (char-multiset ∩ bound) before the O(n²) matcher.
+    la, lb = F.length("_a_street"), F.length("_e_street")
+    pair_ratio = (
+        va.join(ve, "city_norm")
+        .where(F.col("_e_street") != F.col("_a_street"))
+        .select("_a_street", "_e_street")
+        .distinct()
+        .where(2.0 * F.least(la, lb) >= F.lit(FUZZY_TAU) * (la + lb))
+        .withColumn(
+            "_ratio",
+            street_similarity_udf(FUZZY_TAU)(
+                F.col("_a_street"), F.col("_e_street")
+            ),
         )
-        # pre-join the pair table onto the existing side: the big join then
-        # keys on (city, hn, the similar street) and only nodes with an
-        # above-threshold counterpart street flow through the shuffle
-        exp = ex.select(
-            F.col("node_id").alias("f_node"),
-            F.col("e_lon").alias("f_lon"),
-            F.col("e_lat").alias("f_lat"),
-            F.col("e_tags").alias("f_tags"),
-            F.col("has_postcode").alias("f_has_pc"),
-            "city_norm", "hn_norm",
-            F.col("street_norm").alias("_e_street"),
-        ).join(pair_ratio.hint("shuffle_hash"), "_e_street")
-        f_cand = a.select(
-            "url", "addr_key", "city_norm", "hn_norm",
-            F.col("street_norm").alias("_a_street"),
-        ).join(exp.hint("shuffle_hash"), ["city_norm", "hn_norm", "_a_street"])
-        w_fuzzy = Window.partitionBy("url", "addr_key").orderBy(
-            F.col("_ratio").desc(), F.col("f_node").asc()
-        )
-        fuzzy_best = (
-            f_cand.withColumn("_rn", F.row_number().over(w_fuzzy))
-            .where(F.col("_rn") == 1)
-            .select("url", "addr_key", "f_node", "f_has_pc", "f_lon", "f_lat", "f_tags")
-        )
+        .where(F.col("_ratio") >= F.lit(FUZZY_TAU))
+    )
+    # pre-join the pair table onto the existing side: the big join then
+    # keys on (city, hn, the similar street) and only nodes with an
+    # above-threshold counterpart street flow through the shuffle
+    exp = ex.select(
+        F.col("node_id").alias("f_node"),
+        F.col("e_lon").alias("f_lon"),
+        F.col("e_lat").alias("f_lat"),
+        F.col("e_tags").alias("f_tags"),
+        F.col("has_postcode").alias("f_has_pc"),
+        "city_norm", "hn_norm",
+        F.col("street_norm").alias("_e_street"),
+    ).join(pair_ratio.hint("shuffle_hash"), "_e_street")
+    f_cand = a.select(
+        "url", "addr_key", "city_norm", "hn_norm",
+        F.col("street_norm").alias("_a_street"),
+    ).join(exp.hint("shuffle_hash"), ["city_norm", "hn_norm", "_a_street"])
+    w_fuzzy = Window.partitionBy("url", "addr_key").orderBy(
+        F.col("_ratio").desc(), F.col("f_node").asc()
+    )
+    fuzzy_best = (
+        f_cand.withColumn("_rn", F.row_number().over(w_fuzzy))
+        .where(F.col("_rn") == 1)
+        .select("url", "addr_key", "f_node", "f_has_pc", "f_lon", "f_lat", "f_tags")
+    )
 
     # --- evidence 2: containment (J4) → smallest containing building --------
     unaddressed = buildings.where(
@@ -285,7 +270,7 @@ def run_conflate(
     ).select("building_id", "rings")
     best_building = (
         pip_join(a.select("url", "addr_key", "lon", "lat"), unaddressed,
-                 containment_level, salt=salt, **salt_kw)
+                 CONTAINMENT_LEVEL, salt=salt, **salt_kw)
         .groupBy("url", "addr_key")
         .agg(F.min("building_id").alias("b_ref"))
     )
@@ -322,16 +307,10 @@ def run_conflate(
     # unreliable static size estimates; a misestimated initial broadcast
     # would serialize them through the driver. AQE converts back to
     # broadcast at runtime where genuinely small.
-    j = a.join(ex_best.hint("shuffle_hash"), "addr_key", "left")
-    if fuzzy_best is not None:
-        j = j.join(fuzzy_best.hint("shuffle_hash"), ["url", "addr_key"], "left")
-    else:  # fuzzy disabled: null evidence columns, same projection below
-        for c, t in (("f_node", "long"), ("f_has_pc", "boolean"),
-                     ("f_lon", "double"), ("f_lat", "double"),
-                     ("f_tags", "map<string,string>")):
-            j = j.withColumn(c, F.lit(None).cast(t))
     j = (
-        j.join(best_building.hint("shuffle_hash"), ["url", "addr_key"], "left")
+        a.join(ex_best.hint("shuffle_hash"), "addr_key", "left")
+        .join(fuzzy_best.hint("shuffle_hash"), ["url", "addr_key"], "left")
+        .join(best_building.hint("shuffle_hash"), ["url", "addr_key"], "left")
         .join(near1.hint("shuffle_hash"), ["url", "addr_key"], "left")
     )
     exact = F.col("k_node").isNotNull()

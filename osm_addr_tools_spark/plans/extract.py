@@ -53,11 +53,8 @@ def parse_and_normalize_udf():
         flat = [a for row in per_row for a in row]
         if flat:
             fpdf = pd.DataFrame(flat)
-            fpdf["street_norm"] = N.norm_street(fpdf["street"])
-            fpdf["hn_norm"] = N.norm_housenumber(fpdf["housenumber"])
-            fpdf["city_norm"] = fpdf["city"].fillna("").str.strip().str.lower()
-            fpdf["addr_key"] = (
-                fpdf["city_norm"] + "|" + fpdf["street_norm"] + "|" + fpdf["hn_norm"]
+            fpdf = fpdf.join(
+                N.norm_address(fpdf["city"], fpdf["street"], fpdf["housenumber"])
             )
             recs = fpdf.to_dict("records")
         else:
@@ -77,7 +74,6 @@ def run_extract(
     gazetteer: DataFrame,
     lang_filter: list[str] | None = None,
     dedupe_crawls: bool = True,
-    broadcast_gazetteer: bool | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) × gazetteer → address points.
 
@@ -111,10 +107,7 @@ def run_extract(
         F.col("lon"),
         F.col("lat"),
     )
-    # None = let Catalyst/AQE pick (broadcasts under the size threshold,
-    # shuffle-join otherwise — measured faster for multi-100k-row gazetteers);
-    # True forces the hint for genuinely small dimension tables.
-    if broadcast_gazetteer:
-        gaz = F.broadcast(gaz)
+    # no hint: Catalyst/AQE broadcasts under the size threshold and
+    # shuffle-joins otherwise (measured faster for multi-100k-row gazetteers)
     out = df.join(gaz, ["city_norm", "street_norm", "hn_norm"], "left")
     return out.withColumn("geocoded", F.col("lon").isNotNull())

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 MANIFEST_DIR = "_manifest"
 
-_MANIFEST_SCHEMA = (
+MANIFEST_SCHEMA = (
     "stage string, config_hash string, part long, rows long, "
     "matched long, wall_ms long"
 )
@@ -68,7 +68,7 @@ def _read_parquet(spark: SparkSession, schema, path: str) -> DataFrame | None:
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return _read_parquet(spark, _MANIFEST_SCHEMA, os.path.join(out_dir, MANIFEST_DIR))
+    return _read_parquet(spark, MANIFEST_SCHEMA, os.path.join(out_dir, MANIFEST_DIR))
 
 
 def completed_parts(

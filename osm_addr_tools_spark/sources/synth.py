@@ -130,12 +130,8 @@ def addr_universe_pdf(a_ids, n_pages: int) -> pd.DataFrame:
             "lat": lat,
         }
     )
-    pdf["street_norm"] = N.norm_street(pdf["street_raw"])
-    pdf["hn_norm"] = N.norm_housenumber(pdf["hn_raw"])
-    pdf["addr_key"] = (
-        pdf["city"].str.lower() + "|" + pdf["street_norm"] + "|" + pdf["hn_norm"]
-    )
-    return pdf
+    norm = N.norm_address(pdf["city"], pdf["street_raw"], pdf["hn_raw"])
+    return pdf.join(norm[["street_norm", "hn_norm", "addr_key"]])
 
 
 def page_plan(p_ids) -> pd.DataFrame:
@@ -149,13 +145,6 @@ def page_plan(p_ids) -> pd.DataFrame:
             "has_second": (r >= 0.15) & (r < 0.20),
         }
     )
-
-
-def realized_addr_ids(n_pages: int) -> np.ndarray:
-    plan = page_plan(np.arange(n_pages))
-    first = plan.loc[plan.has_addr, "page_id"].to_numpy()
-    second = plan.loc[plan.has_second, "page_id"].to_numpy() + n_pages
-    return np.sort(np.concatenate([first, second]))
 
 
 # --- pages -------------------------------------------------------------

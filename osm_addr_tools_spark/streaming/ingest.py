@@ -461,6 +461,7 @@ def ingest_batches_resumable(
 
     from osm_addr_tools_spark.plans.manifest import (
         MANIFEST_DIR,
+        MANIFEST_SCHEMA,
         completed_parts,
         config_hash,
     )
@@ -496,8 +497,7 @@ def ingest_batches_resumable(
         row = spark.createDataFrame(
             [("incremental_dedup", cfg, int(b), bstats["rows"],
               bstats["kept"], wall_ms)],
-            "stage string, config_hash string, part long, rows long, "
-            "matched long, wall_ms long",
+            MANIFEST_SCHEMA,
         )
         row.write.mode("append").parquet(
             _os.path.join(ledger_path, MANIFEST_DIR)

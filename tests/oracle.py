@@ -43,12 +43,6 @@ def oracle_matches(n_pages: int) -> pd.DataFrame:
 
     ex = S.existing_pdf(ids, n_pages)
     ex_tags = ex["tags"].tolist()
-    ex_key = N.addr_key(
-        pd.Series([t.get("addr:city", "") for t in ex_tags]),
-        pd.Series([t.get("addr:street", "") for t in ex_tags]),
-        pd.Series([t.get("addr:place", "") for t in ex_tags]),
-        pd.Series([t.get("addr:housenumber", "") for t in ex_tags]),
-    )
     ex_city_norm = pd.Series(
         [t.get("addr:city", "") for t in ex_tags]
     ).str.strip().str.lower()
@@ -60,6 +54,7 @@ def oracle_matches(n_pages: int) -> pd.DataFrame:
     ex_hn_norm = N.norm_housenumber(
         pd.Series([t.get("addr:housenumber", "") for t in ex_tags])
     )
+    ex_key = ex_city_norm + "|" + ex_street_norm + "|" + ex_hn_norm
     ex = ex.assign(
         addr_key=ex_key.values,
         city_norm=ex_city_norm.values,

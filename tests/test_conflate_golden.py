@@ -162,3 +162,37 @@ def test_exact_key_min_node_with_null_tags(spark):
     # has_postcode=false would have made it an update)
     assert got["u1"].match_kind == "create"
     assert got["u1"].matched_ref is None
+
+
+def test_extract_and_existing_keys_agree(spark):
+    """The same raw address through X2 (parse_and_normalize_udf) and
+    through the existing-node side (keyed_existing) gets the identical F4
+    key and parts, so a page address and an OSM node carrying the same raw
+    tags meet in the key join."""
+    from osm_addr_tools_spark.plans.conflate import keyed_existing
+    from osm_addr_tools_spark.plans.extract import parse_and_normalize_udf
+
+    texts = [
+        "Ul. Długa 12 a, 00-950 Adamowo\nopis",
+        "al. Róż 012/3, BORKOWO\nPl. Wolności 5B, Celinowo7",
+        "ul. pl.  Wolności 7 / 2, Adamowo",
+        "bez adresu",
+    ]
+    pages = spark.createDataFrame([(t,) for t in texts], "text string")
+    x2 = (
+        pages.select(F.explode(parse_and_normalize_udf()("text")).alias("a"))
+        .select("a.*").toPandas()
+    )
+    assert len(x2) == 4
+    existing = spark.createDataFrame(
+        [
+            (i, 21.0, 52.2, {"addr:city": r.city, "addr:street": r.street,
+                             "addr:housenumber": r.housenumber})
+            for i, r in enumerate(x2.itertuples())
+        ],
+        "node_id long, lon double, lat double, tags map<string,string>",
+    )
+    ke = keyed_existing(existing).orderBy("node_id").toPandas()
+    cols = ["addr_key", "city_norm", "street_norm", "hn_norm"]
+    assert x2[cols].values.tolist() == ke[cols].values.tolist()
+    assert "adamowo|długa|12A" in set(x2["addr_key"])

@@ -445,22 +445,6 @@ def test_minhash_band_divisibility_raises_not_asserts():
         D.minhash_lsh_pairs(None, num_perm=64, bands=15)
 
 
-def test_ngram_jaccard_hot_strategy_switch(spark, docs_with_planted):
-    """broadcast_hot=None/True/False must produce the identical pair set
-    (VERDICT r3 #5): the strategy only moves WHERE the anti-join build
-    side lives, never the semantics. A low df-cap makes the hot set
-    non-empty so all three paths actually exercise the anti-join."""
-    def pairset(mode):
-        p = D.ngram_jaccard_pairs(
-            docs_with_planted, threshold=0.5, stop_shingle_df=3, broadcast_hot=mode
-        ).toPandas()
-        return set(zip(p.a, p.b, p.jaccard))
-
-    auto, bc, sh = pairset(None), pairset(True), pairset(False)
-    assert auto == bc == sh
-    assert len(auto) > 0
-
-
 def test_winnow_partial_dups_stop_fp_cap(spark):
     """The stop-fingerprint df-cap (VERDICT r3 #3) must remove the k^2
     boilerplate-only pair wedge while keeping true containment pairs.
@@ -499,7 +483,7 @@ def test_winnow_partial_dups_stop_fp_cap(spark):
     assert (0, 100) in set(zip(capped.a, capped.b))
     assert len(capped) < len(uncapped) / 10, (len(capped), len(uncapped))
 
-    # salted == unsalted (r3 #8), and the broadcast_hot switch is inert
+    # salted == unsalted (r3 #8)
     salted = D.winnow_partial_dups(
         fp, threshold=0.5, stop_fp_df=10, salt=True,
         hot_threshold=20, rows_per_task=10,
@@ -507,10 +491,6 @@ def test_winnow_partial_dups_stop_fp_cap(spark):
     assert set(zip(capped.a, capped.b, capped.n_shared)) == set(
         zip(salted.a, salted.b, salted.n_shared)
     )
-    bc = D.winnow_partial_dups(
-        fp, threshold=0.5, stop_fp_df=10, broadcast_hot=True
-    ).toPandas()
-    assert set(zip(capped.a, capped.b)) == set(zip(bc.a, bc.b))
 
 
 def test_connected_components_checkpoint_resume(spark, tmp_path):
@@ -800,18 +780,12 @@ def test_incremental_dedup_kept_extends_index(spark):
 
 def test_incremental_dedup_plan_no_cartesian(spark):
     """Candidate generation must stay an equi-join on (band, bucket) —
-    never a nested-loop product; broadcast_batch=True must broadcast the
-    batch side of the index join."""
+    never a nested-loop product."""
     c, b = _inc_dfs(spark)
     idx = D.build_minhash_index(c)
     plan = D.incremental_minhash_dedup(b, idx)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    bplan = D.incremental_minhash_dedup(
-        b, idx, broadcast_batch=True
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in bplan
-    assert "CartesianProduct" not in bplan
 
 
 def test_incremental_dedup_cache_sigs_identical_and_released(spark):

@@ -408,3 +408,43 @@ def test_polygons_intersect_kernel_vs_convex_clip_reference(spark):
         want.append(clip_area(a, b) > 1e-12)
     got = kernel(pd.Series(ea), pd.Series(eb)).tolist()
     assert got == want
+
+
+@pytest.mark.parametrize("level", [16, 19])
+def test_cover_udfs_split_mixed_batch_per_row(spark, level):
+    """One Arrow batch mixing None, empty, empty-ring, holed, seam and
+    ordinary polygons: the batch-wide cell encode must split back to the
+    right rows. Each row's cover (cover_polygon_udf and
+    cover_and_edges_udf) equals C.cover_polygon of that polygon alone, and
+    its edges equal C.ring_edges; None, [] and [[]] cover nothing."""
+    from osm_addr_tools_spark.functions import cells as C
+    from osm_addr_tools_spark.operators.joins import cover_and_edges_udf, cover_polygon_udf
+
+    outer = [(21.0, 52.2), (21.004, 52.2), (21.004, 52.203), (21.0, 52.203)]
+    hole = [(21.0015, 52.2011), (21.0025, 52.2011), (21.0025, 52.2019), (21.0015, 52.2019)]
+    seam = [(44.9998, 10.0), (45.0002, 10.0), (45.0002, 10.0003), (44.9998, 10.0003)]
+    small = [(21.01, 52.21), (21.0102, 52.21), (21.0102, 52.2101), (21.01, 52.2101)]
+    tri = [(21.02, 52.22), (21.0203, 52.22), (21.0203, 52.2202)]
+    polys = [None, [outer, hole], [], [seam], [small], [[]], None, [outer], [tri]]
+    data = [
+        (pid, None if rings is None
+         else [[{"lon": x, "lat": y} for (x, y) in ring] for ring in rings])
+        for pid, rings in enumerate(polys)
+    ]
+    df = spark.createDataFrame(
+        data, "id long, rings array<array<struct<lon:double,lat:double>>>"
+    ).coalesce(1)
+    got = (
+        df.select("id", cover_polygon_udf(level)("rings").alias("cov"),
+                  cover_and_edges_udf(level)("rings").alias("ce"))
+        .orderBy("id").collect()
+    )
+    assert [r.id for r in got] == list(range(len(polys)))
+    for r, rings in zip(got, polys):
+        rings = [np.array(x, dtype=np.float64).reshape(-1, 2) for x in rings or []]
+        want_cov = C.cover_polygon(rings, level).tolist()
+        want_edges = C.ring_edges(rings).tolist()
+        assert list(r.cov) == want_cov, r.id
+        assert list(r.ce.cover) == want_cov, r.id
+        assert list(r.ce.edges) == want_edges, r.id
+        assert (len(want_cov) > 0) == bool(rings and len(rings[0])), r.id

@@ -69,12 +69,12 @@ def test_street_similarity_pinned():
 
 
 def test_addr_key_street_place_fallback():
-    key = N.addr_key(
+    key = N.norm_address(
         pd.Series(["Adamowo", "Adamowo"]),
         pd.Series(["Ul. Długa", None]),
-        pd.Series([None, "Os. Zielone"]),
         pd.Series(["12 a", "012"]),
-    )
+        place=pd.Series([None, "Os. Zielone"]),
+    )["addr_key"]
     assert key.tolist() == ["adamowo|długa|12A", "adamowo|osiedle zielone|12"]
 
 

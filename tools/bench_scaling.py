@@ -23,16 +23,19 @@ import subprocess
 import sys
 
 
-def run_bench(cpus: int, n_pages: int, sf_dir: str) -> dict:
+def run_bench(cpus: int, n_pages: int, sf_dir: str, repeats: int) -> dict:
+    """One fresh bench.py subprocess on conflate_join alone, ``repeats``
+    timed repeats per query; returns its result JSON line."""
     env = dict(
         os.environ,
         SPARK_GRAFT_CPUS=str(cpus),
         SPARK_GRAFT_N_PAGES=str(n_pages),
         SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_QUERY_REPEATS="1",
-        # headline only: the efficiency metric is defined on conflate_join;
-        # dropping the other queries makes each sample ~3× cheaper, which
-        # buys the repeats that actually beat this VM's host jitter
+        SPARK_GRAFT_QUERY_REPEATS=str(repeats),
+        # headline only: both the efficiency and the trend metric are
+        # defined on conflate_join (the only query whose input scales with
+        # n_pages); dropping the other queries makes each sample ~3×
+        # cheaper, which buys the repeats that beat host jitter
         SPARK_GRAFT_BENCH_ONLY="conflate_join",
     )
     out = subprocess.run(
@@ -60,8 +63,8 @@ def main() -> int:
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     lo_runs, hi_runs = [], []
     for _ in range(repeats):
-        lo_runs.append(run_bench(n, n_pages, sf_dir))
-        hi_runs.append(run_bench(4 * n, n_pages, sf_dir))
+        lo_runs.append(run_bench(n, n_pages, sf_dir, 1))
+        hi_runs.append(run_bench(4 * n, n_pages, sf_dir, 1))
     lo = min(lo_runs, key=lambda r: r["value"])
     hi = min(hi_runs, key=lambda r: r["value"])
     thr_lo = lo["throughput_rows_per_sec"]

@@ -15,34 +15,9 @@ from __future__ import annotations
 import datetime
 import json
 import os
-import subprocess
 import sys
 
-
-def run_bench(cpus: int, n_pages: int, sf_dir: str) -> dict:
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_CPUS=str(cpus),
-        SPARK_GRAFT_N_PAGES=str(n_pages),
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_QUERY_REPEATS="2",
-        # the trend is defined on conflate_join alone (the only query
-        # whose input scales with n_pages); skipping the rest makes the
-        # 12× point affordable
-        SPARK_GRAFT_BENCH_ONLY="conflate_join",
-    )
-    out = subprocess.run(
-        [sys.executable, "bench.py"],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=3600,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    for line in reversed(out.stdout.strip().splitlines()):
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError(f"bench.py produced no JSON (rc={out.returncode}):\n{out.stderr[-2000:]}")
+from bench_scaling import run_bench
 
 
 def main() -> int:
@@ -50,7 +25,7 @@ def main() -> int:
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sizes = [n_base, 6 * n_base, 12 * n_base]
-    runs = [run_bench(cpus, n, sf_dir) for n in sizes]
+    runs = [run_bench(cpus, n, sf_dir, 2) for n in sizes]
 
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/TREND.md", "w") as f:
