@@ -15,6 +15,7 @@ import re
 
 import numpy as np
 import pandas as pd
+from pyspark.sql.functions import pandas_udf
 
 # --- X1: deterministic HTML -> text ---------------------------------------
 
@@ -245,3 +246,47 @@ def shingles(text: str, k: int = 5) -> set[str]:
     if len(words) < k:
         return {" ".join(words)} if words else set()
     return {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
+
+
+# --- pandas-UDF factories over the kernels above ----------------------------
+# Built lazily: pandas_udf with a DDL return type needs an active
+# SparkContext, which doesn't exist at import time.
+
+
+def token_count_udf():
+    @pandas_udf("long")
+    def ntok(text: pd.Series) -> pd.Series:
+        return token_count(text)
+
+    return ntok
+
+
+def quality_components_udf():
+    @pandas_udf(
+        "struct<len_score:double,alpha_ratio:double,punct_score:double,"
+        "stopword_ratio:double,quality:double>"
+    )
+    def qc(text: pd.Series) -> pd.DataFrame:
+        return quality_components(text)
+
+    # optimizer fence: the per-component field extraction otherwise
+    # collapses into repeated evaluations of the kernel (guide §4.4)
+    return qc.asNondeterministic()
+
+
+def winnow_fingerprints_udf():
+    @pandas_udf("array<struct<pos:long,fp:long>>")
+    def wf(text: pd.Series) -> pd.Series:
+        return text.map(winnow_fingerprints)
+
+    # optimizer fence (guide §4.4): the explode's inferred size > 0
+    # predicate otherwise duplicates the rolling-hash pass
+    return wf.asNondeterministic()
+
+
+def lang_id_udf():
+    @pandas_udf("string")
+    def lid(text: pd.Series) -> pd.Series:
+        return lang_id(text)
+
+    return lid

@@ -32,10 +32,17 @@ from osm_addr_tools_spark.functions import geo as G
 
 
 def cell_encode_udf(level: int):
+    """(lon, lat) → cell id at ``level``; null when lon or lat is null,
+    NaN or ±inf (a non-finite point has no cell, so equi-joins and
+    ``explode`` drop it instead of piling every such row onto one key)."""
+
     @pandas_udf("long")
     def enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = C.cell_encode(lon.to_numpy(np.float64), lat.to_numpy(np.float64), level)
-        return pd.Series(out)
+        x = lon.to_numpy(np.float64)
+        y = lat.to_numpy(np.float64)
+        ok = np.isfinite(x) & np.isfinite(y)
+        out = C.cell_encode(np.where(ok, x, 0.0), np.where(ok, y, 0.0), level)
+        return pd.Series(pd.arrays.IntegerArray(out, ~ok))
 
     # asNondeterministic (guide §4.4 pattern): the kernel IS deterministic;
     # the marker only fences the optimizer, which otherwise pushes inferred
@@ -48,7 +55,8 @@ def cell_encode_udf(level: int):
 
 
 def cell_parent_udf(level: int):
-    """cell → ancestor id at ``level`` (C2; pure id arithmetic kernel)."""
+    """cell → ancestor id at ``level`` (C2; pure id arithmetic kernel).
+    The input must not be null (see ``_NO_CELL``)."""
 
     @pandas_udf("long")
     def parent(cell: pd.Series) -> pd.Series:
@@ -58,20 +66,33 @@ def cell_parent_udf(level: int):
     return parent
 
 
+# Stand-in for a null cell on its way into the ring kernel: Arrow hands
+# pandas a nullable int64 column as float64, which cannot hold 64-bit cell
+# ids exactly, so nulls are swapped out JVM-side. Face bits 0b111: no real
+# cell has this id.
+_NO_CELL = -1
+
+
 def cell_ring_udf(r: int):
     """cell → array of all same-level cells within Chebyshev distance r,
-    including the cell itself ((2r+1)² block, face-wrap correct)."""
+    including the cell itself ((2r+1)² block, face-wrap correct); null for
+    a null cell. Returns a function of one column (name or Column)."""
 
     @pandas_udf("array<long>")
     def ring(cell: pd.Series) -> pd.Series:
-        return pd.Series(C.cell_ring(cell.to_numpy(np.int64), r))
+        c = cell.to_numpy(np.int64)
+        ok = c != _NO_CELL
+        rings = iter(C.cell_ring(c[ok], r))
+        return pd.Series([next(rings) if k else None for k in ok], dtype=object)
 
     # see cell_encode_udf: optimizer fence against duplicate evaluation
-    return ring.asNondeterministic()
+    ring = ring.asNondeterministic()
+    return lambda cell: ring(F.coalesce(cell, F.lit(_NO_CELL)))
 
 
 def cell_center_udf():
-    """cell → struct(lon, lat) of the cell center (C1 inverse)."""
+    """cell → struct(lon, lat) of the cell center (C1 inverse). The input
+    must not be null (see ``_NO_CELL``)."""
 
     @pandas_udf("struct<lon:double,lat:double>")
     def center(cell: pd.Series) -> pd.DataFrame:
@@ -505,9 +526,7 @@ def polygon_join(
     level: int,
     left_rings: str = "rings",
     right_rings: str = "rings",
-    salt: bool = False,
     touch: str = "fast",
-    **salt_kw,
 ) -> DataFrame:
     """Polygon-polygon intersection join (J9): (left_id, right_id) for
     every pair whose polygons share interior. ``touch="strict"`` enables
@@ -522,8 +541,7 @@ def polygon_join(
     through the cell join and pair dedup; the flat edge arrays re-join by
     id for the exact refine (the minhash r2 #8 payload treatment —
     a polygon covering many cells would otherwise drag its edges through
-    every duplicate). ``salt=True`` routes the cell join through J3 (a
-    metro-area cell shared by thousands of polygons is the hot key).
+    every duplicate).
     """
     ce = cover_and_edges_udf(level)
     lpre = left.select(F.col(left_id).alias("_lid"), ce(F.col(left_rings)).alias("_ce"))
@@ -532,10 +550,7 @@ def polygon_join(
     redges = rpre.select("_rid", F.col("_ce.edges").alias("_re"))
     lcov = lpre.select("_lid", F.explode("_ce.cover").alias("_cell"))
     rcov = rpre.select("_rid", F.explode("_ce.cover").alias("_cell"))
-    if salt:
-        cand = salted_join(lcov, rcov, "_cell", F.col("_lid"), **salt_kw)
-    else:
-        cand = lcov.join(rcov.hint("shuffle_hash"), "_cell")
+    cand = lcov.join(rcov.hint("shuffle_hash"), "_cell")
     pairs = cand.select("_lid", "_rid").dropDuplicates(["_lid", "_rid"])
     refined = (
         pairs.join(ledges.hint("shuffle_hash"), "_lid")
@@ -684,9 +699,6 @@ def band_join(
     left_val: str,
     right_val: str,
     band: float,
-    salt: bool = False,
-    probe_col: Column | None = None,
-    **salt_kw,
 ) -> DataFrame:
     """Pairs with ``|left_val - right_val| <= band`` — the J8 theta→equi
     rule as a reusable operator (the 1-D analogue of the cell kNN join):
@@ -702,9 +714,6 @@ def band_join(
     non-dyadic band can round x/band across an integer boundary and drop a
     boundary-equal pair that the residual (computed on the raw values)
     would keep.
-
-    ``salt=True`` routes the bucket join through J3 for value-clustered
-    inputs (a price spike = a hot bucket), salting on ``probe_col``.
     """
     m, e = np.frexp(band)
     if not (band > 0 and m == 0.5):
@@ -725,12 +734,7 @@ def band_join(
     rb = right.withColumn(
         "_bucket", F.floor(F.col(right_val) / F.lit(float(band))).cast("long")
     )
-    if salt:
-        if probe_col is None:
-            probe_col = F.col(left_val)
-        pairs = salted_join(lb, rb.hint("shuffle_hash"), "_bucket", probe_col, **salt_kw)
-    else:
-        pairs = lb.join(rb.hint("shuffle_hash"), "_bucket")
+    pairs = lb.join(rb.hint("shuffle_hash"), "_bucket")
     return pairs.where(
         F.abs(F.col(left_val) - F.col(right_val)) <= F.lit(float(band))
     ).drop("_bucket")

@@ -93,22 +93,10 @@ def lsh_ann_topk(
     q_vec: str = "q_emb",
     c_vec: str = "c_emb",
     seed: int = 42,
-    salt: bool = False,
-    **salt_kw,
 ) -> DataFrame:
     """Approximate cosine top-k: equi-join on the hyperplane bucket
     (n_probes>1 additionally probes buckets at hamming distance 1 —
-    multi-probe recall boost without more hyperplanes).
-
-    ``salt=True`` routes the bucket join through the two-pass salted join
-    (J3) with the CANDIDATE side as the histogrammed probe: a
-    near-duplicate-saturated corpus concentrates candidates in few buckets
-    (hyperplane sign bits of similar vectors agree), and salting splits a
-    hot bucket's candidate rows across tasks while replicating only the
-    small query side. Row-identical to the unsalted join (property-tested).
-    """
-    from osm_addr_tools_spark.operators.joins import salted_join
-
+    multi-probe recall boost without more hyperplanes)."""
     bq = hyperplane_bucket_udf(dim, n_planes, seed)
     bc = hyperplane_bucket_udf(dim, n_planes, seed)
     qb = queries.withColumn("_bucket", bq(F.col(q_vec)))
@@ -122,10 +110,7 @@ def lsh_ann_topk(
         )
         qb = qb.withColumn("_bucket", F.explode(flips))
     cb = candidates.withColumn("_bucket", bc(F.col(c_vec)))
-    if salt:
-        pairs = salted_join(cb, qb, "_bucket", F.col(c_id), **salt_kw)
-    else:
-        pairs = qb.join(cb, "_bucket")
+    pairs = qb.join(cb, "_bucket")
     pairs = pairs.withColumn("sim", cosine_col(F.col(q_vec), F.col(c_vec)))
     w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))
     return (
@@ -172,8 +157,6 @@ def lsh_semantic_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 97,
-    salt: bool = False,
-    **salt_kw,
 ) -> DataFrame:
     """SEMANTIC near-duplicate pairs (a < b, cosine ≥ threshold) over one
     embedding table — the candidate generator for embedding-based dedup
@@ -186,9 +169,7 @@ def lsh_semantic_pairs(
     planes per band cut candidates). Scale shape mirrors simhash_pairs:
     candidates travel as bare (band, bucket, id) through the equi-join,
     embeddings REJOIN by id only for the exact cosine verify, and the
-    verify itself is JVM Column math (zip_with/aggregate). ``salt=True``
-    routes the bucket join through J3 with (band, bucket) folded into one
-    64-bit key (collisions only ADD candidates, never drop one).
+    verify itself is JVM Column math (zip_with/aggregate).
 
     Zero-norm vectors (ADVICE r5): every all-zero vector gets identical
     sign bits, so they'd all collide into ONE bucket in EVERY band —
@@ -199,8 +180,6 @@ def lsh_semantic_pairs(
     STAR to the minimum zero-norm id (O(z) pairs, sim = 1.0 by the
     exact-duplicate convention), which connected_components collapses to
     the same single group an all-pairs clique would."""
-    from osm_addr_tools_spark.operators.joins import salted_join
-
     allv = vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     nz = _dot(F.col("_v"), F.col("_v")) > 0
     ids = allv.where(nz)
@@ -218,12 +197,7 @@ def lsh_semantic_pairs(
     )
     lhs = keyed.select(F.col("_id").alias("a"), "_band", "_bucket")
     rhs = keyed.select(F.col("_id").alias("b"), "_band", "_bucket")
-    if salt:
-        lk = lhs.select("a", F.xxhash64("_band", "_bucket").alias("_k"))
-        rk = rhs.select("b", F.xxhash64("_band", "_bucket").alias("_k"))
-        cand = salted_join(lk, rk, "_k", F.col("a"), **salt_kw)
-    else:
-        cand = lhs.join(rhs.hint("shuffle_hash"), ["_band", "_bucket"])
+    cand = lhs.join(rhs.hint("shuffle_hash"), ["_band", "_bucket"])
     pairs = (
         cand.where(F.col("a") < F.col("b"))
         .select("a", "b")
@@ -285,8 +259,6 @@ def ivf_ann_topk(
     q_vec: str = "q_emb",
     c_vec: str = "c_emb",
     seed: int = 42,
-    salt: bool = False,
-    **salt_kw,
 ) -> DataFrame:
     """IVF: train a coarse quantizer on a bounded candidate sample, assign
     candidates to their nearest centroid (1 list each), probe the query's
@@ -294,13 +266,7 @@ def ivf_ann_topk(
     list id. The sample is the first ``sample`` candidates BY ID — a bare
     ``limit`` picks partition-order rows, which is not reproducible across
     layouts; ordering makes the quantizer (and the oracle parity) a pure
-    function of the data.
-
-    ``salt=True``: as in lsh_ann_topk — an unbalanced quantizer (clustered
-    corpus) concentrates candidates in few lists; the salted join
-    histograms the candidate side and splits hot lists across tasks."""
-    from osm_addr_tools_spark.operators.joins import salted_join
-
+    function of the data."""
     samp = np.stack(
         [r[0] for r in candidates.select(c_vec, c_id).orderBy(c_id).limit(sample).collect()]
     )
@@ -309,10 +275,7 @@ def ivf_ann_topk(
     q_assign = centroid_assign_udf(cent, n_probe)
     cb = candidates.withColumn("_list", c_assign(F.col(c_vec))[0])
     qb = queries.withColumn("_list", F.explode(q_assign(F.col(q_vec))))
-    if salt:
-        pairs = salted_join(cb, qb, "_list", F.col(c_id), **salt_kw)
-    else:
-        pairs = qb.join(cb, "_list")
+    pairs = qb.join(cb, "_list")
     pairs = pairs.withColumn("sim", cosine_col(F.col(q_vec), F.col(c_vec)))
     w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))
     return (

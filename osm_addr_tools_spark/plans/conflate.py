@@ -356,12 +356,3 @@ def run_conflate(
         .alias("tags"),
     )
     return out.select(*_OUT_COLS)
-
-
-def match_metrics(matches: DataFrame) -> DataFrame:
-    """A1/A5 reporting: counts + match rate by kind with rollup."""
-    return (
-        matches.rollup("match_kind")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("match_kind").asc_nulls_last())
-    )

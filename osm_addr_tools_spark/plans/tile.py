@@ -47,7 +47,10 @@ def tile_density(assignments: DataFrame) -> DataFrame:
 
 def run_untile(assignments: DataFrame) -> DataFrame:
     """C5 raster→vector: per feature, union its tiles back into boundary
-    rings (grouped applyInPandas — one group per feature)."""
+    rings (grouped applyInPandas — one group per feature). ``tile_id``
+    must not be null: a null int64 reaches pandas as float64, which loses
+    cell-id bits (polygon tiles are never null; ``run_tile_points`` tiles
+    of non-finite points are)."""
 
     def trace(pdf: pd.DataFrame) -> pd.DataFrame:
         fid = pdf["feature_id"].iloc[0]

@@ -952,18 +952,12 @@ def docs_token_stats(spark, sf_dir):
     oracle re-derives it with DuckDB RE2 using explicit ASCII classes
     (documents are ASCII, asserted at oracle generation), so the kernel's
     tokenizer is driver-gated, not just unit-tested."""
-    from pyspark.sql.functions import pandas_udf
-
     from osm_addr_tools_spark.functions import text as T
-
-    @pandas_udf("long")
-    def ntok(t):
-        return T.token_count(t)
 
     return load(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint").alias("n_tokens_ws"),
-        ntok("text").alias("n_tokens_bpe"),
+        T.token_count_udf()("text").alias("n_tokens_bpe"),
         F.length("text").cast("bigint").alias("n_chars_engine"),
     )
 
@@ -980,25 +974,12 @@ def docs_quality_ascii(spark, sf_dir):
     ASCII-asserted corpus; the stopword set is shared spec, the
     computation is not). Raw kernel doubles are rounded JVM-side so both
     engines round identical bits half-up."""
-    from pyspark.sql.functions import pandas_udf
-
     from osm_addr_tools_spark.functions import text as T
-
-    @pandas_udf(
-        "struct<len_score:double,alpha_ratio:double,punct_score:double,"
-        "stopword_ratio:double,quality:double>"
-    )
-    def qc(t):
-        return T.quality_components(t)
-
-    # optimizer fence: the per-component field extraction otherwise
-    # collapses into repeated evaluations of the kernel (guide §4.4)
-    qc = qc.asNondeterministic()
 
     d = load(spark, sf_dir, "documents").where(F.length("text") > 0)
     alpha = F.length(F.regexp_replace(F.col("text"), "[^A-Za-z]", "")).cast("bigint")
     return (
-        d.withColumn("_q", qc("text"))
+        d.withColumn("_q", T.quality_components_udf()("text"))
         .select(
             "doc_id",
             alpha.alias("n_alpha"),
@@ -1096,21 +1077,11 @@ def docs_winnow_fingerprints(spark, sf_dir):
     partial-duplicate detection primitive exact hashing can't provide.
     Kernel-independent gate: numpy rolling hash + vectorized window minima
     engine-side vs full SQL re-derivation (see _winnow_oracle_sql)."""
-    from pyspark.sql.functions import pandas_udf
-
     from osm_addr_tools_spark.functions import text as T
-
-    @pandas_udf("array<struct<pos:long,fp:long>>")
-    def wf(t):
-        return t.map(T.winnow_fingerprints)
-
-    # optimizer fence (guide §4.4): the explode's inferred size > 0
-    # predicate otherwise duplicates the rolling-hash pass
-    wf = wf.asNondeterministic()
 
     return (
         load(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(wf("text")).alias("_w"))
+        .select("doc_id", F.explode(T.winnow_fingerprints_udf()("text")).alias("_w"))
         .select("doc_id", F.col("_w.pos").alias("pos"), F.col("_w.fp").alias("fp"))
     )
 
@@ -1191,22 +1162,12 @@ def docs_winnow_partial_dups(spark, sf_dir):
     cookie-banner tails on 1/7 of the corpus, which without the cap alone
     create k² candidate pairs). Oracle reuses the independent SQL
     winnowing + the identical cap end-to-end."""
-    from pyspark.sql.functions import pandas_udf
-
     from osm_addr_tools_spark.functions import text as T
     from osm_addr_tools_spark.operators.dedup import winnow_partial_dups
 
-    @pandas_udf("array<struct<pos:long,fp:long>>")
-    def wf(t):
-        return t.map(T.winnow_fingerprints)
-
-    # optimizer fence (guide §4.4): the explode's inferred size > 0
-    # predicate otherwise duplicates the rolling-hash pass
-    wf = wf.asNondeterministic()
-
     fps = (
         _docs_with_boilerplate(spark, sf_dir)
-        .select("doc_id", F.explode(wf("text")).alias("_w"))
+        .select("doc_id", F.explode(T.winnow_fingerprints_udf()("text")).alias("_w"))
         .select("doc_id", F.col("_w.fp").alias("fp"))
     )
     return winnow_partial_dups(fps, threshold=0.5, stop_fp_df=_WINNOW_STOP_FP_DF)
@@ -3137,16 +3098,10 @@ def _lang_id_oracle_sql() -> str:
 
 @q("docs_lang_id", None)
 def docs_lang_id(spark, sf_dir):
-    from pyspark.sql.functions import pandas_udf
-
     from osm_addr_tools_spark.functions import text as T
 
-    @pandas_udf("string")
-    def lid(t):
-        return T.lang_id(t)
-
     return load(spark, sf_dir, "documents").select(
-        "doc_id", lid("text").alias("lang_pred")
+        "doc_id", T.lang_id_udf()("text").alias("lang_pred")
     )
 
 

@@ -3,8 +3,8 @@
 The batch engine is the deliverable; this module proves the schema and
 operator choices don't preclude streaming: the same pages schema streams
 from a file source (Iceberg streaming read in production), with an
-event-time watermark on ``warc_ts``, stateful url-dedupe, windowed per-lang
-counts, and the SAME X1/X2 extraction kernels applied to the stream.
+event-time watermark on ``warc_ts``, windowed per-lang counts, and the
+SAME X1/X2 extraction kernels applied to the stream.
 """
 
 from __future__ import annotations
@@ -29,12 +29,6 @@ def read_pages_stream(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.parquet(path).withWatermark("warc_ts", watermark)
-
-
-def dedupe_recrawls_stream(pages: DataFrame) -> DataFrame:
-    """Stateful url-dedupe within the watermark (first crawl wins; late
-    re-crawls beyond the watermark are dropped by the engine)."""
-    return pages.dropDuplicatesWithinWatermark(["url"])
 
 
 def windowed_lang_counts(pages: DataFrame, window: str = "1 hour") -> DataFrame:

@@ -106,6 +106,62 @@ def test_pip_join_salted_equals_plain(spark):
     assert key(plain) == key(salted)
 
 
+def test_non_finite_coordinates_get_null_cell(spark):
+    """Null, NaN and ±inf lon/lat get a null cell and a null ring, so the
+    cell equi-joins drop them instead of pairing every such row on one
+    shared cell; ordinary points in the same batch keep their cell ids and
+    their kNN / PIP results."""
+    from osm_addr_tools_spark.functions import cells as C
+    from osm_addr_tools_spark.operators.joins import cell_ring_udf
+
+    nan, inf = float("nan"), float("inf")
+    bad = [(None, 52.2), (21.0, None), (None, None), (nan, 52.2),
+           (21.0, nan), (inf, 52.2), (-inf, 52.2), (21.0, -inf)]
+    good = _points(spark, 200)
+    rows = [(int(r.pid), float(r.lon), float(r.lat)) for r in good.itertuples()]
+    rows += [(10_000 + i, *bad[i % len(bad)]) for i in range(40)]
+    schema = "pid long, lon double, lat double"
+    # one partition: ordinary and non-finite rows share every Arrow batch
+    mixed = spark.createDataFrame(rows, schema).coalesce(1)
+    plain = spark.createDataFrame(good)
+
+    lvl = C.level_for_max_distance(10.0)
+    got = with_cell(mixed, lvl, out="_cell").withColumn(
+        "_ring", cell_ring_udf(1)("_cell")
+    ).toPandas().set_index("pid")
+    nulls = got.loc[got.index >= 10_000]
+    assert nulls["_cell"].isna().all() and nulls["_ring"].isna().all()
+    ok = got.loc[good.pid.to_numpy()]
+    want = C.cell_encode(good.lon.to_numpy(), good.lat.to_numpy(), lvl)
+    assert [int(v) for v in ok["_cell"]] == want.tolist()
+    assert all(
+        list(r) == list(w) for r, w in zip(ok["_ring"], C.cell_ring(want, 1))
+    )
+
+    # 40 null-coordinate queries × 40 null-coordinate candidates: no pairs
+    nq = mixed.where(F.col("pid") >= 10_000)
+    nc = nq.select(F.col("pid").alias("cid"), F.col("lon").alias("c_lon"),
+                   F.col("lat").alias("c_lat"))
+    assert with_cell(nq, lvl, out="_cell").join(
+        with_cell(nc, lvl, "c_lon", "c_lat", "_cell"), "_cell"
+    ).count() == 0
+
+    key = lambda d: sorted(map(tuple, d.to_numpy()))
+    cands = lambda df: df.select(F.col("pid").alias("cid"), F.col("lon").alias("c_lon"),
+                                 F.col("lat").alias("c_lat"))
+    for expand in ("queries", "candidates"):
+        knn = lambda q: knn_join(
+            q, cands(q), query_id="pid", cand_id="cid", d_max_m=10.0, k=2,
+            expand=expand,
+        ).select("pid", "cid").toPandas()
+        base = knn(plain)
+        assert len(base) > 0 and key(knn(mixed)) == key(base), expand
+    bdf = S.synth_buildings(spark, 200, include_special=False).select("building_id", "rings")
+    pip = lambda p: pip_join(p, bdf, 16).select("pid", "building_id").toPandas()
+    base = pip(plain)
+    assert len(base) > 0 and key(pip(mixed)) == key(base)
+
+
 def test_knn_join_ring_variants_equal_bruteforce(spark):
     """Ring generalization (VERDICT r2 #1): (2r+1)×(2r+1) at the finer
     level picked by d_max/r, with the explode on either side, must return
@@ -255,29 +311,6 @@ def test_band_join_requires_dyadic_band(spark):
         band_join(df, df, "v", "v", 0.1)
 
 
-def test_band_join_salted_equals_unsalted(spark):
-    import pandas as pd
-
-    from osm_addr_tools_spark.operators.joins import band_join
-
-    # hot bucket: 300 of 400 values cluster inside one band-width
-    vals = [float(5.0 + (i % 7) * 0.001) for i in range(300)] + [
-        float(i) for i in range(100)
-    ]
-    pdf = pd.DataFrame({"id": range(len(vals)), "v": vals})
-    df = spark.createDataFrame(pdf)
-    lhs = df.select(F.col("id").alias("a"), F.col("v").alias("va"))
-    rhs = df.select(F.col("id").alias("b"), F.col("v").alias("vb"))
-    plain = {(r.a, r.b) for r in band_join(lhs, rhs, "va", "vb", 0.5).collect()}
-    salted = {
-        (r.a, r.b)
-        for r in band_join(
-            lhs, rhs, "va", "vb", 0.5, salt=True, hot_threshold=50, rows_per_task=25
-        ).collect()
-    }
-    assert plain == salted and len(plain) > 300 * 300
-
-
 def test_knn_ring_sufficiency_raises_not_asserts(monkeypatch):
     """The ring-sufficiency proof must survive `python -O` (VERDICT r3 #4):
     a level too fine for the ring radius raises ValueError at plan-build
@@ -330,12 +363,6 @@ def test_polygon_join_concave_holes_vs_geometry_truth(spark):
     got = polygon_join(left, right, "lid", "rid", level=18).toPandas()
     pairs = set(zip(got.lid, got.rid))
     assert pairs == {(1, 11), (1, 12), (2, 15)}, pairs
-
-    salted = polygon_join(
-        left, right, "lid", "rid", level=18, salt=True,
-        hot_threshold=2, rows_per_task=1,
-    ).toPandas()
-    assert set(zip(salted.lid, salted.rid)) == pairs
 
 
 def test_polygons_intersect_kernel_vs_convex_clip_reference(spark):

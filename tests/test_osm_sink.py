@@ -1,5 +1,6 @@
 """S4 OSM-change sink: structure, determinism, kind routing."""
 
+import re
 import xml.etree.ElementTree as ET
 
 import pytest
@@ -7,7 +8,7 @@ import pytest
 from osm_addr_tools_spark.plans.conflate import run_conflate
 from osm_addr_tools_spark.plans.extract import run_extract
 from osm_addr_tools_spark.sources import synth as S
-from osm_addr_tools_spark.sources.osm_sink import osmchange_document
+from osm_addr_tools_spark.sources.osm_sink import osmchange_document, write_osmchange
 
 N = 100
 
@@ -48,6 +49,25 @@ def test_osmchange_wellformed_and_routed(spark, matches):
 
 def test_osmchange_deterministic(spark, matches):
     assert osmchange_document(matches) == osmchange_document(matches.repartition(7))
+
+
+def test_write_osmchange_parts_equal_document(spark, matches, tmp_path):
+    """The sharded sink writes exactly the document's edits: the sorted
+    text parts under create/ and modify/ concatenate to the <create> and
+    <modify> bodies of osmchange_document for the same matches."""
+    write_osmchange(matches, str(tmp_path))
+    doc = osmchange_document(matches)
+    bodies = re.fullmatch(
+        r"(?s).*<create>(.*)</create><modify>(.*)</modify></osmChange>", doc
+    ).groups()
+    for kind, body in zip(("create", "modify"), bodies):
+        lines = [
+            line
+            for part in (tmp_path / kind).glob("part-*")
+            for line in part.read_text(encoding="utf-8").splitlines()
+        ]
+        assert lines, kind
+        assert "".join(sorted(lines)) == body, kind
 
 
 def test_negative_id_assignment_is_distributed(spark, matches):
