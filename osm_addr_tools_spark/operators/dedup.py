@@ -510,7 +510,7 @@ def simhash_batch(text: pd.Series) -> np.ndarray:
     return out
 
 
-def simhash_udf(seed: int = 42):
+def simhash_udf():
     @pandas_udf("long")
     def sim(text: pd.Series) -> pd.Series:
         return pd.Series(simhash_batch(text))
@@ -719,7 +719,6 @@ def connected_components(
     dst: str = "b",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    checkpoint_buckets: int = 16,
     job_id: str | None = None,
 ) -> DataFrame:
     """Connected components over an undirected pair set — the group-forming
@@ -741,30 +740,25 @@ def connected_components(
     vertex ids — per-vertex state, no hot keys beyond input skew (a
     celebrity vertex's edge fan-in is combined map-side by the min agg).
 
-    Driver-side work: one scalar convergence count per materialization
-    (bounded metadata action, ≤ ``max_iter`` rounds total) and a
-    localCheckpoint of the new label table (truncating BOTH lineage and
-    the logical plan — iterative plans otherwise grow ~3× per round and
-    long-chain graphs OOM the driver during analysis; see the loop
-    comment). The in-memory path runs one round per localCheckpoint job
-    and reads the convergence flag off the cached blocks, so each round
-    costs one job — the dominant cost of the loop at small-to-medium
-    graph sizes (rounds are scheduling-latency-bound, not data-bound).
+    Driver loop: one round per materialization. Each round's label table
+    carries its ``_chg`` flag and is materialized — truncating BOTH
+    lineage and the logical plan, which otherwise grows ~3× per round and
+    OOMs the driver during analysis on long chains — and the loop stops
+    when no materialized row has ``_chg`` set (a scan, not a join job).
+    Rounds are scheduling-latency-bound at small-to-medium graph sizes,
+    so jobs per round are the cost that matters.
 
-    ``checkpoint_dir`` (VERDICT r3 #6 — the production shape): write each
-    round's label table through the S5 manifest sink (plans/manifest.py,
-    bucketed on ``pmod(u, checkpoint_buckets)``) and read it back, which
-    (a) truncates lineage DURABLY — a driver restart does not re-run
-    earlier rounds — and (b) makes the job resumable: on re-invocation the
-    highest round whose manifest append completed is reloaded and
-    iteration continues from there. The manifest row is appended only
-    after the round's write job succeeds, so a crash between write and
-    append just rewrites that round (deterministic bytes, idempotent
-    overwrite — the S5 crash-window contract). Resume is keyed on
-    (op, buckets, EDGE-SET IDENTITY): ``job_id`` if supplied, else an
-    order-independent edge-set fingerprint computed here — so reusing a
-    checkpoint_dir for a different graph re-runs instead of silently
-    resuming the previous graph's labels (ADVICE r4).
+    The materializer is ``localCheckpoint()``, or with ``checkpoint_dir``
+    (the production shape) a write of each round's label table through
+    the S5 manifest sink (plans/manifest.py, bucketed on ``pmod(u, 16)``)
+    and a parquet read-back. That truncates lineage DURABLY and makes the
+    job resumable: a re-invocation reloads the highest round whose
+    manifest append completed (appended only after the round's write
+    succeeds, so a crash in between just rewrites that round). Resume is
+    keyed on the EDGE-SET IDENTITY — ``job_id`` if supplied, else an
+    order-independent fingerprint of the edges — so reusing a
+    checkpoint_dir for a different graph re-runs instead of resuming the
+    previous graph's labels (ADVICE r4).
     """
     from osm_addr_tools_spark.plans import manifest as M
 
@@ -775,61 +769,26 @@ def connected_components(
     )
     spark = edges.sparkSession
     e = e.persist()
-    cc_conf = {"op": "connected_components", "buckets": checkpoint_buckets}
+    start_round, labels = 0, None
     if checkpoint_dir is not None:
-        # ADVICE r4: the config_hash must carry the IDENTITY OF THE EDGE
-        # SET — keyed on {op, buckets} alone, reusing a checkpoint_dir for
-        # a different graph silently resumed from the previous graph's
-        # stale label table. ``job_id``: caller-supplied identity (no
-        # extra job); default: an order-independent fingerprint of the
-        # symmetrized edge set — count + sum of per-edge xxhash64 in
-        # exact decimal(38,0) arithmetic (no overflow, no float rounding),
-        # one bounded aggregate over the already-persisted edges.
+        # default edge-set identity: count + sum of per-edge xxhash64 in
+        # exact decimal(38,0) arithmetic, one aggregate over the persisted
+        # edges. "buckets" stays in the conf so the hash of existing round
+        # directories is unchanged.
         if job_id is None:
             r = e.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
             ).first()
             job_id = f"{r.n}:{int(r.s or 0) % (1 << 64):x}"
-        cc_conf["edges"] = job_id
-    cfg = M.config_hash(cc_conf)
-    # namespace the round tables by config hash as well: the manifest
-    # filter alone is not enough — dynamic partition overwrite only
-    # replaces the partitions the NEW job writes, so a different graph
-    # sharing a round directory would read back the old graph's leftover
-    # partition files (exactly the ADVICE r4 stale-resume failure)
-    ck_root = f"{checkpoint_dir}/{cfg}" if checkpoint_dir is not None else None
-
-    def _ckpt_write(df: DataFrame, rnd: int) -> DataFrame:
-        out = f"{ck_root}/round={rnd}"
-        stats = M.write_resumable(
-            spark,
-            df.withColumn("_part", F.pmod(F.col("u"), F.lit(checkpoint_buckets))),
-            out,
-            stage=f"cc_round_{rnd}",
-            conf=cc_conf,
-            part_col="_part",
-        )
-        if stats["planned"] == 0:
-            # ADVICE r4: an empty label table has no partitions, so
-            # write_resumable creates no path — reading it back would
-            # throw. The input IS the (empty) result; lineage truncation
-            # is moot for zero rows.
-            return df.select("u", "lbl")
-        return spark.read.parquet(out).select("u", "lbl")
-
-    start_round = 0
-    labels = None
-    if checkpoint_dir is not None:
-        # resume: the highest round with a completed manifest append.
-        # ONE globbed manifest read across every round directory (VERDICT
-        # r5 #2 — the old form probed round dirs one by one, up to
-        # max_iter*4 sequential read + count jobs of pure startup latency
-        # on exactly the long jobs resume exists for). A manifest row is
-        # appended only after the round's write job succeeds, so any row
-        # for (cc_round_N, cfg) marks round N complete; rounds from
-        # earlier resumed runs may exceed one run's max_iter budget and
-        # the glob sees them all.
+        cc_conf = {"op": "connected_components", "buckets": 16, "edges": job_id}
+        cfg = M.config_hash(cc_conf)
+        # round tables live under the config hash too: dynamic partition
+        # overwrite replaces only the partitions a job writes, so another
+        # graph's leftover partition files would otherwise be read back
+        ck_root = f"{checkpoint_dir}/{cfg}"
+        # resume from the highest completed round: ONE globbed manifest
+        # read across every round directory (VERDICT r5 #2)
         m = M.read_manifest(spark, f"{ck_root}/round=*")
         if m is not None:
             best = (
@@ -849,6 +808,25 @@ def connected_components(
                     "u", "lbl"
                 )
                 start_round = best
+
+    def _materialize(cmp: DataFrame, rnd: int) -> DataFrame:
+        if checkpoint_dir is None:
+            return cmp.localCheckpoint()
+        out = f"{ck_root}/round={rnd}"
+        stats = M.write_resumable(
+            spark,
+            cmp.withColumn("_part", F.pmod(F.col("u"), F.lit(16))),
+            out,
+            stage=f"cc_round_{rnd}",
+            conf=cc_conf,
+            part_col="_part",
+        )
+        if stats["planned"] == 0:
+            # an empty label table has no partitions and so no path to
+            # read back (ADVICE r4); the empty input is the result
+            return cmp
+        return spark.read.parquet(out).select("u", "lbl", "_chg")
+
     def _round(cur: DataFrame) -> DataFrame:
         """One label-update round: lower every vertex's label to the min
         of its closed neighborhood, then pointer-jump lbl <- lbl(lbl)
@@ -871,77 +849,41 @@ def connected_components(
             .select("u", F.least("lbl", "_lbl2").alias("lbl"))
         )
 
-    # max_iter bounds THIS run's new rounds (a resumed run gets its own
-    # fresh budget on top of the checkpointed progress). try/finally: the
-    # non-convergence raise (or any mid-round failure) must not pin the
-    # persisted |edges| table for the rest of the session (ADVICE r5 —
-    # the slow-leak class that cache.release_pinned covers for frames
-    # that outlive their function).
+    # max_iter bounds THIS run's new rounds (a resumed run gets a fresh
+    # budget). try/finally: a non-convergence raise or mid-round failure
+    # must not leave the persisted edge table pinned (ADVICE r5).
     try:
-        if checkpoint_dir is not None:
-            # durable path: one round per manifest write (resume stays
-            # per-round); the parquet round-trip truncates the plan.
+        for rnd in range(start_round + 1, start_round + max_iter + 1):
             if labels is None:
-                labels = e.select("u").distinct().withColumn("lbl", F.col("u"))
-            for rnd in range(start_round + 1, start_round + max_iter + 1):
-                new = _ckpt_write(_round(labels), rnd)
-                changed = (
-                    new.join(labels.withColumnRenamed("lbl", "_old"), "u")
-                    .where(F.col("lbl") != F.col("_old"))
-                    .count()
-                )
-                labels = new
-                if changed == 0:
-                    break
+                # round 1 from identity labels: nbr-min is min(v) and the
+                # pointer jump through identity is a no-op, so the round
+                # is one groupBy that reads ``e`` once (and fills its cache)
+                cmp = e.groupBy("u").agg(
+                    F.least(F.col("u"), F.min("v")).alias("lbl")
+                ).select("u", "lbl", (F.col("lbl") != F.col("u")).alias("_chg"))
             else:
-                raise RuntimeError(
-                    f"connected_components did not converge in {max_iter} rounds"
+                cmp = (
+                    _round(labels)
+                    .join(labels.withColumnRenamed("lbl", "_old"), "u")
+                    .select(
+                        "u", "lbl", (F.col("lbl") != F.col("_old")).alias("_chg")
+                    )
                 )
+            # one round per materialization: Spark has no common-subtree
+            # elimination, so batching rounds into one job recomputes the
+            # inner rounds (measured 4× wall at 3 rounds per job)
+            ck = _materialize(cmp, rnd)
+            labels = ck.select("u", "lbl")
+            if ck.where(F.col("_chg")).count() == 0:
+                break
         else:
-            # in-memory path, tuned for driver-loop latency: (a) the
-            # identity-label init is folded into a special-cased first
-            # round (lbl = min(u, min neighbor) is one groupBy — no init
-            # job, no joins — and, since it references ``e`` exactly once,
-            # it is also what materializes the persist cache without
-            # concurrent duplicate evaluation), and (b) the convergence
-            # flag rides INSIDE the checkpointed frame, so the per-round
-            # convergence count scans cached blocks instead of running a
-            # separate join job. One round per localCheckpoint: Spark has
-            # no common-subtree elimination, so batching rounds into one
-            # job recomputes the inner rounds (measured 4× wall at 3
-            # rounds per job); one round references only cached leaves.
-            labels = None  # None = implicit identity labels (lbl(u) = u)
-            for _ in range(max_iter):
-                if labels is None:
-                    # round 1 from identity labels: nbr-min is min(v) and
-                    # the pointer jump through identity is a no-op
-                    cmp = e.groupBy("u").agg(
-                        F.least(F.col("u"), F.min("v")).alias("lbl")
-                    ).select(
-                        "u", "lbl", (F.col("lbl") != F.col("u")).alias("_chg")
-                    )
-                else:
-                    cmp = (
-                        _round(labels)
-                        .join(labels.withColumnRenamed("lbl", "_old"), "u")
-                        .select(
-                            "u", "lbl",
-                            (F.col("lbl") != F.col("_old")).alias("_chg"),
-                        )
-                    )
-                ck = cmp.localCheckpoint()
-                labels = ck.select("u", "lbl")
-                if ck.where(F.col("_chg")).count() == 0:
-                    break
-            else:
-                raise RuntimeError(
-                    f"connected_components did not converge in {max_iter} rounds"
-                )
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+            )
     finally:
         e.unpersist()
-    # the final label table is already materialized (localCheckpoint /
-    # parquet round) — the caller's actions read the checkpointed blocks,
-    # never the iterative chain
+    # the final label table is already materialized: the caller's actions
+    # read the checkpointed rows, never the iterative chain
     return labels.select(F.col("u").alias("v"), F.col("lbl").alias("component"))
 
 

@@ -311,34 +311,23 @@ def pip_join(
 # ---------------------------------------------------------------------------
 
 
-def polygons_intersect_udf(touch: str = "fast"):
+def polygons_intersect_udf():
     """(edges_a, edges_b) → bool: do two polygons (with holes, even-odd)
     share interior? Strict-interior semantics: boundary-touching polygons
     (shared edge or corner, no shared interior) do NOT pair — mirroring
-    the oracle's strict interval inequalities.
+    the oracle's strict interval inequalities. Adjacent buildings share
+    walls, i.e. exact coordinates, so the decision is exact on touching
+    configurations too.
 
-    ``touch="fast"`` (default): True iff (1) any edge pair PROPERLY
-    crosses, or (2) the FIRST vertex of one lies strictly inside the
-    other. Batch shape: per candidate pair, the edge sets broadcast to an
+    Batch shape: per candidate pair, the edge sets broadcast to an
     (m × k) orientation grid — all-numpy inner math, bounded by polygon
     vertex counts (≤ ~240 in the stress fixtures), so the per-pair Python
-    overhead is constant like the F3 similarity refine.
-
-    PRECONDITION of the fast mode — general position (ADVICE r4):
-    boundary-degenerate pairs (collinear overlapping edges, a vertex
-    lying exactly on the other polygon's edge, two axis-aligned
-    rectangles sharing an exact extent) have no PROPER crossing, so the
-    decision falls to a ray cast through a boundary point —
-    ordering-dependent, can classify either way. Such configurations are
-    measure-zero for float inputs and are scoped out of the convex-clip
-    property suite.
-
-    ``touch="strict"`` (VERDICT r5 #7): deterministic strict-interior
-    semantics on exact-touch configurations too. Pairs decided by a
-    proper crossing or by a reliably-off-boundary vertex probe take the
-    same vectorized path as fast mode; only pairs exhibiting an exact
-    boundary degeneracy (some orientation in the grid is exactly 0 with
-    overlapping extents) enter the tie-break, which is COMPLETE for
+    overhead is constant like the F3 similarity refine. A pair is True on
+    a PROPER edge crossing, or when the first vertex of one polygon lies
+    off the other's boundary and strictly inside it. Only pairs
+    exhibiting an exact boundary degeneracy (a vertex probe on the other
+    boundary, or some orientation in the grid exactly 0 with overlapping
+    extents) enter the tie-break, which is COMPLETE for
     bit-exactly-representable degeneracies:
 
     * split every edge of one polygon at all its intersections with the
@@ -355,17 +344,13 @@ def polygons_intersect_udf(touch: str = "fast"):
 
     Exactness caveat: orientation signs are float; degeneracies are
     detected when the cross product is EXACTLY zero (true for integer or
-    dyadic coordinates of modest magnitude — the adversarial inputs this
-    mode exists for). Near-degenerate coordinates within float rounding
-    remain undefined in either mode, as with any non-exact-arithmetic
-    kernel. Fixtures pin the policy: tests/test_polygon_touch.py
-    (shared edge → False, shared corner → False, identical → True,
-    T-touch → False, contained-sharing-an-edge → True, partial edge
-    overlap with interior overlap → True).
+    dyadic coordinates of modest magnitude). Near-degenerate coordinates
+    within float rounding remain undefined, as with any
+    non-exact-arithmetic kernel. Fixtures pin the policy:
+    tests/test_polygon_touch.py (shared edge → False, shared corner →
+    False, identical → True, T-touch → False, contained-sharing-an-edge →
+    True, partial edge overlap with interior overlap → True).
     """
-    if touch not in ("fast", "strict"):
-        raise ValueError(f"touch must be 'fast' or 'strict'; got {touch!r}")
-    strict = touch == "strict"
 
     def _cross(ox, oy, ax, ay, bx, by):
         return (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
@@ -415,7 +400,7 @@ def polygons_intersect_udf(touch: str = "fast"):
     def _boundary_probe(src, other):
         """Does ∂src enter the strict interior of ``other``? Split each
         src edge at every intersection with ∂other; probe sub-segment
-        midpoints. Python loop over src edges (slow path only), numpy
+        midpoints. Python loop over src edges (tie-break only), numpy
         over other's edges inside."""
         oxa, oya, oxb, oyb = other[:, 0], other[:, 1], other[:, 2], other[:, 3]
         for px, py, qx, qy in src:
@@ -484,13 +469,7 @@ def polygons_intersect_udf(touch: str = "fast"):
             if proper.any():
                 out[i] = True
                 continue
-            if not strict:
-                # (2) vertex containment, cheap: first vertex each way
-                out[i] = _point_in(A[0, 0], A[0, 1], B) or _point_in(
-                    B[0, 0], B[0, 1], A
-                )
-                continue
-            # strict mode: reliable vertex probe (off-boundary only)
+            # (2) reliable vertex probe (off-boundary only)
             pa = (A[0, 0], A[0, 1])
             pb = (B[0, 0], B[0, 1])
             a_on, b_on = _on_boundary(*pa, B), _on_boundary(*pb, A)
@@ -526,13 +505,11 @@ def polygon_join(
     level: int,
     left_rings: str = "rings",
     right_rings: str = "rings",
-    touch: str = "fast",
 ) -> DataFrame:
     """Polygon-polygon intersection join (J9): (left_id, right_id) for
-    every pair whose polygons share interior. ``touch="strict"`` enables
-    the deterministic exact-touch tie-break in the refine kernel (see
-    polygons_intersect_udf) for inputs with adversarially exact
-    coordinates — integer grids, shared parcel borders.
+    every pair whose polygons share interior — the exact strict-interior
+    decision of polygons_intersect_udf, so polygons that only touch
+    (shared walls, shared corners) never pair.
 
     Candidates: BOTH sides' C4 cover cells at ``level`` equi-joined — a
     shared interior region touches ≥1 cell, and the cover contains every
@@ -555,7 +532,7 @@ def polygon_join(
     refined = (
         pairs.join(ledges.hint("shuffle_hash"), "_lid")
         .join(redges.hint("shuffle_hash"), "_rid")
-        .where(polygons_intersect_udf(touch)(F.col("_le"), F.col("_re")))
+        .where(polygons_intersect_udf()(F.col("_le"), F.col("_re")))
     )
     return refined.select(
         F.col("_lid").alias(left_id), F.col("_rid").alias(right_id)

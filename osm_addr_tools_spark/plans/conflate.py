@@ -83,16 +83,16 @@ def norm_tags_udf():
     return norm.asNondeterministic()
 
 
-def street_similarity_udf(tau: float | None = None):
+def street_similarity_udf():
     """F3 ratio as a batch UDF (bounded candidate pairs only — off the
-    hot path by construction). ``tau`` enables the char-multiset
-    upper-bound fast path: blocked pairs provably score < tau."""
+    hot path by construction). ``FUZZY_TAU`` enables the char-multiset
+    upper-bound fast path: blocked pairs provably score < FUZZY_TAU."""
 
     @pandas_udf("double")
     def sim(a: pd.Series, b: pd.Series) -> pd.Series:
-        return N.street_similarity(a, b, tau=tau)
+        return N.street_similarity(a, b, tau=FUZZY_TAU)
 
-    # asNondeterministic: the ≥ tau acceptance filter otherwise pushes
+    # asNondeterministic: the ≥ FUZZY_TAU acceptance filter otherwise pushes
     # below the _ratio projection and the difflib matcher runs twice over
     # the whole pair table (guide §4.4; the fence halves the fuzzy stage)
     return sim.asNondeterministic()
@@ -233,7 +233,7 @@ def run_conflate(
         .where(2.0 * F.least(la, lb) >= F.lit(FUZZY_TAU) * (la + lb))
         .withColumn(
             "_ratio",
-            street_similarity_udf(FUZZY_TAU)(
+            street_similarity_udf()(
                 F.col("_a_street"), F.col("_e_street")
             ),
         )

@@ -68,24 +68,15 @@ def parse_and_normalize_udf():
     return x2
 
 
-def run_extract(
-    spark,
-    pages: DataFrame,
-    gazetteer: DataFrame,
-    lang_filter: list[str] | None = None,
-    dedupe_crawls: bool = True,
-) -> DataFrame:
+def run_extract(spark, pages: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) × gazetteer → address points.
 
     Returns (url, warc_ts, addr_key, city, street, housenumber, postcode,
     street_norm, hn_norm, lon, lat, geocoded). Ungecoded rows (gazetteer
-    miss) carry null lon/lat and geocoded=false.
+    miss) carry null lon/lat and geocoded=false. Only the latest crawl of
+    each url is extracted.
     """
-    df = pages.select("url", "warc_ts", "html", "lang")
-    if lang_filter:
-        df = df.where(F.col("lang").isin(lang_filter))
-    if dedupe_crawls:
-        df = asof_latest(df, "url", "warc_ts")
+    df = asof_latest(pages.select("url", "warc_ts", "html", "lang"), "url", "warc_ts")
     df = df.withColumn("text", extract_text_udf()("html")).drop("html", "lang")
     df = df.withColumn("addr", F.explode(parse_and_normalize_udf()("text"))).drop("text")
     df = df.select(

@@ -340,7 +340,9 @@ def test_connected_components_chain_and_islands(spark):
     assert got[21] == 10 and got[3] == 1 and got[60] == 50
 
 
-def test_connected_components_random_vs_union_find(spark):
+def test_connected_components_random_vs_union_find(spark, tmp_path):
+    """Both materializers (in-memory and the durable checkpoint_dir round
+    tables) must equal the union-find reference on every graph."""
     rng = np.random.default_rng(11)
     random_graph = [
         (int(a), int(b))
@@ -348,10 +350,15 @@ def test_connected_components_random_vs_union_find(spark):
         if a != b
     ]
     chain_and_islands = [(i, i + 1) for i in range(30, 45)] + [(1, 2), (7, 8)]
-    for edges in (random_graph, chain_and_islands):
+    for i, edges in enumerate((random_graph, chain_and_islands)):
         df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
-        got = {r.v: r.component for r in D.connected_components(df).collect()}
-        assert got == _uf_components(edges)
+        want = _uf_components(edges)
+        for ck in (None, str(tmp_path / f"cc_{i}")):
+            got = {
+                r.v: r.component
+                for r in D.connected_components(df, checkpoint_dir=ck).collect()
+            }
+            assert got == want, ck
 
 
 def test_minhash_band_divisibility_raises_not_asserts():
