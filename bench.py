@@ -3,7 +3,7 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": <headline seconds>, "unit": "sec",
- "queries": {name: sec, ...}, "sf": ..., plus informational keys}.
+ "queries_exec": {name: exec sec, ...}, "sf": ..., plus informational keys}.
 
 The headline is the address-match conflation pipeline (BASELINE.json
 metric: address-match join throughput) over the deterministic synthetic
@@ -386,10 +386,11 @@ def main() -> int:
     # VERDICT r4 #2 / r6 #1: the result line MUST fit the driver's
     # 2000-char stdout capture. r6 put the three per-query dicts on the
     # line and at 27 queries it grew to 2704 chars → BENCH_r06.json
-    # parsed: null. The line now carries ONLY headline aggregates + a
-    # pointer; every per-query wall and raw sample lives in detail_file,
-    # and a hard length assert makes the regression impossible to
-    # reintroduce silently.
+    # parsed: null. The line carries the headline aggregates and ONE
+    # per-query dict, the exec walls (~1.3k chars at 31 queries); the
+    # build walls, algo walls and raw samples live in detail_file, and a
+    # hard length check makes an overflow impossible to reintroduce
+    # silently.
     out = {
         "metric": "address-match join exec wall (per-query walls in detail_file)",
         "value": headline,
@@ -404,16 +405,17 @@ def main() -> int:
         "cpus": cpus,
         "sentinel_sec": sentinel_walls,
         "detail_file": "BENCH/SAMPLES_last_run.json",
+        "queries_exec": exec_timings,
     }
     if len(qs) <= 4:
         # SPARK_GRAFT_BENCH_ONLY subset runs (tools/bench_scaling.py,
-        # tools/bench_trend.py parse queries/queries_exec off the line):
-        # a ≤4-entry dict is ~40 chars/query — nowhere near the cap.
+        # tools/bench_trend.py parse queries and queries_exec off the
+        # line): a ≤4-entry dict is ~40 chars/query — nowhere near the cap.
         out["queries"] = timings
-        out["queries_exec"] = exec_timings
         out["queries_algo"] = algo_timings
     spark.stop()
-    # every per-query number goes to the side file, NOT the result line
+    # the build walls, algo walls and raw samples go to the side file
+    # (the result line carries only queries_exec of the per-query dicts)
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/SAMPLES_last_run.json", "w") as f:
         json.dump(

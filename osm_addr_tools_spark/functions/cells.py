@@ -568,12 +568,21 @@ def ring_arrays(poly) -> list[np.ndarray]:
 def ring_edges(rings) -> np.ndarray:
     """Flat edge array [xa,ya,xb,yb]×n over ALL rings (outer + holes), each
     ring closed back to its first vertex. Even-odd parity over every edge
-    IS outer-minus-holes containment (the J4 refine kernel's input)."""
-    if not rings:
+    IS outer-minus-holes containment (the J4 refine kernel's input).
+    Longitudes are unwrapped into the frame of the first vertex: a step of
+    more than 180° between consecutive vertices is a wrap across lon ±180,
+    not an edge around the globe (away from ±180 every shift is 0.0).
+    Precondition: the polygon is under 180° wide in longitude."""
+    verts = [v for v in rings if len(v)]
+    if not verts:
         return np.empty(0, dtype=np.float64)
-    return np.concatenate(
-        [np.concatenate([v, np.roll(v, -1, axis=0)], axis=1).ravel() for v in rings]
-    )
+    lon0 = verts[0][0, 0]
+    out = []
+    for v in verts:
+        v = v.copy()
+        v[:, 0] -= 360.0 * np.cumsum(np.round(np.diff(v[:, 0], prepend=lon0) / 360.0))
+        out.append(np.concatenate([v, np.roll(v, -1, axis=0)], axis=1).ravel())
+    return np.concatenate(out)
 
 
 def cover_batch(polys, level: int) -> list[np.ndarray]:

@@ -149,7 +149,10 @@ def pip_udf():
     Fully batch-vectorized: all candidate rows' edges concatenate into one
     (total_edges, 4) array; crossings count per row via bincount; parity
     decides containment. Zero per-row Python — this replaced a per-row
-    loop that dominated the containment join at scale.
+    loop that dominated the containment join at scale. Each point is
+    shifted by a multiple of 360° into the frame of its row's first edge
+    (C.ring_edges), so containment holds across lon ±180. Precondition:
+    each polygon is under 180° wide in longitude.
     """
 
     @pandas_udf("boolean")
@@ -171,6 +174,8 @@ def pip_udf():
         xa, ya, xb, yb = flat[:, 0], flat[:, 1], flat[:, 2], flat[:, 3]
         pyr = py[row_idx]
         pxr = px[row_idx]
+        x0 = xa[(np.cumsum(counts) - counts)[row_idx]]
+        pxr = pxr + 360.0 * np.round((x0 - pxr) / 360.0)
         crosses = (ya > pyr) != (yb > pyr)
         with np.errstate(divide="ignore", invalid="ignore"):
             xint = xa + (pyr - ya) * (xb - xa) / (yb - ya)
@@ -346,7 +351,10 @@ def polygons_intersect_udf():
     detected when the cross product is EXACTLY zero (true for integer or
     dyadic coordinates of modest magnitude). Near-degenerate coordinates
     within float rounding remain undefined, as with any
-    non-exact-arithmetic kernel. Fixtures pin the policy:
+    non-exact-arithmetic kernel. B is first shifted by a multiple of 360°
+    into A's frame, so pairs across lon ±180 decide like any other
+    (precondition: each polygon is under 180° wide in longitude).
+    Fixtures pin the policy:
     tests/test_polygon_touch.py (shared edge → False, shared corner →
     False, identical → True, T-touch → False, contained-sharing-an-edge →
     True, partial edge overlap with interior overlap → True).
@@ -452,6 +460,9 @@ def polygons_intersect_udf():
                 continue
             A = np.asarray(a, dtype=np.float64).reshape(-1, 4)
             B = np.asarray(b, dtype=np.float64).reshape(-1, 4)
+            # a new array: Arrow-backed buffers are read-only
+            shift = 360.0 * np.round((A[0, 0] - B[0, 0]) / 360.0)
+            B = B + np.array([shift, 0.0, shift, 0.0])
             # (1) proper crossing on the (m × k) orientation grid
             p1x, p1y, p2x, p2y = (A[:, j, None] for j in range(4))
             q1x, q1y, q2x, q2y = (B[None, :, j] for j in range(4))

@@ -255,22 +255,19 @@ def _shingles_pdf(docs: pd.DataFrame, k: int = 5, cap: int = 512) -> pd.DataFram
     return pd.DataFrame({"doc_id": ids, "g": gs})
 
 
-def _minhash_sigs_pdf(docs: pd.DataFrame, k: int = 5, num_perm: int = 64,
-                      seed: int = 42) -> pd.DataFrame:
-    """MinHash signatures via the same seeded-mix construction as
-    operators.dedup.minhash_udf (shared kernel; the SQL oracle re-derives
-    the banding candidate generation and the agreement verify from these)."""
-    from osm_addr_tools_spark.operators.dedup import _mix64, _shingle_hashes
+def _minhash_sigs_pdf(docs: pd.DataFrame) -> pd.DataFrame:
+    """MinHash signatures assembled independently of operators.dedup's
+    minhash_one from the same constants and hash primitives (the SQL oracle
+    re-derives the banding and the agreement verify from these)."""
+    from osm_addr_tools_spark.operators.dedup import (
+        NUM_PERM, SHINGLE_K, _SEEDS, _mix64, _shingle_hashes,
+    )
 
-    seeds = _mix64(np.arange(1, num_perm + 1, dtype=np.uint64) + np.uint64(seed))
     sigs = []
     for t in docs["text"]:
-        h = _shingle_hashes(t, k)
-        if h.size == 0:
-            sigs.append([0] * num_perm)
-        else:
-            sigs.append(_mix64(h[:, None] ^ seeds[None, :]).min(axis=0)
-                        .astype(np.int64).tolist())
+        h = _shingle_hashes(t, SHINGLE_K)
+        sigs.append(_mix64(h[:, None] ^ _SEEDS[None, :]).min(axis=0).astype(np.int64)
+                    .tolist() if h.size else [0] * NUM_PERM)
     return pd.DataFrame({"doc_id": docs["doc_id"].to_numpy(), "sig": sigs})
 
 

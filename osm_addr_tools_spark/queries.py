@@ -2407,6 +2407,7 @@ def emb_cosine_top3(spark, sf_dir):
 # __spark_entry__.oracle_sql() triggers generation.
 
 from osm_addr_tools_spark import oracle_support as _OS
+from osm_addr_tools_spark.operators.dedup import BANDS, NUM_PERM
 
 ODIR = _OS.oracle_dir(_OS.ORACLE_SF_DIR)
 
@@ -2437,39 +2438,43 @@ def _docs_with_planted(spark, sf_dir):
     return d.unionByName(near).unionByName(exact)
 
 
-def _minhash_oracle_sql(
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    sig_where: str = "TRUE",
-) -> str:
+def _minhash_sql_terms() -> tuple[str, str]:
+    """(band_eq, agree) DuckDB terms over aliases x / y of a (doc_id, sig)
+    table, from the engine's MinHash contract: any band slice equal, and
+    the count of agreeing signature positions. DuckDB list slices are
+    1-based inclusive; band i is sig[4i+1 : 4i+4]. Bucket hashing is
+    irrelevant to the result — bucket equality == slice equality (modulo
+    negligible 64-bit collisions), so the oracle compares slices
+    directly."""
+    rpb = NUM_PERM // BANDS
+    band_eq = " OR ".join(
+        f"x.sig[{i * rpb + 1}:{(i + 1) * rpb}] = y.sig[{i * rpb + 1}:{(i + 1) * rpb}]"
+        for i in range(BANDS)
+    )
+    agree = " + ".join(
+        f"(CASE WHEN x.sig[{i}] = y.sig[{i}] THEN 1 ELSE 0 END)"
+        for i in range(1, NUM_PERM + 1)
+    )
+    return band_eq, agree
+
+
+def _minhash_oracle_sql(threshold: float = 0.5, sig_where: str = "TRUE") -> str:
     """Banding candidate generation + agreement verify over the
-    materialized signatures. DuckDB list slices are 1-based inclusive;
-    band i is sig[4i+1 : 4i+4]. Bucket hashing is irrelevant to the
-    result — bucket equality == slice equality (modulo negligible 64-bit
-    collisions), so the oracle compares slices directly. ``sig_where``
+    materialized signatures (_minhash_sql_terms). ``sig_where``
     restricts the corpus (pair generation commutes with per-doc
     restriction: signatures and band slices are per-doc, so subset pairs
     == full-set pairs with both endpoints in the subset — the same
     restriction the Spark side applies by passing a filtered corpus)."""
-    rpb = num_perm // bands
-    band_eq = " OR ".join(
-        f"x.sig[{i * rpb + 1}:{(i + 1) * rpb}] = y.sig[{i * rpb + 1}:{(i + 1) * rpb}]"
-        for i in range(bands)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN x.sig[{i}] = y.sig[{i}] THEN 1 ELSE 0 END)"
-        for i in range(1, num_perm + 1)
-    )
+    band_eq, agree = _minhash_sql_terms()
     return f"""
-    SELECT a, b, round(agree / {num_perm}.0, 6) AS est_jaccard FROM (
+    SELECT a, b, round(agree / {NUM_PERM}.0, 6) AS est_jaccard FROM (
       SELECT x.doc_id AS a, y.doc_id AS b, ({agree}) AS agree
       FROM (SELECT * FROM read_parquet('{ODIR}/minhash_sigs.parquet')
             WHERE {sig_where}) x
       JOIN (SELECT * FROM read_parquet('{ODIR}/minhash_sigs.parquet')
             WHERE {sig_where}) y
         ON x.doc_id < y.doc_id AND ({band_eq})
-    ) WHERE agree / {num_perm}.0 >= {threshold}
+    ) WHERE agree / {NUM_PERM}.0 >= {threshold}
     """
 
 
@@ -2782,20 +2787,12 @@ def _docs_incremental(spark, sf_dir):
     return d, batch
 
 
-def _incremental_oracle_sql(num_perm: int = 64, bands: int = 16, threshold: float = 0.5) -> str:
+def _incremental_oracle_sql(threshold: float = 0.5) -> str:
     """Incremental gate over the materialized (corpus ∪ batch) signatures:
     banding candidates + agreement verify vs the corpus slice, then a
     recursive-CTE closure among batch survivors with min-id
     representatives — the same split the engine computes distributed."""
-    rpb = num_perm // bands
-    band_eq = " OR ".join(
-        f"x.sig[{i * rpb + 1}:{(i + 1) * rpb}] = y.sig[{i * rpb + 1}:{(i + 1) * rpb}]"
-        for i in range(bands)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN x.sig[{i}] = y.sig[{i}] THEN 1 ELSE 0 END)"
-        for i in range(1, num_perm + 1)
-    )
+    band_eq, agree = _minhash_sql_terms()
     return f"""
     WITH RECURSIVE sig AS (SELECT * FROM read_parquet('{ODIR}/inc_sigs.parquet')),
     corpus AS (SELECT * FROM sig WHERE doc_id < {_OS._INC_CUT}),
@@ -2804,14 +2801,14 @@ def _incremental_oracle_sql(num_perm: int = 64, bands: int = 16, threshold: floa
       SELECT DISTINCT a FROM (
         SELECT x.doc_id AS a, ({agree}) AS agree
         FROM batch x JOIN corpus y ON ({band_eq})
-      ) WHERE agree / {num_perm}.0 >= {threshold}
+      ) WHERE agree / {NUM_PERM}.0 >= {threshold}
     ),
     surv AS (SELECT * FROM batch WHERE doc_id NOT IN (SELECT a FROM chit)),
     pairs AS (
       SELECT a, b FROM (
         SELECT x.doc_id AS a, y.doc_id AS b, ({agree}) AS agree
         FROM surv x JOIN surv y ON x.doc_id < y.doc_id AND ({band_eq})
-      ) WHERE agree / {num_perm}.0 >= {threshold}
+      ) WHERE agree / {NUM_PERM}.0 >= {threshold}
     ),
     edges AS (
       SELECT a AS u, b AS v FROM pairs

@@ -277,31 +277,23 @@ def dedup_one_batch(
     index_path: str,
     ledger_path: str,
     threshold: float = 0.5,
-    **minhash_kw,
+    id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> dict:
     """One micro-batch of the incremental dedup stream — module-level so
     the crash-replay contract is directly testable (re-invoking with the
     same batch_id must rewrite byte-identical ledger and index
     partitions). Returns ``{"rows", "kept"}`` ledger counts (computed
     from the single post-write read that already feeds the kept-join, so
-    callers never re-scan the partition). See incremental_dedup_stream
-    for the full contract."""
+    callers never re-scan the partition). The ledger, the kept-join and
+    the appended index rows all use ``id_col`` / ``text_col`` (ADVICE r6).
+    See incremental_dedup_stream for the full contract."""
     from osm_addr_tools_spark.operators.dedup import (
         build_minhash_index,
         incremental_minhash_dedup,
     )
 
     spark = batch_df.sparkSession
-    id_col = minhash_kw.get("id_col", "doc_id")
-    # the subset of the minhash contract build_minhash_index understands —
-    # id_col/text_col INCLUDED (ADVICE r6: dropping them made the kept-join
-    # key and the appended signature construction silently diverge from
-    # the ledger's when the caller overrides either)
-    index_kw = {
-        k: v
-        for k, v in minhash_kw.items()
-        if k in ("id_col", "text_col", "k", "num_perm", "seed")
-    }
     try:
         # basePath keeps partition discovery rooted at index_path, so
         # the directory names surface as a batch_id column (string:
@@ -332,11 +324,11 @@ def dedup_one_batch(
         # batch as 'kept' (an at-scale disaster, not a fallback)
         if "PATH_NOT_FOUND" not in str(e):
             raise
-        idx = build_minhash_index(batch_df.limit(0), **index_kw)
+        idx = build_minhash_index(batch_df.limit(0), id_col, text_col)
     batch_df = batch_df.persist()  # signature subtree feeds 3 stages
     try:
         ledger = incremental_minhash_dedup(
-            batch_df, idx, threshold=threshold, **minhash_kw
+            batch_df, idx, threshold=threshold, id_col=id_col, text_col=text_col
         )
         ledger.write.mode("overwrite").parquet(
             f"{ledger_path}/batch_id={batch_id}"
@@ -353,7 +345,7 @@ def dedup_one_batch(
         # keyed by the SAME id column, as the batch signatures the
         # ledger was computed from
         build_minhash_index(
-            batch_df.join(kept, id_col), **index_kw
+            batch_df.join(kept, id_col), id_col, text_col
         ).write.mode("overwrite").parquet(
             f"{index_path}/batch_id={batch_id}"
         )
@@ -368,7 +360,6 @@ def incremental_dedup_stream(
     ledger_path: str,
     threshold: float = 0.5,
     checkpoint: str | None = None,
-    **minhash_kw,
 ):
     """Continuous-ingest near-dup gate: each micro-batch runs
     operators.dedup.incremental_minhash_dedup against the PERSISTED
@@ -407,8 +398,7 @@ def incremental_dedup_stream(
 
     def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
         dedup_one_batch(
-            batch_df, batch_id, index_path, ledger_path,
-            threshold=threshold, **minhash_kw,
+            batch_df, batch_id, index_path, ledger_path, threshold=threshold
         )
 
     w = docs.writeStream.foreachBatch(_one_batch).trigger(availableNow=True)
@@ -425,7 +415,6 @@ def ingest_batches_resumable(
     ledger_path: str,
     batch_col: str = "batch_id",
     threshold: float = 0.5,
-    **minhash_kw,
 ) -> dict:
     """Resumable multi-crawl incremental dedup (VERDICT r6 #8): run every
     batch of ``docs`` (distinguished by ``batch_col``, ascending — batch
@@ -436,7 +425,7 @@ def ingest_batches_resumable(
     arguments skips completed batches entirely — their ledger and index
     partitions are already on disk — replays at most the one in-flight
     batch (idempotent: the replay guard in dedup_one_batch), and
-    continues; a config change (threshold/minhash params) invalidates
+    continues; a config change (threshold) invalidates
     resume via the manifest's config_hash, same as every S5 stage.
 
     Manifest row per batch: part = batch id, rows = ledger rows,
@@ -461,7 +450,7 @@ def ingest_batches_resumable(
     )
 
     spark = docs.sparkSession
-    cfg = config_hash({"threshold": threshold, **{k: str(v) for k, v in minhash_kw.items()}})
+    cfg = config_hash({"threshold": threshold})
     done = completed_parts(spark, ledger_path, "incremental_dedup", cfg)
     done_ids = {r.part for r in done.collect()} if done is not None else set()
     # bounded collect: #crawls, an operational sequence
@@ -484,8 +473,7 @@ def ingest_batches_resumable(
         batch_df = docs.where(F.col(batch_col) == b).drop(batch_col)
         t0 = _time.perf_counter()
         bstats = dedup_one_batch(
-            batch_df, b, index_path, ledger_path,
-            threshold=threshold, **minhash_kw,
+            batch_df, b, index_path, ledger_path, threshold=threshold
         )
         wall_ms = int((_time.perf_counter() - t0) * 1000)
         row = spark.createDataFrame(

@@ -254,6 +254,41 @@ def test_knn_join_exact_at_face_corner(spark):
         assert dict(zip(got_r.pid, got_r.cid)) == want, (ring_r, expand)
 
 
+def test_knn_join_exact_across_antimeridian_and_poles(spark):
+    """The cell ring must hold where lon/lat coordinates break: points
+    straddling lon ±180, and points within 0.0005° of either pole (all
+    longitudes). Every pair within d_max — haversine brute force — must
+    come back at every ring radius."""
+    ids = np.arange(600)
+
+    def cloud(salt):
+        u = lambda k: S.h01(ids, salt + k)
+        grp = ids % 3
+        lon = np.where(grp == 0, 180.0 + (u(0) - 0.5) * 0.002, (u(0) - 0.5) * 360.0)
+        lon = np.where(lon > 180.0, lon - 360.0, lon)
+        lat = np.select(
+            [grp == 0, grp == 1],
+            [40.0 + (u(1) - 0.5) * 0.002, 90.0 - u(1) * 0.0005],
+            -90.0 + u(1) * 0.0005,
+        )
+        return lon, lat
+
+    qlon, qlat = cloud(800)
+    clon, clat = cloud(900)
+    d_max = 30.0
+    d = G.haversine_np(qlon[:, None], qlat[:, None], clon[None, :], clat[None, :])
+    want = sorted(map(tuple, np.argwhere(d <= d_max).tolist()))
+    # all three regions contribute pairs
+    assert {i % 3 for i, _ in want} == {0, 1, 2}
+    q = spark.createDataFrame(pd.DataFrame({"pid": ids, "lon": qlon, "lat": qlat}))
+    c = spark.createDataFrame(pd.DataFrame({"cid": ids, "c_lon": clon, "c_lat": clat}))
+    for ring_r in (1, 2, 3):
+        got = knn_join(
+            q, c, query_id="pid", cand_id="cid", d_max_m=d_max, k=None, ring_r=ring_r
+        ).select("pid", "cid").collect()
+        assert sorted(map(tuple, got)) == want, ring_r
+
+
 def test_asof_latest_deterministic_on_duplicate_ts(spark):
     """Duplicate (key, ts) rows must resolve to the same winner on every
     run/partitioning (VERDICT r2 #5)."""
@@ -363,6 +398,45 @@ def test_polygon_join_concave_holes_vs_geometry_truth(spark):
     got = polygon_join(left, right, "lid", "rid", level=18).toPandas()
     pairs = set(zip(got.lid, got.rid))
     assert pairs == {(1, 11), (1, 12), (2, 15)}, pairs
+
+
+def test_pip_and_polygon_join_across_antimeridian(spark):
+    """Containment and polygon intersection on rings crossing lon ±180:
+    an edge from 179.9999 to -179.9999 is 0.0002° long, not a line
+    around the globe. Cover cells were already right (xyz projection);
+    the exact refines ran on raw lon/lat and missed both interior points,
+    missed a square inside the ring and paired a disjoint one."""
+    from osm_addr_tools_spark.operators.joins import polygon_join
+
+    box = lambda x0, y0, x1, y1: [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+    square = [box(179.9999, 10.0, -179.9999, 10.0002)]
+    # hole ring starts on the other side of ±180 than its outer ring
+    holed = [
+        box(179.9997, 20.0, -179.9997, 20.0006),
+        box(-179.9999, 20.0002, 179.9999, 20.0004),
+    ]
+    polys = _poly_df(spark, [(1, square), (2, holed)])
+    pts = spark.createDataFrame(
+        [
+            (10, 179.99995, 10.0001), (11, -179.99995, 10.0001),  # in 1
+            (12, 179.9998, 10.0001), (13, -179.9998, 10.0001),    # out
+            (20, 179.99985, 20.0003), (21, -179.99985, 20.0003),  # in 2
+            (22, 179.99995, 20.0003), (23, -179.99995, 20.0003),  # in hole
+        ],
+        "pid long, lon double, lat double",
+    )
+    got = pip_join(pts, polys, level=19).select("pid", "id").collect()
+    assert sorted(map(tuple, got)) == [(10, 1), (11, 1), (20, 2), (21, 2)]
+
+    right = _poly_df(spark, [
+        (30, [box(179.99992, 10.00005, 179.99998, 10.00015)]),    # inside
+        (31, [box(-179.99998, 10.00005, -179.99992, 10.00015)]),  # inside
+        (32, [box(-179.99989, 10.00005, -179.99985, 10.00015)]),  # disjoint
+        (33, [box(179.99985, 10.00005, 179.99989, 10.00015)]),    # disjoint
+    ]).withColumnRenamed("id", "rid")
+    left = polys.where("id = 1").withColumnRenamed("id", "lid")
+    got = polygon_join(left, right, "lid", "rid", level=19).collect()
+    assert sorted((r.lid, r.rid) for r in got) == [(1, 30), (1, 31)]
 
 
 def test_polygons_intersect_kernel_vs_convex_clip_reference(spark):
