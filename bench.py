@@ -3,7 +3,9 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": <headline seconds>, "unit": "sec",
- "queries_exec": {name: exec sec, ...}, "sf": ..., plus informational keys}.
+ "queries_exec": {name: exec sec, ...},
+ "queries_eager": {eager-build name: build-inclusive sec, ...}, "sf": ...,
+ plus informational keys}.
 
 The headline is the address-match conflation pipeline (BASELINE.json
 metric: address-match join throughput) over the deterministic synthetic
@@ -93,11 +95,6 @@ def materialize_inputs(spark, n_pages: int, base: str) -> None:
 
 
 # Registered queries timed after the four conflation-pipeline entries.
-# Queries whose connected-components loop (or BPE merge fold) runs eagerly
-# at plan build — dedup_minhash_components, geo_customer_clusters,
-# emb_dedup_retention, docs_incremental_dedup, docs_bpe_token_stats,
-# docs_training_manifest — do their cluster work in the build phase: read
-# their build-inclusive "queries_algo" wall, not the exec wall.
 BENCH_QUERIES = (
     "q1_pricing_summary",
     "q3_top_revenue_orders",
@@ -126,6 +123,19 @@ BENCH_QUERIES = (
     "docs_training_manifest",
     "docs_mix_epoch",
     "docs_spans_applied",
+)
+
+# Bench queries whose connected-components loop (or BPE merge fold) runs
+# eagerly at plan build: their cluster work is in the build phase, so the
+# exec wall of the final write misses it. The result line also carries
+# their build-inclusive walls ("queries_eager").
+EAGER_BUILD_QUERIES = (
+    "dedup_minhash_components",
+    "geo_customer_clusters",
+    "emb_dedup_retention",
+    "docs_incremental_dedup",
+    "docs_bpe_token_stats",
+    "docs_training_manifest",
 )
 
 
@@ -369,9 +379,8 @@ def main() -> int:
         timings[name] = min(s[0] for s in samples[name])
         exec_timings[name] = min(s[1] for s in samples[name])
         # VERDICT r4 #3: the third per-query number. For queries whose
-        # algorithm runs EAGERLY at plan-build time (iterative
-        # connected-components loops: dedup_minhash_components,
-        # geo_customer_clusters), the build wall IS cluster work — report
+        # algorithm runs EAGERLY at plan-build time (EAGER_BUILD_QUERIES),
+        # the build wall IS cluster work — report
         # it explicitly so the 30 ms exec wall can't be misread as the
         # query's cost. For everything else it is driver-side Catalyst
         # analysis only.
@@ -386,11 +395,11 @@ def main() -> int:
     # VERDICT r4 #2 / r6 #1: the result line MUST fit the driver's
     # 2000-char stdout capture. r6 put the three per-query dicts on the
     # line and at 27 queries it grew to 2704 chars → BENCH_r06.json
-    # parsed: null. The line carries the headline aggregates and ONE
-    # per-query dict, the exec walls (~1.3k chars at 31 queries); the
-    # build walls, algo walls and raw samples live in detail_file, and a
-    # hard length check makes an overflow impossible to reintroduce
-    # silently.
+    # parsed: null. The line carries the headline aggregates, the exec
+    # walls (~1.3k chars at 31 queries) and the build-inclusive walls of
+    # the six EAGER_BUILD_QUERIES (~220 chars); every other build wall,
+    # the algo walls and the raw samples live in detail_file, and a hard
+    # length check makes an overflow impossible to reintroduce silently.
     out = {
         "metric": "address-match join exec wall (per-query walls in detail_file)",
         "value": headline,
@@ -413,9 +422,13 @@ def main() -> int:
         # line): a ≤4-entry dict is ~40 chars/query — nowhere near the cap.
         out["queries"] = timings
         out["queries_algo"] = algo_timings
+    else:
+        out["queries_eager"] = {
+            name: timings[name] for name in EAGER_BUILD_QUERIES if name in timings
+        }
     spark.stop()
     # the build walls, algo walls and raw samples go to the side file
-    # (the result line carries only queries_exec of the per-query dicts)
+    # (the result line carries queries_exec and queries_eager only)
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/SAMPLES_last_run.json", "w") as f:
         json.dump(

@@ -269,9 +269,7 @@ def quality_components_udf():
     def qc(text: pd.Series) -> pd.DataFrame:
         return quality_components(text)
 
-    # optimizer fence: the per-component field extraction otherwise
-    # collapses into repeated evaluations of the kernel (guide §4.4)
-    return qc.asNondeterministic()
+    return qc
 
 
 def winnow_fingerprints_udf():
@@ -279,9 +277,7 @@ def winnow_fingerprints_udf():
     def wf(text: pd.Series) -> pd.Series:
         return text.map(winnow_fingerprints)
 
-    # optimizer fence (guide §4.4): the explode's inferred size > 0
-    # predicate otherwise duplicates the rolling-hash pass
-    return wf.asNondeterministic()
+    return wf
 
 
 def lang_id_udf():

@@ -98,8 +98,9 @@ def shingle_udf(k: int, max_shingles: int = 512):
             out.append(h.astype(np.int64).tolist())
         return pd.Series(out)
 
-    # optimizer fence (guide §4.4): the size(_sh) > 0 filter otherwise
-    # pushes below the projection and the md5 shingle pass runs twice
+    # optimizer fence: the size(_sh) > 0 filter otherwise pushes below the
+    # projection and the md5 shingle pass runs again per scan
+    # (test_python_udf_evaluation_counts: sh 8 → 48 in dedup_ngram_jaccard)
     return sh.asNondeterministic()
 
 

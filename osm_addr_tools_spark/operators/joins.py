@@ -44,13 +44,14 @@ def cell_encode_udf(level: int):
         out = C.cell_encode(np.where(ok, x, 0.0), np.where(ok, y, 0.0), level)
         return pd.Series(pd.arrays.IntegerArray(out, ~ok))
 
-    # asNondeterministic (guide §4.4 pattern): the kernel IS deterministic;
-    # the marker only fences the optimizer, which otherwise pushes inferred
-    # join-key predicates (isnotnull(_cell)) BELOW the projection and
-    # re-evaluates the UDF once under the filter and once above it —
-    # measured as paired ArrowEvalPython[enc] nodes in every spatial-join
-    # plan. The blocked pushdowns all reference the UDF output itself, so
-    # nothing that could reach the parquet scan is lost.
+    # asNondeterministic: the kernel IS deterministic; the marker only
+    # fences the optimizer, which otherwise pushes inferred join-key
+    # predicates (isnotnull(_cell)) BELOW the projection and re-evaluates
+    # the UDF once under the filter and once above it. Without it
+    # test_python_udf_evaluation_counts fails: enc 2 → 3 in
+    # geo_knn_nearest_supplier, 7 → 13 in salted run_conflate. The blocked
+    # pushdowns all reference the UDF output itself, so nothing that could
+    # reach the parquet scan is lost.
     return enc.asNondeterministic()
 
 
@@ -85,8 +86,6 @@ def cell_ring_udf(r: int):
         rings = iter(C.cell_ring(c[ok], r))
         return pd.Series([next(rings) if k else None for k in ok], dtype=object)
 
-    # see cell_encode_udf: optimizer fence against duplicate evaluation
-    ring = ring.asNondeterministic()
     return lambda cell: ring(F.coalesce(cell, F.lit(_NO_CELL)))
 
 
@@ -138,8 +137,9 @@ def cover_and_edges_udf(level: int):
 
     # see cell_encode_udf: without the fence, the explode's inferred
     # size(cover) > 0 predicate is pushed below the projection and THE
-    # HEAVIEST UDF OF THE CONTAINMENT JOIN runs twice per polygon
-    # (stacked ArrowEvalPython[both] nodes in one stage, measured)
+    # HEAVIEST UDF OF THE CONTAINMENT JOIN runs again per polygon
+    # (test_python_udf_evaluation_counts: both 4 → 9 in
+    # geo_building_supplier_overlap, 1 → 4 in conflate_matches)
     return both.asNondeterministic()
 
 

@@ -177,8 +177,10 @@ def hashed_score_pandas(
     def sc(t: pd.Series) -> pd.DataFrame:
         return score_batch(t, w)
 
-    # optimizer fence: the field extractions below otherwise collapse
-    # into repeated evaluations of the scoring kernel (guide §4.4)
+    # optimizer fence: a filter on the output (``.where("keep")``) is
+    # otherwise pushed below this projection and the scoring kernel runs
+    # twice (test_python_udf_evaluation_counts: sc 1 → 2 in
+    # hashed_score_pandas keep)
     sc = sc.asNondeterministic()
 
     d = df.select(F.col(id_col), sc(F.col(text_col)).alias("_s"))

@@ -75,9 +75,10 @@ def hyperplane_bucket_udf(dim: int, n_planes: int = 12, seed: int = 42):
         vals = (bits * (1 << np.arange(n_planes))).sum(axis=1)
         return pd.Series(vals.astype(np.int64))
 
-    # optimizer fence: the bucket equi-join otherwise pushes inferred
-    # isnotnull(_bucket) below the projection and evaluates the matrix
-    # multiply twice (guide §4.4; kernel itself is deterministic)
+    # optimizer fence (the kernel itself is deterministic): the bucket
+    # equi-join otherwise pushes inferred isnotnull(_bucket) below the
+    # projection and evaluates the matrix multiply again
+    # (test_python_udf_evaluation_counts: bucket 2 → 3 in emb_ann_lsh_top3)
     return bucket.asNondeterministic()
 
 
@@ -144,8 +145,7 @@ def hyperplane_bands_udf(dim: int, n_planes: int, bands: int, seed: int):
         vals = (per_band * weights).sum(axis=2).astype(np.int64)
         return pd.Series([row.tolist() for row in vals])
 
-    # see hyperplane_bucket_udf: fence against duplicate evaluation
-    return buckets.asNondeterministic()
+    return buckets
 
 
 def lsh_semantic_pairs(
@@ -243,6 +243,7 @@ def centroid_assign_udf(centroids: np.ndarray, n_probe: int = 1):
         return pd.Series([row.astype(np.int32).tolist() for row in order])
 
     # see hyperplane_bucket_udf: fence against duplicate evaluation
+    # (test_python_udf_evaluation_counts: assign 2 → 3 in emb_ann_ivf_top3)
     return assign.asNondeterministic()
 
 

@@ -76,11 +76,7 @@ def norm_tags_udf():
     ) -> pd.DataFrame:
         return N.norm_address(city, street, hn, place)
 
-    # asNondeterministic: optimizer fence only (the kernel is pure) — the
-    # key join otherwise pushes inferred isnotnull(addr_key) below the
-    # projection and evaluates this 100k-row normalization twice per
-    # branch (paired ArrowEvalPython[norm] nodes, measured; guide §4.4)
-    return norm.asNondeterministic()
+    return norm
 
 
 def street_similarity_udf():
@@ -94,7 +90,8 @@ def street_similarity_udf():
 
     # asNondeterministic: the ≥ FUZZY_TAU acceptance filter otherwise pushes
     # below the _ratio projection and the difflib matcher runs twice over
-    # the whole pair table (guide §4.4; the fence halves the fuzzy stage)
+    # the whole pair table (test_python_udf_evaluation_counts: sim 1 → 2
+    # in conflate_matches and both run_conflate shapes)
     return sim.asNondeterministic()
 
 

@@ -40,8 +40,8 @@ def run_tile_polygons(
 
 
 def tile_density(assignments: DataFrame) -> DataFrame:
-    """A1 hash-agg over tile ids — feeds the hot-cell histogram that EP2's
-    salting consumes (tiling is upstream of skew planning by design)."""
+    """Per-tile feature count (A1 hash-agg over tile ids): one row per
+    ``tile_id`` with ``n_features``, the number of assignments to it."""
     return assignments.groupBy("tile_id").agg(F.count(F.lit(1)).alias("n_features"))
 
 
