@@ -246,21 +246,6 @@ def cell_children(cell: np.ndarray) -> np.ndarray:
     return (base[:, None] + ks[None, :] * child_lsb[:, None]).astype(np.int64)
 
 
-def cell_range_min(cell: np.ndarray) -> np.ndarray:
-    cell = np.asarray(cell, dtype=np.uint64)
-    return cell - (cell_lsb(cell) - np.uint64(1))
-
-
-def cell_range_max(cell: np.ndarray) -> np.ndarray:
-    cell = np.asarray(cell, dtype=np.uint64)
-    return cell + (cell_lsb(cell) - np.uint64(1))
-
-
-def cell_contains(parent: np.ndarray, child: np.ndarray) -> np.ndarray:
-    child = np.asarray(child, dtype=np.uint64)
-    return (cell_range_min(parent) <= child) & (child <= cell_range_max(parent))
-
-
 # ---------------------------------------------------------------------------
 # encode / decode API (C1, C2)
 # ---------------------------------------------------------------------------

@@ -10,7 +10,6 @@ is pinned in SURVEY §7.5 and the goldens in tests/test_text.py).
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 import numpy as np
@@ -185,18 +184,6 @@ def token_count(text: pd.Series) -> pd.Series:
     return text.fillna("").map(lambda t: len(_TOKEN_RE.findall(t))).astype("int64")
 
 
-def fingerprint64(text: pd.Series) -> pd.Series:
-    """Stable 64-bit document fingerprint (first 8 bytes of sha256),
-    as signed int64 (two's complement)."""
-
-    def one(t: str) -> int:
-        h = hashlib.sha256((t or "").encode("utf-8")).digest()
-        v = int.from_bytes(h[:8], "big")
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    return text.map(one).astype("int64")
-
-
 _WINNOW_B = np.uint64(257)
 
 
@@ -207,7 +194,7 @@ def winnow_fingerprints(text: str, k: int = 8, w: int = 16) -> list[tuple[int, i
     consecutive gram hashes keep the minimum, rightmost on ties. The
     selected (position, hash) set is shift-resistant — an insertion far
     from a passage leaves that passage's fingerprints intact, which exact
-    whole-document hashing (fingerprint64) cannot do.
+    whole-document hashing cannot do.
 
     Windows are FULL windows only (s ∈ [0, n_grams-w]); documents with
     fewer than ``w`` grams fall back to one truncated window (global
@@ -238,14 +225,6 @@ def winnow_fingerprints(text: str, k: int = 8, w: int = 16) -> list[tuple[int, i
         v = int(h[int(p)])
         out.append((int(p), v - (1 << 64) if v >= (1 << 63) else v))
     return sorted(out)
-
-
-def shingles(text: str, k: int = 5) -> set[str]:
-    """Word k-shingles of lowercase word tokens (for MinHash/Jaccard)."""
-    words = [w.lower() for w in _WORD_RE.findall(text or "")]
-    if len(words) < k:
-        return {" ".join(words)} if words else set()
-    return {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
 
 
 # --- pandas-UDF factories over the kernels above ----------------------------

@@ -3,11 +3,11 @@
 frame-sample as Arrow-batched UDFs over ``mapInPandas``.
 
 The Spark-side plumbing — schema, partitioning, UDF signatures, batch
-shapes — is real and tested. The actual codec step is STUBBED: this
-container has no image/audio libraries, so ``decode=\"real\"`` raises
-NotImplementedError, and the default deterministic fake decoder parses the
-synthetic header format produced by :func:`synth_media`. Swapping the fake
-for Pillow/ffmpeg is a one-function change that does not touch any plan.
+shapes — is real and tested. The codec step is a deterministic fake
+decoder that parses the synthetic header format produced by
+:func:`synth_media` (no image/audio library is a dependency). Swapping
+it for Pillow/ffmpeg is a one-function change that does not touch any
+plan.
 
 Media table schema (engine convention):
     media_id long, kind string ('image'|'audio'|'video'),
@@ -22,7 +22,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_DDL = "media_id long, kind string, bytes binary, meta map<string,string>"
 
@@ -63,18 +62,10 @@ def _parse_header(blob: bytes):
     return _KINDS.get(kind_id), w, h, frames
 
 
-def decode_media(df: DataFrame, decoder: str = "fake") -> DataFrame:
-    """Decode step: binary → typed struct(width, height, n_frames, ok).
-
-    ``decoder="real"`` is the integration point for an actual codec —
-    NotImplementedError here because no image/audio library exists in this
-    container (STUB, clearly marked; the plan shape is identical either way).
-    """
-    if decoder == "real":
-        raise NotImplementedError(
-            "real codecs (Pillow/ffmpeg) are not installed in this environment; "
-            "use decoder='fake' — the Spark plumbing is identical"
-        )
+def decode_media(df: DataFrame) -> DataFrame:
+    """Decode step: binary → typed struct(width, height, n_frames, ok),
+    parsed by the fake codec (``_parse_header``); a real codec replaces
+    ``dec`` and leaves the plan shape unchanged."""
 
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

@@ -28,8 +28,8 @@ window pass could silently disagree on bucket assignment, while a pure
 function of the key cannot. Correctness never depends on bucket
 boundaries (any monotone bucketing yields the identical running sum —
 property-tested); skewed keys only IMBALANCE buckets. For heavy skew,
-pass ``boundaries="auto"`` (one approxQuantile pass → equi-depth
-buckets; see ``auto_boundaries``) or an explicit ascending cut list.
+or a key whose domain is known without a min/max job, pass an explicit
+ascending cut list as ``boundaries``.
 """
 
 from __future__ import annotations
@@ -53,51 +53,37 @@ def _uniform_bucket(key, kmin: float, kmax: float, nb: int):
 
 
 def _boundary_bucket(key, boundaries: list):
-    """Equi-depth bucket id = #boundaries ≤ key (boundaries sorted
-    ascending, e.g. from approxQuantile). O(len(boundaries)) JVM array
+    """Bucket id = #boundaries ≤ key (the caller's cut points, sorted
+    ascending). O(len(boundaries)) JVM array
     filter per row — fine for the ≤ few-thousand boundaries that make
     sense here."""
     arr = F.array(*[F.lit(b) for b in sorted(boundaries)])
     return F.size(F.filter(arr, lambda x: x <= key)).cast("int")
 
 
-def auto_boundaries(df: DataFrame, order_col: str, num_buckets: int) -> list:
-    """Equi-depth bucket boundaries for ``running_sum(boundaries="auto")``:
-    the (i/num_buckets)-quantiles of the order key via approxQuantile (one
-    distributed GK-sketch pass; relative error a quarter-bucket, so no
-    bucket can exceed ~1.5× its equi-depth share from sketch error alone).
-    Heavy skew — many rows tying on one key value — collapses adjacent
-    boundaries; ties are indivisible by a monotone bucketing, so that
-    residual imbalance is irreducible, and correctness never depends on
-    balance (any monotone bucketing yields the identical running sum)."""
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    rel_err = max(1e-4, 0.25 / num_buckets)
-    return (
-        df.select(F.col(order_col).cast("double").alias("_k"))
-        .dropna()
-        .approxQuantile("_k", probs, rel_err)
-    )
+def _default_buckets(spark) -> int:
+    """Uniform bucket count when the caller gives none: 4 × shuffle
+    partitions, clamped to [64, 4096]."""
+    try:
+        parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    except ValueError:  # e.g. "auto" under some AQE configs
+        parts = 200
+    return max(64, min(4096, parts * 4))
 
 
-def _resolve_bucket(df: DataFrame, order_col: str, num_buckets: int, boundaries):
+def _resolve_bucket(df: DataFrame, order_col: str, num_buckets, boundaries):
     """Monotone bucket-id Column for ``order_col`` (shared by running_sum
-    and grouped_row_number). ``boundaries``: None → uniform range buckets
-    over one min/max aggregate; ``"auto"`` → equi-depth via
-    ``auto_boundaries``; a list → explicit ascending cuts. Null keys yield
-    a NULL bucket (never clamp into a valid one): F.least/F.greatest skip
-    nulls and the boundary filter drops null comparisons, so without the
-    final guard null keys would silently land in a bucket with wrong
-    offsets — the partials pass raises on them instead."""
+    and grouped_row_number). ``boundaries``: None → ``num_buckets``
+    uniform range buckets over one min/max aggregate; a list → explicit
+    ascending cuts. Null keys yield a NULL bucket (never clamp into a
+    valid one): F.least/F.greatest skip nulls and the boundary filter
+    drops null comparisons, so without the final guard null keys would
+    silently land in a bucket with wrong offsets — the partials pass
+    raises on them instead."""
     key = F.col(order_col)
-    if isinstance(boundaries, str):
-        if boundaries != "auto":
-            raise ValueError(f"boundaries must be a list or 'auto'; got {boundaries!r}")
-        boundaries = auto_boundaries(df, order_col, num_buckets)
-
     if boundaries is not None:
-        # compare against the DOUBLE view of the key (ADVICE r6): the
-        # boundary literals are doubles (approxQuantile sketches the
-        # double-cast key), so a raw timestamp/date key would miscast or
+        # compare against the DOUBLE view of the key (ADVICE r6): cut
+        # points are numbers, so a raw timestamp/date key would miscast or
         # fail under ANSI — the same view the uniform path already uses,
         # and double casting is monotone, which is all bucketing needs
         bucket = _boundary_bucket(key.cast("double"), boundaries)
@@ -115,6 +101,8 @@ def _resolve_bucket(df: DataFrame, order_col: str, num_buckets: int, boundaries)
                 f"prefix_sum: order key {order_col!r} is null on all rows"
             )
         else:
+            if num_buckets is None:
+                num_buckets = _default_buckets(df.sparkSession)
             bucket = _uniform_bucket(kd, bounds[0], bounds[1], num_buckets)
 
     return F.when(key.isNotNull(), bucket)
@@ -141,11 +129,10 @@ def running_sum(
     silently dropping rows or misplacing offsets (ADVICE r5). The check is
     free — null keys surface as a null bucket in the partials pass.
 
-    ``boundaries``: explicit ascending cut points for equi-depth
-    bucketing, or ``"auto"`` to derive them from one approxQuantile pass
-    over the order key (heavily skewed keys starve uniform range buckets;
-    equi-depth keeps every stage balanced — see ``auto_boundaries``).
-    Output is identical under ANY monotone bucketing (property-tested).
+    ``boundaries``: explicit ascending cut points, compared against the
+    key's double view (timestamps as epoch seconds); None buckets
+    uniformly over the key's min/max. Output is identical under ANY
+    monotone bucketing (property-tested).
 
     The ``df`` subtree is evaluated twice (partials pass + window pass) —
     at scale, read it from columnar storage or persist it upstream; both
@@ -154,13 +141,6 @@ def running_sum(
     if isinstance(order_cols, str):
         order_cols = [order_cols]
     spark = df.sparkSession
-    key = F.col(order_cols[0])
-    if num_buckets is None:
-        try:
-            parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        except ValueError:  # e.g. "auto" under some AQE configs
-            parts = 200
-        num_buckets = max(64, min(4096, parts * 4))
 
     integral = isinstance(df.schema[value_col].dataType, _INTEGRAL)
     sum_type = "long" if integral else "double"
@@ -253,12 +233,6 @@ def grouped_row_number(
     if isinstance(order_cols, str):
         order_cols = [order_cols]
     spark = df.sparkSession
-    if num_buckets is None:
-        try:
-            parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        except ValueError:
-            parts = 200
-        num_buckets = max(64, min(4096, parts * 4))
 
     bucket = _resolve_bucket(df, order_cols[0], num_buckets, boundaries)
     b = df.withColumn("_psb", bucket)

@@ -6,18 +6,13 @@ the feature space fixed-size with no vocabulary to ship).
 
 Scoring a document is ``score = Σ_t w[h(t)] / (|tokens| * W)`` — hash
 every token into one of ``dim`` buckets, sum the bucket weights, and
-normalize. Two interchangeable execution paths:
-
-* ``hashed_score`` — pure Column expressions (split → aggregate lambda →
-  one division), fully inside whole-stage codegen: ZERO shuffles, zero
-  joins, zero Python — quality filtering at scan speed. Weights are
-  derived arithmetically from the bucket id (below), which is what keeps
-  this path engine-portable for the DuckDB oracle gate.
-* ``hashed_score_pandas`` — the PRODUCTION shape for a real trained
-  model: an Arrow-batched pandas UDF closing over a numpy weight vector
-  of any ``dim`` (a learned w would be broadcast to executors inside the
-  serialized UDF — still zero shuffles). Pytest pins both paths to
-  identical outputs on the derived weights.
+normalize. One execution path, ``hashed_score``: pure Column
+expressions (split → aggregate lambda → one division), fully inside
+whole-stage codegen: ZERO shuffles, zero joins, zero Python — quality
+filtering at scan speed. Weights are derived arithmetically from the
+bucket id (below), which is what keeps the path engine-portable for the
+DuckDB oracle gate; pytest pins it bit-for-bit against a pure-Python
+scorer over the same weight vector (tests/reference.py).
 
 Engine-parity constraints (same reasoning as operators/sampling.py —
 the oracle must reproduce every bit):
@@ -37,10 +32,6 @@ the oracle must reproduce every bit):
 
 from __future__ import annotations
 
-import re
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -117,78 +108,6 @@ def hashed_score(
         id_col,
         "n_tok",
         "score_num",
-        score.alias("score"),
-        (score >= 0.0).alias("keep"),
-    )
-
-
-# --- production path: numpy weight vector inside an Arrow-batched UDF ------
-
-_WS = re.compile(r"\s+")
-
-
-def derived_weights(dim: int) -> np.ndarray:
-    """The weight vector the Column path encodes arithmetically —
-    w[b] = (b * FIB) mod 2^32 mod (2W+1) - W, as int64."""
-    b = np.arange(dim, dtype=np.uint64)
-    return (
-        (b * np.uint64(FIB_MULT)) % np.uint64(_MOD32) % np.uint64(2 * W_SCALE + 1)
-    ).astype(np.int64) - W_SCALE
-
-
-def _probe_py(t: str) -> int:
-    if not t:
-        return 0
-    length = min(len(t), MAX_TOKEN_LEN)
-    mid = (length + 1) // 2
-    return length * 131 + ord(t[0]) * 17 + ord(t[length - 1]) * 7 + ord(t[mid - 1])
-
-
-def score_batch(text: pd.Series, weights: np.ndarray) -> pd.DataFrame:
-    """Batch kernel: per-doc (n_tok, score_num) with an arbitrary weight
-    vector (len(weights) = dim). Pure function, reused by pytest as the
-    reference for the Column path."""
-    dim = len(weights)
-    n_tok, score_num = [], []
-    for doc in text.fillna(""):
-        toks = _WS.split(doc.strip().lower())
-        n_tok.append(len(toks))
-        s = 0
-        for t in toks:
-            s += int(weights[(_probe_py(t) * FIB_MULT) % _MOD32 % dim])
-        score_num.append(s)
-    return pd.DataFrame({"n_tok": n_tok, "score_num": score_num})
-
-
-def hashed_score_pandas(
-    df: DataFrame,
-    weights: np.ndarray,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Production path: score with a REAL weight vector (trained or
-    derived) shipped to executors inside the serialized UDF closure —
-    Arrow-batched, zero shuffles, same output contract as hashed_score."""
-    from pyspark.sql.functions import pandas_udf
-
-    w = np.asarray(weights, dtype=np.int64)
-
-    @pandas_udf("struct<n_tok:long,score_num:long>")
-    def sc(t: pd.Series) -> pd.DataFrame:
-        return score_batch(t, w)
-
-    # optimizer fence: a filter on the output (``.where("keep")``) is
-    # otherwise pushed below this projection and the scoring kernel runs
-    # twice (test_python_udf_evaluation_counts: sc 1 → 2 in
-    # hashed_score_pandas keep)
-    sc = sc.asNondeterministic()
-
-    d = df.select(F.col(id_col), sc(F.col(text_col)).alias("_s"))
-    score = F.col("_s.score_num") / (F.col("_s.n_tok") * F.lit(float(W_SCALE)))
-    return d.select(
-        id_col,
-        F.col("_s.n_tok").alias("n_tok"),
-        F.col("_s.score_num").alias("score_num"),
         score.alias("score"),
         (score >= 0.0).alias("keep"),
     )

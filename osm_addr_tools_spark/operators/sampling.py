@@ -271,16 +271,6 @@ def feistel_shuffle_key_sql(id_expr: str, bits: int = _FEISTEL_BITS) -> str:
     return f"CAST({left} * {mod} + {right} AS BIGINT)"
 
 
-def feistel_shuffle_key_py(i: int, bits: int = _FEISTEL_BITS) -> int:
-    """Pure-Python reference (property tests: bijectivity + engine parity)."""
-    mod = 1 << bits
-    left, right = (i // mod) % mod, i % mod
-    for k in _FEISTEL_KEYS:
-        f = (right * FIB_MULT + k) % mod
-        left, right = right, left ^ f
-    return left * mod + right
-
-
 # --- epoch mixture materialization ------------------------------------------
 
 

@@ -1,6 +1,7 @@
-"""Similarity search over embedding columns (driver mandate): brute-force
-cosine top-k as the exactness baseline, and two scale paths — random-
-hyperplane LSH bucketing and IVF (coarse-quantizer) partitioning.
+"""Similarity search over embedding columns: two scale
+paths — random-hyperplane LSH bucketing and IVF (coarse-quantizer)
+partitioning. Their exactness baseline, brute-force cosine top-k, lives
+with the tests (tests/reference.py).
 
 Spark-first shape: the vector math is Column expressions (zip_with /
 aggregate — JVM-side, codegen) wherever possible; only the hyperplane
@@ -38,28 +39,6 @@ def cosine_col(a, b):
     would silently PASS a threshold filter)."""
     denom = F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))
     return F.when(denom > 0, _dot(a, b) / denom)
-
-
-def brute_force_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int,
-    q_id: str = "vec_id",
-    c_id: str = "cand_id",
-    q_vec: str = "q_emb",
-    c_vec: str = "c_emb",
-) -> DataFrame:
-    """Exact cosine top-k: broadcast the (small) query side, scan candidates
-    once, window-rank. Ties broken on candidate id."""
-    pairs = candidates.crossJoin(F.broadcast(queries)).withColumn(
-        "sim", cosine_col(F.col(q_vec), F.col(c_vec))
-    )
-    w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))
-    return (
-        pairs.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select(q_id, c_id, F.col("sim"))
-    )
 
 
 def hyperplane_bucket_udf(dim: int, n_planes: int = 12, seed: int = 42):

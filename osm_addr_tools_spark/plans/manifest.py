@@ -179,7 +179,3 @@ def with_part_col(
     from osm_addr_tools_spark.operators.joins import cell_encode_udf
 
     return df.withColumn(out, cell_encode_udf(level)(F.col(lon), F.col(lat)))
-
-
-def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)

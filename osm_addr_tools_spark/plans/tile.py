@@ -39,12 +39,6 @@ def run_tile_polygons(
     )
 
 
-def tile_density(assignments: DataFrame) -> DataFrame:
-    """Per-tile feature count (A1 hash-agg over tile ids): one row per
-    ``tile_id`` with ``n_features``, the number of assignments to it."""
-    return assignments.groupBy("tile_id").agg(F.count(F.lit(1)).alias("n_features"))
-
-
 def run_untile(assignments: DataFrame) -> DataFrame:
     """C5 raster→vector: per feature, union its tiles back into boundary
     rings (grouped applyInPandas — one group per feature). ``tile_id``

@@ -2333,10 +2333,10 @@ def docs_quality_classifier(spark, sf_dir):
     classifier gate of GPT-3 / CCNet / FineWeb) via the feature-hashing
     trick: score = Σ_token w[h(token)] / (n_tok · 500) over a 2^16
     bucket space, keep = score ≥ 0. Weights derive arithmetically from
-    the bucket id (engine-portable stand-in for a trained vector — the
-    production pandas-UDF path carrying a real numpy weight vector is
-    hashed_score_pandas, pytest-pinned output-identical). score_num is
-    an EXACT int64 sum, the only float op a single final division.
+    the bucket id (an engine-portable stand-in for a trained vector;
+    pytest pins the scores bit-for-bit against a pure-Python scorer over
+    the same weights). score_num is an EXACT int64 sum, the only float
+    op a single final division.
     Implementation: operators.quality.hashed_score — split → aggregate
     lambda inside whole-stage codegen: ZERO shuffles, zero joins, zero
     Python; quality filtering at scan speed."""

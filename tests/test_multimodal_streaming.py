@@ -20,12 +20,6 @@ def test_media_decode_roundtrip(spark):
     assert row.width == 16 + 17 % 64 and row.height == 16 + (17 * 7) % 48
 
 
-def test_media_decode_real_is_stubbed(spark):
-    media = M.synth_media(spark, 5)
-    with pytest.raises(NotImplementedError):
-        M.decode_media(media, decoder="real")
-
-
 def test_media_features_shape_and_determinism(spark):
     media = M.synth_media(spark, 100)
     f1 = M.media_features(media, dim=16).toPandas().sort_values("media_id")

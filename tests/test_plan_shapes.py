@@ -120,8 +120,8 @@ def test_decontaminate_joins_on_gram_no_nested_loop(spark):
 # run time: an upper bound on the evaluations that run. A count that
 # rises is a duplicated Python evaluation: Catalyst pushed a filter below
 # the projection that applies the UDF and evaluates it again there. The
-# UDFs fenced with asNondeterministic() are enc, both, sim, sh, bucket,
-# assign and sc; each fence's comment names the shape here that rises
+# UDFs fenced with asNondeterministic() are enc, both, sim, sh, bucket
+# and assign; each fence's comment names the shape here that rises
 # without it. Counts above 1 are the plans as they stand (two build sides,
 # unions, unpinned extraction), not a target. When a plan changes on
 # purpose, re-pin the new count and say why in the change description.
@@ -149,7 +149,6 @@ UDF_EVALS = {
         "x1": 9, "x2": 9, "norm": 1, "enc": 7, "ring": 1, "both": 1,
         "pip": 1, "sim": 1,
     },
-    "hashed_score_pandas keep": {"sc": 1},
 }
 
 
@@ -193,10 +192,6 @@ def test_python_udf_evaluation_counts(spark, monkeypatch):
     from osm_addr_tools_spark import queries as Q
     from osm_addr_tools_spark.cache import release_pinned
     from osm_addr_tools_spark.operators import dedup as D
-    from osm_addr_tools_spark.operators.quality import (
-        derived_weights,
-        hashed_score_pandas,
-    )
     from osm_addr_tools_spark.plans.conflate import run_conflate
     from osm_addr_tools_spark.plans.extract import run_extract
     from osm_addr_tools_spark.sources import synth as S
@@ -232,9 +227,6 @@ def test_python_udf_evaluation_counts(spark, monkeypatch):
     shapes["emb_dedup_retention edges"] = lambda: cc_edges("emb_dedup_retention")
     shapes["run_conflate unsalted"] = lambda: conflate(False)
     shapes["run_conflate salted"] = lambda: conflate(True)
-    shapes["hashed_score_pandas keep"] = lambda: hashed_score_pandas(
-        Q.load(spark, SF_DIR, "documents"), derived_weights(1 << 16)
-    ).where("keep")
 
     got = {}
     for name, build in shapes.items():

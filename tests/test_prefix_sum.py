@@ -163,48 +163,6 @@ def test_running_sum_null_order_key_raises(spark):
         running_sum(all_null, "k", "v", out_col="r", num_buckets=8)
 
 
-def test_running_sum_auto_boundaries_equals_uniform_on_skew(spark):
-    """VERDICT r5 #4: boundaries='auto' (equi-depth via approxQuantile)
-    must be output-identical to uniform bucketing — any monotone bucketing
-    yields the same running sum — and must actually BALANCE buckets on a
-    key distribution that starves uniform range buckets (99% of keys in
-    [0,1000), a few at 1e9)."""
-    import random
-
-    from osm_addr_tools_spark.operators.prefix_sum import (
-        _boundary_bucket,
-        auto_boundaries,
-    )
-
-    rng = random.Random(13)
-    keys = list(range(1000)) + [10**9 + i for i in range(10)]
-    rng.shuffle(keys)
-    pdf = pd.DataFrame({"k": keys, "v": [rng.randint(-9, 9) for _ in keys]})
-    df = spark.createDataFrame(pdf).repartition(8)
-
-    got = running_sum(df, "k", "v", out_col="r", num_buckets=8, boundaries="auto")
-    want = running_sum(df, "k", "v", out_col="r", num_buckets=8)
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
-
-    # uniform range buckets put ~all 1000 dense keys in bucket 0; the
-    # equi-depth boundaries must spread them (max bucket ≤ 2× ideal share)
-    nb = 8
-    bounds = auto_boundaries(df, "k", nb)
-    sizes = (
-        df.groupBy(_boundary_bucket(F.col("k"), bounds).alias("b"))
-        .count()
-        .collect()
-    )
-    assert max(r["count"] for r in sizes) <= 2 * (len(keys) / nb)
-    assert len(sizes) >= nb - 1  # genuinely multi-bucket
-
-
-def test_running_sum_rejects_bad_boundaries_string(spark):
-    df = spark.createDataFrame([(1, 1)], "k long, v long")
-    with pytest.raises(ValueError, match="'auto'"):
-        running_sum(df, "k", "v", boundaries="quantile")
-
-
 def test_grouped_row_number_equals_partitioned_window(spark):
     import random
 
@@ -245,11 +203,11 @@ def test_grouped_row_number_guards(spark):
         grouped_row_number(null_group, "g", "k")
 
 
-def test_running_sum_auto_boundaries_timestamp_key(spark):
-    """ADVICE r6: boundaries='auto' sketches the DOUBLE view of the key,
-    so the bucket filter must also compare the double view — a raw
-    timestamp key would miscast or fail under ANSI. The running sum over
-    a timestamp order key must match the single-window reference."""
+def test_running_sum_boundaries_timestamp_key(spark):
+    """ADVICE r6: explicit cut points are doubles, so the bucket filter
+    compares the DOUBLE view of the key (epoch seconds) — a raw timestamp
+    key would miscast or fail under ANSI. The running sum over a
+    timestamp order key must match the single-window reference."""
     import datetime as dt
 
     from pyspark.sql import Window
@@ -259,7 +217,11 @@ def test_running_sum_auto_boundaries_timestamp_key(spark):
         for i in range(101)
     ]
     df = spark.createDataFrame(rows, "ts timestamp, v long").repartition(8)
-    got = running_sum(df, "ts", "v", out_col="r", num_buckets=8, boundaries="auto")
+    secs = sorted(
+        r[0] for r in df.select(F.col("ts").cast("double")).distinct().collect()
+    )
+    cuts = [float(x) for x in secs[13::13]]  # 7 cuts → 8 buckets
+    got = running_sum(df, "ts", "v", out_col="r", boundaries=cuts)
     w = Window.orderBy("ts").rowsBetween(Window.unboundedPreceding, 0)
     want = df.withColumn("r", F.sum("v").over(w))
     assert {(r.ts, r.v, r.r) for r in got.collect()} == {

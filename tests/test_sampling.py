@@ -15,6 +15,7 @@ from osm_addr_tools_spark.operators.sampling import (
     split_assign,
     stratified_sample,
 )
+from tests.reference import feistel_shuffle_key_py
 
 # ids spanning the int64-overflow boundary floor(2^63 / FIB_MULT) =
 # 3 474 701 543 — below, at, just above, way above, and int64 max
@@ -171,10 +172,7 @@ def test_feistel_bijective_and_engine_parity(spark):
     """The shuffle key must be a PERMUTATION (no collisions ever) and the
     Spark Column must match the pure-Python reference across the id
     range, including ids far beyond int32 and near the 2^62 domain end."""
-    from osm_addr_tools_spark.operators.sampling import (
-        feistel_shuffle_key,
-        feistel_shuffle_key_py,
-    )
+    from osm_addr_tools_spark.operators.sampling import feistel_shuffle_key
 
     ids = (
         list(range(4096))
@@ -193,8 +191,6 @@ def test_feistel_bijective_and_engine_parity(spark):
 def test_feistel_py_full_bijection_small_domain():
     """Exhaustive bijectivity on a small domain: restricting bits=8 makes
     the full 2^16 id space checkable — every output hit exactly once."""
-    from osm_addr_tools_spark.operators.sampling import feistel_shuffle_key_py
-
     n = 1 << 16
     keys = {feistel_shuffle_key_py(i, bits=8) for i in range(n)}
     assert keys == set(range(n))  # onto [0, 2^16): a true permutation
@@ -258,10 +254,7 @@ def test_mix_epoch_matches_python_reference(spark):
     rule (driver-side bigint constants + fib-bucket rotating window), and
     every example_id must be distinct (Feistel bijection over
     (id, copy))."""
-    from osm_addr_tools_spark.operators.sampling import (
-        feistel_shuffle_key_py,
-        mix_epoch,
-    )
+    from osm_addr_tools_spark.operators.sampling import mix_epoch
 
     d, w, docs, weights = _mk_mix_inputs(spark)
     for epoch, etok in ((0, 9000), (3, 9000), (1, 40000)):

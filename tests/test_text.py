@@ -8,6 +8,7 @@ from osm_addr_tools_spark.functions.text import (
     extract_text_one,
     parse_addresses_one,
 )
+from tests.reference import fingerprint64
 
 # (html bytes, expected extracted text) — these goldens are normative.
 X1_CASES = [
@@ -126,7 +127,7 @@ def test_winnow_shift_resistance():
     # the shared suffix dominates both docs: most of base's fingerprints
     # must survive the prefix insertion (positions shift, values don't)
     assert len(fp_a & fp_b) / len(fp_a) > 0.8
-    assert T.fingerprint64(pd.Series([base]))[0] != T.fingerprint64(pd.Series([shifted]))[0]
+    assert fingerprint64(pd.Series([base]))[0] != fingerprint64(pd.Series([shifted]))[0]
 
 
 def test_token_count_oracle_regex_agrees_on_exotic_whitespace():

@@ -9,7 +9,6 @@ from osm_addr_tools_spark.plans.tile import (
     run_tile_points,
     run_tile_polygons,
     run_untile,
-    tile_density,
 )
 from osm_addr_tools_spark.sources import synth as S
 
@@ -71,14 +70,6 @@ def test_untile_roundtrip_contains_centroids(spark):
         cx, cy = centroids[r.feature_id]
         outer = np.array([(p["lon"], p["lat"]) for p in r.rings[0]])
         assert G.points_in_ring(np.array([cx]), np.array([cy]), outer)[0]
-
-
-def test_tile_density_feeds_hot_cells(spark):
-    bld = S.synth_buildings(spark, 300)
-    dens = tile_density(run_tile_polygons(bld, 12)).orderBy(F.desc("n_features"))
-    top = dens.first()
-    # the deliberate town-0 hot box concentrates features in one coarse cell
-    assert top.n_features > 5
 
 
 def test_untile_roundtrip_multiface_seam(spark):
