@@ -3,7 +3,7 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": <headline seconds>, "unit": "sec",
- "queries_exec": {name: exec sec, ...},
+ "queries": {name: exec sec, ...},
  "queries_eager": {eager-build name: build-inclusive sec, ...}, "sf": ...,
  plus informational keys}.
 
@@ -26,8 +26,8 @@ from functools import partial
 
 
 # Engine settings every session of this engine runs with (bench, tests,
-# tools/check_oracle.py, tools/gen_plans.py). Each builder adds only its
-# deployment values: master, driver memory, shuffle partitions, app name.
+# tools/check_oracle.py). Each builder adds only its deployment values:
+# master, driver memory, shuffle partitions, app name.
 SPARK_CONF = {
     "spark.python.daemon.module": "osm_addr_tools_spark.daemon_prewarm",
     "spark.sql.adaptive.enabled": "true",
@@ -414,30 +414,23 @@ def main() -> int:
         "cpus": cpus,
         "sentinel_sec": sentinel_walls,
         "detail_file": "BENCH/SAMPLES_last_run.json",
-        "queries_exec": exec_timings,
-    }
-    if len(qs) <= 4:
-        # SPARK_GRAFT_BENCH_ONLY subset runs (tools/bench_scaling.py,
-        # tools/bench_trend.py parse queries and queries_exec off the
-        # line): a ≤4-entry dict is ~40 chars/query — nowhere near the cap.
-        out["queries"] = timings
-        out["queries_algo"] = algo_timings
-    else:
-        out["queries_eager"] = {
+        "queries": exec_timings,
+        "queries_eager": {
             name: timings[name] for name in EAGER_BUILD_QUERIES if name in timings
-        }
+        },
+    }
     spark.stop()
-    # the build walls, algo walls and raw samples go to the side file
-    # (the result line carries queries_exec and queries_eager only)
+    # the build-inclusive walls, algo walls and raw samples go to the side
+    # file only (tools/bench_scaling.py and tools/bench_trend.py read the
+    # build-inclusive walls there)
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/SAMPLES_last_run.json", "w") as f:
         json.dump(
             {
-                "queries": timings,
-                "queries_exec": exec_timings,
+                **out,
+                "queries_build": timings,
                 "queries_algo": algo_timings,
                 "samples": samples,
-                **out,
             },
             f,
             indent=1,

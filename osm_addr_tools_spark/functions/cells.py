@@ -3,7 +3,7 @@
 Implements the public S2 geometry scheme — cube-face projection, quadratic
 (u,v)→(s,t) warp, Hilbert-curve position, 64-bit packed cell ID with level
 encoded by the trailing-1 bit — as vectorized NumPy kernels suitable for
-Arrow-batched pandas UDFs. No external geo library is used (none is
+Arrow-batched UDFs. No external geo library is used (none is
 installed; BASELINE.json north_rule mandates a from-scratch index).
 
 Everything here is public knowledge: the S2 cell-id layout and the
@@ -18,14 +18,16 @@ Cell-ID layout (64 bits, stored as signed int64 two's-complement in Spark):
 
 level 30 is the leaf; the lsb of a level-L id is ``1 << (2*(30-L))``.
 
-All kernels take/return ``np.ndarray``; pandas-UDF wrappers live at the
-bottom. Ids are computed in uint64 and reinterpreted as int64 for Spark
+All kernels take/return ``np.ndarray`` (``read_polygons`` reads an Arrow
+polygon column into them; the UDF wrappers live in operators/joins.py).
+Ids are computed in uint64 and reinterpreted as int64 for Spark
 ``LongType`` columns.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.compute as pc
 
 MAX_LEVEL = 30
 POS_BITS = 2 * MAX_LEVEL + 1  # 61
@@ -420,9 +422,6 @@ def _ring_to_face_ij_float(face: int, lon: np.ndarray, lat: np.ndarray):
     return i, j
 
 
-
-
-
 def _boundary_supercover(cx: np.ndarray, cy: np.ndarray):
     """Cells (unit grid) a closed ring's boundary passes through.
 
@@ -525,7 +524,7 @@ def cover_polygon_ij(rings, level: int) -> list[tuple[int, int, int]]:
         jj = np.concatenate([bj, fj])
         keep = (ii >= 0) & (ii < ncell) & (jj >= 0) & (jj < ncell)
         cells = set(zip(ii[keep].tolist(), jj[keep].tolist()))
-        for hole in rings[1:]:
+        for hole in (h for h in rings[1:] if len(h)):  # an empty hole removes nothing
             hx, hy = ring_cell_coords(np.asarray(hole, dtype=np.float64))
             hbi, hbj = _boundary_supercover(hx, hy)
             hfi, hfj = _center_fill(hx, hy)
@@ -537,59 +536,88 @@ def cover_polygon_ij(rings, level: int) -> list[tuple[int, int, int]]:
     return sorted(out)
 
 
-def ring_arrays(poly) -> list[np.ndarray]:
-    """One polygon as Arrow hands it to a pandas UDF
-    (``array<array<struct<lon,lat>>>``) → list of (n, 2) float64 vertex
-    arrays, outer ring first; None or empty → []. The one place the
-    nested struct is unpacked."""
-    if poly is None:
-        return []
-    return [
-        np.array([(p["lon"], p["lat"]) for p in ring], dtype=np.float64).reshape(-1, 2)
-        for ring in poly
-    ]
+def list_offsets(lists) -> np.ndarray:
+    """Row offsets (n + 1) of an Arrow list array into its ``flatten()``,
+    from the list lengths with a null row counting 0: neither a slice nor
+    a null backed by a non-empty range shifts a later row."""
+    n = pc.list_value_length(lists).fill_null(0).to_numpy()
+    return np.concatenate([[0], np.cumsum(n, dtype=np.int64)])
+
+
+def read_polygons(polys):
+    """The one reader of an Arrow polygon column
+    (``array<array<struct<lon,lat>>>``, rings of any length): all vertices
+    in one (V, 2) float64 buffer, ring offsets into it and polygon offsets
+    into the rings, outer ring first. A null polygon or ring reads as empty."""
+    rings = polys.flatten()
+    verts = rings.flatten()
+    xy = [pc.struct_field(verts, k).cast("float64").to_numpy(zero_copy_only=False)
+          for k in ("lon", "lat")]
+    return np.column_stack(xy), list_offsets(rings), list_offsets(polys)
+
+
+def _pack(rings):
+    """One polygon given as a list of rings, each a sequence of (lon, lat)
+    pairs, in the buffers ``read_polygons`` returns."""
+    verts = [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in rings]
+    xy = np.concatenate(verts) if verts else np.empty((0, 2))
+    ring_off = np.concatenate([[0], np.cumsum([len(v) for v in verts], dtype=np.int64)])
+    return xy, ring_off, np.array([0, len(verts)])
+
+
+def polygon_edges(xy, ring_off, poly_off):
+    """Flat edge buffer [xa,ya,xb,yb]×n over every ring of every polygon
+    (outer + holes), each ring closed back to its first vertex, and the
+    polygon offsets into it (4 values per vertex). Even-odd parity over
+    every edge IS outer-minus-holes containment (the J4 refine kernel's
+    input). Longitudes are unwrapped into the frame of the polygon's first
+    vertex: a step of more than 180° between consecutive vertices is a
+    wrap across lon ±180, not an edge around the globe (away from ±180
+    every shift is 0.0). Precondition: each polygon is under 180° wide in
+    longitude."""
+    ring_len = np.diff(ring_off)
+    head = ring_off[:-1][ring_len > 0]  # first vertex of each non-empty ring
+    vert_off = ring_off[poly_off]
+    idx = np.arange(len(xy))
+    # each vertex steps from its predecessor; a ring's first vertex from
+    # the polygon's first vertex
+    prev = idx - 1
+    prev[head] = np.repeat(vert_off[:-1], np.diff(vert_off))[head]
+    lon = xy[:, 0]
+    step = np.round((lon - lon[prev]) / 360.0)
+    acc = np.cumsum(step)
+    x = lon - 360.0 * (acc - np.repeat(acc[head] - step[head], ring_len[ring_len > 0]))
+    nxt = idx + 1
+    nxt[ring_off[1:][ring_len > 0] - 1] = head
+    y = xy[:, 1]
+    return np.column_stack([x, y, x[nxt], y[nxt]]).ravel(), 4 * vert_off
 
 
 def ring_edges(rings) -> np.ndarray:
-    """Flat edge array [xa,ya,xb,yb]×n over ALL rings (outer + holes), each
-    ring closed back to its first vertex. Even-odd parity over every edge
-    IS outer-minus-holes containment (the J4 refine kernel's input).
-    Longitudes are unwrapped into the frame of the first vertex: a step of
-    more than 180° between consecutive vertices is a wrap across lon ±180,
-    not an edge around the globe (away from ±180 every shift is 0.0).
-    Precondition: the polygon is under 180° wide in longitude."""
-    verts = [v for v in rings if len(v)]
-    if not verts:
-        return np.empty(0, dtype=np.float64)
-    lon0 = verts[0][0, 0]
-    out = []
-    for v in verts:
-        v = v.copy()
-        v[:, 0] -= 360.0 * np.cumsum(np.round(np.diff(v[:, 0], prepend=lon0) / 360.0))
-        out.append(np.concatenate([v, np.roll(v, -1, axis=0)], axis=1).ravel())
-    return np.concatenate(out)
+    """``polygon_edges`` of one polygon given as a list of rings."""
+    return polygon_edges(*_pack(rings))[0]
 
 
-def cover_batch(polys, level: int) -> list[np.ndarray]:
-    """C4 over a batch of polygons: ``cover_polygon_ij`` per polygon, ONE
-    vectorized Hilbert encode for every polygon's cells (the encode
-    dominated cost when done per polygon: 0.9 ms → ~0.1 ms per building),
-    then one sort that leaves each row's ids sorted and unique. ``polys``:
-    list of polygons, each a list of rings as in ``cover_polygon`` (an
-    empty list covers nothing). Returns one int64 array per polygon."""
-    triples = [cover_polygon_ij(rings, level) for rings in polys]
+def cover_batch(xy, ring_off, poly_off, level: int):
+    """C4 over a batch of polygons in ``read_polygons`` buffers:
+    ``cover_polygon_ij`` per polygon, ONE vectorized Hilbert encode for
+    every polygon's cells (the encode dominated cost when done per
+    polygon: 0.9 ms → ~0.1 ms per building), then one sort that leaves
+    each polygon's ids sorted and unique. Returns the ids and the polygon
+    offsets into them; a polygon without vertices covers nothing."""
+    rings = [xy[a:b] for a, b in zip(ring_off[:-1].tolist(), ring_off[1:].tolist())]
+    triples = [cover_polygon_ij(rings[a:b], level)
+               for a, b in zip(poly_off[:-1].tolist(), poly_off[1:].tolist())]
     counts = np.array([len(t) for t in triples], dtype=np.int64)
-    if not counts.sum():
-        return [np.empty(0, dtype=np.int64) for _ in polys]
-    arr = np.asarray([t for row in triples for t in row], dtype=np.int64)
+    arr = np.asarray([t for row in triples for t in row], dtype=np.int64).reshape(-1, 3)
     ids = cell_parent(cell_from_face_ij(arr[:, 0], arr[:, 1], arr[:, 2]), level).astype(np.int64)
-    row = np.repeat(np.arange(len(polys)), counts)
+    row = np.repeat(np.arange(len(triples)), counts)
     order = np.lexsort((ids, row))
     ids, row = ids[order], row[order]
     keep = np.ones(len(ids), dtype=bool)
     keep[1:] = (ids[1:] != ids[:-1]) | (row[1:] != row[:-1])
     ids, row = ids[keep], row[keep]
-    return np.split(ids, np.cumsum(np.bincount(row, minlength=len(polys)))[:-1])
+    return ids, np.concatenate([[0], np.cumsum(np.bincount(row, minlength=len(triples)))])
 
 
 def cover_polygon(rings, level: int) -> np.ndarray:
@@ -600,7 +628,7 @@ def cover_polygon(rings, level: int) -> np.ndarray:
     building-footprint-sized polygons (projected straight-edge
     approximation — exact at that scale for candidate-superset purposes;
     SURVEY §2.3 C4)."""
-    return cover_batch([rings], level)[0]
+    return cover_batch(*_pack(rings), level)[0]
 
 
 def cells_to_boxes(cells: np.ndarray):

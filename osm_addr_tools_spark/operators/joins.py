@@ -19,15 +19,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from osm_addr_tools_spark.functions import cells as C
 from osm_addr_tools_spark.functions import geo as G
 
 # ---------------------------------------------------------------------------
-# pandas-UDF wrappers over the cell kernels (Arrow-batched, never per-row)
+# UDF wrappers over the cell kernels (Arrow-batched, never per-row)
 # ---------------------------------------------------------------------------
 
 
@@ -101,38 +102,44 @@ def cell_center_udf():
     return center
 
 
+def _list_array(values: np.ndarray, offsets: np.ndarray) -> pa.ListArray:
+    """A polygon UDF's list result. The polygon UDFs are arrow_udfs that read
+    their batch through C.read_polygons: no polygon becomes a pandas object,
+    so rings of different lengths need no common shape."""
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(values))
+
+
 def cover_polygon_udf(level: int):
     """rings (array<array<struct<lon,lat>>>) → array<long> cover cells."""
 
-    @pandas_udf("array<long>")
-    def cov(rings: pd.Series) -> pd.Series:
-        return pd.Series(C.cover_batch([C.ring_arrays(p) for p in rings], level))
+    @arrow_udf("array<long>")
+    def cov(rings: pa.Array) -> pa.Array:
+        return _list_array(*C.cover_batch(*C.read_polygons(rings), level))
 
     return cov
 
 
 def rings_to_edges_udf():
-    """rings → flat edge array [xa,ya,xb,yb]×n over ALL rings (C.ring_edges);
-    array<double> crosses Arrow→pandas as plain numpy (no per-vertex dict
-    unpacking in the refine kernel)."""
+    """rings → flat edge array [xa,ya,xb,yb]×n over ALL rings (C.polygon_edges)."""
 
-    @pandas_udf("array<double>")
-    def to_edges(rings: pd.Series) -> pd.Series:
-        return pd.Series([C.ring_edges(C.ring_arrays(p)) for p in rings])
+    @arrow_udf("array<double>")
+    def to_edges(rings: pa.Array) -> pa.Array:
+        return _list_array(*C.polygon_edges(*C.read_polygons(rings)))
 
     return to_edges
 
 
 def cover_and_edges_udf(level: int):
     """rings → struct(cover array<long>, edges array<double>): ONE Arrow
-    pass and ONE nested-struct unpack per polygon feeds both the candidate
+    pass and ONE read of the polygon buffers feeds both the candidate
     generator (cover cells) and the exact refine kernel (flat edges)."""
 
-    @pandas_udf("struct<cover:array<long>,edges:array<double>>")
-    def both(rings: pd.Series) -> pd.DataFrame:
-        polys = [C.ring_arrays(p) for p in rings]
-        return pd.DataFrame(
-            {"cover": C.cover_batch(polys, level), "edges": [C.ring_edges(r) for r in polys]}
+    @arrow_udf("struct<cover:array<long>,edges:array<double>>")
+    def both(rings: pa.Array) -> pa.Array:
+        polys = C.read_polygons(rings)
+        return pa.StructArray.from_arrays(
+            [_list_array(*C.cover_batch(*polys, level)), _list_array(*C.polygon_edges(*polys))],
+            names=["cover", "edges"],
         )
 
     # see cell_encode_udf: without the fence, the explode's inferred
@@ -144,44 +151,36 @@ def cover_and_edges_udf(level: int):
 
 
 def pip_udf():
-    """(lon, lat, edges) → bool exact even-odd ray cast (J4 refine).
+    """(lon, lat, edges) → bool exact even-odd ray cast (J4 refine); False
+    for a null or empty ``edges`` row.
 
-    Fully batch-vectorized: all candidate rows' edges concatenate into one
-    (total_edges, 4) array; crossings count per row via bincount; parity
-    decides containment. Zero per-row Python — this replaced a per-row
-    loop that dominated the containment join at scale. Each point is
-    shifted by a multiple of 360° into the frame of its row's first edge
-    (C.ring_edges), so containment holds across lon ±180. Precondition:
-    each polygon is under 180° wide in longitude.
+    Fully batch-vectorized: the batch's edge values are one flat
+    (total_edges, 4) buffer with row offsets; crossings count per row via
+    bincount; parity decides containment. Zero per-row Python. Each point
+    is shifted by a multiple of 360° into the frame of its row's first
+    edge (C.polygon_edges), so containment holds across lon ±180.
+    Precondition: each polygon is under 180° wide in longitude.
     """
 
-    @pandas_udf("boolean")
-    def pip(lon: pd.Series, lat: pd.Series, edges: pd.Series) -> pd.Series:
+    @arrow_udf("boolean")
+    def pip(lon: pa.Array, lat: pa.Array, edges: pa.Array) -> pa.Array:
         n = len(lon)
-        px = lon.to_numpy(np.float64)
-        py = lat.to_numpy(np.float64)
-        counts = np.fromiter(
-            ((len(e) // 4) if e is not None else 0 for e in edges),
-            dtype=np.int64, count=n,
-        )
-        total = int(counts.sum())
-        if total == 0:
-            return pd.Series(np.zeros(n, dtype=bool))
-        flat = np.concatenate(
-            [np.asarray(e, dtype=np.float64) for e in edges if e is not None and len(e)]
-        ).reshape(-1, 4)
-        row_idx = np.repeat(np.arange(n), counts)
-        xa, ya, xb, yb = flat[:, 0], flat[:, 1], flat[:, 2], flat[:, 3]
+        # a decimal column (lon/lat as SQL arithmetic) arrives as decimals
+        px = lon.cast("float64").to_numpy(zero_copy_only=False)
+        py = lat.cast("float64").to_numpy(zero_copy_only=False)
+        off = C.list_offsets(edges) // 4
+        xa, ya, xb, yb = edges.flatten().to_numpy(zero_copy_only=False).reshape(-1, 4).T
+        row_idx = np.repeat(np.arange(n), np.diff(off))
         pyr = py[row_idx]
         pxr = px[row_idx]
-        x0 = xa[(np.cumsum(counts) - counts)[row_idx]]
+        x0 = xa[off[:-1][row_idx]]
         pxr = pxr + 360.0 * np.round((x0 - pxr) / 360.0)
         crosses = (ya > pyr) != (yb > pyr)
         with np.errstate(divide="ignore", invalid="ignore"):
             xint = xa + (pyr - ya) * (xb - xa) / (yb - ya)
         hit = crosses & (pxr < xint)
         parity = np.bincount(row_idx[hit], minlength=n) & 1
-        return pd.Series(parity.astype(bool))
+        return pa.array(parity.astype(bool))
 
     return pip
 

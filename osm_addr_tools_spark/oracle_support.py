@@ -28,6 +28,11 @@ import os
 import numpy as np
 import pandas as pd
 
+from osm_addr_tools_spark.functions import cells as C
+from osm_addr_tools_spark.functions import normalize as N
+from osm_addr_tools_spark.functions import text as T
+from osm_addr_tools_spark.sources import synth as S
+
 # bump to invalidate previously materialized intermediates
 _VERSION = 7
 
@@ -61,23 +66,8 @@ def oracle_dir(sf_dir: str) -> str:
     return f"{root}_{base}"
 
 
-def _sf_of(sf_dir: str) -> float:
-    try:
-        return float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
-    except ValueError:
-        return 0.01
-
-
-def _n_pages(sf_dir: str) -> int:
-    return max(100, int(20000 * _sf_of(sf_dir)))
-
-
 def _extracted_pdf(n: int) -> pd.DataFrame:
     """Post-asof, post-X1/X2/F1-F4 address candidates (pure pandas)."""
-    from osm_addr_tools_spark.functions import normalize as N
-    from osm_addr_tools_spark.functions import text as T
-    from osm_addr_tools_spark.sources import synth as S
-
     ids = np.arange(2 * n)
     pages = S.pages_pdf(ids, n)
     pages = pages.sort_values("warc_ts").groupby("url", as_index=False).last()
@@ -95,9 +85,6 @@ def _extracted_pdf(n: int) -> pd.DataFrame:
 
 
 def _existing_keyed_pdf(n: int) -> pd.DataFrame:
-    from osm_addr_tools_spark.functions import normalize as N
-    from osm_addr_tools_spark.sources import synth as S
-
     ex = S.existing_pdf(np.arange(2 * n), n)
     tags = ex["tags"].tolist()
     pdf = pd.DataFrame(
@@ -123,8 +110,6 @@ def _existing_keyed_pdf(n: int) -> pd.DataFrame:
 def _street_sim_pdf(extracted: pd.DataFrame, existing: pd.DataFrame) -> pd.DataFrame:
     """F3 ratio table over the distinct street_norm cross product (difflib
     is not SQL-expressible; the SQL oracle joins this table instead)."""
-    from osm_addr_tools_spark.functions import normalize as N
-
     sa = sorted(set(extracted["street_norm"]))
     sb = sorted(set(existing["street_norm"]))
     pairs = [(a, b) for a in sa for b in sb]
@@ -137,8 +122,6 @@ def _buildings_bbox_pdf(n: int) -> pd.DataFrame:
     """Axis-aligned bboxes + addressed flag. The synthetic universe places
     every address outside the bboxes of the non-rectangular stress
     buildings, so bbox PIP == exact PIP here (asserted at generation)."""
-    from osm_addr_tools_spark.sources import synth as S
-
     bl = pd.concat(
         [S.buildings_pdf(np.arange(2 * n), n), S.special_buildings_pdf()],
         ignore_index=True,
@@ -163,9 +146,6 @@ def _buildings_bbox_pdf(n: int) -> pd.DataFrame:
 
 
 def _covers_pdf(n: int, level: int) -> pd.DataFrame:
-    from osm_addr_tools_spark.functions import cells as C
-    from osm_addr_tools_spark.sources import synth as S
-
     bl = pd.concat(
         [S.buildings_pdf(np.arange(2 * n), n), S.special_buildings_pdf()],
         ignore_index=True,
@@ -427,14 +407,12 @@ def ensure(sf_dir: str) -> str:
     out = f"{final}.tmp.{os.getpid()}"
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
-    n = _n_pages(sf_dir)
+    n = S.synth_n_pages(sf_dir)
 
     extracted = _extracted_pdf(n)
     existing = _existing_keyed_pdf(n)
     extracted.to_parquet(os.path.join(out, "extracted.parquet"), index=False)
     existing.to_parquet(os.path.join(out, "existing_keyed.parquet"), index=False)
-
-    from osm_addr_tools_spark.sources import synth as S
 
     gaz = S.gazetteer_pdf(np.arange(2 * n), n).rename(columns={"city": "city_norm"})
     gaz.to_parquet(os.path.join(out, "gazetteer.parquet"), index=False)

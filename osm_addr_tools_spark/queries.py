@@ -34,24 +34,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from osm_addr_tools_spark.functions import geo as G
+from osm_addr_tools_spark.sources import synth as S
 
 _T = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _sf_of(sf_dir: str) -> float:
-    base = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        return float(base.replace("sf", ""))
-    except ValueError:
-        return 0.01
-
-
-def synth_n_pages(sf_dir: str) -> int:
-    return max(100, int(20000 * _sf_of(sf_dir)))
 
 
 # --- geo derivations (must stay arithmetically identical to the SQL) -------
@@ -817,9 +806,8 @@ def geo_building_supplier_overlap(spark, sf_dir):
     overlap over the materialized bboxes IS exact polygon intersection
     here, while the ENGINE runs the fully generic path."""
     from osm_addr_tools_spark.operators.joins import polygon_join
-    from osm_addr_tools_spark.sources import synth as S
 
-    n = synth_n_pages(sf_dir)
+    n = S.synth_n_pages(sf_dir)
     buildings = S.synth_buildings(spark, n).select("building_id", "rings")
     rects = _supplier_rects(spark, sf_dir)
     return polygon_join(
@@ -3149,7 +3137,7 @@ def _media_oracle_sql(n: int = 200) -> str:
 def media_decode_features(spark, sf_dir):
     from osm_addr_tools_spark.operators import multimodal as M
 
-    n = synth_n_pages(sf_dir)
+    n = S.synth_n_pages(sf_dir)
     media = M.synth_media(spark, n)
     dec = M.decode_media(media)
     feats = M.media_features(media, dim=16)
@@ -3161,7 +3149,7 @@ def media_decode_features(spark, sf_dir):
 
 # row count derived from the SAME function the Spark side evaluates at
 # the driver's correctness scale, not baked (ADVICE r2 #2)
-ORACLES["media_decode_features"] = _media_oracle_sql(synth_n_pages(_OS.ORACLE_SF_DIR))
+ORACLES["media_decode_features"] = _media_oracle_sql(S.synth_n_pages(_OS.ORACLE_SF_DIR))
 
 
 # --- engine pipelines --------------------------------------------------------
@@ -3185,9 +3173,8 @@ ORACLES["media_decode_features"] = _media_oracle_sql(synth_n_pages(_OS.ORACLE_SF
 )
 def extract_addresses(spark, sf_dir):
     from osm_addr_tools_spark.plans.extract import run_extract
-    from osm_addr_tools_spark.sources import synth as S
 
-    n = synth_n_pages(sf_dir)
+    n = S.synth_n_pages(sf_dir)
     out = run_extract(spark, S.synth_pages(spark, n), S.synth_gazetteer(spark, n))
     return out.select(
         "url", "addr_key", "street_norm", "hn_norm", "postcode",
@@ -3271,9 +3258,8 @@ def _conflate_oracle_sql() -> str:
 def conflate_matches(spark, sf_dir):
     from osm_addr_tools_spark.plans.conflate import run_conflate
     from osm_addr_tools_spark.plans.extract import run_extract
-    from osm_addr_tools_spark.sources import synth as S
 
-    n = synth_n_pages(sf_dir)
+    n = S.synth_n_pages(sf_dir)
     addrs = run_extract(spark, S.synth_pages(spark, n), S.synth_gazetteer(spark, n))
     m = run_conflate(
         spark, addrs, S.synth_buildings(spark, n), S.synth_existing(spark, n)
@@ -3295,9 +3281,8 @@ ORACLES["conflate_matches"] = _conflate_oracle_sql()
 )
 def tile_assignments(spark, sf_dir):
     from osm_addr_tools_spark.plans.tile import run_tile_polygons
-    from osm_addr_tools_spark.sources import synth as S
 
-    n = synth_n_pages(sf_dir)
+    n = S.synth_n_pages(sf_dir)
     return run_tile_polygons(S.synth_buildings(spark, n), level=16)
 
 
@@ -3316,13 +3301,10 @@ def tile_untile_roundtrip(spark, sf_dir):
     but unlike tile_assignments' passthrough, the Spark side here EXECUTES
     the trace + containment, which the oracle never does: a wrong C5
     boundary drops/keeps cells and hash-mismatches."""
-    from osm_addr_tools_spark.operators.joins import (
-        cell_center_udf, pip_udf, rings_to_edges_udf,
-    )
+    from osm_addr_tools_spark.operators.joins import cell_center_udf, pip_udf, rings_to_edges_udf
     from osm_addr_tools_spark.plans.tile import run_tile_polygons, run_untile
-    from osm_addr_tools_spark.sources import synth as S
 
-    n = synth_n_pages(sf_dir)
+    n = S.synth_n_pages(sf_dir)
     tiles = run_tile_polygons(S.synth_buildings(spark, n), level=16)
     traced = run_untile(tiles).withColumn(
         "_edges", rings_to_edges_udf()(F.col("rings"))
@@ -3396,9 +3378,8 @@ def tile_pyramid(spark, sf_dir):
     arithmetic — a kernel-independent C2 gate (COVERAGE §2.3)."""
     from osm_addr_tools_spark.operators.joins import cell_parent_udf
     from osm_addr_tools_spark.plans.tile import run_tile_polygons
-    from osm_addr_tools_spark.sources import synth as S
 
-    n = synth_n_pages(sf_dir)
+    n = S.synth_n_pages(sf_dir)
     t = run_tile_polygons(S.synth_buildings(spark, n), level=16)
     # one explode of the per-level parents instead of a 3-arm union: the
     # union form re-ran the generator + cover UDF once PER LEVEL (plan
@@ -3454,9 +3435,8 @@ def tile_cover_superset(spark, sf_dir):
     L-shape, face seam — stay under the pytest property suite.)"""
     from osm_addr_tools_spark.operators.joins import cell_encode_udf
     from osm_addr_tools_spark.plans.tile import run_tile_polygons
-    from osm_addr_tools_spark.sources import synth as S
 
-    n = synth_n_pages(sf_dir)
+    n = S.synth_n_pages(sf_dir)
     b = S.synth_buildings(spark, n).where(F.col("building_id") < 1_000_000_000)
     covers = run_tile_polygons(b, level=16)
     lons = F.expr("transform(rings[0], p -> p.lon)")

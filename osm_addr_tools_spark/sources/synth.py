@@ -26,6 +26,7 @@ Layout of the universe for ``n_pages`` pages (ids are np.int64):
 from __future__ import annotations
 
 import json
+import os
 from datetime import datetime, timezone
 
 import numpy as np
@@ -64,6 +65,17 @@ def h01(ids, salt: int) -> np.ndarray:
     x *= np.uint64(0x94D049BB133111EB)
     x ^= x >> np.uint64(31)
     return x.astype(np.float64) / 2.0**64
+
+
+def synth_n_pages(sf_dir: str) -> int:
+    """Synthetic page count of the sf-named directory ``sf_dir`` (``sf0.01``
+    → 200; an unparsable name reads as sf0.01): the one rule both the
+    synthetic queries and their DuckDB oracle size their inputs by."""
+    try:
+        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
+    except ValueError:
+        sf = 0.01
+    return max(100, int(20000 * sf))
 
 
 def n_towns_for(n_pages: int) -> int:

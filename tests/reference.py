@@ -79,6 +79,26 @@ def cell_contains(parent: np.ndarray, child: np.ndarray) -> np.ndarray:
     return (cell_range_min(parent) <= child) & (child <= cell_range_max(parent))
 
 
+def ring_edges_loop(rings) -> list[float]:
+    """``C.ring_edges`` one ring and one vertex at a time: each ring closed
+    back to its first vertex, each longitude stepped from the previous one
+    (a ring's first vertex from the polygon's first vertex) and shifted by
+    360° per step of more than 180°."""
+    verts = [[tuple(map(float, p)) for p in r] for r in rings]
+    verts = [r for r in verts if r]
+    out: list[float] = []
+    for ring in verts:
+        prev, shift, xs = verts[0][0][0], 0.0, []
+        for lon, _ in ring:
+            shift += float(np.round((lon - prev) / 360.0))
+            prev = lon
+            xs.append(lon - 360.0 * shift)
+        for k, (x, (_, y)) in enumerate(zip(xs, ring)):
+            nxt = (k + 1) % len(ring)
+            out += [x, y, xs[nxt], ring[nxt][1]]
+    return out
+
+
 # --- functions/text.py ------------------------------------------------------
 
 

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 from osm_addr_tools_spark.functions import cells as C
-from tests.reference import cell_contains, cell_range_max, cell_range_min
+from tests.reference import cell_contains, cell_range_max, cell_range_min, ring_edges_loop
 
 RNG = np.random.default_rng(42)
 LON = RNG.uniform(-180, 180, 3000)
@@ -101,6 +101,50 @@ def test_cover_excludes_hole_interior():
     assert hole_center in cov_no_hole
     assert hole_center not in cov_with_hole
     assert cov_with_hole < cov_no_hole
+
+
+def test_read_polygons_sliced_batch_with_masked_null_slot():
+    """The Arrow reader on a sliced batch whose null slot is backed by a
+    non-empty range of rings: every polygon's cover and edges equal
+    C.cover_polygon / C.ring_edges of that polygon alone, and null, [],
+    [[]] and a polygon with an empty hole are defined."""
+    import pyarrow as pa
+
+    outer = [(21.0, 52.2), (21.004, 52.2), (21.005, 52.2015), (21.004, 52.203), (21.0, 52.203)]
+    hole = [(21.0015, 52.2011), (21.0025, 52.2011), (21.0025, 52.2019), (21.0015, 52.2019)]
+    tri = [(21.02, 52.22), (21.0203, 52.22), (21.0203, 52.2202)]
+    slots = [[tri], [outer, hole], [tri], [], [[]], [outer, []], [hole, tri, outer]]
+    null = [False, False, True, False, False, False, False]
+    ring_t = pa.list_(pa.struct([("lon", pa.float64()), ("lat", pa.float64())]))
+    rings = pa.array([[{"lon": x, "lat": y} for x, y in r] for s in slots for r in s], ring_t)
+    offsets = pa.array(np.cumsum([0] + [len(s) for s in slots]), pa.int32())
+    arr = pa.ListArray.from_arrays(offsets, rings, mask=pa.array(null)).slice(1)
+    want = [None if n else s for s, n in zip(slots, null)][1:]
+
+    xy, ring_off, poly_off = C.read_polygons(arr)
+    ids, id_off = C.cover_batch(xy, ring_off, poly_off, 19)
+    edges, edge_off = C.polygon_edges(xy, ring_off, poly_off)
+    assert len(id_off) == len(edge_off) == len(want) + 1
+    for k, poly in enumerate(want):
+        assert ids[id_off[k]:id_off[k + 1]].tolist() == C.cover_polygon(poly or [], 19).tolist()
+        assert edges[edge_off[k]:edge_off[k + 1]].tolist() == C.ring_edges(poly or []).tolist()
+    assert C.cover_polygon([outer, []], 19).tolist() == C.cover_polygon([outer], 19).tolist()
+    assert C.cover_polygon([outer, hole], 19).size and not C.cover_polygon([[]], 19).size
+
+
+def test_ring_edges_vs_per_vertex_reference():
+    """The vectorized edge builder against a per-vertex loop on random
+    polygons with rings of different lengths, empty rings, and rings that
+    cross lon ±180 or start on the other side of it than the outer ring."""
+    rng = np.random.default_rng(3)
+    for _ in range(300):
+        cx = rng.choice([21.0, 179.9999, -179.9999])
+        rings = []
+        for _ in range(rng.integers(1, 4)):
+            n = int(rng.integers(0, 7))
+            lon = cx + rng.uniform(-3e-4, 3e-4, n)
+            rings.append(list(zip((lon + 180.0) % 360.0 - 180.0, rng.uniform(10, 10.001, n))))
+        assert C.ring_edges(rings).tolist() == ring_edges_loop(rings)
 
 
 def test_cover_seam_polygon_touches_both_faces():

@@ -513,9 +513,10 @@ def test_polygons_intersect_kernel_vs_convex_clip_reference(spark):
 
 @pytest.mark.parametrize("level", [16, 19])
 def test_cover_udfs_split_mixed_batch_per_row(spark, level):
-    """One Arrow batch mixing None, empty, empty-ring, holed, seam and
-    ordinary polygons: the batch-wide cell encode must split back to the
-    right rows. Each row's cover (cover_polygon_udf and
+    """One Arrow batch mixing None, empty, empty-ring, holed, seam,
+    ragged (a 5-vertex outer ring with a 4-vertex hole) and ordinary
+    polygons: the batch-wide cell encode must split back to the right
+    rows. Each row's cover (cover_polygon_udf and
     cover_and_edges_udf) equals C.cover_polygon of that polygon alone, and
     its edges equal C.ring_edges; None, [] and [[]] cover nothing."""
     from osm_addr_tools_spark.functions import cells as C
@@ -526,7 +527,8 @@ def test_cover_udfs_split_mixed_batch_per_row(spark, level):
     seam = [(44.9998, 10.0), (45.0002, 10.0), (45.0002, 10.0003), (44.9998, 10.0003)]
     small = [(21.01, 52.21), (21.0102, 52.21), (21.0102, 52.2101), (21.01, 52.2101)]
     tri = [(21.02, 52.22), (21.0203, 52.22), (21.0203, 52.2202)]
-    polys = [None, [outer, hole], [], [seam], [small], [[]], None, [outer], [tri]]
+    pent = outer[:2] + [(21.005, 52.2015)] + outer[2:]
+    polys = [None, [outer, hole], [], [seam], [small], [[]], None, [outer], [tri], [pent, hole]]
     data = [
         (pid, None if rings is None
          else [[{"lon": x, "lat": y} for (x, y) in ring] for ring in rings])
@@ -549,3 +551,39 @@ def test_cover_udfs_split_mixed_batch_per_row(spark, level):
         assert list(r.ce.cover) == want_cov, r.id
         assert list(r.ce.edges) == want_edges, r.id
         assert (len(want_cov) > 0) == bool(rings and len(rings[0])), r.id
+
+
+def test_ragged_holed_building_end_to_end(spark):
+    """A building whose outer ring and hole differ in vertex count goes
+    through pip_join and run_tile_polygons: a point in the hole pairs with
+    nothing, a point between hole and wall pairs, and its tiles equal
+    C.cover_polygon. One pip_udf batch mixing null, empty and non-empty
+    edges rows gives False for the null and empty ones."""
+    from osm_addr_tools_spark.functions import cells as C
+    from osm_addr_tools_spark.operators.joins import pip_udf
+    from osm_addr_tools_spark.plans.tile import run_tile_polygons
+
+    outer = [(21.0, 52.2), (21.004, 52.2), (21.005, 52.2015), (21.004, 52.203), (21.0, 52.203)]
+    hole = [(21.0015, 52.2011), (21.0025, 52.2011), (21.0025, 52.2019), (21.0015, 52.2019)]
+    polys = _poly_df(spark, [(7, [outer, hole])]).withColumnRenamed("id", "building_id")
+    # decimal coordinates, as SQL arithmetic gives them (geo_pip_customer_in_rect)
+    pts = spark.createDataFrame(
+        [(1, 21.002, 52.2015), (2, 21.0005, 52.2005), (3, 21.006, 52.2015)],
+        "pid long, lon double, lat double",
+    ).select("pid", *(F.col(c).cast("decimal(10,6)").alias(c) for c in ("lon", "lat")))
+    got = pip_join(pts, polys, level=19).select("pid", "building_id").collect()
+    assert sorted(map(tuple, got)) == [(2, 7)]
+
+    tiles = run_tile_polygons(polys, level=19).collect()
+    assert sorted(r.tile_id for r in tiles) == C.cover_polygon([outer, hole], 19).tolist()
+    assert {r.feature_id for r in tiles} == {7}
+
+    edges = C.ring_edges([outer, hole]).tolist()
+    batch = spark.createDataFrame(
+        [(0, 21.0005, 52.2005, None), (1, 21.0005, 52.2005, []),
+         (2, 21.0005, 52.2005, edges), (3, 21.002, 52.2015, edges),
+         (4, 21.0005, 52.2005, None), (5, 21.0005, 52.2005, edges)],
+        "k long, lon double, lat double, edges array<double>",
+    ).coalesce(1)
+    got = batch.select("k", pip_udf()("lon", "lat", "edges").alias("hit")).orderBy("k").collect()
+    assert [r.hit for r in got] == [False, False, True, False, False, True]

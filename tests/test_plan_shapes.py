@@ -38,18 +38,23 @@ def test_gazetteer_geocode_is_broadcast_join(spark):
 
 
 def test_no_nested_loop_join_in_conflate(spark):
+    from osm_addr_tools_spark.cache import release_pinned
     from osm_addr_tools_spark.plans.conflate import run_conflate
     from osm_addr_tools_spark.plans.extract import run_extract
     from osm_addr_tools_spark.sources import synth as S
 
     addrs = run_extract(spark, S.synth_pages(spark, 50), S.synth_gazetteer(spark, 50))
-    m = run_conflate(
-        spark, addrs, S.synth_buildings(spark, 50), S.synth_existing(spark, 50)
-    )
-    p = plan_of(m)
-    # the J8 design rule: theta predicates are always equi-join + residual
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "CartesianProduct" not in p
+    # the default live-pipeline shape, and bench.py's conflate_join shape
+    # (salted joins, unpinned inputs)
+    for kw in ({}, {"salt": True, "pin_inputs": False}):
+        m = run_conflate(
+            spark, addrs, S.synth_buildings(spark, 50), S.synth_existing(spark, 50), **kw
+        )
+        p = plan_of(m)
+        release_pinned()
+        # the J8 design rule: theta predicates are always equi-join + residual
+        assert "BroadcastNestedLoopJoin" not in p, kw
+        assert "CartesianProduct" not in p, kw
 
 
 def test_salted_join_replicates_build_side_only(spark):

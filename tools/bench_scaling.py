@@ -25,7 +25,10 @@ import sys
 
 def run_bench(cpus: int, n_pages: int, sf_dir: str, repeats: int) -> dict:
     """One fresh bench.py subprocess on conflate_join alone, ``repeats``
-    timed repeats per query; returns its result JSON line."""
+    timed repeats per query; returns its side file
+    (BENCH/SAMPLES_last_run.json: the result line's keys plus the
+    build-inclusive walls ``queries_build`` and the raw ``samples``)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(
         os.environ,
         SPARK_GRAFT_CPUS=str(cpus),
@@ -44,11 +47,11 @@ def run_bench(cpus: int, n_pages: int, sf_dir: str, repeats: int) -> dict:
         capture_output=True,
         text=True,
         timeout=3600,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        cwd=root,
     )
-    for line in reversed(out.stdout.strip().splitlines()):
-        if line.startswith("{"):
-            return json.loads(line)
+    if any(line.startswith("{") for line in out.stdout.splitlines()):
+        with open(os.path.join(root, "BENCH", "SAMPLES_last_run.json")) as f:
+            return json.load(f)
     raise RuntimeError(f"bench.py produced no JSON (rc={out.returncode}):\n{out.stderr[-2000:]}")
 
 
@@ -77,8 +80,8 @@ def main() -> int:
     hi_med = sorted(hi_runs, key=lambda r: r["value"])[len(hi_runs) // 2]
     eff_med = (hi_med["throughput_rows_per_sec"] / lo_med["throughput_rows_per_sec"]) / 4.0
     # round-1's build-inclusive definition, kept comparable across rounds
-    bi_lo = min(r["queries"]["conflate_join"] for r in lo_runs)
-    bi_hi = min(r["queries"]["conflate_join"] for r in hi_runs)
+    bi_lo = min(r["queries_build"]["conflate_join"] for r in lo_runs)
+    bi_hi = min(r["queries_build"]["conflate_join"] for r in hi_runs)
     eff_build_incl = (bi_lo / bi_hi) / 4.0
 
     os.makedirs("BENCH", exist_ok=True)
@@ -111,10 +114,10 @@ query-compilation time is excluded from engine throughput benchmarks.
 
 | parallelism | exec wall (s) | build+exec (s) | match rows | throughput (rows/s) |
 |---|---|---|---|---|
-| local[{n}] best-of-{repeats} | {lo['value']} | {lo['queries']['conflate_join']} | {lo['match_rows']} | {thr_lo} |
-| local[{4 * n}] best-of-{repeats} | {hi['value']} | {hi['queries']['conflate_join']} | {hi['match_rows']} | {thr_hi} |
-| local[{n}] median-of-{repeats} | {lo_med['value']} | {lo_med['queries']['conflate_join']} | {lo_med['match_rows']} | {lo_med['throughput_rows_per_sec']} |
-| local[{4 * n}] median-of-{repeats} | {hi_med['value']} | {hi_med['queries']['conflate_join']} | {hi_med['match_rows']} | {hi_med['throughput_rows_per_sec']} |
+| local[{n}] best-of-{repeats} | {lo['value']} | {lo['queries_build']['conflate_join']} | {lo['match_rows']} | {thr_lo} |
+| local[{4 * n}] best-of-{repeats} | {hi['value']} | {hi['queries_build']['conflate_join']} | {hi['match_rows']} | {thr_hi} |
+| local[{n}] median-of-{repeats} | {lo_med['value']} | {lo_med['queries_build']['conflate_join']} | {lo_med['match_rows']} | {lo_med['throughput_rows_per_sec']} |
+| local[{4 * n}] median-of-{repeats} | {hi_med['value']} | {hi_med['queries_build']['conflate_join']} | {hi_med['match_rows']} | {hi_med['throughput_rows_per_sec']} |
 
 **Scaling efficiency N→4N = (thr_4N / thr_N) / 4** (target ≥ 0.8, all three
 definitions reported per ADVICE r2 #4 — best-of alone is noise-sensitive):
@@ -131,9 +134,8 @@ definitions reported per ADVICE r2 #4 — best-of alone is noise-sensitive):
 |---|---|---|
 """)
         for k in lo["queries"]:
-            le = lo.get("queries_exec", {}).get(k, "—")
-            he = hi.get("queries_exec", {}).get(k, "—")
-            f.write(f"| {k} | {le} / {lo['queries'][k]} | {he} / {hi['queries'].get(k, '—')} |\n")
+            f.write(f"| {k} | {lo['queries'][k]} / {lo['queries_build'][k]} | "
+                    f"{hi['queries'].get(k, '—')} / {hi['queries_build'].get(k, '—')} |\n")
         f.write(f"""
 ## Notes
 

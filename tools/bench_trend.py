@@ -57,13 +57,8 @@ path or skew collapse.
 Raw samples (build+exec / exec seconds per repeat):
 """)
         for n, r in zip(sizes, runs):
-            # r5: bench.py moved samples to a side file; fall back to the
-            # best-of walls when the line doesn't carry them
-            s = r.get("samples", {}).get(
-                "conflate_join",
-                [[r["queries"]["conflate_join"], r["queries_exec"]["conflate_join"]]],
-            )
-            f.write(f"- n={n}: {s}\n")
+            # run_bench returns bench.py's side file, which holds the samples
+            f.write(f"- n={n}: {r['samples']['conflate_join']}\n")
     print(json.dumps({
         "sizes": sizes,
         "throughput": [r["throughput_rows_per_sec"] for r in runs],
