@@ -185,13 +185,15 @@ def token_count(text: pd.Series) -> pd.Series:
 
 
 _WINNOW_B = np.uint64(257)
+_WINNOW_K = 8  # gram length, bytes
+_WINNOW_W = 16  # window length, grams
 
 
-def winnow_fingerprints(text: str, k: int = 8, w: int = 16) -> list[tuple[int, int]]:
+def winnow_fingerprints(text: str) -> list[tuple[int, int]]:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003 —
     public algorithm): a polynomial ROLLING hash over every k-byte gram
-    (base 257, natural uint64 wraparound), then in every window of ``w``
-    consecutive gram hashes keep the minimum, rightmost on ties. The
+    (k = 8, base 257, natural uint64 wraparound), then in every window of
+    w = 16 consecutive gram hashes keep the minimum, rightmost on ties. The
     selected (position, hash) set is shift-resistant — an insertion far
     from a passage leaves that passage's fingerprints intact, which exact
     whole-document hashing cannot do.
@@ -204,6 +206,7 @@ def winnow_fingerprints(text: str, k: int = 8, w: int = 16) -> list[tuple[int, i
     """
     from numpy.lib.stride_tricks import sliding_window_view
 
+    k, w = _WINNOW_K, _WINNOW_W
     data = np.frombuffer((text or "").encode("utf-8"), dtype=np.uint8).astype(np.uint64)
     n = data.size
     if n < k:

@@ -15,7 +15,7 @@ Split of labor, Spark-first:
   word-frequency table — exactly how production tokenizers are trained
   (on an aggregate/sample, never inside the data plane). Spark's part is
   the one thing that needs a cluster: the map-side-combined word count,
-  collected bounded (top ``max_vocab`` by count; a few-thousand-row
+  collected bounded (top ``BPE_MAX_VOCAB`` by count; a few-thousand-row
   driver table at any corpus scale).
 * **application** is an Arrow-batched pandas UDF. The merge table rides
   the closure (a few KB — broadcast-by-serialization), and each batch
@@ -46,6 +46,8 @@ from osm_addr_tools_spark.operators.decontam import TOKEN_RE
 
 _EOW = "</w>"  # end-of-word marker (Sennrich et al. §3.2)
 _INF = 1 << 30
+# learn_bpe_from_df's word-table cut; the oracle twin truncates alike
+BPE_MAX_VOCAB = 50_000
 
 
 def learn_bpe(word_counts: dict[str, int], n_merges: int) -> list[tuple[str, str]]:
@@ -170,52 +172,39 @@ def merges_to_ranks(merges: list[tuple[str, str]]) -> dict[tuple[str, str], int]
 def learn_bpe_from_df(
     docs: DataFrame,
     n_merges: int = 200,
-    text_col: str = "text",
-    max_vocab: int = 50_000,
 ) -> list[tuple[str, str]]:
-    """Learn merges from a corpus DataFrame: ONE map-side-combined word
-    count (the only cluster-sized stage), a bounded driver collect of the
-    top ``max_vocab`` (count desc, word asc — deterministic truncation),
+    """Learn merges from the ``text`` of a corpus DataFrame: ONE
+    map-side-combined word count (the only cluster-sized stage), a bounded
+    driver collect of the top ``BPE_MAX_VOCAB`` (count desc, word asc —
+    deterministic truncation),
     then the pure-Python fold. At 100 TB the count table for [a-z0-9]+
     words is still tiny relative to the corpus; the top-V cut bounds the
     collect regardless."""
     toks = F.explode(
-        F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)")
+        F.expr(f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)")
     ).alias("w")
     counts = (
         docs.select(toks)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.col("c").desc(), F.col("w").asc())
-        .limit(max_vocab)
+        .limit(BPE_MAX_VOCAB)
         .collect()
     )
     return learn_bpe({r["w"]: r["c"] for r in counts}, n_merges)
 
 
-def bpe_token_count_col(
-    merges: list[tuple[str, str]], text_col: str = "text"
-) -> Column:
-    """Arrow-batched Column: BPE token count of ``text_col`` under the
-    given merge table (closure-shipped; a few KB)."""
+def bpe_token_count_col(merges: list[tuple[str, str]]) -> Column:
+    """Arrow-batched Column: BPE token count of ``text`` under the given
+    merge table (closure-shipped; a few KB) — the tokenizer-true
+    ``n_tok`` producer for packing/chunking/sharding/mixture inputs."""
     ranks = merges_to_ranks(merges)
 
     @F.pandas_udf("long")
     def _count(text: pd.Series) -> pd.Series:
         return bpe_count_batch(text, ranks)
 
-    return _count(F.col(text_col))
-
-
-def bpe_token_count(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "n_tok_bpe",
-) -> DataFrame:
-    """``docs`` + ``out_col`` = tokenizer-true token count — the drop-in
-    producer for packing/chunking/sharding/mixture ``n_tok`` inputs."""
-    return docs.withColumn(out_col, bpe_token_count_col(merges, text_col))
+    return _count(F.col("text"))
 
 
 # --- token-ID encoding (the stream a trainer actually reads) ---------------
@@ -257,10 +246,8 @@ def bpe_encode_ids_batch(
     return pd.Series(out)
 
 
-def bpe_encode_ids_col(
-    merges: list[tuple[str, str]], text_col: str = "text"
-) -> Column:
-    """Arrow-batched Column: ``array<int>`` token ids of ``text_col``
+def bpe_encode_ids_col(merges: list[tuple[str, str]]) -> Column:
+    """Arrow-batched Column: ``array<int>`` token ids of ``text``
     under the merges' deterministic vocab (bpe_vocab). len(ids) equals
     bpe_token_count_col's count by construction — packing/chunking
     coordinates computed on counts address THIS stream."""
@@ -271,7 +258,7 @@ def bpe_encode_ids_col(
     def _ids(text: pd.Series) -> pd.Series:
         return bpe_encode_ids_batch(text, ranks, sym_ids)
 
-    return _ids(F.col(text_col))
+    return _ids(F.col("text"))
 
 
 def bpe_decode_ids(ids: list[int], vocab: list[str]) -> str:

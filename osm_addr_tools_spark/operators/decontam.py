@@ -5,7 +5,8 @@ The standard pre-training hygiene pass (GPT-3 App. C / PaLM / Llama all
 describe the same scheme): a training document is CONTAMINATED if it
 shares any length-n token n-gram with any benchmark example; contaminated
 docs are dropped or audited before training. n is chosen large enough
-(5-13) that natural-language collisions are rare.
+(5-13) that natural-language collisions are rare; ngram_overlap uses
+n = 5.
 
 Scale shape at 100 TB of training text vs a benchmark set of ~10^5-10^7
 examples:
@@ -36,41 +37,35 @@ from pyspark.sql import functions as F
 TOKEN_RE = "[a-z0-9]+"
 
 
-def _grams(df: DataFrame, text_col: str, n: int, keep_cols: list[str]) -> DataFrame:
-    """One row per (keep_cols, gram): whitespace-free lowercase token
-    n-grams of ``text_col``. Docs shorter than n tokens emit no rows."""
-    toks = F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)")
+def _grams(df: DataFrame, keep_cols: list[str]) -> DataFrame:
+    """One row per (keep_cols, gram): lowercase token 5-grams of ``text``.
+    Docs shorter than 5 tokens emit no rows."""
+    toks = F.expr(f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)")
     return (
         df.select(*keep_cols, toks.alias("_t"))
-        .where(F.size("_t") >= n)
+        .where(F.size("_t") >= 5)
         .select(
             *keep_cols,
             F.explode(
-                F.expr(f"transform(sequence(1, size(_t) - {n - 1}), i -> array_join(slice(_t, i, {n}), ' '))")
+                F.expr("transform(sequence(1, size(_t) - 4), i -> array_join(slice(_t, i, 5), ' '))")
             ).alias("gram"),
         )
     )
 
 
-def ngram_overlap(
-    docs: DataFrame,
-    bench: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-) -> DataFrame:
-    """(id, n_hit) for every training doc sharing ≥1 token n-gram with
-    the benchmark set; n_hit = number of DISTINCT contaminated n-grams
+def ngram_overlap(docs: DataFrame, bench: DataFrame) -> DataFrame:
+    """(doc_id, n_hit) for every training doc sharing ≥1 token 5-gram
+    with the benchmark set (both sides read ``text``); n_hit = number of
+    DISTINCT contaminated 5-grams
     (the audit-ranking signal — docs quoting whole benchmark items rank
     above docs sharing one idiom). Docs with zero overlap are absent:
     the output is the contamination WORKLIST (drop-list via anti-join,
     or review queue), not a per-doc annotation — same contract as the
     PII scan."""
-    dg = _grams(docs, text_col, n, [id_col]).distinct()
-    bg = _grams(bench, bench_text_col, n, []).distinct()
+    dg = _grams(docs, ["doc_id"]).distinct()
+    bg = _grams(bench, []).distinct()
     return (
         dg.join(bg, "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
     )

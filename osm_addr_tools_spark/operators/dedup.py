@@ -63,11 +63,12 @@ def _shingle_hashes(text: str, k: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical documents: (text_hash, n, keep_doc=min id)."""
+def exact_dup_groups(df: DataFrame) -> DataFrame:
+    """Groups of byte-identical documents: (text_hash, n, keep_doc=min
+    doc_id)."""
     return (
-        df.groupBy(F.md5(F.col(text_col).cast("binary")).alias("text_hash"))
-        .agg(F.count(F.lit(1)).alias("n"), F.min(id_col).alias("keep_doc"))
+        df.groupBy(F.md5(F.col("text").cast("binary")).alias("text_hash"))
+        .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("keep_doc"))
         .where(F.col("n") > 1)
     )
 
@@ -77,15 +78,16 @@ def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 # ---------------------------------------------------------------------------
 
 
-def shingle_udf(k: int):
-    """doc text → array of distinct shingle hashes (sorted; capped at the
-    ``MAX_SHINGLES`` smallest for bounded row width)."""
+def shingle_udf():
+    """doc text → array of distinct word ``SHINGLE_K``-shingle hashes
+    (sorted; capped at the ``MAX_SHINGLES`` smallest for bounded row
+    width)."""
 
     @pandas_udf("array<long>")
     def sh(text: pd.Series) -> pd.Series:
         out = []
         for t in text:
-            h = np.sort(_shingle_hashes(t, k))[:MAX_SHINGLES]
+            h = np.sort(_shingle_hashes(t, SHINGLE_K))[:MAX_SHINGLES]
             out.append(h.astype(np.int64).tolist())
         return pd.Series(out)
 
@@ -98,12 +100,10 @@ def shingle_udf(k: int):
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
     stop_shingle_df: int = 1000,
 ) -> DataFrame:
-    """Exact Jaccard-similar pairs (a < b, jaccard ≥ threshold).
+    """Exact Jaccard-similar pairs (a < b, jaccard ≥ threshold) over the
+    word ``SHINGLE_K``-shingles of (doc_id, text) documents.
 
     explode(shingles) → self-join on shingle → |A∩B| per pair → exact
     jaccard from per-doc shingle counts. ``stop_shingle_df`` drops shingles
@@ -124,7 +124,7 @@ def ngram_jaccard_pairs(
     doesn't — scale-safe, with no extra driver-side sizing job.
     """
     sh = df.select(
-        F.col(id_col).alias("_id"), shingle_udf(k)(F.col(text_col)).alias("_sh")
+        F.col("doc_id").alias("_id"), shingle_udf()(F.col("text")).alias("_sh")
     ).where(F.size("_sh") > 0)
     ex = sh.select("_id", F.explode("_sh").alias("_g"))
     hot = (
@@ -208,10 +208,9 @@ def minhash_udf():
     return mh
 
 
-def build_minhash_index(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Signature table ``(doc_id, sig)`` — the one signature builder.
+def build_minhash_index(df: DataFrame) -> DataFrame:
+    """Signature table ``(doc_id, sig)`` of (doc_id, text) documents — the
+    one signature builder.
     minhash_lsh_pairs and incremental_minhash_dedup build theirs with it,
     and it is the PERSISTED state an incremental dedup pipeline carries
     between crawls: at 100 TB nobody re-deduplicates the whole corpus
@@ -220,10 +219,7 @@ def build_minhash_index(
     see incremental_minhash_dedup), and each increment joins against
     them. After an increment, append the kept batch docs' rows to the
     index (same construction ⇒ same banding)."""
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        minhash_udf()(F.col(text_col)).alias("sig"),
-    )
+    return df.select("doc_id", minhash_udf()(F.col("text")).alias("sig"))
 
 
 def _band_buckets(sig: DataFrame) -> DataFrame:
@@ -283,15 +279,10 @@ def _lsh_pairs(sig: DataFrame, other: DataFrame | None, threshold: float) -> Dat
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    threshold: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cache_sigs: bool = False,
-) -> DataFrame:
-    """Near-duplicate pairs via MinHash banding (a < b): ``_lsh_pairs``
-    over the ``build_minhash_index`` signatures of ``df``.
+def minhash_lsh_pairs(df: DataFrame, cache_sigs: bool = False) -> DataFrame:
+    """Near-duplicate pairs via MinHash banding (a < b, estimated Jaccard
+    ≥ 0.5): ``_lsh_pairs`` over the ``build_minhash_index`` signatures of
+    ``df``.
 
     ``cache_sigs``: persist the signature table once instead of letting
     the band table and the two verify rejoins race to recompute the
@@ -300,10 +291,10 @@ def minhash_lsh_pairs(
     CC composition) — the registered queries pass True. The table is
     pinned (osm_addr_tools_spark.cache): release it with release_pinned().
     """
-    sig = build_minhash_index(df, id_col, text_col)
+    sig = build_minhash_index(df)
     if cache_sigs:
         sig = pin(sig)
-    return _lsh_pairs(sig, None, threshold)
+    return _lsh_pairs(sig, None, 0.5)
 
 
 # ---------------------------------------------------------------------------
@@ -315,12 +306,10 @@ def incremental_minhash_dedup(
     batch_df: DataFrame,
     index_df: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     cache_sigs: bool = False,
 ) -> DataFrame:
-    """Ingest-time near-dup gate for a NEW batch against an EXISTING corpus
-    index — the incremental form of the dedup_minhash_lsh → retention
+    """Ingest-time near-dup gate for a NEW (doc_id, text) batch against an
+    EXISTING corpus index — the incremental form of the dedup_minhash_lsh → retention
     pipeline, for the production reality that crawls arrive continuously
     and re-deduplicating 100 TB per crawl is not a plan.
 
@@ -350,7 +339,7 @@ def incremental_minhash_dedup(
     storage — compute them FIRST as their own stage and feed that
     table in.
     """
-    bsig = build_minhash_index(batch_df, id_col, text_col)
+    bsig = build_minhash_index(batch_df)
     if cache_sigs:
         bsig = pin(bsig)
     corpus_hits = _lsh_pairs(bsig, index_df, threshold).select("a").distinct()
@@ -360,7 +349,7 @@ def incremental_minhash_dedup(
     labels = connected_components(_lsh_pairs(surv, None, threshold).select("a", "b"))
 
     return (
-        batch_df.select(F.col(id_col).alias("doc_id"))
+        batch_df.select("doc_id")
         .join(corpus_hits.select(F.col("a").alias("doc_id"))
               .withColumn("_chit", F.lit(True)), "doc_id", "left")
         .join(labels.withColumnRenamed("v", "doc_id"), "doc_id", "left")
@@ -457,12 +446,9 @@ def simhash_udf():
     return sim
 
 
-def _simhash_fp(
-    df: DataFrame, id_col: str, text_col: str, fp_col: str | None
-) -> DataFrame:
-    if fp_col is not None:
-        return df.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp"))
-    return df.select(F.col(id_col).alias("_id"), simhash_udf()(F.col(text_col)).alias("_fp"))
+def _simhash_fp(df: DataFrame, fp_col: str | None) -> DataFrame:
+    fp = F.col(fp_col) if fp_col is not None else simhash_udf()(F.col("text"))
+    return df.select(F.col("doc_id").alias("_id"), fp.alias("_fp"))
 
 
 def simhash_candidates(
@@ -559,12 +545,11 @@ def simhash_candidates(
 def simhash_pairs(
     df: DataFrame,
     max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     fp_col: str | None = None,
     blocks: int | None = None,
 ) -> DataFrame:
-    """Pairs with simhash hamming distance ≤ max_hamming (a < b). EXACT
+    """Pairs of ``doc_id`` with simhash hamming distance ≤ max_hamming
+    (a < b), over the fingerprint of ``text`` or a given ``fp_col``. EXACT
     (100% recall): multi-block pigeonhole banding generates candidates
     (see simhash_candidates for the b-vs-C(b,h) trade), exact popcount
     filters them. (r1 shipped a fixed 4-chunk split that only guaranteed
@@ -577,7 +562,7 @@ def simhash_pairs(
     # Arrow UDF runs once, not four times (it dominates otherwise).
     # Lifetime: the cache lives until release_pinned() — call it after
     # materializing the returned pairs.
-    fp = pin(_simhash_fp(df, id_col, text_col, fp_col))
+    fp = pin(_simhash_fp(df, fp_col))
     cand = simhash_candidates(fp, max_hamming, blocks=blocks)
     cand = cand.join(
         fp.select(F.col("_id").alias("a"), F.col("_fp").alias("fp_a")), "a"
@@ -595,16 +580,10 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def winnow_partial_dups(
-    fp: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
-    stop_fp_df: int | None = None,
-) -> DataFrame:
+def winnow_partial_dups(fp: DataFrame, stop_fp_df: int | None = None) -> DataFrame:
     """Partial-duplicate pairs over winnowing fingerprints (a < b):
-    containment = |shared fp| / min(|fp_a|, |fp_b|) ≥ threshold, fp sets
-    distinct per doc. ``fp`` is a (id_col, fp_col) DataFrame (duplicates
+    containment = |shared fp| / min(|fp_a|, |fp_b|) ≥ 0.5, fp sets
+    distinct per doc. ``fp`` is a (doc_id, fp) DataFrame (duplicates
     allowed — de-duplicated here).
 
     Scale shape: equi-join on the fingerprint VALUE. ``stop_fp_df``
@@ -618,7 +597,7 @@ def winnow_partial_dups(
     strategy is left to AQE as in ngram_jaccard_pairs.
     """
     # not persisted: recompute measured 3.7 s vs persist 7.1 s (sf0.1)
-    u = fp.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("fp")).distinct()
+    u = fp.select(F.col("doc_id").alias("_id"), "fp").distinct()
     if stop_fp_df is not None:
         hot = (
             u.groupBy("fp")
@@ -642,7 +621,7 @@ def winnow_partial_dups(
     return (
         shared.join(ca.hint("shuffle_hash"), "a")
         .join(cb.hint("shuffle_hash"), "b")
-        .where(containment >= threshold)
+        .where(containment >= 0.5)
         .select("a", "b", "n_shared", F.round(containment, 6).alias("containment"))
     )
 
@@ -828,28 +807,22 @@ def connected_components(
 # ---------------------------------------------------------------------------
 
 
-def remove_boilerplate_lines(
-    docs: DataFrame,
-    min_docs: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "clean_text",
-) -> DataFrame:
-    """C4-style corpus-level boilerplate removal: delete every LINE that
-    occurs (exactly, byte-equal) in ≥ ``min_docs`` distinct documents —
+def remove_boilerplate_lines(docs: DataFrame) -> DataFrame:
+    """C4-style corpus-level boilerplate removal: delete every LINE of
+    ``text`` that occurs (exactly, byte-equal) in ≥ 3 distinct documents —
     cookie banners, nav menus, subscribe prompts — and reassemble each
     document's remaining lines in their original order. The intra-page
     counterpart of the whole/near-doc dedup families above: boilerplate
     survives document-level dedup because the documents differ, yet still
     floods a training corpus with millions of identical lines.
 
-    Returns one row per input document: (id_col, out_col); a document
+    Returns one row per input document: (doc_id, clean_text); a document
     whose every line is boilerplate keeps an EMPTY string (the row is
     never dropped — downstream length/quality filters decide its fate).
 
     Empty / whitespace-only lines are STRUCTURAL (paragraph separators,
     not content) and are exempt from the frequency threshold (ADVICE r6):
-    in any corpus with ≥ min_docs multi-paragraph documents the empty
+    in any corpus with ≥ 3 multi-paragraph documents the empty
     line is trivially "hot", and deleting it would collapse every
     paragraph break in the corpus — the same exemption dedup_paragraphs
     makes. Bypassing them BEFORE the shuffles also removes the corpus's
@@ -869,56 +842,51 @@ def remove_boilerplate_lines(
     the wider shuffle key.
     """
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     )
     is_content = F.trim(F.col("line")) != ""
     content = lines.where(is_content)
     structural = lines.where(~is_content)
     freq = (
-        content.select(id_col, "line")
+        content.select("doc_id", "line")
         .distinct()
         .groupBy("line")
         .agg(F.count(F.lit(1)).alias("_nd"))
     )
-    hot = freq.where(F.col("_nd") >= min_docs).select("line")
+    hot = freq.where(F.col("_nd") >= 3).select("line")
     kept = content.join(hot, "line", "left_anti").unionByName(structural)
-    reassembled = kept.groupBy(id_col).agg(
+    reassembled = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
                 lambda s: s["line"],
             ),
             "\n",
-        ).alias(out_col)
+        ).alias("clean_text")
     )
     return (
-        docs.select(id_col)
-        .join(reassembled, id_col, "left")
-        .select(id_col, F.coalesce(F.col(out_col), F.lit("")).alias(out_col))
+        docs.select("doc_id")
+        .join(reassembled, "doc_id", "left")
+        .select("doc_id", F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"))
     )
 
 
-def dedup_paragraphs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "clean_text",
-    sep: str = "\n",
-) -> DataFrame:
+def dedup_paragraphs(docs: DataFrame) -> DataFrame:
     """RefinedWeb-style corpus-level paragraph deduplication: keep only
-    the GLOBAL FIRST occurrence of every paragraph — first by document id,
-    then by position within the document — and delete every later
-    occurrence, across documents and within them. The complement of
-    ``remove_boilerplate_lines``: that pass deletes a hot line from ALL
-    documents once it crosses a frequency threshold; this pass keeps
+    the GLOBAL FIRST occurrence of every paragraph (a line of ``text``) —
+    first by document id, then by position within the document — and
+    delete every later occurrence, across documents and within them. The
+    complement of ``remove_boilerplate_lines``: that pass deletes a hot
+    line from ALL documents once it crosses a frequency threshold; this
+    pass keeps
     exactly one canonical copy of every paragraph, so syndicated articles,
     quoted passages and mirrored pages contribute their shared text once.
 
     Empty / whitespace-only paragraphs are STRUCTURAL (separators, not
     content) and are exempt — every document keeps its own.
 
-    Returns one row per input document: (id_col, out_col); a document
+    Returns one row per input document: (doc_id, clean_text); a document
     whose every paragraph already occurred earlier comes back as an EMPTY
     string (never dropped — downstream length filters decide its fate).
 
@@ -936,8 +904,8 @@ def dedup_paragraphs(
     from pyspark.sql import Window
 
     paras = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "para"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "para"),
     )
     # structural rows bypass the window entirely — routing them through it
     # would funnel every empty paragraph in the corpus into ONE hot
@@ -945,25 +913,25 @@ def dedup_paragraphs(
     # discard the rank afterwards
     is_content = F.trim(F.col("para")) != ""
     structural = paras.where(~is_content)
-    w = Window.partitionBy("para").orderBy(F.col(id_col).asc(), F.col("pos").asc())
+    w = Window.partitionBy("para").orderBy(F.col("doc_id").asc(), F.col("pos").asc())
     firsts = (
         paras.where(is_content)
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    kept = firsts.unionByName(structural).select(id_col, "pos", "para")
-    reassembled = kept.groupBy(id_col).agg(
+    kept = firsts.unionByName(structural).select("doc_id", "pos", "para")
+    reassembled = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "para"))),
                 lambda s: s["para"],
             ),
-            sep,
-        ).alias(out_col)
+            "\n",
+        ).alias("clean_text")
     )
     return (
-        docs.select(id_col)
-        .join(reassembled, id_col, "left")
-        .select(id_col, F.coalesce(F.col(out_col), F.lit("")).alias(out_col))
+        docs.select("doc_id")
+        .join(reassembled, "doc_id", "left")
+        .select("doc_id", F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"))
     )

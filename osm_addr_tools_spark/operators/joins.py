@@ -35,7 +35,8 @@ from osm_addr_tools_spark.functions import geo as G
 def cell_encode_udf(level: int):
     """(lon, lat) → cell id at ``level``; null when lon or lat is null,
     NaN or ±inf (a non-finite point has no cell, so equi-joins and
-    ``explode`` drop it instead of piling every such row onto one key)."""
+    ``explode`` drop it instead of piling every such row onto one key).
+    Returns a function of two Columns."""
 
     @pandas_udf("long")
     def enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
@@ -53,7 +54,11 @@ def cell_encode_udf(level: int):
     # geo_knn_nearest_supplier, 7 → 13 in salted run_conflate. The blocked
     # pushdowns all reference the UDF output itself, so nothing that could
     # reach the parquet scan is lost.
-    return enc.asNondeterministic()
+    fenced = enc.asNondeterministic()
+    # double at the boundary: decimal coordinates would reach pandas as
+    # Decimal objects that to_numpy converts one at a time. On double
+    # inputs the optimizer drops the cast (SimplifyCasts).
+    return lambda lon, lat: fenced(lon.cast("double"), lat.cast("double"))
 
 
 def cell_parent_udf(level: int):

@@ -87,9 +87,9 @@ def decode_media(df: DataFrame) -> DataFrame:
     )
 
 
-def media_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    """Feature extraction: binary → array<float> (deterministic byte-
-    histogram projection — the fake stand-in for a real embedding model;
+def media_features(df: DataFrame) -> DataFrame:
+    """Feature extraction: binary → array<float> (deterministic 16-bin
+    byte-histogram projection — the fake stand-in for a real embedding model;
     batch shape and output schema are the real contract)."""
 
     def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -97,10 +97,10 @@ def media_features(df: DataFrame, dim: int = 16) -> DataFrame:
             out = []
             for blob in b["bytes"]:
                 if blob is None:
-                    out.append([0.0] * dim)
+                    out.append([0.0] * 16)
                     continue
                 arr = np.frombuffer(blob, dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype(np.float64)
+                hist = np.bincount(arr % 16, minlength=16).astype(np.float64)
                 norm = np.linalg.norm(hist)
                 out.append((hist / norm if norm else hist).astype(np.float32).tolist())
             yield pd.DataFrame({"media_id": b["media_id"], "feature": out})
@@ -108,8 +108,8 @@ def media_features(df: DataFrame, dim: int = 16) -> DataFrame:
     return df.mapInPandas(feat, schema="media_id long, feature array<float>")
 
 
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame sampling for video rows: one output row per sampled frame
+def frame_sample(df: DataFrame) -> DataFrame:
+    """Frame sampling for video rows: one output row per 10th frame
     (generator shape: one row → many). Non-video rows pass through with
     frame_no = 0."""
 
@@ -120,7 +120,7 @@ def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
                 p = _parse_header(blob)
                 n = p[3] if p else 1
                 if kind == "video":
-                    for f in range(0, n, every_n):
+                    for f in range(0, n, 10):
                         ids.append(mid)
                         kinds.append(kind)
                         frames.append(f)

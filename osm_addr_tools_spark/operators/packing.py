@@ -48,7 +48,6 @@ def length_buckets(capacity: int, min_bucket: int) -> list[int]:
 
 def pack_by_length_bucket(
     df: DataFrame,
-    id_col: str = "doc_id",
     n_tok_col: str = "n_tok",
     capacity: int = 128,
     min_bucket: int = 8,
@@ -58,21 +57,22 @@ def pack_by_length_bucket(
     bucket_cap = smallest power-of-two bucket ≥ n_tok (clamped to
     [min_bucket, capacity]); docs with n_tok > capacity are flagged
     ``truncated`` and packed alone at bucket_cap = capacity. Within a
-    bucket, docs are ranked by ``id_col`` (deterministic; ties impossible
+    bucket, docs are ranked by ``doc_id`` (deterministic; ties impossible
     on unique ids) and packed ``capacity // bucket_cap`` per pack:
     pack_id = (rank-1) // per_pack, slot = (rank-1) % per_pack. Every
     pack holds docs of ONE bucket, so its token sum ≤ capacity by
     construction.
 
-    Output: id, n_tok, bucket_cap, truncated, pack_id, slot — pack_id is
-    unique within a bucket_cap (the pack key is (bucket_cap, pack_id))."""
+    Output: doc_id, n_tok, bucket_cap, truncated, pack_id, slot — pack_id
+    is unique within a bucket_cap (the pack key is (bucket_cap,
+    pack_id))."""
     buckets = length_buckets(capacity, min_bucket)
     n = F.col(n_tok_col)
     cap = F.lit(capacity)
     for b in reversed(buckets):
         cap = F.when(n <= b, F.lit(b)).otherwise(cap)
     d = df.select(
-        id_col,
+        "doc_id",
         F.col(n_tok_col).cast("long").alias(n_tok_col),
         cap.cast("long").alias("bucket_cap"),
         (n > capacity).alias("truncated"),
@@ -80,13 +80,13 @@ def pack_by_length_bucket(
     # exact int64 arithmetic via SQL `div` — double division would
     # silently lose ulps past 2^53 ranks
     r = (
-        grouped_row_number(d, "bucket_cap", id_col, out_col="_rank")
+        grouped_row_number(d, "bucket_cap", "doc_id", out_col="_rank")
         .withColumn("_pp", F.expr(f"cast({capacity} as bigint) div bucket_cap"))
         .withColumn("_r0", F.col("_rank") - F.lit(1).cast("long"))
     )
     return (
         r.select(
-            id_col,
+            "doc_id",
             n_tok_col,
             "bucket_cap",
             "truncated",
@@ -98,20 +98,18 @@ def pack_by_length_bucket(
 
 def chunk_token_windows(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     window: int = 64,
     stride: int = 48,
 ) -> DataFrame:
     """Sliding context-window chunking — the other standard way (besides
     packing above and ``token_shards``' concatenate-and-shard) to turn
     variable-length documents into model-sized training examples: emit a
-    chunk of up to ``window`` whitespace tokens starting at every
-    ``stride``-th token (stride < window ⇒ overlapping chunks, the usual
+    chunk of up to ``window`` whitespace tokens of ``text`` starting at
+    every ``stride``-th token (stride < window ⇒ overlapping chunks, the usual
     LM pre-training setup so no span is only ever seen split across a
     boundary; stride = window ⇒ an exact partition of the document).
 
-    Output: one row per chunk — (id_col, chunk_idx, start_tok, n_tok,
+    Output: one row per chunk — (doc_id, chunk_idx, start_tok, n_tok,
     chunk_text); chunk_idx is 0-based within the document, start_tok its
     0-based first-token offset, and only the final chunk of a document
     may be shorter than ``window``. Every token of every document appears
@@ -129,20 +127,20 @@ def chunk_token_windows(
         raise ValueError(
             f"stride {stride} > window {window} would silently drop tokens"
         )
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     starts = F.sequence(
         F.lit(0), F.greatest(F.col("_n") - 1, F.lit(0)), F.lit(stride)
     )
     return (
-        df.select(F.col(id_col), toks.alias("_toks"), F.size(toks).alias("_n"))
+        df.select(F.col("doc_id"), toks.alias("_toks"), F.size(toks).alias("_n"))
         .select(
-            id_col,
+            "doc_id",
             "_toks",
             "_n",
             F.posexplode(starts).alias("chunk_idx", "start_tok"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("chunk_idx").cast("long").alias("chunk_idx"),
             F.col("start_tok").cast("long").alias("start_tok"),
             F.least(F.lit(window), F.col("_n") - F.col("start_tok"))

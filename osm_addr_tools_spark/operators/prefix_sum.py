@@ -28,8 +28,9 @@ window pass could silently disagree on bucket assignment, while a pure
 function of the key cannot. Correctness never depends on bucket
 boundaries (any monotone bucketing yields the identical running sum —
 property-tested); skewed keys only IMBALANCE buckets. For heavy skew,
-or a key whose domain is known without a min/max job, pass an explicit
-ascending cut list as ``boundaries``.
+or a key whose domain is known without a min/max job, pass
+``running_sum`` an explicit ascending cut list as ``boundaries``
+(``grouped_row_number`` always buckets uniformly).
 """
 
 from __future__ import annotations
@@ -204,7 +205,6 @@ def grouped_row_number(
     order_cols,
     out_col: str = "row_num",
     num_buckets: int | None = None,
-    boundaries: list | None = None,
     max_groups: int = 256,
 ) -> DataFrame:
     """1-based row number WITHIN each ``group_col`` value, rows ordered by
@@ -234,7 +234,7 @@ def grouped_row_number(
         order_cols = [order_cols]
     spark = df.sparkSession
 
-    bucket = _resolve_bucket(df, order_cols[0], num_buckets, boundaries)
+    bucket = _resolve_bucket(df, order_cols[0], num_buckets, None)
     b = df.withColumn("_psb", bucket)
     partials = (
         b.groupBy("_psb", group_col)

@@ -85,27 +85,23 @@ def score_cols(text_col: str, dim: int) -> tuple[Column, Column]:
     return F.size(toks).cast("long"), score_num
 
 
-def hashed_score(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    dim: int = 1 << 20,
-) -> DataFrame:
-    """Score every document with the hashed linear classifier — pure
-    Column path (see module doc). Output: (id_col, n_tok, score_num,
+def hashed_score(df: DataFrame, dim: int = 1 << 20) -> DataFrame:
+    """Score every (doc_id, text) document with the hashed linear
+    classifier — pure Column path (see module doc). Output: (doc_id,
+    n_tok, score_num,
     score, keep) where score_num is the EXACT int64 weight sum (the
     hash-gate anchor), score = score_num / (n_tok * W_SCALE) ∈ [-1, 1]
     is a single division, and keep = score ≥ 0 (a trained threshold
     replaces 0 in production)."""
-    n_tok, score_num = score_cols(text_col, dim)
+    n_tok, score_num = score_cols("text", dim)
     d = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tok.alias("n_tok"),
         score_num.alias("score_num"),
     )
     score = F.col("score_num") / (F.col("n_tok") * F.lit(float(W_SCALE)))
     return d.select(
-        id_col,
+        "doc_id",
         "n_tok",
         "score_num",
         score.alias("score"),

@@ -59,48 +59,28 @@ def fib_bucket_sql(id_expr: str, mod: int = 1000) -> str:
     )
 
 
-def split_assign(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    splits: list[tuple[str, int]] | None = None,
-    mod: int = 1000,
-    bucket_col: str = "bucket",
-    split_col: str = "split",
-) -> DataFrame:
-    """Deterministic train/val/test assignment: ``splits`` is an ordered
-    list of (name, exclusive upper bucket bound); a row belongs to the
-    first split whose bound exceeds its bucket. Default 98/1/1.
+def split_assign(df: DataFrame) -> DataFrame:
+    """Deterministic 98/1/1 train/val/test assignment: ``df`` +
+    ``bucket`` (the ``doc_id`` Fibonacci bucket in [0, 1000)) + ``split``
+    (train below 980, val below 990, test above).
 
     Join-free and shuffle-free — membership is computable from the id
     alone, and a row's split never changes as the corpus grows."""
-    if splits is None:
-        splits = [("train", 980), ("val", 990), ("test", mod)]
-    if splits[-1][1] != mod:
-        raise ValueError(
-            f"last split bound must equal mod ({mod}); got {splits[-1]}"
-        )
-    b = fib_bucket(id_col, mod)
-    expr = None
-    for name, bound in splits[:-1]:
-        expr = F.when(b < bound, name) if expr is None else expr.when(b < bound, name)
-    expr = (
-        expr.otherwise(splits[-1][0]) if expr is not None else F.lit(splits[-1][0])
-    )
-    return df.withColumn(bucket_col, b).withColumn(split_col, expr)
+    b = fib_bucket("doc_id", 1000)
+    split = F.when(b < 980, "train").when(b < 990, "val").otherwise("test")
+    return df.withColumn("bucket", b).withColumn("split", split)
 
 
 def stratified_sample(
     df: DataFrame,
     strata_col: str,
     rates: dict[str, float],
-    id_col: str = "doc_id",
     default_rate: float = 0.0,
-    mod: int = 1000,
 ) -> DataFrame:
     """Deterministic per-stratum downsampling: keep a row iff its
-    Fibonacci bucket < rate(stratum) * mod. ``rates`` maps stratum value
-    → keep fraction in [0, 1]; strata absent from the map use
-    ``default_rate``. The language-rebalancing pass of a training-data
+    ``doc_id`` Fibonacci bucket < rate(stratum) * 1000. ``rates`` maps
+    stratum value → keep fraction in [0, 1]; strata absent from the map
+    use ``default_rate``. The language-rebalancing pass of a training-data
     pipeline (downsample the majority language, keep the rest).
 
     Scale shape: one scan, one JVM codegen filter — the rate map compiles
@@ -112,33 +92,27 @@ def stratified_sample(
             raise ValueError(f"rate for stratum {k!r} must be in [0,1]; got {v}")
     if not 0.0 <= default_rate <= 1.0:
         raise ValueError(f"default_rate must be in [0,1]; got {default_rate}")
-    h = fib_bucket(id_col, mod)
+    h = fib_bucket("doc_id", 1000)
     thresh = None
     for k, v in sorted(rates.items()):
         cond = F.col(strata_col) == k
-        bound = F.lit(int(round(v * mod)))
+        bound = F.lit(int(round(v * 1000)))
         thresh = F.when(cond, bound) if thresh is None else thresh.when(cond, bound)
     thresh = (
-        thresh.otherwise(int(round(default_rate * mod)))
+        thresh.otherwise(int(round(default_rate * 1000)))
         if thresh is not None
-        else F.lit(int(round(default_rate * mod)))
+        else F.lit(int(round(default_rate * 1000)))
     )
     return df.where(h < thresh)
 
 
-def source_cap(
-    df: DataFrame,
-    source_col: str = "source",
-    cap: int = 10,
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
-    max_sources: int = 256,
-) -> DataFrame:
-    """Per-source document cap: keep at most ``cap`` rows per
-    ``source_col``, priority = Fibonacci hash of the id (ties broken by
-    the id) — the domain-balancing pass of a crawl pipeline (C4 caps
-    pages per domain; Gopher/RefinedWeb cap per registered domain) that
-    stops a single boilerplate-heavy site from dominating the corpus.
+def source_cap(df: DataFrame, cap: int = 10) -> DataFrame:
+    """Per-source document cap: keep at most ``cap`` rows per ``source``,
+    priority = Fibonacci hash of ``doc_id`` (ties broken by the id; the
+    row's 1-based priority within its source is the ``rank`` column) —
+    the domain-balancing pass of a crawl pipeline (C4 caps pages per
+    domain; Gopher/RefinedWeb cap per registered domain) that stops a
+    single boilerplate-heavy site from dominating the corpus.
 
     The hash priority makes the kept subset a deterministic pseudo-random
     sample of each source — NOT first-crawled-wins (crawl order is
@@ -151,33 +125,32 @@ def source_cap(
     grouping) but HUGE, exactly the grouped_row_number contract — a plain
     ``row_number().over(partitionBy(source))`` would run each source on
     ONE task; the two-pass prefix-sum core keeps every stage at full
-    parallelism. ``max_sources`` bounds its driver-side partials collect;
-    beyond that, use the plain window (already parallel at high
-    cardinality)."""
+    parallelism. Its 256-group bound (``max_groups``) bounds the
+    driver-side partials collect; beyond that, use the plain window
+    (already parallel at high cardinality)."""
     if cap < 1:
         raise ValueError(f"source_cap: cap must be ≥ 1, got {cap}")
     from osm_addr_tools_spark.operators.prefix_sum import grouped_row_number
 
-    prio = fib_bucket(id_col, _MOD32)
+    prio = fib_bucket("doc_id", _MOD32)
     ranked = grouped_row_number(
         df.withColumn("_prio", prio),
-        group_col=source_col,
-        order_cols=["_prio", id_col],
-        out_col=rank_col,
-        max_groups=max_sources,
+        group_col="source",
+        order_cols=["_prio", "doc_id"],
+        out_col="rank",
     )
-    return ranked.where(F.col(rank_col) <= cap).drop("_prio")
+    return ranked.where(F.col("rank") <= cap).drop("_prio")
 
 
 def mix_weights_sqrt(
     df: DataFrame,
     group_cols: list[str],
     size_col: str,
-    weight_col: str = "weight_ppm",
 ) -> DataFrame:
     """Temperature-based corpus mixing weights (the data-mixture step of a
     training pipeline — UniMax / "sampling with temperature" at α = 1/2):
-    each group's sampling weight is proportional to sqrt(its token count),
+    each group's sampling weight ``weight_ppm`` is proportional to
+    sqrt(its token count),
     flattening the head (a 100× bigger corpus gets only 10× the weight)
     without the starvation of uniform mixing.
 
@@ -215,7 +188,7 @@ def mix_weights_sqrt(
             "isqrt_tokens",
             F.expr(f"isqrt_tokens * 1000000 div _tot")
             .cast("long")
-            .alias(weight_col),
+            .alias("weight_ppm"),
         )
     )
 
@@ -227,31 +200,32 @@ _FEISTEL_MASK = (1 << _FEISTEL_BITS) - 1
 _FEISTEL_KEYS = (0x9E3779B9, 0x85EBCA6B, 0xC2B2AE35, 0x27D4EB2F)
 
 
-def feistel_shuffle_key(id_col, bits: int = _FEISTEL_BITS) -> Column:
+def feistel_shuffle_key(id_col) -> Column:
     """Collision-FREE pseudorandom shuffle key: a 4-round Feistel network
-    over the 2*bits-bit id space — a BIJECTION, so ordering by the key is
+    over the 62-bit id space — a BIJECTION, so ordering by the key is
     a true deterministic permutation of the corpus (the training-order
     shuffle), unlike ordering by a hash where collisions make tie order
     layout-dependent (fib_bucket ties would need a secondary id sort; the
     Feistel key needs none — every id maps to a distinct key).
 
     Pure int64 Column arithmetic, shuffle-free, inside codegen: halves
-    are ``bits``-wide so the round function ``(R * FIB + k) mod 2^bits``
+    are ``_FEISTEL_BITS`` (31) wide so the round function
+    ``(R * FIB + k) mod 2^31``
     peaks at 2^31 * FIB ≈ 5.7e18 < 2^63 — no overflow, no decimal
     needed (contrast fib_bucket, whose full-width multiply does need it).
-    Ids must lie in [0, 2^(2*bits)) = [0, 4.6e18) at the default — far
+    Ids must lie in [0, 2^62) = [0, 4.6e18) — far
     above the 10^12-doc design scale; the caller owns that contract
     (same as sampling ids being non-negative).
 
     Keys for the same id are stable across runs/layouts/corpus growth;
     the permutation is seeded by fixed round constants (splitmix64/xxhash
     mixing constants, public domain)."""
-    mod = 1 << bits
+    mod = 1 << _FEISTEL_BITS
     c = (F.col(id_col) if isinstance(id_col, str) else id_col).cast("long")
     # exact bit arithmetic for the halves — `c / mod` would be a DOUBLE
     # division, silently lossy past 2^53 (the same ulp trap packing.py
     # avoids with `div`); ids are non-negative so shiftright is floor-div
-    left = F.shiftright(c, bits) % F.lit(mod)  # high half
+    left = F.shiftright(c, _FEISTEL_BITS) % F.lit(mod)  # high half
     right = c.bitwiseAND(F.lit(mod - 1))
     for k in _FEISTEL_KEYS:
         f = (right * F.lit(FIB_MULT) + F.lit(k)) % F.lit(mod)
@@ -259,10 +233,10 @@ def feistel_shuffle_key(id_col, bits: int = _FEISTEL_BITS) -> Column:
     return (left * F.lit(mod) + right).cast("long")
 
 
-def feistel_shuffle_key_sql(id_expr: str, bits: int = _FEISTEL_BITS) -> str:
+def feistel_shuffle_key_sql(id_expr: str) -> str:
     """The identical key as ANSI SQL (DuckDB oracle mirror) — same
     int64-safe arithmetic, xor(a, b) for the round mix."""
-    mod = 1 << bits
+    mod = 1 << _FEISTEL_BITS
     left = f"(CAST(({id_expr}) // {mod} AS BIGINT) % {mod})"
     right = f"(({id_expr}) % {mod})"
     for k in _FEISTEL_KEYS:
@@ -280,7 +254,6 @@ def mix_epoch(
     epoch: int,
     epoch_tokens: int,
     group_cols: list[str],
-    id_col: str = "doc_id",
     copy_bits: int = 6,
     max_groups: int = 100_000,
 ) -> DataFrame:
@@ -368,7 +341,7 @@ def mix_epoch(
         .add("rot_start", "long")
     )
     cdf = spark.createDataFrame(consts, gschema)
-    b = fib_bucket(id_col, 1_000_000)
+    b = fib_bucket("doc_id", 1_000_000)
     rot = (b + F.lit(1_000_000) - F.col("rot_start")) % F.lit(1_000_000)
     copies = F.col("full_copies") + F.when(
         rot < F.col("extra_ppm"), F.lit(1)
@@ -379,15 +352,15 @@ def mix_epoch(
         .where(F.col("_copies") > 0)
     )
     exploded = with_c.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *group_cols,
         F.explode(
             F.sequence(F.lit(0).cast("long"), F.col("_copies") - 1)
         ).alias("copy"),
     )
     example = feistel_shuffle_key(
-        F.col(id_col) * F.lit(1 << copy_bits) + F.col("copy")
+        F.col("doc_id") * F.lit(1 << copy_bits) + F.col("copy")
     )
     return exploded.select(
-        example.alias("example_id"), id_col, "copy", *group_cols
+        example.alias("example_id"), "doc_id", "copy", *group_cols
     )

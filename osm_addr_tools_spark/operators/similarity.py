@@ -41,24 +41,16 @@ def cosine_col(a, b):
     return F.when(denom > 0, _dot(a, b) / denom)
 
 
-def hyperplane_bucket_udf(dim: int, n_planes: int = 12, seed: int = 42):
-    """Random-hyperplane LSH: sign bits of R·v packed into an int bucket.
-    One matrix multiply per Arrow batch."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes))
-
-    @pandas_udf("long")
-    def bucket(vec: pd.Series) -> pd.Series:
-        m = np.stack(vec.to_numpy())
-        bits = (m.astype(np.float64) @ planes) > 0
-        vals = (bits * (1 << np.arange(n_planes))).sum(axis=1)
-        return pd.Series(vals.astype(np.int64))
-
-    # optimizer fence (the kernel itself is deterministic): the bucket
-    # equi-join otherwise pushes inferred isnotnull(_bucket) below the
-    # projection and evaluates the matrix multiply again
-    # (test_python_udf_evaluation_counts: bucket 2 → 3 in emb_ann_lsh_top3)
-    return bucket.asNondeterministic()
+# hyperplane-LSH constants, shared with the DuckDB oracle
+# (oracle_support): the ANN top-k join probes ANN_N_PROBES buckets
+# (its own plus the hamming-1 flips) over ANN_N_PLANES planes; semantic
+# dedup bands SEM_BANDS plane sets of SEM_N_PLANES, band b seeded
+# SEM_SEED + b
+ANN_N_PLANES = 6
+ANN_N_PROBES = 4
+SEM_N_PLANES = 8
+SEM_BANDS = 4
+SEM_SEED = 97
 
 
 def lsh_ann_topk(
@@ -66,38 +58,32 @@ def lsh_ann_topk(
     candidates: DataFrame,
     k: int,
     dim: int,
-    n_planes: int = 10,
-    n_probes: int = 1,
-    q_id: str = "vec_id",
-    c_id: str = "cand_id",
-    q_vec: str = "q_emb",
-    c_vec: str = "c_emb",
-    seed: int = 42,
 ) -> DataFrame:
-    """Approximate cosine top-k: equi-join on the hyperplane bucket
-    (n_probes>1 additionally probes buckets at hamming distance 1 —
-    multi-probe recall boost without more hyperplanes)."""
-    bq = hyperplane_bucket_udf(dim, n_planes, seed)
-    bc = hyperplane_bucket_udf(dim, n_planes, seed)
-    qb = queries.withColumn("_bucket", bq(F.col(q_vec)))
-    if n_probes > 1:
-        flips = F.array(
-            F.col("_bucket"),
-            *[
-                F.col("_bucket").bitwiseXOR(F.lit(1 << i))
-                for i in range(min(n_planes, n_probes - 1))
-            ],
-        )
-        qb = qb.withColumn("_bucket", F.explode(flips))
-    cb = candidates.withColumn("_bucket", bc(F.col(c_vec)))
+    """Approximate cosine top-k over (vec_id, q_emb) queries and
+    (cand_id, c_emb) candidates: equi-join on the hyperplane bucket,
+    probing each query's own bucket and the ANN_N_PROBES - 1 buckets at
+    hamming distance 1 (multi-probe recall boost without more
+    hyperplanes)."""
+    # optimizer fence (the kernel itself is deterministic): the bucket
+    # equi-join otherwise pushes inferred isnotnull(_bucket) below the
+    # projection and evaluates the matrix multiply again
+    # (test_python_udf_evaluation_counts: buckets 2 → 3 in emb_ann_lsh_top3)
+    bu = hyperplane_bands_udf(dim, ANN_N_PLANES, 1, 42).asNondeterministic()
+    qb = queries.withColumn("_bucket", bu(F.col("q_emb"))[0])
+    flips = F.array(
+        F.col("_bucket"),
+        *[F.col("_bucket").bitwiseXOR(F.lit(1 << i)) for i in range(ANN_N_PROBES - 1)],
+    )
+    qb = qb.withColumn("_bucket", F.explode(flips))
+    cb = candidates.withColumn("_bucket", bu(F.col("c_emb"))[0])
     pairs = qb.join(cb, "_bucket")
-    pairs = pairs.withColumn("sim", cosine_col(F.col(q_vec), F.col(c_vec)))
-    w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))
+    pairs = pairs.withColumn("sim", cosine_col(F.col("q_emb"), F.col("c_emb")))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cand_id"))
     return (
-        pairs.dropDuplicates([q_id, c_id])
+        pairs.dropDuplicates(["vec_id", "cand_id"])
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
-        .select(q_id, c_id, "sim")
+        .select("vec_id", "cand_id", "sim")
     )
 
 
@@ -106,7 +92,9 @@ def hyperplane_bands_udf(dim: int, n_planes: int, bands: int, seed: int):
     independent plane set seeded ``seed + b``; returns array<long> indexed
     by band (posexplode at the call site). One batched matrix multiply
     against the (dim × bands·n_planes) stacked planes — b× fewer UDF
-    passes over the corpus than calling hyperplane_bucket_udf per band."""
+    passes over the corpus than one single-band UDF per band.
+    ``bands=1`` is the single-bucket kernel lsh_ann_topk takes element 0
+    of."""
     planes = np.concatenate(
         [
             np.random.default_rng(seed + b).standard_normal((dim, n_planes))
@@ -131,21 +119,17 @@ def lsh_semantic_pairs(
     vectors: DataFrame,
     threshold: float,
     dim: int,
-    n_planes: int = 8,
-    bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 97,
 ) -> DataFrame:
     """SEMANTIC near-duplicate pairs (a < b, cosine ≥ threshold) over one
-    embedding table — the candidate generator for embedding-based dedup
-    (pairs → connected_components → min-id retention, the same composition
-    as the MinHash families in operators.dedup).
+    (vec_id, embedding) table — the candidate generator for
+    embedding-based dedup (pairs → connected_components → min-id
+    retention, the same composition as the MinHash families in
+    operators.dedup).
 
-    Banded hyperplane LSH: ``bands`` independent plane sets; two vectors
-    are candidates iff ALL ``n_planes`` sign bits agree in ≥1 band (the
-    cosine analog of MinHash banding — more bands raise recall, more
-    planes per band cut candidates). Scale shape mirrors simhash_pairs:
+    Banded hyperplane LSH: ``SEM_BANDS`` independent plane sets; two
+    vectors are candidates iff ALL ``SEM_N_PLANES`` sign bits agree in ≥1
+    band (the cosine analog of MinHash banding — more bands raise recall,
+    more planes per band cut candidates). Scale shape mirrors simhash_pairs:
     candidates travel as bare (band, bucket, id) through the equi-join,
     embeddings REJOIN by id only for the exact cosine verify, and the
     verify itself is JVM Column math (zip_with/aggregate).
@@ -159,7 +143,7 @@ def lsh_semantic_pairs(
     STAR to the minimum zero-norm id (O(z) pairs, sim = 1.0 by the
     exact-duplicate convention), which connected_components collapses to
     the same single group an all-pairs clique would."""
-    allv = vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+    allv = vectors.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
     nz = _dot(F.col("_v"), F.col("_v")) > 0
     ids = allv.where(nz)
     zeros = allv.where(~nz).select("_id")
@@ -170,7 +154,7 @@ def lsh_semantic_pairs(
         .where(F.col("a") < F.col("b"))
         .select("a", "b", F.lit(1.0).alias("sim"))
     )
-    bu = hyperplane_bands_udf(dim, n_planes, bands, seed)
+    bu = hyperplane_bands_udf(dim, SEM_N_PLANES, SEM_BANDS, SEM_SEED)
     keyed = ids.select(
         "_id", F.posexplode(bu(F.col("_v"))).alias("_band", "_bucket")
     )
@@ -194,14 +178,15 @@ def lsh_semantic_pairs(
     return verified.unionByName(zero_pairs)
 
 
-def kmeans_centroids(vectors: np.ndarray, n_centroids: int, iters: int = 8, seed: int = 42):
-    """Tiny deterministic Lloyd's k-means for the IVF coarse quantizer
-    (driver-side on a SAMPLE — the only non-distributed step, bounded)."""
-    rng = np.random.default_rng(seed)
+def kmeans_centroids(vectors: np.ndarray, n_centroids: int):
+    """Tiny deterministic Lloyd's k-means (8 iterations, seed 42) for the
+    IVF coarse quantizer (driver-side on a SAMPLE — the only
+    non-distributed step, bounded)."""
+    rng = np.random.default_rng(42)
     cent = vectors[rng.choice(len(vectors), size=n_centroids, replace=False)].astype(
         np.float64
     )
-    for _ in range(iters):
+    for _ in range(8):
         d = ((vectors[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         for c in range(n_centroids):
@@ -221,7 +206,7 @@ def centroid_assign_udf(centroids: np.ndarray, n_probe: int = 1):
         order = np.argsort(d, axis=1)[:, :n_probe]
         return pd.Series([row.astype(np.int32).tolist() for row in order])
 
-    # see hyperplane_bucket_udf: fence against duplicate evaluation
+    # see lsh_ann_topk: fence against duplicate evaluation
     # (test_python_udf_evaluation_counts: assign 2 → 3 in emb_ann_ivf_top3)
     return assign.asNondeterministic()
 
@@ -232,35 +217,31 @@ def ivf_ann_topk(
     candidates: DataFrame,
     k: int,
     n_centroids: int = 16,
-    n_probe: int = 3,
     sample: int = 2000,
-    q_id: str = "vec_id",
-    c_id: str = "cand_id",
-    q_vec: str = "q_emb",
-    c_vec: str = "c_emb",
-    seed: int = 42,
 ) -> DataFrame:
-    """IVF: train a coarse quantizer on a bounded candidate sample, assign
+    """IVF over (vec_id, q_emb) queries and (cand_id, c_emb) candidates:
+    train a coarse quantizer on a bounded candidate sample, assign
     candidates to their nearest centroid (1 list each), probe the query's
-    ``n_probe`` nearest lists — candidate generation is an equi-join on the
+    3 nearest lists — candidate generation is an equi-join on the
     list id. The sample is the first ``sample`` candidates BY ID — a bare
     ``limit`` picks partition-order rows, which is not reproducible across
     layouts; ordering makes the quantizer (and the oracle parity) a pure
     function of the data."""
     samp = np.stack(
-        [r[0] for r in candidates.select(c_vec, c_id).orderBy(c_id).limit(sample).collect()]
+        [r[0] for r in candidates.select("c_emb", "cand_id").orderBy("cand_id")
+         .limit(sample).collect()]
     )
-    cent = kmeans_centroids(samp, n_centroids, seed=seed)
+    cent = kmeans_centroids(samp, n_centroids)
     c_assign = centroid_assign_udf(cent, 1)
-    q_assign = centroid_assign_udf(cent, n_probe)
-    cb = candidates.withColumn("_list", c_assign(F.col(c_vec))[0])
-    qb = queries.withColumn("_list", F.explode(q_assign(F.col(q_vec))))
+    q_assign = centroid_assign_udf(cent, 3)
+    cb = candidates.withColumn("_list", c_assign(F.col("c_emb"))[0])
+    qb = queries.withColumn("_list", F.explode(q_assign(F.col("q_emb"))))
     pairs = qb.join(cb, "_list")
-    pairs = pairs.withColumn("sim", cosine_col(F.col(q_vec), F.col(c_vec)))
-    w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))
+    pairs = pairs.withColumn("sim", cosine_col(F.col("q_emb"), F.col("c_emb")))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cand_id"))
     return (
-        pairs.dropDuplicates([q_id, c_id])
+        pairs.dropDuplicates(["vec_id", "cand_id"])
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
-        .select(q_id, c_id, "sim")
+        .select("vec_id", "cand_id", "sim")
     )

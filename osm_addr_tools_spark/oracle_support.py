@@ -31,20 +31,16 @@ import pandas as pd
 from osm_addr_tools_spark.functions import cells as C
 from osm_addr_tools_spark.functions import normalize as N
 from osm_addr_tools_spark.functions import text as T
+from osm_addr_tools_spark.functions.tokenize import BPE_MAX_VOCAB
+from osm_addr_tools_spark.operators.similarity import (
+    ANN_N_PLANES, ANN_N_PROBES, SEM_BANDS, SEM_N_PLANES, SEM_SEED,
+)
 from osm_addr_tools_spark.sources import synth as S
 
 # bump to invalidate previously materialized intermediates
 _VERSION = 7
 
 EMB_DIM = 64
-ANN_N_PLANES = 6
-ANN_N_PROBES = 4
-# banded semantic-dedup LSH (emb_dedup_retention): bands independent
-# plane sets, seeds SEM_SEED+band — mirrored EXACTLY by
-# operators.similarity.hyperplane_bands_udf
-SEM_N_PLANES = 8
-SEM_BANDS = 4
-SEM_SEED = 97
 TILE_LEVEL = 16
 
 # The driver's correctness gate runs queries() vs oracle_sql() at THIS
@@ -254,7 +250,7 @@ def _minhash_sigs_pdf(docs: pd.DataFrame) -> pd.DataFrame:
 def _ann_buckets(sf_dir: str) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Hyperplane buckets for the registered ANN query: queries = vec_id %
     50 == 0 with multi-probe flips, candidates = the rest (same plane
-    construction as operators.similarity.hyperplane_bucket_udf)."""
+    construction as operators.similarity.hyperplane_bands_udf)."""
     e = pd.read_parquet(os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"])
     m = np.stack(e["embedding"].to_numpy()).astype(np.float64)
     rng = np.random.default_rng(42)
@@ -321,7 +317,7 @@ def _ivf_buckets(sf_dir: str, n_centroids: int = 16, n_probe: int = 3,
     # and kmeans means must accumulate in the same precision to converge to
     # bit-identical centroids
     samp = mat[~is_q][cand_order][:sample].astype(np.float64)
-    cent = kmeans_centroids(samp, n_centroids, seed=42)
+    cent = kmeans_centroids(samp, n_centroids)
 
     def dists(m):
         return ((m.astype(np.float64)[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
@@ -339,7 +335,6 @@ def _ivf_buckets(sf_dir: str, n_centroids: int = 16, n_probe: int = 3,
 
 
 BPE_N_MERGES = 200
-BPE_MAX_VOCAB = 50_000
 
 
 def _bpe_counts_pdf(sf_dir: str) -> pd.DataFrame:

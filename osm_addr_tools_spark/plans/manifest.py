@@ -169,13 +169,10 @@ def write_resumable(
     }
 
 
-def with_part_col(
-    df: DataFrame, level: int = 6, lon: str = "lon", lat: str = "lat",
-    out: str = "cell_p",
-) -> DataFrame:
-    """Standard physical partition column: coarse cell of the row's point
-    (SURVEY §4: sink partitioned by cell prefix → partition pruning on
-    reads, locality for downstream cell joins)."""
+def with_part_col(df: DataFrame, level: int = 6) -> DataFrame:
+    """Standard physical partition column ``cell_p``: coarse cell of the
+    row's (lon, lat) point (SURVEY §4: sink partitioned by cell prefix →
+    partition pruning on reads, locality for downstream cell joins)."""
     from osm_addr_tools_spark.operators.joins import cell_encode_udf
 
-    return df.withColumn(out, cell_encode_udf(level)(F.col(lon), F.col(lat)))
+    return df.withColumn("cell_p", cell_encode_udf(level)(F.col("lon"), F.col("lat")))

@@ -17,25 +17,21 @@ from osm_addr_tools_spark.functions import cells as C
 from osm_addr_tools_spark.operators.joins import cell_encode_udf, cover_polygon_udf
 
 
-def run_tile_points(
-    points: DataFrame, level: int, id_col: str = "feature_id",
-    lon: str = "lon", lat: str = "lat",
-) -> DataFrame:
-    """(feature_id, tile_id) for point features — narrow, no shuffle."""
+def run_tile_points(points: DataFrame, level: int) -> DataFrame:
+    """(feature_id, tile_id) for (feature_id, lon, lat) point features —
+    narrow, no shuffle."""
     return points.select(
-        F.col(id_col).alias("feature_id"),
-        cell_encode_udf(level)(F.col(lon), F.col(lat)).alias("tile_id"),
+        "feature_id",
+        cell_encode_udf(level)(F.col("lon"), F.col("lat")).alias("tile_id"),
     )
 
 
-def run_tile_polygons(
-    polygons: DataFrame, level: int, id_col: str = "building_id",
-    rings: str = "rings",
-) -> DataFrame:
-    """(feature_id, tile_id) pairs: every tile intersecting each polygon."""
+def run_tile_polygons(polygons: DataFrame, level: int) -> DataFrame:
+    """(feature_id, tile_id) pairs: every tile intersecting each
+    (building_id, rings) polygon."""
     return polygons.select(
-        F.col(id_col).alias("feature_id"),
-        F.explode(cover_polygon_udf(level)(F.col(rings))).alias("tile_id"),
+        F.col("building_id").alias("feature_id"),
+        F.explode(cover_polygon_udf(level)(F.col("rings"))).alias("tile_id"),
     )
 
 

@@ -47,10 +47,14 @@ from osm_addr_tools_spark.operators.prefix_sum import global_row_number
 from osm_addr_tools_spark.operators.quality import hashed_score
 from osm_addr_tools_spark.operators.sampling import feistel_shuffle_key
 
+# Tokens per training pack: training_manifest packs to it and
+# materialize_packed_examples cuts each pack's token stream at it.
+PACK_CAPACITY = 128
+
 # pack_uid = bucket_cap * _PACK_UID_STRIDE + pack_id must be injective and
-# stay inside the Feistel domain [0, 2^62): bucket_cap ≤ capacity ≤ 2^17
-# and pack_id < 2^44 give uid < 2^61. 2^44 pack ids per bucket ≈ 1.7e13
-# packs — above the 10^12-doc design scale.
+# stay inside the Feistel domain [0, 2^62): bucket_cap ≤ PACK_CAPACITY
+# ≤ 2^17 and pack_id < 2^44 give uid < 2^61. 2^44 pack ids per bucket ≈
+# 1.7e13 packs — above the 10^12-doc design scale.
 _PACK_UID_STRIDE = 1 << 44
 
 
@@ -59,17 +63,14 @@ def training_manifest(
     benchmark: DataFrame,
     merges: list[tuple[str, str]],
     *,
-    dedup_threshold: float = 0.5,
-    contam_n: int = 5,
     quality_dim: int = 1 << 16,
-    capacity: int = 256,
-    min_bucket: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """(id, n_tok_bpe, bucket_cap, truncated, pack_id, slot, pack_pos)
-    for every document that survives the full preprocessing pipeline —
-    the table a training run reads.
+    """(doc_id, n_tok_bpe, bucket_cap, truncated, pack_id, slot, pack_pos)
+    for every (doc_id, text) document that survives the full
+    preprocessing pipeline — the table a training run reads. Near-dups
+    are MinHash pairs at estimated Jaccard ≥ 0.5, contamination is a
+    shared token 5-gram, and packs hold ``PACK_CAPACITY`` tokens in
+    length buckets of 16 and up.
 
     ``merges`` is the learned BPE merge list (learn_bpe_from_df on the
     full corpus — the tokenizer is fixed corpus-wide, not per-subset).
@@ -77,38 +78,31 @@ def training_manifest(
     deterministic training order (Feistel permutation over pack uids —
     stable across runs, layouts and parallelism).
     """
-    if capacity > (1 << 17):
-        raise ValueError("capacity too large for the pack-uid encoding")
-
     # 1. near-dup retention: keep each component's min-id representative
     # cache_sigs deliberately left off here (r8 measurement): the CC
     # edge-persist immediately downstream already materializes the pair
     # plan once, so the signature cache's extra round-trip measured a
     # wash-to-slightly-worse (best 9.32 s vs 9.16 s), unlike the
     # standalone pair queries where it wins.
-    pairs = minhash_lsh_pairs(
-        docs, threshold=dedup_threshold, id_col=id_col, text_col=text_col
-    )
+    pairs = minhash_lsh_pairs(docs)
     comp = connected_components(pairs.select("a", "b"))
     drops = comp.where(F.col("v") != F.col("component")).select(
-        F.col("v").alias(id_col)
+        F.col("v").alias("doc_id")
     )
-    retained = docs.join(drops, id_col, "left_anti")
+    retained = docs.join(drops, "doc_id", "left_anti")
 
     # 2. decontamination: drop survivors sharing any token n-gram with
     #    the benchmark set (worklist → ids-only anti-join)
-    hits = ngram_overlap(
-        retained, benchmark, n=contam_n, id_col=id_col, text_col=text_col
-    )
-    clean = retained.join(hits.select(id_col), id_col, "left_anti")
+    hits = ngram_overlap(retained, benchmark)
+    clean = retained.join(hits.select("doc_id"), "doc_id", "left_anti")
 
     # 3. quality gate: hashed linear classifier, keep = score >= 0
     kept_ids = (
-        hashed_score(clean, id_col=id_col, text_col=text_col, dim=quality_dim)
+        hashed_score(clean, dim=quality_dim)
         .where(F.col("keep"))
-        .select(id_col)
+        .select("doc_id")
     )
-    kept = clean.join(kept_ids, id_col, "left_semi")
+    kept = clean.join(kept_ids, "doc_id", "left_semi")
 
     # 4. tokenizer-true token counts (Arrow-batched BPE). localCheckpoint
     # truncates the lineage here: everything downstream (the packing
@@ -119,16 +113,12 @@ def training_manifest(
     # The checkpointed payload is (id, n_tok) ONLY — 16 bytes/row, the
     # table a production pipeline would materialize at this point anyway.
     counted = kept.select(
-        id_col, bpe_token_count_col(merges, text_col).alias("n_tok_bpe")
+        "doc_id", bpe_token_count_col(merges).alias("n_tok_bpe")
     ).localCheckpoint()
 
     # 5. length-bucketed packing on the BPE counts
     packed = pack_by_length_bucket(
-        counted,
-        id_col=id_col,
-        n_tok_col="n_tok_bpe",
-        capacity=capacity,
-        min_bucket=min_bucket,
+        counted, n_tok_col="n_tok_bpe", capacity=PACK_CAPACITY, min_bucket=16
     )
 
     # 6. deterministic pack shuffle: Feistel key over injective pack uids,
@@ -158,7 +148,7 @@ def training_manifest(
         "bucket_cap", "pack_id", F.col("pack_pos").cast("long").alias("pack_pos")
     )
     return packed.join(pos, ["bucket_cap", "pack_id"]).select(
-        id_col,
+        "doc_id",
         "n_tok_bpe",
         "bucket_cap",
         "truncated",
@@ -172,39 +162,34 @@ def materialize_packed_examples(
     docs: DataFrame,
     manifest: DataFrame,
     merges: list[tuple[str, str]],
-    capacity: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Turn a ``training_manifest`` into the terminal artifact a trainer
     reads: one row per PACK — (bucket_cap, pack_id, pack_pos,
     token_ids: array<int>, n_tok, doc_ids: array) — where token_ids is
     the members' BPE id streams concatenated in slot order, CUT at
-    ``capacity`` (pass the same value the manifest was built with). For
-    non-truncated packs the cut is a no-op: Σ member n_tok ≤ capacity by
-    the packing construction (each member ≤ bucket_cap, members per pack
-    = capacity // bucket_cap). An over-long doc (manifest ``truncated``)
+    ``PACK_CAPACITY`` (the capacity the manifest packed to). For
+    non-truncated packs the cut is a no-op: Σ member n_tok ≤ PACK_CAPACITY
+    by the packing construction (each member ≤ bucket_cap, members per
+    pack = PACK_CAPACITY // bucket_cap). An over-long doc (manifest ``truncated``)
     is alone in its pack; the cut realizes its truncation.
 
     Scale shape: ONE equi-join of the manifest against the encoded docs
     on the id (ids + token arrays only — text never shuffles), then one
     groupBy per pack with sort_array(struct(slot, ...)) reassembly —
-    per-group payload is bounded by capacity tokens (plus at most one
+    per-group payload is bounded by PACK_CAPACITY tokens (plus at most one
     over-long member's tail), so collect_list here is bounded data, not
     a skew hazard."""
-    ids = docs.select(
-        id_col, bpe_encode_ids_col(merges, text_col).alias("_ids")
-    )
+    ids = docs.select("doc_id", bpe_encode_ids_col(merges).alias("_ids"))
     joined = manifest.select(
-        id_col, "bucket_cap", "pack_id", "pack_pos", "slot", "n_tok_bpe"
-    ).join(ids, id_col)
+        "doc_id", "bucket_cap", "pack_id", "pack_pos", "slot", "n_tok_bpe"
+    ).join(ids, "doc_id")
     slot_struct = F.struct(
-        F.col("slot"), F.col(id_col).alias("_id"),
+        F.col("slot"), F.col("doc_id").alias("_id"),
         F.col("_ids"), F.col("n_tok_bpe"),
     )
     per_slot = F.array_sort(F.collect_list(slot_struct))
     stream = F.slice(
-        F.flatten(F.expr("transform(_m, x -> x._ids)")), 1, capacity
+        F.flatten(F.expr("transform(_m, x -> x._ids)")), 1, PACK_CAPACITY
     )
     return (
         joined.groupBy("bucket_cap", "pack_id", "pack_pos")
@@ -216,7 +201,7 @@ def materialize_packed_examples(
             stream.alias("token_ids"),
             F.least(
                 F.expr("aggregate(_m, 0L, (a, x) -> a + x.n_tok_bpe)"),
-                F.lit(capacity).cast("long"),
+                F.lit(PACK_CAPACITY).cast("long"),
             ).alias("n_tok"),
             F.expr("transform(_m, x -> x._id)").alias("doc_ids"),
         )

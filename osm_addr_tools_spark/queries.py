@@ -1158,7 +1158,7 @@ def docs_winnow_partial_dups(spark, sf_dir):
         .select("doc_id", F.explode(T.winnow_fingerprints_udf()("text")).alias("_w"))
         .select("doc_id", F.col("_w.fp").alias("fp"))
     )
-    return winnow_partial_dups(fps, threshold=0.5, stop_fp_df=_WINNOW_STOP_FP_DF)
+    return winnow_partial_dups(fps, stop_fp_df=_WINNOW_STOP_FP_DF)
 
 
 ORACLES["docs_winnow_partial_dups"] = _winnow_partial_dup_oracle_sql()
@@ -1195,9 +1195,9 @@ def docs_split_assign(spark, sf_dir):
     tests/test_sampling.py. Implementation: operators.sampling.split_assign."""
     from osm_addr_tools_spark.operators.sampling import split_assign
 
-    return split_assign(
-        load(spark, sf_dir, "documents").select("doc_id"), id_col="doc_id"
-    ).select("doc_id", "bucket", "split")
+    return split_assign(load(spark, sf_dir, "documents").select("doc_id")).select(
+        "doc_id", "bucket", "split"
+    )
 
 
 @q(
@@ -1230,7 +1230,6 @@ def docs_stratified_sample(spark, sf_dir):
         strata_col="lang",
         rates={"en": 0.2},
         default_rate=0.6,
-        id_col="doc_id",
     )
 
 
@@ -1477,7 +1476,7 @@ def docs_boilerplate_removal(spark, sf_dir):
         ).otherwise(""),
     )
     corpus = d.select("doc_id", t.alias("text"))
-    return remove_boilerplate_lines(corpus, min_docs=3)
+    return remove_boilerplate_lines(corpus)
 
 
 @q(
@@ -1539,7 +1538,6 @@ def docs_pack_assign(spark, sf_dir):
     n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     return pack_by_length_bucket(
         corpus.select("doc_id", n_tok.alias("n_tok")),
-        id_col="doc_id",
         n_tok_col="n_tok",
         capacity=128,
         min_bucket=8,
@@ -1612,7 +1610,6 @@ def docs_decontaminate(spark, sf_dir):
     return ngram_overlap(
         corpus.where(F.col("doc_id") % 97 != 0),
         corpus.where(F.col("doc_id") % 97 == 0),
-        n=5,
     )
 
 
@@ -1917,7 +1914,6 @@ def docs_source_cap(spark, sf_dir):
 
     return source_cap(
         load(spark, sf_dir, "documents").select("doc_id", "source"),
-        source_col="source",
         cap=10,
     )
 
@@ -2217,16 +2213,15 @@ def docs_bpe_token_stats(spark, sf_dir):
     gating policy; the Spark side is gated end to end (word-count agg,
     truncation order, Arrow batching, UDF schema)."""
     from osm_addr_tools_spark.functions.tokenize import (
-        bpe_token_count,
+        bpe_token_count_col,
         learn_bpe_from_df,
     )
-    from osm_addr_tools_spark.oracle_support import BPE_MAX_VOCAB, BPE_N_MERGES
+    from osm_addr_tools_spark.oracle_support import BPE_N_MERGES
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    merges = learn_bpe_from_df(
-        docs, n_merges=BPE_N_MERGES, max_vocab=BPE_MAX_VOCAB
-    )
-    return bpe_token_count(docs, merges).select(
+    merges = learn_bpe_from_df(docs, n_merges=BPE_N_MERGES)
+    counted = docs.withColumn("n_tok_bpe", bpe_token_count_col(merges))
+    return counted.select(
         "doc_id",
         F.size(F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
         .cast("long")
@@ -2470,9 +2465,7 @@ def _minhash_oracle_sql(threshold: float = 0.5, sig_where: str = "TRUE") -> str:
 def dedup_minhash_lsh(spark, sf_dir):
     from osm_addr_tools_spark.operators.dedup import minhash_lsh_pairs
 
-    return minhash_lsh_pairs(
-        _docs_with_planted(spark, sf_dir), threshold=0.5, cache_sigs=True
-    )
+    return minhash_lsh_pairs(_docs_with_planted(spark, sf_dir), cache_sigs=True)
 
 
 ORACLES["dedup_minhash_lsh"] = _minhash_oracle_sql()
@@ -2513,7 +2506,7 @@ def dedup_minhash_components(spark, sf_dir):
     )
 
     pairs = minhash_lsh_pairs(
-        _docs_with_planted(spark, sf_dir), threshold=0.5, cache_sigs=True
+        _docs_with_planted(spark, sf_dir), cache_sigs=True
     )
     return connected_components(pairs.select("a", "b")).select(
         F.col("v").alias("doc_id"), "component"
@@ -2551,7 +2544,7 @@ def docs_dedup_retention(spark, sf_dir):
     )
 
     docs = _docs_with_planted(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, threshold=0.5, cache_sigs=True)
+    pairs = minhash_lsh_pairs(docs, cache_sigs=True)
     comp = connected_components(pairs.select("a", "b"))
     drops = comp.where(F.col("v") != F.col("component")).select(
         F.col("v").alias("doc_id")
@@ -2714,7 +2707,7 @@ def docs_training_manifest(spark, sf_dir):
     corpus); quality keeps score ≥ 0 (about half). Implementation:
     plans/training.py training_manifest."""
     from osm_addr_tools_spark.functions.tokenize import learn_bpe_from_df
-    from osm_addr_tools_spark.oracle_support import BPE_MAX_VOCAB, BPE_N_MERGES
+    from osm_addr_tools_spark.oracle_support import BPE_N_MERGES
     from osm_addr_tools_spark.plans.training import training_manifest
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2728,16 +2721,12 @@ def docs_training_manifest(spark, sf_dir):
     # tokenizer learned once on the BASE corpus (fixed corpus-wide; the
     # materialized oracle twin bpe_counts.parquet is built from the same
     # table through the same kernels)
-    merges = learn_bpe_from_df(d, n_merges=BPE_N_MERGES, max_vocab=BPE_MAX_VOCAB)
+    merges = learn_bpe_from_df(d, n_merges=BPE_N_MERGES)
     return training_manifest(
         d.unionByName(exact),
         bench,
         merges,
-        dedup_threshold=0.5,
-        contam_n=5,
         quality_dim=_CLS_DIM,
-        capacity=128,
-        min_bucket=16,
     )
 
 
@@ -2923,7 +2912,7 @@ def emb_ann_lsh_top3(spark, sf_dir):
     cv = e.where(F.col("vec_id") % 50 != 0).select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb")
     )
-    return lsh_ann_topk(qv, cv, k=3, dim=64, n_planes=6, n_probes=4).select(
+    return lsh_ann_topk(qv, cv, k=3, dim=64).select(
         "vec_id", "cand_id"
     )
 
@@ -2959,7 +2948,7 @@ def emb_ann_ivf_top3(spark, sf_dir):
     cv = e.where(F.col("vec_id") % 50 != 0).select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb")
     )
-    return ivf_ann_topk(spark, qv, cv, k=3, n_centroids=16, n_probe=3).select(
+    return ivf_ann_topk(spark, qv, cv, k=3, n_centroids=16).select(
         "vec_id", "cand_id"
     )
 
@@ -3036,10 +3025,7 @@ def emb_dedup_retention(spark, sf_dir):
         F.transform("embedding", lambda x: x * F.lit(0.5)).alias("embedding"),
     )
     corpus = e.unionByName(p1).unionByName(p2)
-    pairs = lsh_semantic_pairs(
-        corpus, threshold=0.9, dim=64, n_planes=_OS.SEM_N_PLANES,
-        bands=_OS.SEM_BANDS, seed=_OS.SEM_SEED,
-    )
+    pairs = lsh_semantic_pairs(corpus, threshold=0.9, dim=64)
     comp = connected_components(pairs.select("a", "b"))
     drops = comp.where(F.col("v") != F.col("component")).select(
         F.col("v").alias("vec_id")
@@ -3140,7 +3126,7 @@ def media_decode_features(spark, sf_dir):
     n = S.synth_n_pages(sf_dir)
     media = M.synth_media(spark, n)
     dec = M.decode_media(media)
-    feats = M.media_features(media, dim=16)
+    feats = M.media_features(media)
     return dec.join(feats, "media_id").select(
         "media_id", "kind", "width", "height", "n_frames",
         F.round(F.element_at("feature", 1).cast("double"), 6).alias("f0"),

@@ -277,16 +277,14 @@ def dedup_one_batch(
     index_path: str,
     ledger_path: str,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> dict:
-    """One micro-batch of the incremental dedup stream — module-level so
+    """One micro-batch of the incremental dedup stream over (doc_id, text)
+    documents — module-level so
     the crash-replay contract is directly testable (re-invoking with the
     same batch_id must rewrite byte-identical ledger and index
     partitions). Returns ``{"rows", "kept"}`` ledger counts (computed
     from the single post-write read that already feeds the kept-join, so
-    callers never re-scan the partition). The ledger, the kept-join and
-    the appended index rows all use ``id_col`` / ``text_col`` (ADVICE r6).
+    callers never re-scan the partition).
     See incremental_dedup_stream for the full contract."""
     from osm_addr_tools_spark.operators.dedup import (
         build_minhash_index,
@@ -324,12 +322,10 @@ def dedup_one_batch(
         # batch as 'kept' (an at-scale disaster, not a fallback)
         if "PATH_NOT_FOUND" not in str(e):
             raise
-        idx = build_minhash_index(batch_df.limit(0), id_col, text_col)
+        idx = build_minhash_index(batch_df.limit(0))
     batch_df = batch_df.persist()  # signature subtree feeds 3 stages
     try:
-        ledger = incremental_minhash_dedup(
-            batch_df, idx, threshold=threshold, id_col=id_col, text_col=text_col
-        )
+        ledger = incremental_minhash_dedup(batch_df, idx, threshold=threshold)
         ledger.write.mode("overwrite").parquet(
             f"{ledger_path}/batch_id={batch_id}"
         )
@@ -338,17 +334,11 @@ def dedup_one_batch(
             F.count(F.lit(1)).alias("rows"),
             F.sum((F.col("status") == "kept").cast("long")).alias("kept"),
         ).first()
-        kept = led.where(F.col("status") == "kept").select(
-            F.col("doc_id").alias(id_col)
-        )
-        # the appended signatures are built by the SAME construction,
-        # keyed by the SAME id column, as the batch signatures the
-        # ledger was computed from
-        build_minhash_index(
-            batch_df.join(kept, id_col), id_col, text_col
-        ).write.mode("overwrite").parquet(
-            f"{index_path}/batch_id={batch_id}"
-        )
+        kept = led.where(F.col("status") == "kept").select("doc_id")
+        # the appended signatures are built by the SAME construction as
+        # the batch signatures the ledger was computed from
+        index_rows = build_minhash_index(batch_df.join(kept, "doc_id"))
+        index_rows.write.mode("overwrite").parquet(f"{index_path}/batch_id={batch_id}")
     finally:
         batch_df.unpersist()
     return {"rows": int(agg["rows"]), "kept": int(agg["kept"] or 0)}

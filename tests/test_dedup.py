@@ -66,7 +66,7 @@ def test_ngram_jaccard_is_exact(spark, docs_with_planted):
 
 
 def test_minhash_lsh_recall_on_planted(spark, docs_with_planted):
-    pairs = D.minhash_lsh_pairs(docs_with_planted, threshold=0.5).toPandas()
+    pairs = D.minhash_lsh_pairs(docs_with_planted).toPandas()
     found = set(zip(pairs.a, pairs.b))
     near_pairs = [
         (r.doc_id - 1_000_000, r.doc_id)
@@ -141,7 +141,7 @@ def test_ann_bruteforce_finds_planted(spark, emb):
 def test_ann_lsh_recall_on_planted(spark, emb):
     q, c = emb
     approx = SIM.lsh_ann_topk(
-        q.select("vec_id", "q_emb"), c, k=5, dim=64, n_planes=6, n_probes=4
+        q.select("vec_id", "q_emb"), c, k=5, dim=64
     ).toPandas()
     r = _planted_recall(approx, q.select("vec_id", "true_nn").toPandas())
     assert r >= 0.8, r
@@ -150,7 +150,7 @@ def test_ann_lsh_recall_on_planted(spark, emb):
 def test_ann_ivf_recall_on_planted(spark, emb):
     q, c = emb
     approx = SIM.ivf_ann_topk(
-        spark, q.select("vec_id", "q_emb"), c, k=5, n_centroids=8, n_probe=3, sample=500
+        spark, q.select("vec_id", "q_emb"), c, k=5, n_centroids=8, sample=500
     ).toPandas()
     r = _planted_recall(approx, q.select("vec_id", "true_nn").toPandas())
     assert r >= 0.9, r
@@ -260,7 +260,7 @@ def test_ngram_jaccard_counts_post_stopfilter(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = D.ngram_jaccard_pairs(docs, threshold=0.9, k=5, stop_shingle_df=3).toPandas()
+    pairs = D.ngram_jaccard_pairs(docs, threshold=0.9, stop_shingle_df=3).toPandas()
     got = {(r.a, r.b): r.jaccard for r in pairs.itertuples()}
     assert (1, 2) in got and abs(got[(1, 2)] - 1.0) < 1e-9
 
@@ -384,8 +384,8 @@ def test_winnow_partial_dups_stop_fp_cap(spark):
             rows.append((did, fp))
     fp = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "fp"]))
 
-    uncapped = D.winnow_partial_dups(fp, threshold=0.5).toPandas()
-    capped = D.winnow_partial_dups(fp, threshold=0.5, stop_fp_df=10).toPandas()
+    uncapped = D.winnow_partial_dups(fp).toPandas()
+    capped = D.winnow_partial_dups(fp, stop_fp_df=10).toPandas()
     # without the cap the shared boilerplate fps pair everything with
     # everything (k^2 wedge); with it only the true near-copy survives
     assert len(uncapped) > 100, len(uncapped)
@@ -581,7 +581,7 @@ def test_remove_boilerplate_lines_semantics(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r.doc_id: r.clean_text
-        for r in D.remove_boilerplate_lines(df, min_docs=3).collect()
+        for r in D.remove_boilerplate_lines(df).collect()
     }
     assert got == {
         1: "u1\nu2",
@@ -700,8 +700,8 @@ def test_minhash_lsh_pairs_cache_sigs_identical_and_released(spark, docs_with_pl
     by release_pinned."""
     release_pinned()  # start from no pinned frames
     key = lambda df: sorted(map(tuple, df.collect()))
-    plain = key(D.minhash_lsh_pairs(docs_with_planted, threshold=0.5))
-    cached = key(D.minhash_lsh_pairs(docs_with_planted, threshold=0.5, cache_sigs=True))
+    plain = key(D.minhash_lsh_pairs(docs_with_planted))
+    cached = key(D.minhash_lsh_pairs(docs_with_planted, cache_sigs=True))
     assert cached == plain and len(plain) > 0
     assert release_pinned() >= 1
 
@@ -747,7 +747,7 @@ def test_incremental_dedup_consistent_with_batch_family(spark):
     pairs = [
         (r.a, r.b)
         for r in D.minhash_lsh_pairs(
-            corpus.unionByName(batch), threshold=0.5
+            corpus.unionByName(batch)
         ).collect()
     ]
     corpus_ids = {r.doc_id for r in corpus.select("doc_id").collect()}
@@ -795,7 +795,7 @@ def test_remove_boilerplate_lines_blank_lines_structural(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r.doc_id: r.clean_text
-        for r in D.remove_boilerplate_lines(df, min_docs=3).collect()
+        for r in D.remove_boilerplate_lines(df).collect()
     }
     assert got == {
         1: "para one\n\npara two",

@@ -1,6 +1,8 @@
 """Operator-level join properties (SURVEY.md §5.4): salted ≡ unsalted,
 kNN exactness vs a naive cross-join, PIP exactness vs brute force."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -571,7 +573,11 @@ def test_ragged_holed_building_end_to_end(spark):
         [(1, 21.002, 52.2015), (2, 21.0005, 52.2005), (3, 21.006, 52.2015)],
         "pid long, lon double, lat double",
     ).select("pid", *(F.col(c).cast("decimal(10,6)").alias(c) for c in ("lon", "lat")))
-    got = pip_join(pts, polys, level=19).select("pid", "building_id").collect()
+    joined = pip_join(pts, polys, level=19)
+    # enc reads them as doubles: one cast at the UDF boundary
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"enc\(cast\(lon#\d+ as double\), cast\(lat#\d+ as double\)\)", plan)
+    got = joined.select("pid", "building_id").collect()
     assert sorted(map(tuple, got)) == [(2, 7)]
 
     tiles = run_tile_polygons(polys, level=19).collect()

@@ -22,8 +22,8 @@ def test_media_decode_roundtrip(spark):
 
 def test_media_features_shape_and_determinism(spark):
     media = M.synth_media(spark, 100)
-    f1 = M.media_features(media, dim=16).toPandas().sort_values("media_id")
-    f2 = M.media_features(media.repartition(7), dim=16).toPandas().sort_values("media_id")
+    f1 = M.media_features(media).toPandas().sort_values("media_id")
+    f2 = M.media_features(media.repartition(7)).toPandas().sort_values("media_id")
     assert all(len(v) == 16 for v in f1.feature)
     for a, b in zip(f1.feature, f2.feature):
         assert np.allclose(a, b)
@@ -33,7 +33,7 @@ def test_media_features_shape_and_determinism(spark):
 
 def test_frame_sample_generator_shape(spark):
     media = M.synth_media(spark, 90)
-    frames = M.frame_sample(media, every_n=10).toPandas()
+    frames = M.frame_sample(media).toPandas()
     videos = frames[frames.kind == "video"]
     stills = frames[frames.kind != "video"]
     assert (stills.frame_no == 0).all()
@@ -484,42 +484,6 @@ def test_incremental_dedup_batch_replay_idempotent(spark, tmp_path):
     # the replay: same batch, same batch_id, index already extended
     ST.dedup_one_batch(batch, 0, index_path, ledger_path)
     assert snapshot() == first
-
-
-def test_incremental_dedup_batch_custom_id_text_cols(spark, tmp_path):
-    """id_col/text_col overrides must flow through to the kept-join and
-    the index append (ADVICE r6): before the fix the append filtered the
-    overrides out and joined on a hard-coded 'doc_id', so a renamed id
-    column crashed or appended wrong columns."""
-    corpus = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog near the mill")],
-        "page_id long, body string",
-    )
-    batch = spark.createDataFrame(
-        [
-            (101, "the quick brown fox jumps over the lazy dog near the mill"),
-            (102, "novel payload alpha bravo charlie delta echo foxtrot golf"),
-        ],
-        "page_id long, body string",
-    )
-    from osm_addr_tools_spark.operators import dedup as D
-
-    index_path = str(tmp_path / "idx")
-    ledger_path = str(tmp_path / "led")
-    ST.seed_dedup_index(
-        D.build_minhash_index(corpus, id_col="page_id", text_col="body"),
-        index_path,
-    )
-    ST.dedup_one_batch(
-        batch, 0, index_path, ledger_path, id_col="page_id", text_col="body"
-    )
-    led = {
-        r.doc_id: r.status for r in spark.read.parquet(ledger_path).collect()
-    }
-    assert led == {101: "corpus_dup", 102: "kept"}
-    assert sorted(
-        r.doc_id for r in spark.read.parquet(index_path).collect()
-    ) == [1, 102]
 
 
 def test_ingest_batches_resumable(spark, tmp_path):

@@ -125,8 +125,8 @@ def test_decontaminate_joins_on_gram_no_nested_loop(spark):
 # run time: an upper bound on the evaluations that run. A count that
 # rises is a duplicated Python evaluation: Catalyst pushed a filter below
 # the projection that applies the UDF and evaluates it again there. The
-# UDFs fenced with asNondeterministic() are enc, both, sim, sh, bucket
-# and assign; each fence's comment names the shape here that rises
+# UDFs fenced with asNondeterministic() are enc, both, sim, sh, buckets
+# (in emb_ann_lsh_top3) and assign; each fence's comment names the shape here that rises
 # without it. Counts above 1 are the plans as they stand (two build sides,
 # unions, unpinned extraction), not a target. When a plan changes on
 # purpose, re-pin the new count and say why in the change description.
@@ -141,7 +141,7 @@ UDF_EVALS = {
         "pip": 1, "sim": 1,
     },
     "dedup_ngram_jaccard": {"sh": 8},
-    "emb_ann_lsh_top3": {"bucket": 2},
+    "emb_ann_lsh_top3": {"buckets": 2},
     "emb_ann_ivf_top3": {"assign": 2},
     "geo_building_supplier_overlap": {"both": 4, "isect": 1},
     "geo_customer_clusters edges": {"enc": 2, "ring": 1},

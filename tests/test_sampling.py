@@ -83,25 +83,12 @@ def test_split_assign_boundaries_and_large_ids(spark):
         assert out[i] == (b, want), i
 
 
-def test_split_assign_custom_splits_validated(spark):
-    df = spark.createDataFrame([(1,)], "doc_id long")
-    with pytest.raises(ValueError, match="last split bound"):
-        split_assign(df, splits=[("a", 500), ("b", 900)])
-    out = split_assign(
-        df, splits=[("a", 500), ("b", 900), ("c", 1000)]
-    ).collect()[0]
-    b = _py_bucket(1)
-    assert out.split == ("a" if b < 500 else "b" if b < 900 else "c")
-
-
 def test_stratified_sample_multi_stratum_rates(spark):
     n = 4000
     rows = [(i, ["en", "de", "fr", "xx"][i % 4]) for i in range(n)]
     df = spark.createDataFrame(rows, "doc_id long, lang string")
     rates = {"en": 0.1, "de": 0.5, "fr": 1.0}
-    out = stratified_sample(
-        df, "lang", rates, id_col="doc_id", default_rate=0.0
-    ).collect()
+    out = stratified_sample(df, "lang", rates, default_rate=0.0).collect()
     got = {(r.doc_id, r.lang) for r in out}
     want = set()
     for i, lang in rows:

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from osm_addr_tools_spark.functions.tokenize import (
     bpe_count_batch,
     bpe_encode,
-    bpe_token_count,
+    bpe_token_count_col,
     learn_bpe,
     learn_bpe_from_df,
     merges_to_ranks,
@@ -149,7 +149,8 @@ def test_bpe_spark_matches_pure_python(spark):
 
     ranks = merges_to_ranks(merges)
     got = {
-        r.doc_id: r.n_tok_bpe for r in bpe_token_count(df, merges).collect()
+        r.doc_id: r.n_tok_bpe
+        for r in df.withColumn("n_tok_bpe", bpe_token_count_col(merges)).collect()
     }
     want = {
         i: sum(len(bpe_encode(w, ranks)) for w in re.findall("[a-z0-9]+", t.lower()))

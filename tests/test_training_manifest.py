@@ -40,7 +40,7 @@ def manifest_inputs(spark):
 
 def _stagewise_survivors(corpus, bench):
     """The reference: run each stage operator independently, in order."""
-    pairs = minhash_lsh_pairs(corpus, threshold=0.5)
+    pairs = minhash_lsh_pairs(corpus)
     comp = connected_components(pairs.select("a", "b"))
     dropped = {
         r.v for r in comp.where(F.col("v") != F.col("component")).collect()
@@ -48,7 +48,7 @@ def _stagewise_survivors(corpus, bench):
     retained = corpus.where(~F.col("doc_id").isin(dropped) if dropped else F.lit(True))
     retained_ids = {r.doc_id for r in retained.select("doc_id").collect()}
     contaminated = {
-        r.doc_id for r in ngram_overlap(retained, bench, n=5).collect()
+        r.doc_id for r in ngram_overlap(retained, bench).collect()
     }
     kept = {
         r.doc_id
@@ -73,17 +73,13 @@ def test_pipeline_equals_stagewise_reference(spark, manifest_inputs):
     # classifier splits on score sign)
     assert dropped and contaminated and quality_dropped and survivors
 
-    out = training_manifest(
-        corpus, bench, merges, capacity=128, min_bucket=16
-    ).collect()
+    out = training_manifest(corpus, bench, merges).collect()
     assert {r.doc_id for r in out} == survivors
 
 
 def test_pack_and_shuffle_invariants(spark, manifest_inputs):
     corpus, bench, merges = manifest_inputs
-    rows = training_manifest(
-        corpus, bench, merges, capacity=128, min_bucket=16
-    ).collect()
+    rows = training_manifest(corpus, bench, merges).collect()
 
     # bucket_cap is the tightest power-of-two bucket; token sums fit
     for r in rows:
@@ -106,14 +102,11 @@ def test_pack_and_shuffle_invariants(spark, manifest_inputs):
 def test_manifest_deterministic_across_parallelism(spark, manifest_inputs):
     corpus, bench, merges = manifest_inputs
     a = sorted(
-        map(tuple, training_manifest(
-            corpus.repartition(2), bench, merges, capacity=128, min_bucket=16
-        ).collect())
+        map(tuple, training_manifest(corpus.repartition(2), bench, merges).collect())
     )
     b = sorted(
         map(tuple, training_manifest(
-            corpus.repartition(13), bench.repartition(3), merges,
-            capacity=128, min_bucket=16,
+            corpus.repartition(13), bench.repartition(3), merges
         ).collect())
     )
     assert a == b
@@ -121,23 +114,20 @@ def test_manifest_deterministic_across_parallelism(spark, manifest_inputs):
 
 def test_materialize_packed_examples(spark, manifest_inputs):
     """The terminal artifact: one row per pack, token_ids = members' BPE
-    streams concatenated in slot order, Σ n_tok ≤ capacity, every
+    streams concatenated in slot order, Σ n_tok ≤ PACK_CAPACITY, every
     manifest doc appears in exactly one pack, pack_pos carried through."""
     from osm_addr_tools_spark.functions.tokenize import (
         bpe_encode_ids_col,
     )
     from osm_addr_tools_spark.plans.training import (
+        PACK_CAPACITY,
         materialize_packed_examples,
     )
 
     corpus, bench, merges = manifest_inputs
-    manifest = training_manifest(
-        corpus, bench, merges, capacity=128, min_bucket=16
-    )
+    manifest = training_manifest(corpus, bench, merges)
     mrows = manifest.collect()
-    packs = materialize_packed_examples(
-        corpus, manifest, merges, capacity=128
-    ).collect()
+    packs = materialize_packed_examples(corpus, manifest, merges).collect()
 
     # per-doc streams for reference, from the same encoder
     streams = {
@@ -154,11 +144,11 @@ def test_materialize_packed_examples(spark, manifest_inputs):
     saw_truncated = False
     for p in packs:
         members = sorted(by_pack[(p.bucket_cap, p.pack_id)], key=lambda r: r.slot)
-        want_ids = [t for m in members for t in streams[m.doc_id]][:128]
+        want_ids = [t for m in members for t in streams[m.doc_id]][:PACK_CAPACITY]
         saw_truncated |= any(m.truncated for m in members)
         assert list(p.token_ids) == want_ids
-        assert p.n_tok == min(sum(m.n_tok_bpe for m in members), 128)
-        assert p.n_tok <= 128 and len(p.token_ids) == p.n_tok
+        assert p.n_tok == min(sum(m.n_tok_bpe for m in members), PACK_CAPACITY)
+        assert p.n_tok <= PACK_CAPACITY and len(p.token_ids) == p.n_tok
         assert list(p.doc_ids) == [m.doc_id for m in members]
         assert p.pack_pos == members[0].pack_pos
         seen_docs.extend(p.doc_ids)

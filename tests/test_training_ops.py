@@ -103,7 +103,7 @@ def test_ngram_overlap_planted(spark):
     )
     got = {
         r.doc_id: r.n_hit
-        for r in ngram_overlap(docs, bench, n=5, text_col="text").collect()
+        for r in ngram_overlap(docs, bench).collect()
     }
     assert got == {10: 2, 11: 1}
 
@@ -113,7 +113,7 @@ def test_ngram_overlap_tokenization_is_case_and_punct_insensitive(spark):
     docs = spark.createDataFrame(
         [(7, "prefix one, two three FOUR five suffix")], "doc_id long, text string"
     )
-    got = ngram_overlap(docs, bench, n=5).collect()
+    got = ngram_overlap(docs, bench).collect()
     assert [(r.doc_id, r.n_hit) for r in got] == [(7, 1)]
 
 
