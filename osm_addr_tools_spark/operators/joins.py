@@ -272,6 +272,42 @@ def salted_join(
 
 
 # ---------------------------------------------------------------------------
+# candidate pairs — the one key join of the pair families
+# ---------------------------------------------------------------------------
+
+
+def key_pairs(left: DataFrame, keys: list[str], right: DataFrame | None = None) -> DataFrame:
+    """Distinct ``(a, b)`` id pairs that share a value of ``keys``:
+    ``left`` and ``right`` are ``(id, *keys)`` frames (the id is the first
+    column), ``a`` comes from ``left`` and ``b`` from ``right``.
+    ``right=None`` self-joins ``left`` and keeps ``a < b``. The candidate
+    generator of the MinHash, SimHash, semantic-LSH and polygon-overlap
+    joins; each keys its own frame and verifies its own pairs.
+
+    Candidates travel light (VERDICT r2 #8): only ids and keys flow
+    through the key join and the pair dedup, because a pair sharing many
+    keys (bands, subset masks, cover cells) would otherwise drag its
+    payload (signatures, fingerprints, vectors, edge arrays) through every
+    duplicate. Callers re-join the payload by id once per side, for the
+    exact check only: two id-sized shuffles instead of payloads the size
+    of the duplicated pairs.
+
+    The key join carries a ``shuffle_hash`` hint on the right side: both
+    sides flow from UDF-heavy subtrees whose static size estimate is
+    unreliable, and a misestimated broadcast of a key-exploded table goes
+    through the driver; AQE still converts to broadcast from the real
+    post-shuffle size.
+    """
+    lhs = left.select(F.col(left.columns[0]).alias("a"), *keys)
+    other = left if right is None else right
+    rhs = other.select(F.col(other.columns[0]).alias("b"), *keys)
+    cand = lhs.join(rhs.hint("shuffle_hash"), keys)
+    if right is None:
+        cand = cand.where(F.col("a") < F.col("b"))
+    return cand.select("a", "b").dropDuplicates(["a", "b"])
+
+
+# ---------------------------------------------------------------------------
 # J4 — point-in-polygon containment join
 # ---------------------------------------------------------------------------
 
@@ -518,40 +554,33 @@ def polygon_join(
     left_id: str,
     right_id: str,
     level: int,
-    left_rings: str = "rings",
-    right_rings: str = "rings",
 ) -> DataFrame:
-    """Polygon-polygon intersection join (J9): (left_id, right_id) for
-    every pair whose polygons share interior — the exact strict-interior
-    decision of polygons_intersect_udf, so polygons that only touch
-    (shared walls, shared corners) never pair.
+    """Polygon-polygon intersection join (J9) over two frames with a
+    ``rings`` column: (left_id, right_id) for every pair whose polygons
+    share interior — the exact strict-interior decision of
+    polygons_intersect_udf, so polygons that only touch (shared walls,
+    shared corners) never pair.
 
-    Candidates: BOTH sides' C4 cover cells at ``level`` equi-joined — a
-    shared interior region touches ≥1 cell, and the cover contains every
-    cell the polygon touches, so that cell is in both covers ⇒ 100%
-    recall. Candidate pairs travel light as bare (left_id, right_id)
-    through the cell join and pair dedup; the flat edge arrays re-join by
-    id for the exact refine (the minhash r2 #8 payload treatment —
-    a polygon covering many cells would otherwise drag its edges through
-    every duplicate).
+    Candidates: ``key_pairs`` over BOTH sides' C4 cover cells at
+    ``level`` — a shared interior region touches ≥1 cell, and the cover
+    contains every cell the polygon touches, so that cell is in both
+    covers ⇒ 100% recall. The flat edge arrays re-join by id for the
+    exact refine.
     """
     ce = cover_and_edges_udf(level)
-    lpre = left.select(F.col(left_id).alias("_lid"), ce(F.col(left_rings)).alias("_ce"))
-    rpre = right.select(F.col(right_id).alias("_rid"), ce(F.col(right_rings)).alias("_ce"))
-    ledges = lpre.select("_lid", F.col("_ce.edges").alias("_le"))
-    redges = rpre.select("_rid", F.col("_ce.edges").alias("_re"))
-    lcov = lpre.select("_lid", F.explode("_ce.cover").alias("_cell"))
-    rcov = rpre.select("_rid", F.explode("_ce.cover").alias("_cell"))
-    cand = lcov.join(rcov.hint("shuffle_hash"), "_cell")
-    pairs = cand.select("_lid", "_rid").dropDuplicates(["_lid", "_rid"])
+    lpre = left.select(F.col(left_id).alias("a"), ce(F.col("rings")).alias("_ce"))
+    rpre = right.select(F.col(right_id).alias("b"), ce(F.col("rings")).alias("_ce"))
+    ledges = lpre.select("a", F.col("_ce.edges").alias("_le"))
+    redges = rpre.select("b", F.col("_ce.edges").alias("_re"))
+    lcov = lpre.select("a", F.explode("_ce.cover").alias("_cell"))
+    rcov = rpre.select("b", F.explode("_ce.cover").alias("_cell"))
     refined = (
-        pairs.join(ledges.hint("shuffle_hash"), "_lid")
-        .join(redges.hint("shuffle_hash"), "_rid")
+        key_pairs(lcov, ["_cell"], rcov)
+        .join(ledges.hint("shuffle_hash"), "a")
+        .join(redges.hint("shuffle_hash"), "b")
         .where(polygons_intersect_udf()(F.col("_le"), F.col("_re")))
     )
-    return refined.select(
-        F.col("_lid").alias(left_id), F.col("_rid").alias(right_id)
-    )
+    return refined.select(F.col("a").alias(left_id), F.col("b").alias(right_id))
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from osm_addr_tools_spark.operators.joins import key_pairs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -41,6 +43,20 @@ def cosine_col(a, b):
     return F.when(denom > 0, _dot(a, b) / denom)
 
 
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Cosine top-k ``(vec_id, cand_id, sim)`` per query over candidate
+    rows carrying ``q_emb`` and ``c_emb``; a candidate reached through
+    several buckets or lists counts once, ties break on cand_id."""
+    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cand_id"))
+    return (
+        pairs.withColumn("sim", cosine_col(F.col("q_emb"), F.col("c_emb")))
+        .dropDuplicates(["vec_id", "cand_id"])
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= k)
+        .select("vec_id", "cand_id", "sim")
+    )
+
+
 # hyperplane-LSH constants, shared with the DuckDB oracle
 # (oracle_support): the ANN top-k join probes ANN_N_PROBES buckets
 # (its own plus the hamming-1 flips) over ANN_N_PLANES planes; semantic
@@ -51,6 +67,12 @@ ANN_N_PROBES = 4
 SEM_N_PLANES = 8
 SEM_BANDS = 4
 SEM_SEED = 97
+# IVF constants, shared with the DuckDB oracle: the coarse quantizer
+# trains IVF_N_CENTROIDS centroids on the first IVF_SAMPLE candidates by
+# id, and each query probes its IVF_N_PROBE nearest lists
+IVF_N_CENTROIDS = 16
+IVF_N_PROBE = 3
+IVF_SAMPLE = 2000
 
 
 def lsh_ann_topk(
@@ -76,15 +98,7 @@ def lsh_ann_topk(
     )
     qb = qb.withColumn("_bucket", F.explode(flips))
     cb = candidates.withColumn("_bucket", bu(F.col("c_emb"))[0])
-    pairs = qb.join(cb, "_bucket")
-    pairs = pairs.withColumn("sim", cosine_col(F.col("q_emb"), F.col("c_emb")))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        pairs.dropDuplicates(["vec_id", "cand_id"])
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("vec_id", "cand_id", "sim")
-    )
+    return _top_k(qb.join(cb, "_bucket"), k)
 
 
 def hyperplane_bands_udf(dim: int, n_planes: int, bands: int, seed: int):
@@ -129,10 +143,9 @@ def lsh_semantic_pairs(
     Banded hyperplane LSH: ``SEM_BANDS`` independent plane sets; two
     vectors are candidates iff ALL ``SEM_N_PLANES`` sign bits agree in ≥1
     band (the cosine analog of MinHash banding — more bands raise recall,
-    more planes per band cut candidates). Scale shape mirrors simhash_pairs:
-    candidates travel as bare (band, bucket, id) through the equi-join,
-    embeddings REJOIN by id only for the exact cosine verify, and the
-    verify itself is JVM Column math (zip_with/aggregate).
+    more planes per band cut candidates). Candidates are ``key_pairs``
+    over (band, bucket); the exact cosine verify is JVM Column math
+    (zip_with/aggregate).
 
     Zero-norm vectors (ADVICE r5): every all-zero vector gets identical
     sign bits, so they'd all collide into ONE bucket in EVERY band —
@@ -158,14 +171,7 @@ def lsh_semantic_pairs(
     keyed = ids.select(
         "_id", F.posexplode(bu(F.col("_v"))).alias("_band", "_bucket")
     )
-    lhs = keyed.select(F.col("_id").alias("a"), "_band", "_bucket")
-    rhs = keyed.select(F.col("_id").alias("b"), "_band", "_bucket")
-    cand = lhs.join(rhs.hint("shuffle_hash"), ["_band", "_bucket"])
-    pairs = (
-        cand.where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
+    pairs = key_pairs(keyed, ["_band", "_bucket"])
     va = ids.select(F.col("_id").alias("a"), F.col("_v").alias("_va"))
     vb = ids.select(F.col("_id").alias("b"), F.col("_v").alias("_vb"))
     verified = (
@@ -216,14 +222,14 @@ def ivf_ann_topk(
     queries: DataFrame,
     candidates: DataFrame,
     k: int,
-    n_centroids: int = 16,
-    sample: int = 2000,
+    n_centroids: int = IVF_N_CENTROIDS,
+    sample: int = IVF_SAMPLE,
 ) -> DataFrame:
     """IVF over (vec_id, q_emb) queries and (cand_id, c_emb) candidates:
     train a coarse quantizer on a bounded candidate sample, assign
     candidates to their nearest centroid (1 list each), probe the query's
-    3 nearest lists — candidate generation is an equi-join on the
-    list id. The sample is the first ``sample`` candidates BY ID — a bare
+    ``IVF_N_PROBE`` nearest lists — candidate generation is an equi-join
+    on the list id. The sample is the first ``sample`` candidates BY ID — a bare
     ``limit`` picks partition-order rows, which is not reproducible across
     layouts; ordering makes the quantizer (and the oracle parity) a pure
     function of the data."""
@@ -233,15 +239,7 @@ def ivf_ann_topk(
     )
     cent = kmeans_centroids(samp, n_centroids)
     c_assign = centroid_assign_udf(cent, 1)
-    q_assign = centroid_assign_udf(cent, 3)
+    q_assign = centroid_assign_udf(cent, IVF_N_PROBE)
     cb = candidates.withColumn("_list", c_assign(F.col("c_emb"))[0])
     qb = queries.withColumn("_list", F.explode(q_assign(F.col("q_emb"))))
-    pairs = qb.join(cb, "_list")
-    pairs = pairs.withColumn("sim", cosine_col(F.col("q_emb"), F.col("c_emb")))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        pairs.dropDuplicates(["vec_id", "cand_id"])
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("vec_id", "cand_id", "sim")
-    )
+    return _top_k(qb.join(cb, "_list"), k)

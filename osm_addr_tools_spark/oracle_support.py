@@ -33,7 +33,8 @@ from osm_addr_tools_spark.functions import normalize as N
 from osm_addr_tools_spark.functions import text as T
 from osm_addr_tools_spark.functions.tokenize import BPE_MAX_VOCAB
 from osm_addr_tools_spark.operators.similarity import (
-    ANN_N_PLANES, ANN_N_PROBES, SEM_BANDS, SEM_N_PLANES, SEM_SEED,
+    ANN_N_PLANES, ANN_N_PROBES, IVF_N_CENTROIDS, IVF_N_PROBE, IVF_SAMPLE, SEM_BANDS,
+    SEM_N_PLANES, SEM_SEED,
 )
 from osm_addr_tools_spark.sources import synth as S
 
@@ -220,12 +221,12 @@ def _simhash_pdf(docs: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _shingles_pdf(docs: pd.DataFrame, k: int = 5, cap: int = 512) -> pd.DataFrame:
-    from osm_addr_tools_spark.operators.dedup import _shingle_hashes
+def _shingles_pdf(docs: pd.DataFrame) -> pd.DataFrame:
+    from osm_addr_tools_spark.operators.dedup import MAX_SHINGLES, SHINGLE_K, _shingle_hashes
 
     ids, gs = [], []
     for r in docs.itertuples():
-        h = np.sort(_shingle_hashes(r.text, k))[:cap].astype(np.int64)
+        h = np.sort(_shingle_hashes(r.text, SHINGLE_K))[:MAX_SHINGLES].astype(np.int64)
         ids.extend([int(r.doc_id)] * len(h))
         gs.extend(h.tolist())
     return pd.DataFrame({"doc_id": ids, "g": gs})
@@ -298,10 +299,9 @@ def _emb_bands(sf_dir: str) -> pd.DataFrame:
     return pd.concat(out, ignore_index=True)
 
 
-def _ivf_buckets(sf_dir: str, n_centroids: int = 16, n_probe: int = 3,
-                 sample: int = 2000) -> tuple[pd.DataFrame, pd.DataFrame]:
+def _ivf_buckets(sf_dir: str) -> tuple[pd.DataFrame, pd.DataFrame]:
     """IVF list assignments for the registered ANN-IVF query: the coarse
-    quantizer trains on the first ``sample`` candidates by id (the same
+    quantizer trains on the first ``IVF_SAMPLE`` candidates by id (the same
     deterministic sample operators.similarity.ivf_ann_topk collects) and
     the assignment math reuses the same NumPy kernel, so the SQL oracle
     gates the Spark-side distribution (join/rank), not the quantizer."""
@@ -316,18 +316,18 @@ def _ivf_buckets(sf_dir: str, n_centroids: int = 16, n_probe: int = 3,
     # float64: the engine's collect() yields float64 of the float32 values,
     # and kmeans means must accumulate in the same precision to converge to
     # bit-identical centroids
-    samp = mat[~is_q][cand_order][:sample].astype(np.float64)
-    cent = kmeans_centroids(samp, n_centroids)
+    samp = mat[~is_q][cand_order][:IVF_SAMPLE].astype(np.float64)
+    cent = kmeans_centroids(samp, IVF_N_CENTROIDS)
 
     def dists(m):
         return ((m.astype(np.float64)[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
 
     c_list = dists(mat[~is_q]).argsort(axis=1)[:, :1]
-    q_list = dists(mat[is_q]).argsort(axis=1)[:, :n_probe]
+    q_list = dists(mat[is_q]).argsort(axis=1)[:, :IVF_N_PROBE]
     cb = pd.DataFrame({"cand_id": vid[~is_q], "list": c_list[:, 0].astype(np.int32)})
     qb = pd.DataFrame(
         {
-            "vec_id": np.repeat(vid[is_q], n_probe),
+            "vec_id": np.repeat(vid[is_q], IVF_N_PROBE),
             "list": q_list.ravel().astype(np.int32),
         }
     )

@@ -875,8 +875,10 @@ def geo_customer_clusters(spark, sf_dir):
         k=None,
         ring_r=3,
     )
-    edges = pairs.where(F.col("a_key") < F.col("b_key")).select("a_key", "b_key")
-    return connected_components(edges, src="a_key", dst="b_key").select(
+    edges = pairs.where(F.col("a_key") < F.col("b_key")).select(
+        F.col("a_key").alias("a"), F.col("b_key").alias("b")
+    )
+    return connected_components(edges).select(
         F.col("v").alias("c_custkey"), F.col("component").alias("cluster")
     )
 
@@ -1016,8 +1018,10 @@ def _quality_oracle_sql() -> str:
 ORACLES["docs_quality_ascii"] = _quality_oracle_sql()
 
 
-def _winnow_oracle_sql(k: int = 8, w: int = 16,
-                       docs_sql: str = "SELECT doc_id, text FROM documents") -> str:
+from osm_addr_tools_spark.functions.text import _WINNOW_K, _WINNOW_W
+
+
+def _winnow_oracle_sql(docs_sql: str = "SELECT doc_id, text FROM documents") -> str:
     """Independent SQL winnowing: the polynomial rolling hash is
     recomputed per gram with HUGEINT arithmetic (ascii() bytes × literal
     base powers, mod 2^64), window minima via a ROWS frame over FULL
@@ -1025,6 +1029,7 @@ def _winnow_oracle_sql(k: int = 8, w: int = 16,
     tie via max(i) among in-window grams matching the window min. The
     engine runs the vectorized numpy kernel — nothing is shared but the
     (k, w, base) spec constants."""
+    k, w = _WINNOW_K, _WINNOW_W
     terms = " + ".join(
         f"CAST(ascii(substr(text, i + {j}, 1)) AS HUGEINT) * {257 ** (k - 1 - j)}"
         for j in range(k)
@@ -1103,9 +1108,9 @@ _WINNOW_DOCS_SQL = f"""{_PLANTED_DOCS_SQL}
 _WINNOW_STOP_FP_DF = 20
 
 
-def _winnow_partial_dup_oracle_sql(threshold: float = 0.5) -> str:
+def _winnow_partial_dup_oracle_sql() -> str:
     """Partial-duplicate pairs from the winnow fingerprints: containment =
-    |shared fp| / min(|fp_a|, |fp_b|) ≥ threshold, fp sets distinct per
+    |shared fp| / min(|fp_a|, |fp_b|) ≥ 0.5, fp sets distinct per
     doc, fingerprints in more than ``_WINNOW_STOP_FP_DF`` docs dropped
     first (boilerplate cap — per-doc counts taken AFTER the drop so the
     containment stays exact over the post-filter sets). Reuses the
@@ -1124,7 +1129,7 @@ def _winnow_partial_dup_oracle_sql(threshold: float = 0.5) -> str:
     SELECT a, b, CAST(n_shared AS BIGINT) AS n_shared,
            round(CAST(n_shared AS DOUBLE) / least(ca.nf, cb.nf), 6) AS containment
     FROM shared JOIN cnt ca ON ca.doc_id = a JOIN cnt cb ON cb.doc_id = b
-    WHERE CAST(n_shared AS DOUBLE) / least(ca.nf, cb.nf) >= {threshold}
+    WHERE CAST(n_shared AS DOUBLE) / least(ca.nf, cb.nf) >= 0.5
     """
 
 
@@ -2441,7 +2446,7 @@ def _minhash_sql_terms() -> tuple[str, str]:
     return band_eq, agree
 
 
-def _minhash_oracle_sql(threshold: float = 0.5, sig_where: str = "TRUE") -> str:
+def _minhash_oracle_sql(sig_where: str = "TRUE") -> str:
     """Banding candidate generation + agreement verify over the
     materialized signatures (_minhash_sql_terms). ``sig_where``
     restricts the corpus (pair generation commutes with per-doc
@@ -2457,7 +2462,7 @@ def _minhash_oracle_sql(threshold: float = 0.5, sig_where: str = "TRUE") -> str:
       JOIN (SELECT * FROM read_parquet('{ODIR}/minhash_sigs.parquet')
             WHERE {sig_where}) y
         ON x.doc_id < y.doc_id AND ({band_eq})
-    ) WHERE agree / {NUM_PERM}.0 >= {threshold}
+    ) WHERE agree / {NUM_PERM}.0 >= 0.5
     """
 
 
@@ -2764,7 +2769,7 @@ def _docs_incremental(spark, sf_dir):
     return d, batch
 
 
-def _incremental_oracle_sql(threshold: float = 0.5) -> str:
+def _incremental_oracle_sql() -> str:
     """Incremental gate over the materialized (corpus ∪ batch) signatures:
     banding candidates + agreement verify vs the corpus slice, then a
     recursive-CTE closure among batch survivors with min-id
@@ -2778,14 +2783,14 @@ def _incremental_oracle_sql(threshold: float = 0.5) -> str:
       SELECT DISTINCT a FROM (
         SELECT x.doc_id AS a, ({agree}) AS agree
         FROM batch x JOIN corpus y ON ({band_eq})
-      ) WHERE agree / {NUM_PERM}.0 >= {threshold}
+      ) WHERE agree / {NUM_PERM}.0 >= 0.5
     ),
     surv AS (SELECT * FROM batch WHERE doc_id NOT IN (SELECT a FROM chit)),
     pairs AS (
       SELECT a, b FROM (
         SELECT x.doc_id AS a, y.doc_id AS b, ({agree}) AS agree
         FROM surv x JOIN surv y ON x.doc_id < y.doc_id AND ({band_eq})
-      ) WHERE agree / {NUM_PERM}.0 >= {threshold}
+      ) WHERE agree / {NUM_PERM}.0 >= 0.5
     ),
     edges AS (
       SELECT a AS u, b AS v FROM pairs
@@ -2948,7 +2953,7 @@ def emb_ann_ivf_top3(spark, sf_dir):
     cv = e.where(F.col("vec_id") % 50 != 0).select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb")
     )
-    return ivf_ann_topk(spark, qv, cv, k=3, n_centroids=16).select(
+    return ivf_ann_topk(spark, qv, cv, k=3).select(
         "vec_id", "cand_id"
     )
 
@@ -3079,13 +3084,15 @@ def docs_lang_id(spark, sf_dir):
 ORACLES["docs_lang_id"] = _lang_id_oracle_sql()
 
 
-def _media_oracle_sql(n: int = 200) -> str:
+def _media_oracle_sql() -> str:
     """Pure-arithmetic replication of synth_media + fake decode + byte-
     histogram features: the blob is an 11-byte header (magic 'SYNM' +
     little-endian kind/w/h/frames, all < 256 here so high bytes are 0)
     followed by (arange(w*h) + i%251) mod 256 payload bytes; f0 =
     hist[0]/||hist|| over byte%16 counts, quantized to float32 (REAL)
-    exactly as the numpy UDF does before rounding."""
+    exactly as the numpy UDF does before rounding. One row per page of the
+    oracle scale (``S.synth_n_pages``)."""
+    n = S.synth_n_pages(_OS.ORACLE_SF_DIR)
     return f"""
     WITH ids AS (SELECT CAST(t.i AS BIGINT) AS i FROM range({n}) t(i)),
     dims AS (
@@ -3135,7 +3142,7 @@ def media_decode_features(spark, sf_dir):
 
 # row count derived from the SAME function the Spark side evaluates at
 # the driver's correctness scale, not baked (ADVICE r2 #2)
-ORACLES["media_decode_features"] = _media_oracle_sql(S.synth_n_pages(_OS.ORACLE_SF_DIR))
+ORACLES["media_decode_features"] = _media_oracle_sql()
 
 
 # --- engine pipelines --------------------------------------------------------

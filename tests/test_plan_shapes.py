@@ -141,11 +141,16 @@ UDF_EVALS = {
         "pip": 1, "sim": 1,
     },
     "dedup_ngram_jaccard": {"sh": 8},
+    "dedup_minhash_lsh": {"mh": 3},
+    "dedup_simhash": {"sim": 3},
     "emb_ann_lsh_top3": {"buckets": 2},
     "emb_ann_ivf_top3": {"assign": 2},
     "geo_building_supplier_overlap": {"both": 4, "isect": 1},
     "geo_customer_clusters edges": {"enc": 2, "ring": 1},
     "emb_dedup_retention edges": {"buckets": 2},
+    "dedup_minhash_components edges": {"mh": 3},
+    "docs_dedup_retention edges": {"mh": 3},
+    "docs_incremental_dedup edges": {"mh": 12},
     "run_conflate unsalted": {
         "x1": 5, "x2": 5, "norm": 1, "enc": 3, "ring": 1, "both": 1,
         "pip": 1, "sim": 1,
@@ -228,8 +233,9 @@ def test_python_udf_evaluation_counts(spark, monkeypatch):
         for name in UDF_EVALS
         if name in Q.QUERIES
     }
-    shapes["geo_customer_clusters edges"] = lambda: cc_edges("geo_customer_clusters")
-    shapes["emb_dedup_retention edges"] = lambda: cc_edges("emb_dedup_retention")
+    for name in UDF_EVALS:
+        if name.endswith(" edges"):
+            shapes[name] = lambda name=name: cc_edges(name.removesuffix(" edges"))
     shapes["run_conflate unsalted"] = lambda: conflate(False)
     shapes["run_conflate salted"] = lambda: conflate(True)
 
