@@ -1,6 +1,7 @@
 """Distributed prefix sum — running aggregate ordered by a global key
-(VERDICT r4 #1; generalizes the two-pass shape sources/osm_sink.py uses
-for dense negative-id assignment).
+(VERDICT r4 #1). One two-pass core (``_prefix``) serves ``running_sum``,
+``global_row_number``, ``grouped_row_number`` and sources/osm_sink.py's
+dense negative ids (which bucket by hash instead of by key range).
 
 ``Window.orderBy(key)`` with NO ``partitionBy`` routes the ENTIRE input
 through one WindowExec task — the canonical Spark scale-killer (an empty
@@ -12,12 +13,14 @@ shape implemented here:
    non-decreasing in the key), via a pure Column expression;
 2. one hash aggregate computes each bucket's partial sum;
 3. collect the ≤ ``num_buckets`` partials — bounded METADATA, not data
-   (the same bounded-collect contract as osm_sink.py's id buckets and
-   manifest.py's partition keys);
+   (the same bounded-collect contract as manifest.py's partition keys);
 4. prefix-sum the partials on the driver, broadcast the per-bucket
    cumulative offsets back;
 5. run the running-sum window PER BUCKET (bounded window partitions) and
    add the bucket's offset.
+
+Null order keys, null groups and null values raise ValueError (found in
+the partials pass): none has a per-bucket form of the global window.
 
 Monotone bucketing is a deterministic EXPRESSION — uniform range buckets
 over [min, max] of the key (one min/max aggregate; parquet footer stats
@@ -109,6 +112,76 @@ def _resolve_bucket(df: DataFrame, order_col: str, num_buckets, boundaries):
     return F.when(key.isNotNull(), bucket)
 
 
+def _prefix(b: DataFrame, order_cols, value, out_col: str, groups, max_groups: int) -> DataFrame:
+    """The two-pass core every caller shares: ``b`` + ``out_col`` =
+    inclusive running SUM of the ``value`` Column per ``groups`` tuple,
+    rows ordered by (``_psb``, *``order_cols``). ``b`` already carries the
+    bucket column ``_psb`` — monotone in the order key for a global order
+    (``_resolve_bucket``), or any deterministic function of the row when a
+    dense order per bucket suffices (osm_sink's hash buckets).
+
+    One hash aggregate of per-(bucket, *groups) partial sums, collected —
+    ≤ buckets × ``max_groups`` tiny rows, metadata not data; the driver
+    runs each group's total in bucket order; the offsets go back as one
+    broadcast join and are added to a ROWS window per (bucket, *groups).
+    Null buckets (null order keys), null groups and null values raise:
+    none has a per-bucket decomposition of the global window. A caller
+    without groups passes ``[]`` and ``max_groups`` 1 (the one empty
+    group)."""
+    field = b.select(value).schema[0]
+    integral = isinstance(field.dataType, _INTEGRAL)
+    sum_type = "long" if integral else "double"
+    keys = ["_psb", *groups]
+    partials = (
+        b.groupBy(*keys)
+        .agg(F.sum(value).cast(sum_type).alias("_n"), F.count_if(value.isNull()).alias("_nulls"))
+        .collect()  # bounded: ≤ buckets × max_groups tiny rows (metadata, not data)
+    )
+    if any(r._psb is None for r in partials):
+        raise ValueError(
+            f"prefix_sum: order key {order_cols[0]!r} contains nulls — "
+            "a global NULLS FIRST order cannot be decomposed per-bucket; "
+            "filter or impute null keys upstream"
+        )
+    for g in groups:
+        if any(r[g] is None for r in partials):
+            raise ValueError(
+                f"prefix_sum: group column {g!r} contains nulls — "
+                "make null-group semantics explicit upstream (filter or impute)"
+            )
+    if any(r._nulls for r in partials):
+        raise ValueError(
+            f"prefix_sum: value {field.name!r} contains nulls — a running "
+            "total has no per-bucket form across them; filter or impute "
+            "null values upstream"
+        )
+    totals: dict = {}
+    offsets = []
+    for r in sorted(partials, key=lambda r: r._psb):
+        g = tuple(r[c] for c in groups)
+        offsets.append((r._psb, *g, totals.get(g, 0 if integral else 0.0)))
+        totals[g] = offsets[-1][-1] + r._n
+    if len(totals) > max_groups:
+        raise ValueError(
+            f"prefix_sum: {len(totals)} distinct groups exceeds "
+            f"max_groups={max_groups} — the per-(bucket, group) partials "
+            "collect is only bounded for low-cardinality groups; use a "
+            "plain per-group window for high-cardinality groups"
+        )
+    schema = ", ".join(f"{c} {b.schema[c].dataType.simpleString()}" for c in keys)
+    off = b.sparkSession.createDataFrame(offsets, f"{schema}, _psoff {sum_type}")
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        b.join(F.broadcast(off), keys)
+        .withColumn(out_col, (F.col("_psoff") + F.sum(value).over(w)).cast(sum_type))
+        .drop("_psb", "_psoff")
+    )
+
+
 def running_sum(
     df: DataFrame,
     order_cols,
@@ -128,7 +201,10 @@ def running_sum(
     sorts nulls globally (NULLS FIRST), which no per-bucket decomposition
     on a null key can reproduce, so null keys raise ValueError instead of
     silently dropping rows or misplacing offsets (ADVICE r5). The check is
-    free — null keys surface as a null bucket in the partials pass.
+    free — null keys surface as a null bucket in the partials pass. Null
+    VALUES raise too (counted in the same pass): the global window carries
+    its total across them, a per-bucket window sum reads null until the
+    bucket's first non-null value.
 
     ``boundaries``: explicit ascending cut points, compared against the
     key's double view (timestamps as epoch seconds); None buckets
@@ -141,43 +217,8 @@ def running_sum(
     """
     if isinstance(order_cols, str):
         order_cols = [order_cols]
-    spark = df.sparkSession
-
-    integral = isinstance(df.schema[value_col].dataType, _INTEGRAL)
-    sum_type = "long" if integral else "double"
-
     bucket = _resolve_bucket(df, order_cols[0], num_buckets, boundaries)
-
-    b = df.withColumn("_psb", bucket)
-    partials = (
-        b.groupBy("_psb")
-        .agg(F.sum(value_col).cast(sum_type).alias("_n"))
-        .collect()  # bounded: ≤ num_buckets tiny rows (metadata, not data)
-    )
-    if any(r._psb is None for r in partials):
-        raise ValueError(
-            f"running_sum: order key {order_cols[0]!r} contains nulls — "
-            "a global NULLS FIRST order cannot be decomposed per-bucket; "
-            "filter or impute null keys upstream"
-        )
-    acc = 0 if integral else 0.0
-    offsets = []
-    for r in sorted(partials, key=lambda r: r._psb):
-        offsets.append((r._psb, acc))
-        acc += r._n if r._n is not None else (0 if integral else 0.0)
-    if not offsets:
-        return df.withColumn(out_col, F.col(value_col).cast(sum_type))
-    off = spark.createDataFrame(offsets, f"_psb int, _psoff {sum_type}")
-    w = (
-        Window.partitionBy("_psb")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        b.join(F.broadcast(off), "_psb")
-        .withColumn(out_col, (F.col("_psoff") + F.sum(value_col).over(w)).cast(sum_type))
-        .drop("_psb", "_psoff")
-    )
+    return _prefix(df.withColumn("_psb", bucket), order_cols, F.col(value_col), out_col, [], 1)
 
 
 def global_row_number(
@@ -214,13 +255,11 @@ def grouped_row_number(
     the plain window shuffles each entire group through ONE task, so a
     12-bucket corpus runs on 12 tasks no matter how many executors exist.
 
-    Same two-pass shape as ``running_sum``, with the partials keyed on
-    (bucket, group): monotone bucket on the order key → one hash aggregate
-    of per-(bucket, group) counts → bounded collect (≤ num_buckets ×
-    |groups| tiny rows — metadata, not data) → driver prefix-sums each
-    group's counts across buckets → broadcast offsets → row_number per
-    (bucket, group) window partition + the group's offset. Every stage
-    runs at full parallelism; window partitions are bucket-bounded.
+    The running sum of 1 with the partials keyed on (bucket, group):
+    monotone bucket on the order key → per-(bucket, group) counts → each
+    group's counts prefix-summed across buckets on the driver → broadcast
+    offsets → per-(bucket, group) window. Every stage runs at full
+    parallelism; window partitions are bucket-bounded.
 
     Contract: ``group_col`` must be LOW-cardinality — more than
     ``max_groups`` distinct values raises (the bounded-collect contract;
@@ -232,49 +271,7 @@ def grouped_row_number(
     explicit upstream."""
     if isinstance(order_cols, str):
         order_cols = [order_cols]
-    spark = df.sparkSession
-
     bucket = _resolve_bucket(df, order_cols[0], num_buckets, None)
-    b = df.withColumn("_psb", bucket)
-    partials = (
-        b.groupBy("_psb", group_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()  # bounded: ≤ num_buckets × max_groups tiny rows
-    )
-    if any(r._psb is None for r in partials):
-        raise ValueError(
-            f"grouped_row_number: order key {order_cols[0]!r} contains nulls — "
-            "a global NULLS FIRST order cannot be decomposed per-bucket; "
-            "filter or impute null keys upstream"
-        )
-    if any(r[group_col] is None for r in partials):
-        raise ValueError(
-            f"grouped_row_number: group column {group_col!r} contains nulls — "
-            "make null-group semantics explicit upstream (filter or impute)"
-        )
-    groups = {r[group_col] for r in partials}
-    if len(groups) > max_groups:
-        raise ValueError(
-            f"grouped_row_number: {len(groups)} distinct groups exceeds "
-            f"max_groups={max_groups} — the per-(bucket, group) partials "
-            "collect is only bounded for low-cardinality groups; use a "
-            "plain per-group window for high-cardinality groups"
-        )
-    if not partials:
-        return df.withColumn(out_col, F.lit(1).cast("long"))
-    acc: dict = {g: 0 for g in groups}
-    offsets = []
-    for r in sorted(partials, key=lambda r: r._psb):
-        g = r[group_col]
-        offsets.append((r._psb, g, acc[g]))
-        acc[g] += r._n
-    gtype = df.schema[group_col].dataType.simpleString()
-    off = spark.createDataFrame(
-        offsets, f"_psb int, {group_col} {gtype}, _psoff long"
-    )
-    w = Window.partitionBy("_psb", group_col).orderBy(*order_cols)
-    return (
-        b.join(F.broadcast(off), ["_psb", group_col])
-        .withColumn(out_col, (F.col("_psoff") + F.row_number().over(w)).cast("long"))
-        .drop("_psb", "_psoff")
+    return _prefix(
+        df.withColumn("_psb", bucket), order_cols, F.lit(1), out_col, [group_col], max_groups
     )

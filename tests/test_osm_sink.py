@@ -93,3 +93,21 @@ def test_negative_ids_dense_and_deterministic(spark, matches):
         ).select("new_id").collect()
     )
     assert ids == ids2
+
+
+def test_negative_ids_follow_hash_bucket_order(spark, matches):
+    """new_id is exactly -(row number) in the (hash bucket, addr_key, url)
+    order _with_negative_ids promises, not only dense and deterministic."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from osm_addr_tools_spark.sources.osm_sink import N_ID_BUCKETS, _with_negative_ids
+
+    df = matches.where(F.col("match_kind") != "duplicate")
+    bucket = F.pmod(F.xxhash64("addr_key", "url"), F.lit(N_ID_BUCKETS))
+    want = df.withColumn(
+        "new_id", -F.row_number().over(Window.orderBy(bucket, "addr_key", "url"))
+    )
+    cols = ["addr_key", "url", "new_id"]
+    got = sorted(map(tuple, _with_negative_ids(df).select(cols).collect()))
+    assert got and got == sorted(map(tuple, want.select(cols).collect()))

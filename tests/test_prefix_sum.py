@@ -1,7 +1,7 @@
 """operators.prefix_sum — the distributed running sum must be OUTPUT-
 IDENTICAL to the single-partition global window it replaces (VERDICT r4
-#1), and the registered token-shard query must not contain any window
-with an empty partition spec."""
+#1), and no registered query that calls it may contain a window with an
+empty partition spec."""
 
 import pandas as pd
 import pytest
@@ -77,18 +77,30 @@ def test_running_sum_empty_and_single_bucket(spark):
     assert running_sum(one, "k", "v", out_col="r").collect()[0].r == 3
 
 
-def test_token_shards_query_has_no_global_window(spark):
+@pytest.mark.parametrize(
+    "query",
+    [
+        "docs_token_shards",
+        "docs_example_ids",
+        "docs_shuffle_order",
+        "docs_source_cap",
+        "docs_pack_assign",
+        "docs_training_manifest",
+    ],
+)
+def test_token_shards_query_has_no_global_window(spark, query):
     import re
 
     from osm_addr_tools_spark import queries as Q
 
-    df = Q.QUERIES["docs_token_shards"](spark, SF_DIR)
-    # every window spec in the analyzed plan must carry the bucket column
-    # as its partition head — an empty partition spec would be the
-    # all-rows-to-one-task WindowExec r4 shipped
+    df = Q.QUERIES[query](spark, SF_DIR)
+    # every window spec in the analyzed plan of each prefix-sum caller
+    # must carry the bucket column as its partition head — an empty
+    # partition spec would be the all-rows-to-one-task WindowExec r4
+    # shipped
     analyzed = df._jdf.queryExecution().analyzed().toString()
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", analyzed)
-    assert specs, "expected a (partitioned) window in the token-shard plan"
+    assert specs, f"expected a (partitioned) window in the {query} plan"
     for inner in specs:
         assert "_psb" in inner, f"global (unpartitioned) window in plan: {inner}"
 
@@ -161,6 +173,18 @@ def test_running_sum_null_order_key_raises(spark):
     all_null = spark.createDataFrame([(None, 1), (None, 2)], "k long, v long")
     with pytest.raises(ValueError, match="null"):
         running_sum(all_null, "k", "v", out_col="r", num_buckets=8)
+
+
+def test_running_sum_null_values_raise(spark):
+    """A per-bucket window sum stays null until the bucket's first
+    non-null value, where the global window carries the running total
+    across nulls — so null values must raise, never come back as null
+    running totals."""
+    df = spark.createDataFrame(
+        [(k, None if 40 <= k < 60 else 1) for k in range(100)], "k long, v long"
+    )
+    with pytest.raises(ValueError, match="value 'v' contains nulls"):
+        running_sum(df, "k", "v", out_col="r", num_buckets=10).collect()
 
 
 def test_grouped_row_number_equals_partitioned_window(spark):
