@@ -15,13 +15,12 @@ Layout
 ------
 functions/   pure NumPy/pandas kernels + pandas-UDF wrappers (cells, normalize,
              text extraction, sketches, geo math)
-sources/     readers/writers (pages parquet|iceberg binding, synthetic
-             deterministic generators, manifest sink)
+sources/     pages reader (parquet|iceberg binding) and the synthetic
+             deterministic generators
 operators/   DataFrame-level composite operators (cell joins, salted skew
              joins, PIP containment, kNN, dedup family, ANN similarity)
 plans/       end-to-end entry points EP1 extract / EP2 conflate / EP3 tile,
              checkpoint-manifest resume
-streaming/   Structured Streaming ingest (optional phase, SURVEY §2.10)
 """
 
 __version__ = "0.1.0"

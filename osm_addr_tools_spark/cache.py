@@ -9,8 +9,7 @@ collected (bench.py does after every timed run). Without the release a
 |docs|-sized cache stays in storage memory for the rest of the session.
 
 Persists released in a try/finally inside their own function (the
-connected-components edge table, the streaming micro-batch) do not come
-through here.
+connected-components edge table) do not come through here.
 """
 
 from __future__ import annotations

@@ -205,68 +205,3 @@ def bpe_token_count_col(merges: list[tuple[str, str]]) -> Column:
         return bpe_count_batch(text, ranks)
 
     return _count(F.col("text"))
-
-
-# --- token-ID encoding (the stream a trainer actually reads) ---------------
-
-_BASE_ALPHABET = list("abcdefghijklmnopqrstuvwxyz0123456789")
-
-
-def bpe_vocab(merges: list[tuple[str, str]]) -> list[str]:
-    """Deterministic id→symbol table: the [a-z0-9] base alphabet, the
-    end-of-word marker, then each merged symbol in merge order. Every
-    symbol bpe_encode can emit is in here (tokens are TOKEN_RE runs, so
-    characters never leave the base alphabet; merges only concatenate),
-    and the table is a pure function of the merges — two processes with
-    the same merges assign the same ids."""
-    return _BASE_ALPHABET + [_EOW] + [a + b for a, b in merges]
-
-
-def bpe_encode_ids_batch(
-    text: pd.Series,
-    ranks: dict[tuple[str, str], int],
-    sym_ids: dict[str, int],
-) -> pd.Series:
-    """Per-document token-ID sequences over an Arrow batch — the same
-    distinct-word cache as bpe_count_batch, emitting the concatenated id
-    stream instead of its length."""
-    import re
-
-    word_re = re.compile(TOKEN_RE)
-    docs_words = [word_re.findall((t or "").lower()) for t in text]
-    cache: dict[str, list[int]] = {}
-    out = []
-    for ws in docs_words:
-        ids: list[int] = []
-        for w in ws:
-            if w not in cache:
-                cache[w] = [sym_ids[s] for s in bpe_encode(w, ranks)]
-            ids.extend(cache[w])
-        out.append(ids)
-    return pd.Series(out)
-
-
-def bpe_encode_ids_col(merges: list[tuple[str, str]]) -> Column:
-    """Arrow-batched Column: ``array<int>`` token ids of ``text``
-    under the merges' deterministic vocab (bpe_vocab). len(ids) equals
-    bpe_token_count_col's count by construction — packing/chunking
-    coordinates computed on counts address THIS stream."""
-    ranks = merges_to_ranks(merges)
-    sym_ids = {s: i for i, s in enumerate(bpe_vocab(merges))}
-
-    @F.pandas_udf("array<int>")
-    def _ids(text: pd.Series) -> pd.Series:
-        return bpe_encode_ids_batch(text, ranks, sym_ids)
-
-    return _ids(F.col("text"))
-
-
-def bpe_decode_ids(ids: list[int], vocab: list[str]) -> str:
-    """Pure-Python inverse: id stream → normalized text (lowercase
-    TOKEN_RE tokens joined by single spaces — the canonical form the
-    encoder tokenized). Roundtrip property pinned in tests."""
-    return (
-        "".join(vocab[i] for i in ids)
-        .replace(_EOW, " ")
-        .strip()
-    )

@@ -188,6 +188,8 @@ SHINGLE_K = 5
 MAX_SHINGLES = 512  # shingle_udf's per-doc cap (n-gram Jaccard row width)
 NUM_PERM = 64
 BANDS = 16
+# estimated-Jaccard cut of every MinHash pair; the oracle SQL imports it
+MINHASH_THRESHOLD = 0.5
 _ROWS_PER_BAND = NUM_PERM // BANDS
 _SEEDS = _mix64(np.arange(1, NUM_PERM + 1, dtype=np.uint64) + np.uint64(42))
 
@@ -228,10 +230,9 @@ def build_minhash_index(df: DataFrame) -> DataFrame:
     and it is the PERSISTED state an incremental dedup pipeline carries
     between crawls: at 100 TB nobody re-deduplicates the whole corpus
     when a new crawl arrives — the corpus signatures are computed ONCE,
-    written to columnar storage (ideally via sources.io.write_bucketed —
-    see incremental_minhash_dedup), and each increment joins against
-    them. After an increment, append the kept batch docs' rows to the
-    index (same construction ⇒ same banding)."""
+    written to columnar storage (see incremental_minhash_dedup), and each
+    increment joins against them. After an increment, append the kept
+    batch docs' rows to the index (same construction ⇒ same banding)."""
     return df.select("doc_id", minhash_udf()(F.col("text")).alias("sig"))
 
 
@@ -254,13 +255,13 @@ def _band_buckets(sig: DataFrame) -> DataFrame:
     )
 
 
-def _lsh_pairs(sig: DataFrame, other: DataFrame | None, threshold: float) -> DataFrame:
+def _lsh_pairs(sig: DataFrame, other: DataFrame | None) -> DataFrame:
     """The one band-join-and-verify kernel: ``(a, b, est_jaccard)`` for
     every ``a`` in ``sig`` and ``b`` in ``other`` (both ``(doc_id, sig)``
     tables) sharing a (band, bucket) AND with estimated Jaccard — the
     fraction of agreeing signature positions, one zip_with/aggregate
-    Column expression, no Python — ≥ threshold. ``other=None`` self-joins
-    ``sig`` with a < b. Candidates are ``key_pairs`` over the
+    Column expression, no Python — ≥ ``MINHASH_THRESHOLD``. ``other=None``
+    self-joins ``sig`` with a < b. Candidates are ``key_pairs`` over the
     (band, bucket) band tables."""
     rhs = None if other is None else _band_buckets(other)
     cand = key_pairs(_band_buckets(sig), ["band", "bucket"], rhs)
@@ -274,15 +275,15 @@ def _lsh_pairs(sig: DataFrame, other: DataFrame | None, threshold: float) -> Dat
         cand.join(sig.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a")), "a")
         .join(other.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b")), "b")
         .withColumn("est_jaccard", agree / F.lit(NUM_PERM))
-        .where(F.col("est_jaccard") >= threshold)
+        .where(F.col("est_jaccard") >= MINHASH_THRESHOLD)
         .select("a", "b", F.round("est_jaccard", 6).alias("est_jaccard"))
     )
 
 
 def minhash_lsh_pairs(df: DataFrame, cache_sigs: bool = False) -> DataFrame:
     """Near-duplicate pairs via MinHash banding (a < b, estimated Jaccard
-    ≥ 0.5): ``_lsh_pairs`` over the ``build_minhash_index`` signatures of
-    ``df``.
+    ≥ ``MINHASH_THRESHOLD``): ``_lsh_pairs`` over the
+    ``build_minhash_index`` signatures of ``df``.
 
     ``cache_sigs``: persist the signature table once instead of letting
     the band table and the two verify rejoins race to recompute the
@@ -294,7 +295,7 @@ def minhash_lsh_pairs(df: DataFrame, cache_sigs: bool = False) -> DataFrame:
     sig = build_minhash_index(df)
     if cache_sigs:
         sig = pin(sig)
-    return _lsh_pairs(sig, None, 0.5)
+    return _lsh_pairs(sig, None)
 
 
 # ---------------------------------------------------------------------------
@@ -302,12 +303,7 @@ def minhash_lsh_pairs(df: DataFrame, cache_sigs: bool = False) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def incremental_minhash_dedup(
-    batch_df: DataFrame,
-    index_df: DataFrame,
-    threshold: float = 0.5,
-    cache_sigs: bool = False,
-) -> DataFrame:
+def incremental_minhash_dedup(batch_df: DataFrame, index_df: DataFrame) -> DataFrame:
     """Ingest-time near-dup gate for a NEW (doc_id, text) batch against an
     EXISTING corpus index — the incremental form of the dedup_minhash_lsh → retention
     pipeline, for the production reality that crawls arrive continuously
@@ -315,38 +311,33 @@ def incremental_minhash_dedup(
 
     Returns one row per batch doc: ``(doc_id, status)`` with status ∈
     {'corpus_dup', 'batch_dup', 'kept'} — the ingest ledger. 'corpus_dup':
-    ≥1 index doc shares a band bucket AND estimated Jaccard ≥ threshold.
-    'batch_dup': not a corpus dup, but a near-dup of a SMALLER-id batch
-    survivor's component (connected components over within-batch pairs,
-    representative = min id — the same retention policy as
-    docs_dedup_retention). 'kept': everything else; kept docs' signatures
-    are what build_minhash_index appends to the corpus state.
+    ≥1 index doc shares a band bucket AND estimated Jaccard ≥
+    ``MINHASH_THRESHOLD``. 'batch_dup': not a corpus dup, but a near-dup
+    of a SMALLER-id batch survivor's component (connected components over
+    within-batch pairs, representative = min id — the same retention
+    policy as docs_dedup_retention). 'kept': everything else; kept docs'
+    signatures are what build_minhash_index appends to the corpus state.
 
     Scale shape: the corpus index never re-shuffles per crawl if stored
-    bucketed on (band, bucket) (sources.io.write_bucketed) — the candidate
-    join is then Exchange-free on the index side; a daily increment is ≪
-    corpus, so AQE can broadcast the batch band table from its real size.
+    bucketed on (band, bucket) — the candidate join is then Exchange-free
+    on the index side; a daily increment is ≪ corpus, so AQE can
+    broadcast the batch band table from its real size.
     Within-batch stages shuffle only batch-sized tables. The batch
     signature subtree feeds ~6 plan branches (band tables, both verify
-    joins, the survivor anti-join) — ``cache_sigs=True`` pins it once
-    (osm_addr_tools_spark.cache; release it with release_pinned()).
-    Default stays off for API stability, but the r8 measurement flipped
-    the small-scale trade: with the leaner CC driver loop the single
-    materialization beats the ~6-branch racing recompute (best 6.1 s vs
-    8.1 s at sf0.1), so callers should pass True (the registered query
-    does). At web scale it is strictly right, or better: the
-    index-append step already writes the batch signatures to columnar
-    storage — compute them FIRST as their own stage and feed that
-    table in.
+    joins, the survivor anti-join), so it is pinned once
+    (osm_addr_tools_spark.cache; release it with release_pinned()): with
+    the leaner CC driver loop the single materialization beats the
+    ~6-branch racing recompute (r8: best 6.1 s vs 8.1 s at sf0.1). At web
+    scale the index-append step already writes the batch signatures to
+    columnar storage — compute them FIRST as their own stage and feed
+    that table in.
     """
-    bsig = build_minhash_index(batch_df)
-    if cache_sigs:
-        bsig = pin(bsig)
-    corpus_hits = _lsh_pairs(bsig, index_df, threshold).select("a").distinct()
+    bsig = pin(build_minhash_index(batch_df))
+    corpus_hits = _lsh_pairs(bsig, index_df).select("a").distinct()
     surv = bsig.join(
         corpus_hits.withColumnRenamed("a", "doc_id"), "doc_id", "left_anti"
     )
-    labels = connected_components(_lsh_pairs(surv, None, threshold).select("a", "b"))
+    labels = connected_components(_lsh_pairs(surv, None).select("a", "b"))
 
     return (
         batch_df.select("doc_id")

@@ -1,6 +1,6 @@
 """Multimodal column plumbing (driver mandate): image/audio/video as opaque
-``binary`` columns with typed metadata; decode / feature-extract / resize /
-frame-sample as Arrow-batched UDFs over ``mapInPandas``.
+``binary`` columns with typed metadata; decode / feature-extract as Arrow-batched
+UDFs over ``mapInPandas``.
 
 The Spark-side plumbing — schema, partitioning, UDF signatures, batch
 shapes — is real and tested. The codec step is a deterministic fake
@@ -106,28 +106,3 @@ def media_features(df: DataFrame) -> DataFrame:
             yield pd.DataFrame({"media_id": b["media_id"], "feature": out})
 
     return df.mapInPandas(feat, schema="media_id long, feature array<float>")
-
-
-def frame_sample(df: DataFrame) -> DataFrame:
-    """Frame sampling for video rows: one output row per 10th frame
-    (generator shape: one row → many). Non-video rows pass through with
-    frame_no = 0."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, kinds, frames = [], [], []
-            for mid, kind, blob in zip(b["media_id"], b["kind"], b["bytes"]):
-                p = _parse_header(blob)
-                n = p[3] if p else 1
-                if kind == "video":
-                    for f in range(0, n, 10):
-                        ids.append(mid)
-                        kinds.append(kind)
-                        frames.append(f)
-                else:
-                    ids.append(mid)
-                    kinds.append(kind)
-                    frames.append(0)
-            yield pd.DataFrame({"media_id": ids, "kind": kinds, "frame_no": frames})
-
-    return df.mapInPandas(sample, schema="media_id long, kind string, frame_no int")

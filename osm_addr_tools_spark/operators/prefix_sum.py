@@ -1,7 +1,6 @@
 """Distributed prefix sum — running aggregate ordered by a global key
 (VERDICT r4 #1). One two-pass core (``_prefix``) serves ``running_sum``,
-``global_row_number``, ``grouped_row_number`` and sources/osm_sink.py's
-dense negative ids (which bucket by hash instead of by key range).
+``global_row_number`` and ``grouped_row_number``.
 
 ``Window.orderBy(key)`` with NO ``partitionBy`` routes the ENTIRE input
 through one WindowExec task — the canonical Spark scale-killer (an empty
@@ -116,9 +115,7 @@ def _prefix(b: DataFrame, order_cols, value, out_col: str, groups, max_groups: i
     """The two-pass core every caller shares: ``b`` + ``out_col`` =
     inclusive running SUM of the ``value`` Column per ``groups`` tuple,
     rows ordered by (``_psb``, *``order_cols``). ``b`` already carries the
-    bucket column ``_psb`` — monotone in the order key for a global order
-    (``_resolve_bucket``), or any deterministic function of the row when a
-    dense order per bucket suffices (osm_sink's hash buckets).
+    bucket column ``_psb``, monotone in the order key (``_resolve_bucket``).
 
     One hash aggregate of per-(bucket, *groups) partial sums, collected —
     ≤ buckets × ``max_groups`` tiny rows, metadata not data; the driver

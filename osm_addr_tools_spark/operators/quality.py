@@ -40,7 +40,7 @@ from osm_addr_tools_spark.operators.sampling import FIB_MULT, _MOD32
 W_SCALE = 500  # weights live in [-W_SCALE, W_SCALE]
 MAX_TOKEN_LEN = 10_000  # probe-length cap: bounds probe*FIB_MULT « 2^63
 
-# PII scan patterns (queries.docs_pii_scan + streaming filter-at-ingest):
+# PII scan patterns (queries.docs_pii_scan):
 # only syntax Java regex and RE2 interpret identically — explicit classes,
 # bounded repeats, no lookaround, no \b
 EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
@@ -72,19 +72,6 @@ def weight_expr(bucket: Column) -> Column:
     )
 
 
-def score_cols(text_col: str, dim: int) -> tuple[Column, Column]:
-    """(n_tok, score_num) Column pair for a text column — the classifier
-    core as composable expressions (used by hashed_score and the
-    streaming filter-at-ingest stage, which must keep other columns)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    score_num = F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc + weight_expr(bucket_expr(t, dim)),
-    )
-    return F.size(toks).cast("long"), score_num
-
-
 def hashed_score(df: DataFrame, dim: int = 1 << 20) -> DataFrame:
     """Score every (doc_id, text) document with the hashed linear
     classifier — pure Column path (see module doc). Output: (doc_id,
@@ -93,10 +80,15 @@ def hashed_score(df: DataFrame, dim: int = 1 << 20) -> DataFrame:
     hash-gate anchor), score = score_num / (n_tok * W_SCALE) ∈ [-1, 1]
     is a single division, and keep = score ≥ 0 (a trained threshold
     replaces 0 in production)."""
-    n_tok, score_num = score_cols("text", dim)
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    score_num = F.aggregate(
+        toks,
+        F.lit(0).cast("long"),
+        lambda acc, t: acc + weight_expr(bucket_expr(t, dim)),
+    )
     d = df.select(
         F.col("doc_id"),
-        n_tok.alias("n_tok"),
+        F.size(toks).cast("long").alias("n_tok"),
         score_num.alias("score_num"),
     )
     score = F.col("score_num") / (F.col("n_tok") * F.lit(float(W_SCALE)))

@@ -33,10 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_addr_tools_spark.functions.tokenize import (
-    bpe_encode_ids_col,
-    bpe_token_count_col,
-)
+from osm_addr_tools_spark.functions.tokenize import bpe_token_count_col
 from osm_addr_tools_spark.operators.decontam import ngram_overlap
 from osm_addr_tools_spark.operators.dedup import (
     connected_components,
@@ -47,8 +44,7 @@ from osm_addr_tools_spark.operators.prefix_sum import global_row_number
 from osm_addr_tools_spark.operators.quality import hashed_score
 from osm_addr_tools_spark.operators.sampling import feistel_shuffle_key
 
-# Tokens per training pack: training_manifest packs to it and
-# materialize_packed_examples cuts each pack's token stream at it.
+# Tokens per training pack: the one capacity training_manifest packs to.
 PACK_CAPACITY = 128
 
 # pack_uid = bucket_cap * _PACK_UID_STRIDE + pack_id must be injective and
@@ -155,54 +151,4 @@ def training_manifest(
         "pack_id",
         "slot",
         "pack_pos",
-    )
-
-
-def materialize_packed_examples(
-    docs: DataFrame,
-    manifest: DataFrame,
-    merges: list[tuple[str, str]],
-) -> DataFrame:
-    """Turn a ``training_manifest`` into the terminal artifact a trainer
-    reads: one row per PACK — (bucket_cap, pack_id, pack_pos,
-    token_ids: array<int>, n_tok, doc_ids: array) — where token_ids is
-    the members' BPE id streams concatenated in slot order, CUT at
-    ``PACK_CAPACITY`` (the capacity the manifest packed to). For
-    non-truncated packs the cut is a no-op: Σ member n_tok ≤ PACK_CAPACITY
-    by the packing construction (each member ≤ bucket_cap, members per
-    pack = PACK_CAPACITY // bucket_cap). An over-long doc (manifest ``truncated``)
-    is alone in its pack; the cut realizes its truncation.
-
-    Scale shape: ONE equi-join of the manifest against the encoded docs
-    on the id (ids + token arrays only — text never shuffles), then one
-    groupBy per pack with sort_array(struct(slot, ...)) reassembly —
-    per-group payload is bounded by PACK_CAPACITY tokens (plus at most one
-    over-long member's tail), so collect_list here is bounded data, not
-    a skew hazard."""
-    ids = docs.select("doc_id", bpe_encode_ids_col(merges).alias("_ids"))
-    joined = manifest.select(
-        "doc_id", "bucket_cap", "pack_id", "pack_pos", "slot", "n_tok_bpe"
-    ).join(ids, "doc_id")
-    slot_struct = F.struct(
-        F.col("slot"), F.col("doc_id").alias("_id"),
-        F.col("_ids"), F.col("n_tok_bpe"),
-    )
-    per_slot = F.array_sort(F.collect_list(slot_struct))
-    stream = F.slice(
-        F.flatten(F.expr("transform(_m, x -> x._ids)")), 1, PACK_CAPACITY
-    )
-    return (
-        joined.groupBy("bucket_cap", "pack_id", "pack_pos")
-        .agg(per_slot.alias("_m"))
-        .select(
-            "bucket_cap",
-            "pack_id",
-            "pack_pos",
-            stream.alias("token_ids"),
-            F.least(
-                F.expr("aggregate(_m, 0L, (a, x) -> a + x.n_tok_bpe)"),
-                F.lit(PACK_CAPACITY).cast("long"),
-            ).alias("n_tok"),
-            F.expr("transform(_m, x -> x._id)").alias("doc_ids"),
-        )
     )

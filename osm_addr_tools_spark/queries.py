@@ -233,13 +233,11 @@ def events_lag_delta(spark, sf_dir):
     """,
 )
 def events_change_ledger(spark, sf_dir):
-    """Batch face of the §2.10 stateful change ledger
-    (streaming.ingest.ChangeLedgerProcessor): per key — event count,
-    payload-transition count (first event counts as change #1), first/last
-    event time. Tie-safe: the window orders by (ts, event_id), a total
-    order both engines reproduce exactly. The streaming twin is parity-
-    gated in pytest across forced multi-microbatch runs; this entry gives
-    the ledger semantics a DuckDB hash gate."""
+    """Per-key change ledger (SURVEY §2.10's stateful ledger, as a batch
+    query): per key — event count, payload-transition count (first event
+    counts as change #1), first/last event time. Tie-safe: the window
+    orders by (ts, event_id), a total order both engines reproduce
+    exactly, so the ledger semantics carry a DuckDB hash gate."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     lagt = F.lag("event_type").over(w)
     return (
@@ -1361,8 +1359,7 @@ _PII_SENTENCE = (
     " call 555-867-5309 or 212.555.0142 now."
 )
 
-# single source of truth for the PII patterns (shared with the streaming
-# filter-at-ingest stage)
+# single source of truth for the PII patterns (operators/quality.py)
 from osm_addr_tools_spark.operators.quality import EMAIL_RE as _EMAIL_RE
 from osm_addr_tools_spark.operators.quality import PHONE_RE as _PHONE_RE
 
@@ -2395,7 +2392,7 @@ def emb_cosine_top3(spark, sf_dir):
 # __spark_entry__.oracle_sql() triggers generation.
 
 from osm_addr_tools_spark import oracle_support as _OS
-from osm_addr_tools_spark.operators.dedup import BANDS, NUM_PERM
+from osm_addr_tools_spark.operators.dedup import BANDS, MINHASH_THRESHOLD, NUM_PERM
 
 ODIR = _OS.oracle_dir(_OS.ORACLE_SF_DIR)
 
@@ -2462,7 +2459,7 @@ def _minhash_oracle_sql(sig_where: str = "TRUE") -> str:
       JOIN (SELECT * FROM read_parquet('{ODIR}/minhash_sigs.parquet')
             WHERE {sig_where}) y
         ON x.doc_id < y.doc_id AND ({band_eq})
-    ) WHERE agree / {NUM_PERM}.0 >= 0.5
+    ) WHERE agree / {NUM_PERM}.0 >= {MINHASH_THRESHOLD}
     """
 
 
@@ -2783,14 +2780,14 @@ def _incremental_oracle_sql() -> str:
       SELECT DISTINCT a FROM (
         SELECT x.doc_id AS a, ({agree}) AS agree
         FROM batch x JOIN corpus y ON ({band_eq})
-      ) WHERE agree / {NUM_PERM}.0 >= 0.5
+      ) WHERE agree / {NUM_PERM}.0 >= {MINHASH_THRESHOLD}
     ),
     surv AS (SELECT * FROM batch WHERE doc_id NOT IN (SELECT a FROM chit)),
     pairs AS (
       SELECT a, b FROM (
         SELECT x.doc_id AS a, y.doc_id AS b, ({agree}) AS agree
         FROM surv x JOIN surv y ON x.doc_id < y.doc_id AND ({band_eq})
-      ) WHERE agree / {NUM_PERM}.0 >= 0.5
+      ) WHERE agree / {NUM_PERM}.0 >= {MINHASH_THRESHOLD}
     ),
     edges AS (
       SELECT a AS u, b AS v FROM pairs
@@ -2816,9 +2813,9 @@ def docs_incremental_dedup(spark, sf_dir):
     """Incremental dedup at ingest — the production reality the batch
     families above deliberately idealize away: crawls arrive continuously,
     and nobody re-deduplicates a 100 TB corpus per crawl. The corpus keeps
-    a persisted MinHash signature index (build_minhash_index; bucketed on
-    (band, bucket) via the S3 bucketed sink, or the daily batch — which is
-    ≪ corpus — broadcasts, so THE CORPUS NEVER RE-SHUFFLES). Each new
+    a persisted MinHash signature index (build_minhash_index; stored
+    bucketed on (band, bucket), or the daily batch — which is ≪ corpus —
+    broadcasts, so THE CORPUS NEVER RE-SHUFFLES). Each new
     batch is banded once, joined against the index, agreement-verified,
     and the survivors get within-batch component retention (min-id rep).
     Output = the ingest ledger (doc_id, status ∈ {corpus_dup, batch_dup,
@@ -2829,12 +2826,7 @@ def docs_incremental_dedup(spark, sf_dir):
     )
 
     corpus, batch = _docs_incremental(spark, sf_dir)
-    idx = build_minhash_index(corpus)
-    # cache_sigs (r8): with the leaner CC driver loop, persisting the
-    # batch signature subtree once measured best 6.1 s vs 8.1 s for the
-    # ~6-branch racing recompute (the r5-era trade that kept it off
-    # flipped once the loop stopped re-spending jobs elsewhere)
-    return incremental_minhash_dedup(batch, idx, threshold=0.5, cache_sigs=True)
+    return incremental_minhash_dedup(batch, build_minhash_index(corpus))
 
 
 ORACLES["docs_incremental_dedup"] = _incremental_oracle_sql()
@@ -3484,7 +3476,7 @@ _REGISTRY_TAIL = [
     # -- r7 demotions (each hash-green in CORRECTNESS_r06; kernels untouched
     #    this round, siblings keep the families driver-verified) --
     "docs_top_terms",              # heavy-hitter/top-k family keeps heavy_hitter_event_types; token split shared with shards/pack gates
-    "docs_quality_ascii",          # quality family keeps docs_quality_classifier (+ filter-stream parity pytests)
+    "docs_quality_ascii",          # quality family keeps docs_quality_classifier
     "docs_token_stats",            # token counting exercised inside docs_token_shards / docs_pack_assign / docs_mix_epoch oracles
     "geo_customer_clusters",       # composition query: its band join is gated by geo_knn_nearest_supplier, its CC by dedup_minhash_components
     "docs_stratified_sample",      # fib_bucket kernel (changed r6) now driver-gated under its promoted sibling docs_split_assign + docs_mix_epoch; kernel untouched in r7
@@ -3494,7 +3486,7 @@ _REGISTRY_TAIL = [
     "docs_winnow_fingerprints",    # intermediate gate; docs_winnow_partial_dups runs the full path
     "events_running_cents",        # W3 frames keep quartiles + sessionization sums
     "customers_without_orders",    # J6 keeps both dedup retention anti-joins
-    "events_lag_delta",            # W2 keeps events_change_ledger (+ stream parity)
+    "events_lag_delta",            # W2 keeps events_change_ledger
     "repeat_customers_intersect",  # O4 keeps churned_customers_except
     "events_session_window",       # W3 session keeps events_sessionization
     "cube_order_priority",         # A5 keeps rollup_order_status

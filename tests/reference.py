@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm_addr_tools_spark.functions import cells as C
+from osm_addr_tools_spark.functions.tokenize import _EOW
 from osm_addr_tools_spark.operators.quality import MAX_TOKEN_LEN, W_SCALE
 from osm_addr_tools_spark.operators.sampling import (
     _FEISTEL_BITS,
@@ -149,3 +150,13 @@ def score_batch(text: pd.Series, weights: np.ndarray) -> pd.DataFrame:
             s += int(weights[(_probe_py(t) * FIB_MULT) % _MOD32 % dim])
         score_num.append(s)
     return pd.DataFrame({"n_tok": n_tok, "score_num": score_num})
+
+
+# --- functions/tokenize.py --------------------------------------------------
+
+
+def bpe_decode(symbols: list[str]) -> str:
+    """Inverse of ``bpe_encode`` over a symbol stream: the symbols joined,
+    each end-of-word marker a space — the canonical normalized text
+    (lowercase TOKEN_RE tokens joined by single spaces)."""
+    return "".join(symbols).replace(_EOW, " ").strip()

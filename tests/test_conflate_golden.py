@@ -196,3 +196,22 @@ def test_extract_and_existing_keys_agree(spark):
     cols = ["addr_key", "city_norm", "street_norm", "hn_norm"]
     assert x2[cols].values.tolist() == ke[cols].values.tolist()
     assert "adamowo|długa|12A" in set(x2["addr_key"])
+
+    # run_extract emits exactly the (url, addr_key) rows the X1 and X2
+    # kernels find on each url's latest crawl: the gazetteer join neither
+    # drops nor duplicates an address
+    from osm_addr_tools_spark.operators.joins import asof_latest
+    from osm_addr_tools_spark.plans.extract import extract_text_udf
+
+    pages = S.synth_pages(spark, N_PAGES)
+    latest = asof_latest(pages.select("url", "warc_ts", "html", "lang"), "url", "warc_ts")
+    addr = parse_and_normalize_udf()(extract_text_udf()("html"))
+    want = sorted(
+        (r.url, r.a.addr_key)
+        for r in latest.select("url", F.explode(addr).alias("a")).collect()
+    )
+    got = sorted(
+        map(tuple, run_extract(spark, pages, S.synth_gazetteer(spark, N_PAGES))
+            .select("url", "addr_key").collect())
+    )
+    assert got and got == want

@@ -625,8 +625,9 @@ def test_incremental_dedup_statuses(spark):
     idx = D.build_minhash_index(c)
     got = {
         r.doc_id: r.status
-        for r in D.incremental_minhash_dedup(b, idx, threshold=0.5).collect()
+        for r in D.incremental_minhash_dedup(b, idx).collect()
     }
+    release_pinned()
     assert got == {
         101: "corpus_dup",
         102: "corpus_dup",
@@ -643,8 +644,9 @@ def test_incremental_dedup_empty_index(spark):
     idx = D.build_minhash_index(c.limit(0))
     got = {
         r.doc_id: r.status
-        for r in D.incremental_minhash_dedup(b, idx, threshold=0.5).collect()
+        for r in D.incremental_minhash_dedup(b, idx).collect()
     }
+    release_pinned()
     assert got[103] == "kept" and got[104] == "batch_dup"
     assert got[101] == "kept" and got[102] == "kept" and got[105] == "kept"
 
@@ -652,16 +654,32 @@ def test_incremental_dedup_empty_index(spark):
 def test_incremental_dedup_kept_extends_index(spark):
     """The incremental invariant: appending the kept docs' signatures to
     the index makes a re-ingest of the SAME batch all-corpus_dup — the
-    crash-replay / re-crawl idempotence a production ingest gate needs."""
+    crash-replay / re-crawl idempotence a production ingest gate needs —
+    and marks a LATER batch's copy of a kept doc corpus_dup (cross-batch
+    state) while its novel docs stay kept. Replaying the batch against
+    the index it first saw rewrites the identical ledger."""
     c, b = _inc_dfs(spark)
     idx = D.build_minhash_index(c)
-    first = D.incremental_minhash_dedup(b, idx, threshold=0.5)
+    ledger = lambda df: {r.doc_id: r.status for r in df.collect()}
+    first = D.incremental_minhash_dedup(b, idx)
     kept_ids = first.where(F.col("status") == "kept").select("doc_id")
     idx2 = idx.unionByName(
         D.build_minhash_index(b.join(kept_ids, "doc_id"))
     )
-    again = D.incremental_minhash_dedup(b, idx2, threshold=0.5)
+    again = D.incremental_minhash_dedup(b, idx2)
     assert again.where(F.col("status") != "corpus_dup").count() == 0
+    assert ledger(D.incremental_minhash_dedup(b, idx)) == ledger(first)
+
+    later = spark.createDataFrame(
+        [
+            (201, _INC_BATCH[2][1]),  # copy of 103, kept above
+            (202, "one more unseen sentence about broadcast joins and salting"),
+        ],
+        "doc_id long, text string",
+    )
+    got = ledger(D.incremental_minhash_dedup(later, idx2))
+    release_pinned()
+    assert got == {201: "corpus_dup", 202: "kept"}
 
 
 def test_incremental_dedup_plan_no_cartesian(spark):
@@ -670,28 +688,19 @@ def test_incremental_dedup_plan_no_cartesian(spark):
     c, b = _inc_dfs(spark)
     idx = D.build_minhash_index(c)
     plan = D.incremental_minhash_dedup(b, idx)._jdf.queryExecution().executedPlan().toString()
+    release_pinned()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_incremental_dedup_cache_sigs_identical_and_released(spark):
-    """cache_sigs=True must not change the ledger and must be released by
-    release_pinned."""
+    """The batch signatures are pinned, and release_pinned releases
+    them."""
     release_pinned()  # start from no pinned frames
     c, b = _inc_dfs(spark)
-    idx = D.build_minhash_index(c)
-    plain = {
-        r.doc_id: r.status
-        for r in D.incremental_minhash_dedup(b, idx, threshold=0.5).collect()
-    }
-    cached = {
-        r.doc_id: r.status
-        for r in D.incremental_minhash_dedup(
-            b, idx, threshold=0.5, cache_sigs=True
-        ).collect()
-    }
-    assert cached == plain
-    assert release_pinned() >= 1
+    D.incremental_minhash_dedup(b, D.build_minhash_index(c)).collect()
+    assert release_pinned() == 1
+    assert release_pinned() == 0
 
 
 def test_minhash_lsh_pairs_cache_sigs_identical_and_released(spark, docs_with_planted):
@@ -738,9 +747,10 @@ def test_incremental_dedup_consistent_with_batch_family(spark):
     got = {
         r.doc_id: r.status
         for r in D.incremental_minhash_dedup(
-            batch, D.build_minhash_index(corpus), threshold=0.5
+            batch, D.build_minhash_index(corpus)
         ).collect()
     }
+    release_pinned()
 
     # batch-family reference on the union
     pairs = [

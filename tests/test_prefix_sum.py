@@ -150,13 +150,16 @@ def test_global_row_number_matches_window(spark):
     keys = list(range(1000))
     rng.shuffle(keys)
     df = spark.createDataFrame(pd.DataFrame({"k": keys})).repartition(8)
-    got = {(r.k, r.row_num) for r in global_row_number(df, "k", num_buckets=17).collect()}
+    rn = global_row_number(df, "k", num_buckets=17)
+    got = {(r.k, r.row_num) for r in rn.collect()}
     w = Window.orderBy("k")
     want = {
         (r.k, r.rn)
         for r in df.withColumn("rn", F.row_number().over(w)).collect()
     }
     assert got == want
+    # the global order without funnelling every row through one task
+    assert "SinglePartition" not in rn._jdf.queryExecution().executedPlan().toString()
 
 
 def test_running_sum_null_order_key_raises(spark):

@@ -14,6 +14,7 @@ from osm_addr_tools_spark.functions.tokenize import (
     learn_bpe_from_df,
     merges_to_ranks,
 )
+from tests.reference import bpe_decode
 
 
 def test_learn_bpe_sennrich_toy():
@@ -165,19 +166,11 @@ def test_bpe_spark_matches_pure_python(spark):
 
 
 def test_bpe_encode_ids_roundtrip_and_count_consistency(spark):
-    """Token-ID streams: decode(encode_ids(text)) == the canonical
-    normalized text (lowercase TOKEN_RE tokens, single-space joined),
-    and len(ids) == the n_tok_bpe the count path reports — so packing /
+    """The encoded symbol stream decodes to the canonical normalized text
+    (lowercase TOKEN_RE tokens, single-space joined), and the n_tok_bpe
+    the Spark count path reports is that stream's length — so packing /
     chunking coordinates computed on counts address this exact stream."""
     import re
-
-    from osm_addr_tools_spark.functions.tokenize import (
-        bpe_decode_ids,
-        bpe_encode_ids_col,
-        bpe_token_count_col,
-        bpe_vocab,
-        learn_bpe_from_df,
-    )
 
     rows = [
         (1, "The quick brown fox JUMPS over the lazy dog"),
@@ -188,37 +181,25 @@ def test_bpe_encode_ids_roundtrip_and_count_consistency(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
     merges = learn_bpe_from_df(df, n_merges=25)
-    vocab = bpe_vocab(merges)
-    assert len(set(vocab)) == len(vocab)  # ids are unambiguous
+    ranks = merges_to_ranks(merges)
 
     got = {
-        r.doc_id: (r.ids, r.n)
-        for r in df.select(
-            "doc_id",
-            bpe_encode_ids_col(merges).alias("ids"),
-            bpe_token_count_col(merges).alias("n"),
-        ).collect()
+        r.doc_id: r.n
+        for r in df.select("doc_id", bpe_token_count_col(merges).alias("n")).collect()
     }
     for i, t in rows:
-        ids, n = got[i]
-        assert len(ids) == n
-        want = " ".join(re.findall("[a-z0-9]+", (t or "").lower()))
-        assert bpe_decode_ids(ids, vocab) == want
+        words = re.findall("[a-z0-9]+", (t or "").lower())
+        syms = [s for w in words for s in bpe_encode(w, ranks)]
+        assert got[i] == len(syms)
+        assert bpe_decode(syms) == " ".join(words)
 
 
 def test_learn_bpe_hypothesis_random_corpora():
     """Property fuzz: on arbitrary small corpora the incremental learner
-    equals the naive fold, and encode/decode under the learned vocab
+    equals the naive fold, and encode/decode under the learned merges
     roundtrips every word."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-
-    from osm_addr_tools_spark.functions.tokenize import (
-        bpe_decode_ids,
-        bpe_encode,
-        bpe_vocab,
-        merges_to_ranks,
-    )
 
     word = st.text(alphabet="abc01", min_size=0, max_size=8)
     corpus = st.dictionaries(word, st.integers(1, 50), min_size=0, max_size=12)
@@ -228,11 +209,8 @@ def test_learn_bpe_hypothesis_random_corpora():
     def prop(wc, n):
         merges = learn_bpe(wc, n)
         assert merges == _learn_bpe_naive(wc, n)
-        vocab = bpe_vocab(merges)
-        sym_ids = {s: i for i, s in enumerate(vocab)}
         ranks = merges_to_ranks(merges)
         for w in wc:
-            ids = [sym_ids[s] for s in bpe_encode(w, ranks)]
-            assert bpe_decode_ids(ids, vocab) == w
+            assert bpe_decode(bpe_encode(w, ranks)) == w
 
     prop()

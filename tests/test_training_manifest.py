@@ -15,7 +15,7 @@ from osm_addr_tools_spark.operators.dedup import (
     minhash_lsh_pairs,
 )
 from osm_addr_tools_spark.operators.quality import hashed_score
-from osm_addr_tools_spark.plans.training import training_manifest
+from osm_addr_tools_spark.plans.training import PACK_CAPACITY, training_manifest
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -87,12 +87,19 @@ def test_pack_and_shuffle_invariants(spark, manifest_inputs):
         assert r.n_tok_bpe <= r.bucket_cap or r.truncated
         assert 0 <= r.slot < 128 // r.bucket_cap
 
-    # each (bucket_cap, pack_id) holds distinct slots — no double booking
+    # each (bucket_cap, pack_id) holds distinct slots — no double booking;
+    # its members' tokens fit PACK_CAPACITY, except an over-long
+    # (truncated) doc, which is alone in its pack
     packs = {}
     for r in rows:
-        packs.setdefault((r.bucket_cap, r.pack_id), []).append(r.slot)
-    for slots in packs.values():
-        assert len(slots) == len(set(slots))
+        packs.setdefault((r.bucket_cap, r.pack_id), []).append(r)
+    for members in packs.values():
+        assert len({m.slot for m in members}) == len(members)
+        if any(m.truncated for m in members):
+            assert len(members) == 1
+        else:
+            assert sum(m.n_tok_bpe for m in members) <= PACK_CAPACITY
+    assert any(r.truncated for r in rows)  # the over-long case is exercised
 
     # pack_pos is a 1..n_packs permutation over distinct packs
     pos = {(r.bucket_cap, r.pack_id): r.pack_pos for r in rows}
@@ -110,47 +117,3 @@ def test_manifest_deterministic_across_parallelism(spark, manifest_inputs):
         ).collect())
     )
     assert a == b
-
-
-def test_materialize_packed_examples(spark, manifest_inputs):
-    """The terminal artifact: one row per pack, token_ids = members' BPE
-    streams concatenated in slot order, Σ n_tok ≤ PACK_CAPACITY, every
-    manifest doc appears in exactly one pack, pack_pos carried through."""
-    from osm_addr_tools_spark.functions.tokenize import (
-        bpe_encode_ids_col,
-    )
-    from osm_addr_tools_spark.plans.training import (
-        PACK_CAPACITY,
-        materialize_packed_examples,
-    )
-
-    corpus, bench, merges = manifest_inputs
-    manifest = training_manifest(corpus, bench, merges)
-    mrows = manifest.collect()
-    packs = materialize_packed_examples(corpus, manifest, merges).collect()
-
-    # per-doc streams for reference, from the same encoder
-    streams = {
-        r.doc_id: list(r.ids)
-        for r in corpus.select(
-            "doc_id", bpe_encode_ids_col(merges).alias("ids")
-        ).collect()
-    }
-    by_pack = {}
-    for r in mrows:
-        by_pack.setdefault((r.bucket_cap, r.pack_id), []).append(r)
-    assert len(packs) == len(by_pack)
-    seen_docs = []
-    saw_truncated = False
-    for p in packs:
-        members = sorted(by_pack[(p.bucket_cap, p.pack_id)], key=lambda r: r.slot)
-        want_ids = [t for m in members for t in streams[m.doc_id]][:PACK_CAPACITY]
-        saw_truncated |= any(m.truncated for m in members)
-        assert list(p.token_ids) == want_ids
-        assert p.n_tok == min(sum(m.n_tok_bpe for m in members), PACK_CAPACITY)
-        assert p.n_tok <= PACK_CAPACITY and len(p.token_ids) == p.n_tok
-        assert list(p.doc_ids) == [m.doc_id for m in members]
-        assert p.pack_pos == members[0].pack_pos
-        seen_docs.extend(p.doc_ids)
-    assert sorted(seen_docs) == sorted(r.doc_id for r in mrows)
-    assert saw_truncated  # the capacity cut is exercised, not vacuous
